@@ -36,27 +36,26 @@ WORK = os.path.join(ROOT, ".perfbench_work")
 # query_mix: registry queries on a generated TPC-H-like fixture
 QUERY_SF = 0.01
 QUERY_DATA_SEED = 42
-# every 80th name, in sorted order, of the 290 queries with a warm time
+# every 144th name, in sorted order, of the 290 queries with a warm time
 # under 1 s in BENCH_DETAIL_r14opt_start.json: the per-query floor
 FLOOR_QUERIES = [
     "agg_count_shape",
-    "embedding_outliers",
-    "events_value_quantiles",
-    "olap_top_supplier",
+    "events_session_length_hist",
+    "text_typo_pairs",
 ]
-# Arrow UDF kernels, shuffles, gated persists and eager build-time jobs
-HEAVY_QUERIES = ["dedup_semantic_auto"]
+# Arrow UDF kernels, shuffles, a gated persist and a build-time job
+HEAVY_QUERIES = ["knn_graph_auto"]
 
 # etl_roundtrip: the reference pipeline on generated deliveries
-ETL_ROWS = 10_000
+ETL_ROWS = 5_000
 ETL_INPUT_SEED = 4242
 EXTENSIONS = {"csv": ".csv", "json": ".json", "parquet": ".parquet", "sqlite": ".db", "xlsx": ".xlsx"}
-# file -> transform -> parquet runs from this source: the slowest of the
-# driver-side readers
-READ_FORMATS = ["xlsx"]
+# file -> transform -> parquet runs from this source: a native Spark scan
+# with schema inference
+READ_FORMATS = ["csv"]
 
 # warm repeats per op: at least one, more while the op's share of
-# --seconds lasts, at most MAX_WARM
+# --seconds (cold execution included) lasts, at most MAX_WARM
 MAX_WARM = 2
 
 
@@ -65,7 +64,7 @@ def query_dir() -> str:
 
 
 def etl_input_dir() -> str:
-    return os.path.join(DATA, f"etl_inputs_{ETL_ROWS}")
+    return os.path.join(DATA, f"etl_inputs_{ETL_ROWS}_{'_'.join(READ_FORMATS)}")
 
 
 # --------------------------------------------------------------------------
@@ -376,8 +375,8 @@ def build_ops(workload: str, seed: int) -> list:
 
 def run_workload(spark, workload: str, ops: list, seconds: float, traced: bool) -> dict:
     """Per op, in seeded order: reset (release the previous op's persists),
-    one cold execution, then warm repeats while the op's equal share of
-    `seconds` lasts (1..MAX_WARM).
+    one cold execution, then warm repeats (1..MAX_WARM) while the op's
+    equal share of `seconds`, counted from its reset, lasts.
 
     Returns per-op samples, failures and, when traced, per-layer totals
     for the cold executions and for one warm pass."""
@@ -394,7 +393,7 @@ def run_workload(spark, workload: str, ops: list, seconds: float, traced: bool) 
     # lowest share of an execution's wall time that its spans account for
     coverage = {"op": 1.0, "stages": 1.0}
     failed_execs = 0
-    warm_budget = seconds / len(ops)
+    share = seconds / len(ops)
 
     def execute(op, layers, reset_s=0.0):
         kwargs = {}
@@ -422,7 +421,7 @@ def run_workload(spark, workload: str, ops: list, seconds: float, traced: bool) 
             rec["cold"] = execute(op, op_layers, time.perf_counter() - t_block)
             first_results_s += time.perf_counter() - t_block
             _add(cold_layers, op_layers)
-            warm_end = time.perf_counter() + warm_budget
+            warm_end = t_block + share
             warm_total = layer_trace.new_layers()
             while len(rec["warm"]) < MAX_WARM:
                 op_layers = layer_trace.new_layers()
@@ -512,7 +511,10 @@ def output_sizes(ops: list) -> dict:
     by_format = {}
     for op in ops:
         for name in op.outputs:
-            size = os.path.getsize(os.path.join(op.out_dir, name))
+            path = os.path.join(op.out_dir, name)
+            if not os.path.exists(path):  # the op failed; counted already
+                continue
+            size = os.path.getsize(path)
             total += size
             if op.name == "generate_all":
                 ext = os.path.splitext(name)[1]
