@@ -11,8 +11,9 @@ environment points PYTHONPATH at the repository root, so Spark's Python
 workers can import the package too, and keeps temporary files inside the
 checkout. Spark's console output goes to stderr.
 
---trace 0: end-to-end metrics. set-up time is the median of two fresh
-  set-ups: a set-up-only worker, then the measuring worker itself.
+--trace 0: end-to-end metrics: set-up time, the median of SETUP_SAMPLES
+  fresh set-ups (the measuring worker's own, and set-up-only workers
+  before and after it), and the CPU seconds of the cold pass.
 --trace 1: per-layer metrics. The same seed runs once untraced and once
   traced; the difference of their wall_s is reported as the overhead.
 """
@@ -30,16 +31,18 @@ import sys
 import tempfile
 import time
 
+import procs
+
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".perfbench_work")
 WORKLOADS = ["query_mix", "etl_roundtrip"]
-SETUP_SAMPLES = 2
+SETUP_SAMPLES = 3
 RUN_BUDGET_S = 175.0
 PREP_BUDGET_S = 800.0
 FORMATS = ["csv", "json", "parquet", "sqlite", "xlsx"]
 
-END_TO_END_UNITS = {"setup_s": "s", "wall_s": "s", "cold_s": "s"}
+END_TO_END_UNITS = {"setup_s": "s", "cold_cpu_s": "s"}
 
 
 class WorkerFailed(RuntimeError):
@@ -69,11 +72,11 @@ def run_worker(workload: str, extra: list[str], deadline: float, tmp: str) -> di
     try:
         code = proc.wait(timeout=max(1.0, deadline - time.monotonic()))
     except subprocess.TimeoutExpired:
-        os.killpg(proc.pid, signal.SIGKILL)
+        proc.kill()
         proc.wait()
         raise WorkerFailed(f"worker {extra} timed out")
     finally:
-        _reap_group(proc.pid)
+        _reap_session(proc.pid)
     print(f"worker {extra}: {time.monotonic() - t0:.1f} s", file=sys.stderr)
     if code != 0:
         raise WorkerFailed(f"worker {extra} exited with {code}")
@@ -83,37 +86,44 @@ def run_worker(workload: str, extra: list[str], deadline: float, tmp: str) -> di
     return result
 
 
-def _reap_group(pgid: int) -> None:
-    """Kill and wait out anything left in the worker's process group."""
-    try:
-        os.killpg(pgid, signal.SIGKILL)
-    except ProcessLookupError:
-        return
-    end = time.monotonic() + 10
+def _reap_session(sid: int) -> None:
+    """Kill everything left in the worker's session and wait until it has
+    ended: the gateway JVM, and Spark's Python daemon and workers, which
+    the daemon moves to a process group of their own."""
+    end = time.monotonic() + 30
     while time.monotonic() < end:
-        try:
-            os.killpg(pgid, 0)
-        except ProcessLookupError:
+        pids = [pid for pid, state, _ in procs.session_processes(sid) if state != "Z"]
+        if not pids:
             return
+        for pid in pids:
+            try:
+                os.kill(pid, signal.SIGKILL)
+            except ProcessLookupError:
+                pass
         time.sleep(0.05)
 
 
 def end_to_end(workload: str, seed: int, seconds: int, deadline: float, tmp: str) -> tuple[dict, dict]:
-    setups = [
-        run_worker(workload, ["--probe"], deadline, tmp) for _ in range(SETUP_SAMPLES - 1)
-    ]
+    # set-up-only workers on both sides of the measuring one, so one slow
+    # stretch of the host moves at most the samples inside it
+    probes = SETUP_SAMPLES - 1
+    setups = [run_worker(workload, ["--probe"], deadline, tmp) for _ in range(probes - probes // 2)]
     res = run_worker(workload, ["--seed", str(seed), "--seconds", str(seconds)], deadline, tmp)
     setups.append(res)
+    setups += [run_worker(workload, ["--probe"], deadline, tmp) for _ in range(probes // 2)]
     values = {
         "setup_s": statistics.median(s["import_s"] + s["start_s"] for s in setups),
-        **{k: res[k] for k in ("wall_s", "cold_s")},
+        "cold_cpu_s": res["cold_cpu_s"],
     }
     return res, {k: {"value": v, "unit": END_TO_END_UNITS[k]} for k, v in values.items()}
 
 
 def per_layer(workload: str, seed: int, seconds: int, deadline: float, tmp: str) -> tuple[dict, dict]:
-    base = run_worker(workload, ["--seed", str(seed), "--seconds", str(seconds)], deadline, tmp)
-    res = run_worker(workload, ["--seed", str(seed), "--seconds", str(seconds), "--trace", "1"], deadline, tmp)
+    # both workers make one warm repeat right after each cold execution,
+    # so the per-layer figures and counts do not depend on timing
+    args = ["--seed", str(seed), "--seconds", str(seconds), "--one-warm"]
+    base = run_worker(workload, args, deadline, tmp)
+    res = run_worker(workload, [*args, "--trace", "1"], deadline, tmp)
     cold, warm = res["cold_layers"], res["warm_layers"]
     values: dict[str, tuple[float, str]] = {
         "session.import_s": (statistics.median([base["import_s"], res["import_s"]]), "s"),
@@ -135,6 +145,7 @@ def per_layer(workload: str, seed: int, seconds: int, deadline: float, tmp: str)
     values["sources.output_mb"] = (res.get("output_mb", 0.0), "MB")
     rows = res["rows_per_op"] * len(res["ops"]) / res["warm_s"] if etl and res["warm_s"] else 0.0
     values["plans.rows_per_s"] = (rows, "1/s")
+    values["loop.cold_s"] = (base["cold_s"], "s")
     values["loop.warm_s"] = (base["warm_s"], "s")
     values["loop.op_p50_s"] = (base["op_p50_s"], "s")
     values["mem.peak_rss_mb"] = (res["peak_rss_mb"], "MB")

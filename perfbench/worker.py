@@ -3,8 +3,9 @@
 Started by run.py with PYTHONPATH pointing at the repository root. It
 imports the package, starts the session through `session.get_spark()`,
 runs one workload closed-loop with a single client, checks the outputs
-after the timed phase, stops Spark with every process Spark started, and
-writes its figures as JSON to the file named by --out.
+after the timed phase and writes its figures as JSON to the file named by
+--out. It leaves Spark running: run.py ends the worker's whole session,
+the gateway JVM and Spark's Python workers included.
 
 Modes:
   --prep                 write the cached inputs of the workload and exit
@@ -20,14 +21,13 @@ import os
 import random
 import resource
 import shutil
-import signal
 import statistics
-import subprocess
 import sys
 import time
 import traceback
 
 import layers as layer_trace
+import procs
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DATA = os.path.join(ROOT, ".perfbench_data")
@@ -50,25 +50,20 @@ HEAVY_QUERIES = ["knn_graph_auto"]
 ETL_ROWS = 5_000
 ETL_INPUT_SEED = 4242
 EXTENSIONS = {"csv": ".csv", "json": ".json", "parquet": ".parquet", "sqlite": ".db", "xlsx": ".xlsx"}
-# file -> transform -> parquet runs from this source: a native Spark scan
-# with schema inference
-READ_FORMATS = ["csv"]
-
-# warm repeats per op: at least one, more while the op's share of
-# --seconds (cold execution included) lasts, at most MAX_WARM
-MAX_WARM = 2
 
 
 def query_dir() -> str:
     return os.path.join(DATA, f"sf{QUERY_SF}")
 
 
-def etl_input_dir() -> str:
-    return os.path.join(DATA, f"etl_inputs_{ETL_ROWS}_{'_'.join(READ_FORMATS)}")
+def etl_input_csv() -> str:
+    """The source of file -> transform -> parquet: raw deliveries in csv,
+    a native Spark scan with schema inference."""
+    return os.path.join(DATA, f"etl_input_{ETL_ROWS}", "deliveries.csv")
 
 
 # --------------------------------------------------------------------------
-# session lifetime
+# session
 
 
 def timed_setup(workload: str):
@@ -88,38 +83,6 @@ def timed_setup(workload: str):
     return spark, t1 - t0, time.perf_counter() - t1
 
 
-def _children_map() -> dict[int, list[int]]:
-    children: dict[int, list[int]] = {}
-    for entry in os.listdir("/proc"):
-        if not entry.isdigit():
-            continue
-        try:
-            with open(f"/proc/{entry}/stat") as fh:
-                ppid = int(fh.read().rsplit(")", 1)[1].split()[1])
-        except (OSError, IndexError, ValueError):
-            continue
-        children.setdefault(ppid, []).append(int(entry))
-    return children
-
-
-def _descendants(pid: int) -> list[int]:
-    children = _children_map()
-    out, stack = [], [pid]
-    while stack:
-        for child in children.get(stack.pop(), []):
-            out.append(child)
-            stack.append(child)
-    return out
-
-
-def _alive(pid: int) -> bool:
-    try:
-        with open(f"/proc/{pid}/stat") as fh:
-            return fh.read().rsplit(")", 1)[1].split()[0] != "Z"
-    except OSError:
-        return False
-
-
 def jvm_peak_rss_mb() -> float:
     from pyspark import SparkContext
 
@@ -128,34 +91,6 @@ def jvm_peak_rss_mb() -> float:
             if line.startswith("VmHWM:"):
                 return int(line.split()[1]) / 1024
     return 0.0
-
-
-def stop_session(spark) -> None:
-    """Stop Spark, close the gateway JVM and wait until it and every
-    process it started (Python worker daemon and workers) have ended."""
-    from pyspark import SparkContext
-
-    proc = SparkContext._gateway.proc
-    tree = _descendants(proc.pid)
-    spark.stop()
-    SparkContext._gateway.shutdown()
-    proc.stdin.close()  # the gateway JVM exits when its stdin closes
-    try:
-        proc.wait(timeout=30)
-    except subprocess.TimeoutExpired:
-        proc.kill()
-        proc.wait(timeout=10)
-    deadline = time.monotonic() + 15
-    while any(_alive(p) for p in tree) and time.monotonic() < deadline:
-        time.sleep(0.05)
-    for pid in tree:
-        if _alive(pid):
-            try:
-                os.kill(pid, signal.SIGKILL)
-            except ProcessLookupError:
-                pass
-    while any(_alive(p) for p in tree):
-        time.sleep(0.05)
 
 
 # --------------------------------------------------------------------------
@@ -184,7 +119,7 @@ def prepare_inputs(workload: str) -> None:
         testdata.generate(tmp, sf=QUERY_SF, seed=QUERY_DATA_SEED)
         _publish(tmp, final)
         return
-    final = etl_input_dir()
+    final = os.path.dirname(etl_input_csv())
     if os.path.isdir(final):
         return
     from laposte_data_engineering_jedha_spark.session import get_spark
@@ -192,16 +127,11 @@ def prepare_inputs(workload: str) -> None:
     from laposte_data_engineering_jedha_spark.sources.writers import WRITER_MAP
 
     spark = get_spark()
-    try:
-        tmp = final + f".tmp{os.getpid()}"
-        os.makedirs(tmp)
-        raw = generate_deliveries(spark, ETL_ROWS, seed=ETL_INPUT_SEED)
-        for fmt in READ_FORMATS:
-            ext = EXTENSIONS[fmt]
-            WRITER_MAP[fmt](os.path.join(tmp, f"deliveries{ext}")).write(raw)
-        _publish(tmp, final)
-    finally:
-        stop_session(spark)
+    tmp = final + f".tmp{os.getpid()}"
+    os.makedirs(tmp)
+    raw = generate_deliveries(spark, ETL_ROWS, seed=ETL_INPUT_SEED)
+    WRITER_MAP["csv"](os.path.join(tmp, os.path.basename(etl_input_csv()))).write(raw)
+    _publish(tmp, final)
 
 
 # --------------------------------------------------------------------------
@@ -237,13 +167,11 @@ class QueryOp:
             elapsed = time.perf_counter() - t0
             self._keep(pdf)
             return elapsed
-        t_call = time.perf_counter()
         sc = stores.sc
         group = f"op-{self.name}-{time.monotonic_ns()}"
         mark = stores.last_execution_id()
         sc.setJobGroup(group + "-build", self.name)
         t0 = time.perf_counter()
-        layers["trace.gap_s"] += t0 - t_call
         df = self.fn(spark, sf_dir)
         t1 = time.perf_counter()
         sc.setJobGroup(group + "-action", self.name)
@@ -294,7 +222,6 @@ class EtlOp:
         from laposte_data_engineering_jedha_spark.plans.pipeline import Pipeline
         from laposte_data_engineering_jedha_spark.sources.weather import FakeWeatherClient
 
-        t_call = time.perf_counter()
         shutil.rmtree(self.out_dir, ignore_errors=True)
         pipe = Pipeline(self.config, spark, weather_client=FakeWeatherClient(), progress=None)
         if stores is None:
@@ -306,8 +233,7 @@ class EtlOp:
         stores.sc.setJobGroup(group, self.name)
         timer.current = layers
         t0 = time.perf_counter()
-        layers["trace.gap_s"] += t0 - t_call
-        run_s = pipe.run()
+        pipe.run()
         elapsed = time.perf_counter() - t0
         timer.current = None
         stores.sc.setLocalProperty("spark.jobGroup.id", None)
@@ -316,7 +242,6 @@ class EtlOp:
         jobs = stores.job_ids(group)
         layers["exec.action_s"] += elapsed
         layers["exec.jobs"] += len(jobs)
-        layers["plans.run_s"] += run_s
         for stage, secs in pipe.stage_seconds.items():
             layers[f"plans.{stage}_s"] += secs
         stores.add_stage_metrics(jobs, layers)
@@ -352,18 +277,16 @@ def build_ops(workload: str, seed: int) -> list:
                 [f"deliveries{ext}" for ext in EXTENSIONS.values()],
             )
         ]
-        for fmt in READ_FORMATS:
-            ext = EXTENSIONS[fmt]
-            ops.append(
-                EtlOp(
-                    f"read_{fmt}",
-                    {
-                        "source": {"type": "file", "path": os.path.join(etl_input_dir(), f"deliveries{ext}")},
-                        "output": {"path": os.path.join(out, f"read_{fmt}"), "format": "parquet"},
-                    },
-                    ["deliveries.parquet"],
-                )
+        ops.append(
+            EtlOp(
+                "read_csv",
+                {
+                    "source": {"type": "file", "path": etl_input_csv()},
+                    "output": {"path": os.path.join(out, "read_csv"), "format": "parquet"},
+                },
+                ["deliveries.parquet"],
             )
+        )
     rest = ops[1:]
     rng.shuffle(rest)
     return ops[:1] + rest
@@ -373,72 +296,86 @@ def build_ops(workload: str, seed: int) -> list:
 # the closed loop
 
 
-def run_workload(spark, workload: str, ops: list, seconds: float, traced: bool) -> dict:
+def run_workload(spark, workload: str, ops: list, seconds: float, traced: bool, one_warm: bool) -> dict:
     """Per op, in seeded order: reset (release the previous op's persists),
-    one cold execution, then warm repeats (1..MAX_WARM) while the op's
-    equal share of `seconds`, counted from its reset, lasts.
+    one cold execution and, with `one_warm`, one warm repeat right after
+    it. Without `one_warm`, warm repeats of every op in turn fill what is
+    left of `seconds` once all cold executions are done, so that none of
+    them can warm the JVM for a later cold execution.
 
     Returns per-op samples, failures and, when traced, per-layer totals
-    for the cold executions and for one warm pass."""
+    for the cold executions and for the warm repeats."""
     stores = layer_trace.StatusStores(spark) if traced else None
     timer = None
     if traced and workload == "etl_roundtrip":
         timer = layer_trace.SourceTimer()
         layer_trace.wrap_sources(timer)
-    samples: dict[str, dict] = {}
+    samples = {op.name: {"cold": None, "warm": [], "failed": 0} for op in ops}
     cold_layers = layer_trace.new_layers()
     warm_layers = layer_trace.new_layers()
     persists = 0
     first_results_s = 0.0
+    first_results_cpu_s = 0.0
+    sid = os.getsid(0)
     # lowest share of an execution's wall time that its spans account for
     coverage = {"op": 1.0, "stages": 1.0}
-    failed_execs = 0
-    share = seconds / len(ops)
 
-    def execute(op, layers, reset_s=0.0):
+    def execute(op, layers, kind, reset_s=0.0):
+        rec = samples[op.name]
         kwargs = {}
         if traced:
             kwargs = {"stores": stores, "layers": layers}
             if timer is not None:
                 kwargs["timer"] = timer
-        elapsed = op.execute(spark, **kwargs)
-        if traced:
-            # the op as the loop sees it: reset, bookkeeping, build, action
-            wall = reset_s + layers["trace.gap_s"] + elapsed
-            spans = layers["queries.build_s"] + layers["exec.action_s"]
-            coverage["op"] = min(coverage["op"], spans / wall)
-            if layers["plans.run_s"]:
-                stages = sum(layers[f"plans.{s}_s"] for s in ("extract", "transform", "load"))
-                coverage["stages"] = min(coverage["stages"], stages / layers["plans.run_s"])
-        return elapsed
-
-    for op in ops:
-        rec = samples[op.name] = {"cold": None, "warm": [], "failed": 0}
-        t_block = time.perf_counter()
-        persists += op.reset()
+        t0 = time.perf_counter()
         try:
-            op_layers = layer_trace.new_layers()
-            rec["cold"] = execute(op, op_layers, time.perf_counter() - t_block)
-            first_results_s += time.perf_counter() - t_block
-            _add(cold_layers, op_layers)
-            warm_end = t_block + share
-            warm_total = layer_trace.new_layers()
-            while len(rec["warm"]) < MAX_WARM:
-                op_layers = layer_trace.new_layers()
-                rec["warm"].append(execute(op, op_layers))
-                _add(warm_total, op_layers)
-                if time.perf_counter() + rec["warm"][-1] > warm_end:
-                    break
-            _add(warm_layers, warm_total, 1.0 / len(rec["warm"]))
-        except Exception:  # one failing op is counted, never sinks the run
+            elapsed = op.execute(spark, **kwargs)
+        except Exception:  # one failing execution is counted, never sinks the run
             traceback.print_exc()
             rec["failed"] += 1
-            failed_execs += 1
+            return False
+        if traced:
+            # all the loop spends on the op: its reset, the job-group tags,
+            # build, action and the store reads after the action
+            wall = reset_s + time.perf_counter() - t0
+            spans = layers["queries.build_s"] + layers["exec.action_s"]
+            coverage["op"] = min(coverage["op"], spans / wall)
+            if workload == "etl_roundtrip":
+                # exec.action_s is Pipeline.run() on the loop's clock
+                stages = sum(layers[f"plans.{s}_s"] for s in ("extract", "transform", "load"))
+                coverage["stages"] = min(coverage["stages"], stages / layers["exec.action_s"])
+        if kind == "cold":
+            rec["cold"] = elapsed
+        else:
+            rec["warm"].append(elapsed)
+        return True
+
+    t_start = time.perf_counter()
+    for op in ops:
+        cpu0 = procs.session_cpu_s(sid)
+        t_block = time.perf_counter()
+        persists += op.reset()
+        op_layers = layer_trace.new_layers()
+        if not execute(op, op_layers, "cold", time.perf_counter() - t_block):
+            continue
+        first_results_s += time.perf_counter() - t_block
+        first_results_cpu_s += procs.session_cpu_s(sid) - cpu0
+        _add(cold_layers, op_layers)
+        if one_warm:
+            op_layers = layer_trace.new_layers()
+            if execute(op, op_layers, "warm"):
+                _add(warm_layers, op_layers)
+    done = [op for op in ops if samples[op.name]["cold"] is not None]
+    while not one_warm and done and time.perf_counter() - t_start < seconds:
+        for op in done:
+            if time.perf_counter() - t_start >= seconds:
+                break
+            execute(op, layer_trace.new_layers(), "warm")
     persists += ops[-1].reset()
     return {
         "samples": samples,
-        "failed_execs": failed_execs,
         "first_results_s": first_results_s,
+        "first_results_cpu_s": first_results_cpu_s,
         "coverage": coverage,
         "cold_layers": dict(cold_layers),
         "warm_layers": dict(warm_layers),
@@ -446,9 +383,9 @@ def run_workload(spark, workload: str, ops: list, seconds: float, traced: bool) 
     }
 
 
-def _add(into: dict, layers: dict, scale: float = 1.0) -> None:
+def _add(into: dict, layers: dict) -> None:
     for k, v in layers.items():
-        into[k] += v * scale
+        into[k] += v
 
 
 def check_outputs(spark, workload: str, ops: list) -> dict[str, str]:
@@ -475,10 +412,10 @@ def check_outputs(spark, workload: str, ops: list) -> dict[str, str]:
 
 def summarize(workload: str, setup: dict, run: dict, wrong: dict, peak_rss_mb: float) -> dict:
     samples = run["samples"]
-    ok = {n: s for n, s in samples.items() if s["cold"] is not None and s["warm"]}
-    warm_all = [t for s in ok.values() for t in s["warm"]]
+    cold = [s["cold"] for s in samples.values() if s["cold"] is not None]
+    warm = [statistics.median(s["warm"]) for s in samples.values() if s["warm"]]
     attempted = sum((s["cold"] is not None) + len(s["warm"]) + s["failed"] for s in samples.values())
-    failed = run["failed_execs"] + sum(
+    failed = sum(s["failed"] for s in samples.values()) + sum(
         (s["cold"] is not None) + len(s["warm"]) for n, s in samples.items() if n in wrong
     )
     result = {
@@ -489,10 +426,11 @@ def summarize(workload: str, setup: dict, run: dict, wrong: dict, peak_rss_mb: f
         "import_s": setup["import_s"],
         "start_s": setup["start_s"],
         "wall_s": setup["import_s"] + setup["start_s"] + run["first_results_s"],
-        "cold_s": sum(s["cold"] for s in ok.values()),
-        "warm_s": sum(statistics.median(s["warm"]) for s in ok.values()),
-        "op_p50_s": statistics.median(statistics.median(s["warm"]) for s in ok.values()) if ok else 0.0,
-        "warm_samples": len(warm_all),
+        "cold_cpu_s": run["first_results_cpu_s"],
+        "cold_s": sum(cold),
+        "warm_s": sum(warm),
+        "op_p50_s": statistics.median(warm) if warm else 0.0,
+        "warm_samples": sum(len(s["warm"]) for s in samples.values()),
         "peak_rss_mb": peak_rss_mb,
         "ops": {n: {"cold": s["cold"], "warm": s["warm"]} for n, s in samples.items()},
     }
@@ -528,6 +466,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--seed", type=int, default=0)
     ap.add_argument("--seconds", type=float, default=30.0)
     ap.add_argument("--trace", type=int, default=0)
+    ap.add_argument("--one-warm", action="store_true", help="one warm repeat right after each cold execution")
     ap.add_argument("--out", required=True)
     ap.add_argument("--prep", action="store_true")
     ap.add_argument("--probe", action="store_true")
@@ -537,23 +476,18 @@ def main(argv: list[str] | None = None) -> int:
         prepare_inputs(args.workload)
         result: dict = {"prepared": True}
     elif args.probe:
-        # run.py kills this process group, the gateway JVM included, and
-        # waits for it: a probe has no results to shut down cleanly
         _, import_s, start_s = timed_setup(args.workload)
         result = {"import_s": import_s, "start_s": start_s}
     else:
         spark, import_s, start_s = timed_setup(args.workload)
         setup = {"import_s": import_s, "start_s": start_s}
-        try:
-            ops = build_ops(args.workload, args.seed)
-            run = run_workload(spark, args.workload, ops, args.seconds, bool(args.trace))
-            wrong = check_outputs(spark, args.workload, ops)
-            rss = jvm_peak_rss_mb() + resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
-            result = summarize(args.workload, setup, run, wrong, rss)
-            if args.workload == "etl_roundtrip":
-                result.update(output_sizes(ops), rows_per_op=ETL_ROWS)
-        finally:
-            stop_session(spark)
+        ops = build_ops(args.workload, args.seed)
+        run = run_workload(spark, args.workload, ops, args.seconds, bool(args.trace), args.one_warm)
+        wrong = check_outputs(spark, args.workload, ops)
+        rss = jvm_peak_rss_mb() + resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
+        result = summarize(args.workload, setup, run, wrong, rss)
+        if args.workload == "etl_roundtrip":
+            result.update(output_sizes(ops), rows_per_op=ETL_ROWS)
     with open(args.out, "w") as fh:
         json.dump(result, fh)
     return 0
