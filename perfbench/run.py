@@ -13,7 +13,8 @@ checkout. Spark's console output goes to stderr.
 
 --trace 0: end-to-end metrics: set-up time, the median of SETUP_SAMPLES
   fresh set-ups (the measuring worker's own, and set-up-only workers
-  before and after it), and the CPU seconds of the cold pass.
+  before and after it), and the CPU seconds of the cold pass, without
+  those of the JVM's JIT compiler threads.
 --trace 1: per-layer metrics. The same seed runs once untraced and once
   traced; the difference of their wall_s is reported as the overhead.
 """
@@ -146,6 +147,7 @@ def per_layer(workload: str, seed: int, seconds: int, deadline: float, tmp: str)
     rows = res["rows_per_op"] * len(res["ops"]) / res["warm_s"] if etl and res["warm_s"] else 0.0
     values["plans.rows_per_s"] = (rows, "1/s")
     values["loop.cold_s"] = (base["cold_s"], "s")
+    values["loop.cold_jit_cpu_s"] = (base["cold_jit_s"], "s")
     values["loop.warm_s"] = (base["warm_s"], "s")
     values["loop.op_p50_s"] = (base["op_p50_s"], "s")
     values["mem.peak_rss_mb"] = (res["peak_rss_mb"], "MB")

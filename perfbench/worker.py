@@ -18,7 +18,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import random
 import resource
 import shutil
 import statistics
@@ -258,10 +257,12 @@ class EtlOp:
 
 
 def build_ops(workload: str, seed: int) -> list:
-    """The workload's ops: the first one fixed, the rest in seeded order.
-    The fixed first op absorbs the fresh JVM's class loading and JIT
-    warm-up, which would otherwise land on a different op each seed."""
-    rng = random.Random(seed)
+    """The workload's ops, in a fixed order. The first op absorbs the
+    fresh JVM's class loading and JIT warm-up, and each later op's cold
+    cost depends on what ran before it: on a shared 4-core VM,
+    knn_graph_auto's cold execution took 12.3-12.6 CPU seconds as the
+    second op and 9.5-10.0 as the last. A seeded order would measure the
+    shuffle."""
     if workload == "query_mix":
         ops = [QueryOp(n) for n in FLOOR_QUERIES + HEAVY_QUERIES]
     else:
@@ -287,9 +288,7 @@ def build_ops(workload: str, seed: int) -> list:
                 ["deliveries.parquet"],
             )
         )
-    rest = ops[1:]
-    rng.shuffle(rest)
-    return ops[:1] + rest
+    return ops
 
 
 # --------------------------------------------------------------------------
@@ -297,47 +296,53 @@ def build_ops(workload: str, seed: int) -> list:
 
 
 def run_workload(spark, workload: str, ops: list, seconds: float, traced: bool, one_warm: bool) -> dict:
-    """Per op, in seeded order: reset (release the previous op's persists),
+    """Per op, in order: reset (release the previous op's persists),
     one cold execution and, with `one_warm`, one warm repeat right after
     it. Without `one_warm`, warm repeats of every op in turn fill what is
     left of `seconds` once all cold executions are done, so that none of
     them can warm the JVM for a later cold execution.
 
     Returns per-op samples, failures and, when traced, per-layer totals
-    for the cold executions and for the warm repeats."""
+    for the cold executions and for the warm repeats. A cold sample runs
+    from the op's reset to the end of its execution; its CPU seconds are
+    split into the program's and the JIT compiler's (procs.cpu_split)."""
     stores = layer_trace.StatusStores(spark) if traced else None
     timer = None
     if traced and workload == "etl_roundtrip":
         timer = layer_trace.SourceTimer()
         layer_trace.wrap_sources(timer)
-    samples = {op.name: {"cold": None, "warm": [], "failed": 0} for op in ops}
+    samples = {op.name: {"cold": None, "cold_cpu": None, "cold_jit": None, "warm": [], "failed": 0} for op in ops}
     cold_layers = layer_trace.new_layers()
     warm_layers = layer_trace.new_layers()
     persists = 0
     first_results_s = 0.0
-    first_results_cpu_s = 0.0
     sid = os.getsid(0)
     # lowest share of an execution's wall time that its spans account for
     coverage = {"op": 1.0, "stages": 1.0}
 
-    def execute(op, layers, kind, reset_s=0.0):
+    def execute(op, layers, kind, reset):
+        nonlocal persists, first_results_s
         rec = samples[op.name]
         kwargs = {}
         if traced:
             kwargs = {"stores": stores, "layers": layers}
             if timer is not None:
                 kwargs["timer"] = timer
+        cpu0 = procs.session_cpu(sid)
         t0 = time.perf_counter()
+        if reset:
+            persists += op.reset()
         try:
             elapsed = op.execute(spark, **kwargs)
         except Exception:  # one failing execution is counted, never sinks the run
             traceback.print_exc()
             rec["failed"] += 1
             return False
+        # all the loop spends on the op: its reset, the job-group tags,
+        # build, action and, when traced, the store reads after the action
+        wall = time.perf_counter() - t0
+        cpu, jit = procs.cpu_split(cpu0, procs.session_cpu(sid))
         if traced:
-            # all the loop spends on the op: its reset, the job-group tags,
-            # build, action and the store reads after the action
-            wall = reset_s + time.perf_counter() - t0
             spans = layers["queries.build_s"] + layers["exec.action_s"]
             coverage["op"] = min(coverage["op"], spans / wall)
             if workload == "etl_roundtrip":
@@ -345,37 +350,32 @@ def run_workload(spark, workload: str, ops: list, seconds: float, traced: bool, 
                 stages = sum(layers[f"plans.{s}_s"] for s in ("extract", "transform", "load"))
                 coverage["stages"] = min(coverage["stages"], stages / layers["exec.action_s"])
         if kind == "cold":
-            rec["cold"] = elapsed
+            rec["cold"], rec["cold_cpu"], rec["cold_jit"] = elapsed, cpu, jit
+            first_results_s += wall
         else:
             rec["warm"].append(elapsed)
         return True
 
     t_start = time.perf_counter()
     for op in ops:
-        cpu0 = procs.session_cpu_s(sid)
-        t_block = time.perf_counter()
-        persists += op.reset()
         op_layers = layer_trace.new_layers()
-        if not execute(op, op_layers, "cold", time.perf_counter() - t_block):
+        if not execute(op, op_layers, "cold", reset=True):
             continue
-        first_results_s += time.perf_counter() - t_block
-        first_results_cpu_s += procs.session_cpu_s(sid) - cpu0
         _add(cold_layers, op_layers)
         if one_warm:
             op_layers = layer_trace.new_layers()
-            if execute(op, op_layers, "warm"):
+            if execute(op, op_layers, "warm", reset=False):
                 _add(warm_layers, op_layers)
     done = [op for op in ops if samples[op.name]["cold"] is not None]
     while not one_warm and done and time.perf_counter() - t_start < seconds:
         for op in done:
             if time.perf_counter() - t_start >= seconds:
                 break
-            execute(op, layer_trace.new_layers(), "warm")
+            execute(op, layer_trace.new_layers(), "warm", reset=False)
     persists += ops[-1].reset()
     return {
         "samples": samples,
         "first_results_s": first_results_s,
-        "first_results_cpu_s": first_results_cpu_s,
         "coverage": coverage,
         "cold_layers": dict(cold_layers),
         "warm_layers": dict(warm_layers),
@@ -426,13 +426,14 @@ def summarize(workload: str, setup: dict, run: dict, wrong: dict, peak_rss_mb: f
         "import_s": setup["import_s"],
         "start_s": setup["start_s"],
         "wall_s": setup["import_s"] + setup["start_s"] + run["first_results_s"],
-        "cold_cpu_s": run["first_results_cpu_s"],
+        "cold_cpu_s": sum(s["cold_cpu"] for s in samples.values() if s["cold"] is not None),
+        "cold_jit_s": sum(s["cold_jit"] for s in samples.values() if s["cold"] is not None),
         "cold_s": sum(cold),
         "warm_s": sum(warm),
         "op_p50_s": statistics.median(warm) if warm else 0.0,
         "warm_samples": sum(len(s["warm"]) for s in samples.values()),
         "peak_rss_mb": peak_rss_mb,
-        "ops": {n: {"cold": s["cold"], "warm": s["warm"]} for n, s in samples.items()},
+        "ops": {n: {k: v for k, v in s.items() if k != "failed"} for n, s in samples.items()},
     }
     if run["cold_layers"]:
         result["cold_layers"] = run["cold_layers"]
