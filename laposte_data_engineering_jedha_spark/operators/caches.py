@@ -1,4 +1,15 @@
-"""Lifecycle registry for operator-internal persisted relations.
+"""Persist-or-recompute gate and lifecycle registry for operator-internal
+persisted relations.
+
+This module is the one home of the size gate. `is_small` reads Catalyst's
+size estimate (no action) and compares it with `GATE_MAX_EST_BYTES`;
+`persist_if_small` persists and tracks a relation only when the gate
+passes. At bench scale a persist collapses repeated Arrow-kernel and
+scan pipelines; at 100 TB persisting an O(corpus) relation would spill
+the corpus to local disk, so estimated-big inputs keep the recompute
+plan. Callers probe the INPUT scan rather than the persisted relation
+when join-selectivity guesses inflate the latter's estimate (measured
+~1000x for post-join relations).
 
 Several operators persist a narrow internal projection because it is
 referenced multiple times in one plan and PythonUDF subtrees never
@@ -82,6 +93,55 @@ MAX_PINNED = 8
 # (evict the oldest pin with a RuntimeWarning) for sessions that
 # knowingly hold >MAX_PINNED already-consumed pins.
 PIN_EVICTION_POLICY = "raise"
+
+# Plan-stats gate: a relation whose Catalyst size estimate is at most this
+# many bytes is persisted (and, in ranking, counted) rather than recomputed
+# — deciding never touches the data, the only acceptable behavior at
+# 100 TB. Deliberately generous: a wrong "small" costs a cache fill, a
+# wrong "big" costs a recompute.
+GATE_MAX_EST_BYTES = 256 << 20
+
+
+def _plan_stats(df: DataFrame):
+    return df._jdf.queryExecution().optimizedPlan().stats()
+
+
+def _estimated_bytes(df: DataFrame) -> int:
+    try:
+        return int(_plan_stats(df).sizeInBytes())
+    except Exception:  # pragma: no cover - py4j/stats unavailable
+        return 1 << 62  # unknown: assume big, choose the scale-safe form
+
+
+def estimated_rows(df: DataFrame, row_bytes: int) -> int | None:
+    """Catalyst row estimate: exact rowCount when the optimizer has one,
+    else sizeInBytes / row_bytes. None = unknown."""
+    try:
+        stats = _plan_stats(df)
+        rc = stats.rowCount()
+        if rc.isDefined():
+            return int(rc.get().toString())
+        size = int(stats.sizeInBytes())
+        if size >= (1 << 60):  # Catalyst's "unknown" sentinel magnitude
+            return None
+        return max(1, size // row_bytes)
+    except Exception:  # pragma: no cover - py4j/stats unavailable
+        return None
+
+
+def is_small(*probes: DataFrame) -> bool:
+    """True when the smallest size estimate over `probes` is within
+    `GATE_MAX_EST_BYTES`."""
+    return min(_estimated_bytes(p) for p in probes) <= GATE_MAX_EST_BYTES
+
+
+def persist_if_small(df: DataFrame, *probes: DataFrame) -> DataFrame:
+    """`track(df.persist())` when `is_small(*probes)` (probes default to
+    `df` itself), else `df` unchanged. Tracked unpinned — eviction only
+    recomputes."""
+    if is_small(*(probes or (df,))):
+        return track(df.persist())
+    return df
 
 
 def track(df: DataFrame, pin: bool = False) -> DataFrame:

@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from ..functions import texts
 from . import caches
-from .ranking import GATE_MAX_EST_BYTES, _estimated_bytes
 
 
 def global_running_sum(
@@ -377,19 +376,19 @@ def bloom_contamination(
     # canonicalizes equal — unpersisted it ran twice per fold per query.
     # Stats-gated on each fold's INPUT estimate; a 100 TB train fold keeps
     # the recompute plan (its bitmap fold is one pass either way).
-    sh_test = test.select(
-        F.col(id_col), F.explode(texts.pd_shingles(texts.tokens(text_col))).alias("shingle")
+    sh_test = caches.persist_if_small(
+        test.select(
+            F.col(id_col),
+            F.explode(texts.pd_shingles(texts.tokens(text_col))).alias("shingle"),
+        ),
+        test,
     )
-    if _estimated_bytes(test) <= GATE_MAX_EST_BYTES:
-        sh_test = caches.track(sh_test.persist())
-    sh_train = (
+    sh_train = caches.persist_if_small(
         train.select(
             F.explode(texts.pd_shingles(texts.tokens(text_col))).alias("shingle")
-        )
-        .distinct()
+        ).distinct(),
+        train,
     )
-    if _estimated_bytes(train) <= GATE_MAX_EST_BYTES:
-        sh_train = caches.track(sh_train.persist())
 
     def positions(df: DataFrame) -> DataFrame:
         pos = texts.md5int32(

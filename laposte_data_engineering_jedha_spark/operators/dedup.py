@@ -33,19 +33,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from ..functions import texts, vectors
 from ..functions.vectors import _ltr_dot
 from . import caches
-from .ranking import GATE_MAX_EST_BYTES, _estimated_bytes
-
-
-def _maybe_cached(df: DataFrame) -> DataFrame:
-    """Persist a multiply-consumed intermediate ONLY when Catalyst's size
-    estimate says it is small (same stats-gate as operators/ranking.py and
-    reconcile.py): at bench scale the cache collapses repeat UDF pipelines;
-    at 100 TB persisting an O(corpus) relation would spill the corpus to
-    local disk and sequential recompute scans are the right trade. Tracked
-    unpinned — eviction only recomputes."""
-    if _estimated_bytes(df) <= GATE_MAX_EST_BYTES:
-        return caches.track(df.persist())
-    return df
+from .graphs import DRIVER_MAX_EDGES
 
 
 def _ltr_sq(m):
@@ -111,10 +99,10 @@ def ngram_jaccard_pairs(
     # so without the persist the tokenize+shingle ArrowEvalPython pipeline
     # re-runs per reference. The cached relation keeps the cap window's
     # hash(shingle) partitioning, so the pair self-join below adds NO
-    # exchange. Stats-gated like reconcile._maybe_cached at 100 TB the
-    # index is O(corpus) and recompute-per-consumer is the right trade, so
-    # big inputs skip the persist (tracked-unpinned either way).
-    sh = _maybe_cached(_shingle_index(df, text_col, id_col, max_shingle_df))
+    # exchange. Stats-gated (caches.persist_if_small): at 100 TB the index
+    # is O(corpus) and recompute-per-consumer is the right trade, so big
+    # inputs skip the persist.
+    sh = caches.persist_if_small(_shingle_index(df, text_col, id_col, max_shingle_df))
     # Per-doc sizes come from the SAME (possibly df-capped) index, so the
     # Jaccard denominator stays consistent with the intersection's shingle
     # universe — sizing over the uncapped set would silently deflate every
@@ -157,7 +145,7 @@ def ngram_containment_pairs(
     """
     # Same persist rationale as ngram_jaccard_pairs: 3 consumers, UDF
     # subtrees never reuse, cached partitioning feeds the self-join.
-    sh = _maybe_cached(_shingle_index(df, text_col, id_col, max_shingle_df))
+    sh = caches.persist_if_small(_shingle_index(df, text_col, id_col, max_shingle_df))
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -427,7 +415,7 @@ def hamming_band_pairs(
     # estimate is honest — no join inflation): the pair join then reads
     # both sides from the cache with no extra Exchange, and a 100 TB
     # corpus skips the persist and keeps the recompute plan.
-    if _estimated_bytes(sims) <= GATE_MAX_EST_BYTES:
+    if caches.is_small(sims):
         banded = caches.track(banded.repartition("band", "key").persist())
     if max_bucket is not None:
         cap_w = Window.partitionBy("band", "key").orderBy(
@@ -612,22 +600,6 @@ occupancy ~1,200 (sf1 pinned) -> narrow wins (70 vs 114 s); the cap
 sits at the auto-banding design point between those regimes."""
 
 
-def _estimated_rows(df: DataFrame, row_bytes: int) -> int | None:
-    """Catalyst row estimate for the plan gate: exact rowCount when the
-    optimizer has one, else sizeInBytes / row_bytes. None = unknown."""
-    try:
-        stats = df._jdf.queryExecution().optimizedPlan().stats()
-        rc = stats.rowCount()
-        if rc.isDefined():
-            return int(rc.get().toString())
-        size = int(stats.sizeInBytes())
-        if size >= (1 << 60):  # Catalyst's "unknown" sentinel magnitude
-            return None
-        return max(1, size // row_bytes)
-    except Exception:  # pragma: no cover - py4j/stats unavailable
-        return None
-
-
 def embedding_dup_pairs_lsh(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -712,14 +684,14 @@ def embedding_dup_pairs_lsh(
     # body runs exactly once, so an internal cache only adds its exchange
     # + materialization cost.
     if persist_banded is None:
-        persist_banded = _estimated_bytes(df) <= GATE_MAX_EST_BYTES
+        persist_banded = caches.is_small(df)
     input_small = persist_banded
     if persist_src:
         src = caches.track(src.persist())
     if carry_vectors is None:
         # stats-only gate (no action): unknown estimates take the narrow
         # form — it is the conservative pre-round-11 plan
-        est = _estimated_rows(src, row_bytes=4 * dim + 48)
+        est = caches.estimated_rows(src, row_bytes=4 * dim + 48)
         carry_vectors = (
             est is not None and est / (1 << band_planes) <= CARRY_MAX_OCCUPANCY
         )
@@ -924,11 +896,8 @@ def embedding_dup_pairs_lsh_cross(
     # join-selectivity inflation makes post-UDF estimates useless, see
     # ppjoin_pairs). At 100 TB the train side stays recompute; the eval
     # side is tiny by contract and keeps its persist.
-    new_src, base_src = prep(new_df), prep(base_df)
-    if _estimated_bytes(new_df) <= GATE_MAX_EST_BYTES:
-        new_src = caches.track(new_src.persist())
-    if _estimated_bytes(base_df) <= GATE_MAX_EST_BYTES:
-        base_src = caches.track(base_src.persist())
+    new_src = caches.persist_if_small(prep(new_df), new_df)
+    base_src = caches.persist_if_small(prep(base_df), base_df)
     a, b = banded(new_src).alias("a"), banded(base_src).alias("b")
     cand = (
         a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key")))
@@ -948,19 +917,6 @@ def embedding_dup_pairs_lsh_cross(
         .select("new_id", "base_id", (F.round(cos * 10000) / 10000).alias("cosine"))
         .where(F.col("cosine") >= threshold)
     )
-
-
-# Driver fast-path bound for connected_components: a symmetric edge set at
-# or under this many rows (2 ids/row -> ~2 MB collected) is union-found on
-# the driver in one pass instead of O(log diameter) distributed rounds.
-# Near-dup graphs are SPARSE relative to the corpus (the sf0.1 semantic
-# graph is 218 pairs out of 5.5k vectors; sf1 ~2.2k), so the gate routes
-# every real corpus's post-threshold graph by its measured size, exactly
-# like a broadcast-join side; graphs above the bound take the unchanged
-# pointer-jumping loop. This is the same bounded-collect contract as the
-# ranking family's gated offsets path (partition-count rows) — never
-# O(corpus) rows.
-CC_DRIVER_MAX_EDGES = 1 << 17
 
 
 def _driver_union_find(edges: DataFrame) -> DataFrame:
@@ -1007,7 +963,7 @@ def connected_components(
     id_b: str = "id_b",
     max_iter: int = 25,
     jump_after: int = 3,
-    driver_max_edges: int = CC_DRIVER_MAX_EDGES,
+    driver_max_edges: int = DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """Connected components over near-dup pairs: (node, component) where
     component = the minimum node id in the node's component — the cluster
@@ -1256,7 +1212,7 @@ def winnow_pairs(
             .where(F.col("__df") <= max_fp_df)
             .select(id_col, "fp")
         )
-    fp = _maybe_cached(fp)
+    fp = caches.persist_if_small(fp)
     sizes = fp.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_fp"))
     a, b = fp.alias("a"), fp.alias("b")
     inter = (
@@ -1357,8 +1313,7 @@ def ppjoin_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     # ~1000x (measured 12 GB for a few-MB relation), while pf's true size
     # is O(input postings) — so the input estimate is the honest,
     # scale-correct proxy (big corpus -> recompute, the right 100 TB trade).
-    if _estimated_bytes(docs) <= GATE_MAX_EST_BYTES:
-        pf = caches.track(pf.persist())
+    pf = caches.persist_if_small(pf, docs)
     a = pf.select(
         F.col("doc_id").alias("id_a"), "tok",
         F.col("r").alias("ra"), F.col("n").alias("na"),
@@ -1405,26 +1360,12 @@ def ppjoin_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     )
 
 
-def spread_scan(df: DataFrame) -> DataFrame:
-    """Widen coarse scans before CPU-heavy Arrow kernels: a table stored
-    as 2 parquet files plans 2 scan tasks, serializing the kernel on a
-    32-core host (measured 28 -> 2.4 s for the sf1 bigram explode,
-    queries/round13c). One cheap row shuffle buys full parallelism; a
-    production table at 100 TB has thousands of splits and takes the
-    no-op branch."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
 def _ppjoin_prefix(docs: DataFrame):
     """Shared front of the PPJoin family: the persisted doc-grain shingle
     relation `tl` (doc_id, hs) and the rarity-ordered prefix postings
     `pf` (doc_id, tok, r, n) — each doc's n // 2 + 1 globally-rarest
-    shingles with their rank and set size. The scan widens through
-    spread_scan before the Arrow shingle kernel."""
-    docs = spread_scan(docs)
+    shingles with their rank and set size. Callers spread a coarse scan
+    (queries.spread_table) before it reaches the Arrow shingle kernel."""
     tl = caches.track(
         docs.select(
             "doc_id", texts.pd_shingle_hashes(texts.tokens("text")).alias("hs")

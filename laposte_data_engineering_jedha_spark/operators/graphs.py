@@ -48,16 +48,23 @@ DEFAULT_BUCKET_CAP = 128
 DEFAULT_MAX_OUT_DEG = 64
 
 
-#: driver fast-path bound for the triangle count (r13 optimization): a
-#: SUPPORT-THRESHOLDED edge list (already collapsed from the bucket join to
-#: unique user pairs with w >= min_w) at or under this many rows is
-#: oriented, wedge-enumerated and closed in plain Python on the driver —
-#: the same bounded-collect contract as dedup.CC_DRIVER_MAX_EDGES. The pair
-#: GENERATION stays distributed either way; only the post-edges stages
-#: (degree + 3 joins + wedge self-join + closing join + 3 scalar
-#: aggregates, each a driver round-trip at bench scale) collapse. Larger
-#: edge lists take the unchanged distributed pipeline by measured size.
-TRI_DRIVER_MAX_EDGES = 1 << 17
+#: driver fast-path bound shared by every graph operator (r13
+#: optimization): a post-threshold edge list at or under this many rows
+#: (2 ids/row -> ~2 MB collected) is processed in plain Python on the
+#: driver instead of as a distributed iterative job. Connected components
+#: (dedup.connected_components) union-find it in one pass; triangles
+#: (co_activity_triangles) orient, wedge-enumerate and close it; k-core
+#: (kcore_peel) peels it; synchronous label propagation
+#: (queries graph_label_prop_communities) propagates it, once its caller
+#: has also bounded the NODE universe (collected labels are O(nodes)).
+#: Only the post-edges stages collapse: the edge BUILD (bucket joins,
+#: dedup, weight aggregates) stays distributed either way. Near-dup and
+#: co-activity graphs are sparse relative to the corpus (the sf0.1
+#: semantic graph is 218 pairs out of 5.5k vectors), so the gate routes
+#: by MEASURED edge count, never by configuration, like a broadcast-join
+#: side; bigger graphs take the unchanged distributed loops. Each
+#: operator's `driver_max_edges=0` forces the distributed branch.
+DRIVER_MAX_EDGES = 1 << 17
 
 
 def _driver_triangles(
@@ -101,7 +108,7 @@ def co_activity_triangles(
     min_w: int,
     bucket_cap: int | None = DEFAULT_BUCKET_CAP,
     max_out_deg: int | None = DEFAULT_MAX_OUT_DEG,
-    driver_max_edges: int = TRI_DRIVER_MAX_EDGES,
+    driver_max_edges: int = DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """Triangle count of the user co-activity graph (edge = two users
     sharing >= min_w distinct (hour, event-type) buckets) via the
@@ -197,28 +204,6 @@ def co_activity_triangles(
     )
 
 
-#: driver fast-path bound (r13 optimization): an edge list at or under this
-#: many rows is peeled in plain Python on the driver — the same
-#: bounded-collect contract as dedup.CC_DRIVER_MAX_EDGES (~2 MB collected).
-#: Filtered trade/co-activity graphs are sparse relative to the corpus, so
-#: the gate routes by MEASURED size, never by configuration; bigger graphs
-#: take the unchanged distributed loop.
-KCORE_DRIVER_MAX_EDGES = 1 << 17
-
-
-#: driver fast-path bound for synchronous label propagation (r13
-#: optimization): a WEIGHTED unique-pair edge list (post-aggregation,
-#: w = shared-bucket count) at or under this many rows is
-#: label-propagated in plain Python on the driver — the same
-#: bounded-collect contract as dedup.CC_DRIVER_MAX_EDGES /
-#: TRI_DRIVER_MAX_EDGES. The co-presence edge BUILD (cell self-join +
-#: dedup + weight aggregate) stays distributed either way; only the
-#: per-round join + vote aggregate + argmax + label left-join stages
-#: collapse. The caller must also bound its NODE universe before taking
-#: this path (collected labels are O(nodes)).
-LP_DRIVER_MAX_EDGES = 1 << 17
-
-
 def _driver_label_prop(
     edge_rows: list[tuple], node_ids: list, rounds: int = 2
 ) -> dict:
@@ -284,7 +269,7 @@ def kcore_peel(
     edges: DataFrame,
     k: int,
     rounds: int | None = None,
-    driver_max_edges: int = KCORE_DRIVER_MAX_EDGES,
+    driver_max_edges: int = DRIVER_MAX_EDGES,
 ) -> list[tuple[int, int, int]]:
     """Iterative k-core PEELING over an undirected edge list (u, v):
     each round drops every node with degree < k and every edge touching

@@ -22,11 +22,12 @@ HYBRID GATE (r9 verdict item 3): the two-pass machinery costs a real
 fixed ~0.9 s/call (range-boundary sampling pass + the offsets action,
 interleaved A/B at sf0.1) vs ~0.34 s for the single-partition window —
 the right trade only when the single sort task would actually be fat.
-The default `strategy="auto"` gates in two stages: (1) Catalyst's
-size ESTIMATE (no action) — inputs estimated over `GATE_MAX_EST_BYTES`
-take the offsets form without the gate ever touching the data (the
-only acceptable behavior at 100 TB); (2) otherwise persist + count
-once — the count fills the cache, so the chosen branch reads it
+The default `strategy="auto"` gates in two stages: (1) the size gate
+of operators/caches.py, its one home (`caches.is_small`: Catalyst's
+size ESTIMATE against the gate threshold, no action) — estimated-big
+inputs take the offsets form without the gate ever touching the data
+(the only acceptable behavior at 100 TB); (2) otherwise persist +
+count once — the count fills the cache, so the chosen branch reads it
 instead of recomputing upstream — and pick the window form at or below
 `WINDOW_MAX_ROWS` rows. Both forms are bit-identical by contract, so
 the gate is a pure plan choice. Pass `strategy="offsets"` /
@@ -64,21 +65,6 @@ _OFF = "__rank_off"
 # 0.34 s vs offsets 0.9 s fixed overhead (BASELINE.md round-9 close).
 WINDOW_MAX_ROWS = 1_000_000
 
-# Plan-stats pre-gate: if Catalyst's size estimate for the input exceeds
-# this, pick the offsets form WITHOUT materializing anything — no count
-# action, no persist of a potentially huge relation (at 100 TB the gate
-# must never touch the data to decide). Deliberately generous: a wrong
-# "offsets" pick costs the ~0.9 s fixed overhead, a wrong "window" pick
-# would sort the whole relation in one task.
-GATE_MAX_EST_BYTES = 256 << 20
-
-
-def _estimated_bytes(df: DataFrame) -> int:
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # pragma: no cover - py4j/stats unavailable
-        return 1 << 62  # unknown: assume big, choose the scale-safe form
-
 
 def _auto_pick(df: DataFrame) -> tuple[str, DataFrame, int | None]:
     """The auto gate. Estimated-big inputs go straight to the offsets
@@ -89,7 +75,7 @@ def _auto_pick(df: DataFrame) -> tuple[str, DataFrame, int | None]:
     offsets form they replaced). Returns (strategy, input, total|None);
     the persist is tracked unpinned (eviction costs a recompute only —
     no driver-side constants depend on it)."""
-    if _estimated_bytes(df) > GATE_MAX_EST_BYTES:
+    if not caches.is_small(df):
         return "offsets", df, None
     cached = caches.track(df.persist())
     total = cached.count()

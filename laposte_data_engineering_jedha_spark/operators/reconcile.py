@@ -43,7 +43,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import caches
-from .ranking import GATE_MAX_EST_BYTES, _estimated_bytes
 
 _KH = "__mrk_kh"  # 52-bit key digest (bucket routing)
 _H = "__mrk_h"  # 52-bit row digest (key + values)
@@ -143,22 +142,18 @@ def _resolve_value_cols(
     return value_cols
 
 
-def _maybe_cached(df: DataFrame, small: bool) -> DataFrame:
-    """The bucketed digest relation is consumed 2-3 times per ladder.
-    Persist it ONLY when `small` (the caller's stats gate): at bench
-    scale the cache collapses repeat scans; at 100 TB caching an
-    O(corpus) relation would write the corpus to local disk, and
-    sequential recompute scans are the right trade. Tracked unpinned —
-    eviction only recomputes."""
-    if small:
-        return caches.track(df.persist())
-    return df
-
-
-def _replicas_small(left: DataFrame, right: DataFrame) -> bool:
-    """Shared stats gate for BOTH snapshots, from the MINIMUM of the two
-    input estimates (r13 optimization): the snapshots are replicas of the
-    same table by this module's contract, but a replica assembled as
+def _digest_sides(
+    left: DataFrame,
+    right: DataFrame,
+    key_cols: list[str],
+    value_cols: list[str],
+    n_coarse: int,
+    n_fine: int,
+) -> tuple[DataFrame, DataFrame]:
+    """Both snapshots' bucketed digest relations, each consumed 2-3 times
+    per ladder, persisted under ONE shared size gate: the MINIMUM of the
+    two input estimates (r13 optimization). The snapshots are replicas of
+    the same table by this module's contract, but a replica assembled as
     scan + delta-union (the incremental-reconcile shape) carries a
     garbage Catalyst estimate — measured 4.9e18 bytes for a ~20 MB
     relation (union with a LocalRelation; the same estimate-inflation
@@ -167,8 +162,11 @@ def _replicas_small(left: DataFrame, right: DataFrame) -> bool:
     digest pipeline twice per query. The honest scan-side estimate
     stands in for both; at 100 TB it is big and both sides keep the
     recompute plan."""
-    return (
-        min(_estimated_bytes(left), _estimated_bytes(right)) <= GATE_MAX_EST_BYTES
+    return tuple(
+        caches.persist_if_small(
+            _bucketed(side, key_cols, value_cols, n_coarse, n_fine), left, right
+        )
+        for side in (left, right)
     )
 
 
@@ -236,12 +234,10 @@ def merkle_bucket_diff(
     the same table — the small-scale persist gate reads
     min(est(left), est(right)) because a replica assembled as
     scan + delta-union carries a garbage Catalyst estimate
-    (_replicas_small). Passing two genuinely different-sized relations
+    (_digest_sides). Passing two genuinely different-sized relations
     violates that contract and can persist an O(big-side) relation."""
     value_cols = _resolve_value_cols(left, right, key_cols, value_cols)
-    small = _replicas_small(left, right)
-    da = _maybe_cached(_bucketed(left, key_cols, value_cols, n_coarse, n_fine), small)
-    db = _maybe_cached(_bucketed(right, key_cols, value_cols, n_coarse, n_fine), small)
+    da, db = _digest_sides(left, right, key_cols, value_cols, n_coarse, n_fine)
     return _dirty_fine_buckets(da, db)
 
 
@@ -266,9 +262,7 @@ def merkle_reconcile(
     merkle_bucket_diff: both inputs must be snapshots of the SAME table
     (the persist gate reads the minimum of the two estimates)."""
     value_cols = _resolve_value_cols(left, right, key_cols, value_cols)
-    small = _replicas_small(left, right)
-    da = _maybe_cached(_bucketed(left, key_cols, value_cols, n_coarse, n_fine), small)
-    db = _maybe_cached(_bucketed(right, key_cols, value_cols, n_coarse, n_fine), small)
+    da, db = _digest_sides(left, right, key_cols, value_cols, n_coarse, n_fine)
     dirty_fine = _dirty_fine_buckets(da, db).select("coarse", "fine")
     la = da.join(F.broadcast(dirty_fine), ["coarse", "fine"]).select(
         *key_cols, F.col(_H).alias("__h_l")

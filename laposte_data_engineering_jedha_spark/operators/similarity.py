@@ -709,10 +709,7 @@ def ivf_index_search(
     # out-of-contract large panel would otherwise silently cache without
     # bound before the broadcast even failed) — consistent with every
     # other r13 persist gate.
-    from .ranking import GATE_MAX_EST_BYTES, _estimated_bytes
-
-    if _estimated_bytes(queries) <= GATE_MAX_EST_BYTES:
-        qry = caches.track(qry.persist())
+    qry = caches.persist_if_small(qry, queries)
     probed = sorted({r["centroid"] for r in qry.select("centroid").distinct().collect()})
     postings = (
         _index_postings(spark, path)

@@ -176,21 +176,24 @@ def spread_table(
 
 
 def sort_report(df: DataFrame, *cols) -> DataFrame:
-    """Total order for a CONSTANT-BOUNDED report relation without a range
-    exchange (r14, guide §2.4 "an orderBy used only to make output
-    deterministic"): `coalesce(1).sortWithinPartitions(...)` produces the
-    identical global order — one partition, fully sorted — while a final
-    `orderBy` plans Exchange(rangepartitioning) plus its bounds-sampling
-    job on every run.
+    """Total order for the OUTPUT OF A GROUP-BY AGGREGATE WITH CONSTANT
+    CARDINALITY without a range exchange (r14, guide §2.4 "an orderBy
+    used only to make output deterministic"):
+    `coalesce(1).sortWithinPartitions(...)` produces the identical global
+    order — one partition, fully sorted — while a final `orderBy` plans
+    Exchange(rangepartitioning) plus its bounds-sampling job on every run.
 
-    ONLY for outputs bounded by a constant-cardinality group key (event
-    types, segments, digits, bands, fixed histogram buckets): coalesce(1)
-    caps the final stage at one task, which is exactly right for a
-    few-row report at any corpus scale (the map-side partial aggregation
-    still runs wide; only the constant-size merge serializes) but would
-    serialize real work for corpus-proportional outputs — those keep
-    orderBy. Same single-partition total-order construction as the r13
-    kcore audit emission."""
+    ONLY valid when `df` is a groupBy/agg whose key has a constant number
+    of values (event types, segments, digits, bands, fixed histogram
+    buckets). coalesce(1) is a narrow dependency, so it caps the WHOLE
+    final stage at one task, not just the output: after such an
+    aggregate that stage is the constant-size merge (the map-side
+    partial aggregation still runs wide), which is right at any corpus
+    scale. Anything else — a window, filter, join or top-k over a
+    corpus-proportional relation, even one whose output is small — would
+    run that work in a single task, and keeps orderBy. Same
+    single-partition total-order construction as the r13 kcore audit
+    emission."""
     return df.coalesce(1).sortWithinPartitions(*cols)
 
 

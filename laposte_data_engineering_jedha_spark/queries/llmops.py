@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import texts, vectors
-from ..operators import corpus, dedup, joins, multimodal, similarity
+from ..operators import caches, corpus, dedup, joins, multimodal, similarity
 from ..streaming import jobs as streaming_jobs
 from . import events_table, query, table, table_rowcount
 
@@ -501,7 +501,7 @@ def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quality+lang kernels + exact-dedup window execute ONCE (signature
     # build) instead of twice (again for the anti-join left side);
     # recompute at 100 TB by the same gate.
-    kept = dedup._maybe_cached(
+    kept = caches.persist_if_small(
         base.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")

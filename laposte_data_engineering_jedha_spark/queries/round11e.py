@@ -101,7 +101,6 @@ def eval_cluster_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n2 = q.withColumn("sq", vectors.pd_dot("qe", "qe"))
     from ..operators import caches
-    from ..operators.ranking import GATE_MAX_EST_BYTES, _estimated_bytes
 
     # c is consumed by the probe slice AND the corpus side of the pair
     # cross-join, and PythonUDF subtrees never canonicalize equal — without
@@ -117,8 +116,7 @@ def eval_cluster_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sq").alias("c_n2"),
         F.col("centroid").alias("c_c"),
     )
-    if _estimated_bytes(emb) <= GATE_MAX_EST_BYTES:
-        c = caches.track(c.persist())
+    c = caches.persist_if_small(c, emb)
     s = (
         c.where(F.col("c_id") < _SIL_PROBES)
         .select(

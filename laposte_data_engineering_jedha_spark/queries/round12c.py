@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import vectors
-from ..operators import caches, dedup, similarity
+from ..operators import caches, similarity
 from . import query, table
 from .llmops import SQL_NORM, sql_dot, sql_round
 from .round5 import _EMB_DIM, _IVF_K, _sql_argmin
@@ -93,8 +93,7 @@ def eval_ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     # slice), each re-running the norm kernel + scan unpersisted
     # (PythonUDF subtrees never canonicalize equal). Stats-gated on the
     # INPUT scan estimate: a 100 TB corpus keeps the recompute plan.
-    if dedup._estimated_bytes(emb) <= dedup.GATE_MAX_EST_BYTES:
-        n = caches.track(n.persist())
+    n = caches.persist_if_small(n, emb)
     q_pred = (F.col("vec_id") >= _RK_Q_LO) & (F.col("vec_id") < _RK_Q_HI)
     cand = n.select(
         F.col("vec_id").alias("cand_id"),

@@ -216,7 +216,7 @@ def corpus_fixed_n_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ranked.where(F.col("rk") <= _FIX_N)
         .select("doc_id", F.col("rk").cast("long").alias("sample_rank"))
-        .transform(sort_report, "sample_rank")
+        .orderBy("sample_rank")
     )
 
 

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ..functions import texts
 from ..operators import dedup
-from . import query, table
+from . import query, spread_table, table
 from .llmops import (
     _SQL_SHINGLE_CTES,
     _SQL_SIG,
@@ -114,7 +114,8 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted lists, smallest for exactly the shingles the prefix keeps —
     frequency-skewed corpora (the 100 TB reality) self-mitigate because
     boilerplate shingles fall outside every prefix."""
-    return dedup.ppjoin_pairs(table(spark, sf_dir, "documents"), threshold=_PFJ_T)
+    docs = spread_table(spark, sf_dir, "documents", min_bytes=256 << 10, key="doc_id")
+    return dedup.ppjoin_pairs(docs, threshold=_PFJ_T)
 
 
 @query(
@@ -282,4 +283,5 @@ def dedup_ppjoin_pair_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     >65 GB and died). Same observability contract as
     corpus_band_occupancy_stats on the LSH side; admissibility
     (mass >= emitted pairs) pinned in tests/test_round13.py."""
-    return dedup.ppjoin_pair_mass(table(spark, sf_dir, "documents"))
+    docs = spread_table(spark, sf_dir, "documents", min_bytes=256 << 10, key="doc_id")
+    return dedup.ppjoin_pair_mass(docs)

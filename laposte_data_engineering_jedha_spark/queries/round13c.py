@@ -29,18 +29,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import texts
-from ..operators import caches, dedup
+from ..operators import caches
 from . import query, spread_table, table
 from .llmops import sql_quality, sql_round, sql_toks
-
-
-def _spread(df):
-    """Widen coarse scans before CPU-heavy token work (delegates to
-    operators/dedup.spread_scan — measured 28 -> 2.4 s for the sf1
-    bigram explode on a 2-file table)."""
-    from ..operators.dedup import spread_scan
-
-    return spread_scan(df)
 
 
 _KN_D = 0.75
@@ -87,7 +78,7 @@ def text_bigram_kn_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a fixed-shape scalar expression over integer counts — no float
     summation anywhere, so the 1e-6 rounding is bit-stable across
     engines."""
-    docs = _spread(table(spark, sf_dir, "documents"))
+    docs = spread_table(spark, sf_dir, "documents", min_bytes=256 << 10, key="doc_id")
     t = texts.tokens("text")
     bg0 = docs.where(F.size(t) >= 2).select(F.explode(texts.bigrams(t)).alias("bgs"))
     bg = caches.track(
@@ -175,8 +166,7 @@ def corpus_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread_table(spark, sf_dir, "documents", min_bytes=256 << 10, key="doc_id")
     w = F.round(texts.quality_score("text") * _IS_SCALE).cast("long")
     q = docs.select("doc_id", w.alias("w"))
-    if dedup._estimated_bytes(docs) <= dedup.GATE_MAX_EST_BYTES:
-        q = caches.track(q.persist())
+    q = caches.persist_if_small(q, docs)
     tot = q.agg(F.sum("w").alias("big_w"))
     h = F.conv(
         F.substring(

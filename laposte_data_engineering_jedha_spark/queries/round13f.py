@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import caches, dedup
-from . import query, sort_report, table
+from . import query, table
 from .llmops import sql_round
 
 _MB_MIN_SUPPORT = 3  # pair must co-occur in >= 3 baskets
@@ -73,7 +73,7 @@ def olap_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pre-partitioned on the pair-join key so the self-join reads the
     # cache in the distribution it needs. Stats-gated on the lineitem
     # scan estimate; a 100 TB fact table keeps the recompute plan.
-    if dedup._estimated_bytes(li) <= dedup.GATE_MAX_EST_BYTES:
+    if caches.is_small(li):
         baskets = caches.track(baskets.repartition("okey").persist())
     n = baskets.agg(F.count_distinct("okey").alias("n_baskets"))
     item = baskets.groupBy("part").agg(F.count(F.lit(1)).alias("c"))
@@ -169,5 +169,5 @@ def corpus_dedup_audit_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("r", F.row_number().over(w))
         .where(F.col("r") <= _AUD_PER_BAND)
         .select("band", "id_a", "id_b", "jaccard")
-        .transform(sort_report, "band", "id_a", "id_b")
+        .orderBy("band", "id_a", "id_b")
     )

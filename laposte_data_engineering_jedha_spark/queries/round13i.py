@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..operators import caches
 from ..streaming import jobs
-from . import events_table, query, table
+from . import events_table, query, spread_table
 from .llmops import sql_round, sql_toks
 
 # =========================== AMS second moment ===============================
@@ -185,9 +185,8 @@ def text_pmi_lift_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Cite: reference repo has no text-statistics surface (extension)."""
     from ..functions import texts
-    from .round13c import _spread
 
-    docs = _spread(table(spark, sf_dir, "documents"))
+    docs = spread_table(spark, sf_dir, "documents", min_bytes=256 << 10, key="doc_id")
     t = texts.tokens("text")
     toks = docs.select(t.alias("t"))
     uni = caches.track(

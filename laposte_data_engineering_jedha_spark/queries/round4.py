@@ -378,8 +378,7 @@ def text_perplexity_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-doc join — each otherwise re-running tokenize + explode + the
     # first aggregate. Stats-gated on the INPUT scan estimate (post-explode
     # estimates inflate); 100 TB keeps the recompute plan.
-    if dedup._estimated_bytes(docs) <= dedup.GATE_MAX_EST_BYTES:
-        tc = caches.track(tc.persist())
+    tc = caches.persist_if_small(tc, docs)
     freq = tc.groupBy("tok").agg(F.sum("c").alias("tf"))
     n_total = float(freq.agg(F.sum("tf").alias("n")).first()["n"])
     per_doc = (

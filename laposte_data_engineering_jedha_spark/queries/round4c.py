@@ -715,7 +715,7 @@ def events_user_triangles(
     # the exact form IS the operator with both caps disabled (the former
     # inline copy of the same stages was removed in the r13 optimization
     # round so the exact branch shares the operator's driver fast path:
-    # thresholded edge lists under TRI_DRIVER_MAX_EDGES orient/close in
+    # thresholded edge lists under graphs.DRIVER_MAX_EDGES orient/close in
     # one collect instead of the 6-join wedge pipeline)
     return graphs.co_activity_triangles(
         ev, min_w=_TRI_MIN_W, bucket_cap=None, max_out_deg=None

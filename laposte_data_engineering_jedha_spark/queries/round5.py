@@ -269,7 +269,7 @@ def corpus_clean_pipeline_sem(spark: SparkSession, sf_dir: str) -> DataFrame:
     # kept feeds the minhash signature build AND the anti-join left side —
     # persist collapses the quality+lang Arrow kernels + exact-dedup window
     # to one execution (r13 optimization; stats-gated, recompute at 100 TB)
-    kept = dedup._maybe_cached(
+    kept = caches.persist_if_small(
         base.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")

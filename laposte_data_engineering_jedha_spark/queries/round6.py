@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import texts, vectors
-from ..operators import graphs
+from ..operators import caches, graphs
 from . import events_table, query, table, table_rowcount
 from .llmops import sql_toks
 
@@ -90,8 +90,6 @@ def corpus_passage_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     already-partitioned collect_list, never a global sort. Zero-token
     docs are guarded (sequence(0,-1) would fabricate phantom passages —
     same guard as passage_dup_stats)."""
-    from ..operators.dedup import _maybe_cached
-
     docs = table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", texts.tokens("text").alias("t"))
     pl = toks.select(
@@ -108,8 +106,8 @@ def corpus_passage_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream `p` feeds the dup-key aggregate AND the anti-join left side —
     # unpersisted, the tokenize+passage build runs 3x (r13 optimization;
     # stats-gated, recompute at 100 TB)
-    pl = _maybe_cached(pl)
-    p = _maybe_cached(
+    pl = caches.persist_if_small(pl)
+    p = caches.persist_if_small(
         pl.select("doc_id", F.posexplode("ps").alias("pos", "passage"))
     )
     dupkeys = (
@@ -471,7 +469,7 @@ def graph_label_prop_communities(
     spark: SparkSession,
     sf_dir: str,
     max_cell_members: int | None | str = "auto",
-    driver_max_edges: int = graphs.LP_DRIVER_MAX_EDGES,
+    driver_max_edges: int = graphs.DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """Community detection via synchronous label propagation (2 unrolled
     rounds) over the co-presence graph: users are linked when they have

@@ -160,19 +160,14 @@ def embedding_kmedoid_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     from ..operators import caches
-    from ..operators.ranking import GATE_MAX_EST_BYTES, _estimated_bytes
 
     # q is referenced by seeds + both assignment passes, and a1 by the
     # recenter sums + sizes + scoring join — unpersisted, the quantize
     # transform and the first assignment pipeline re-run per reference
     # (r13 optimization; gated on the INPUT scan estimate, recompute at
     # 100 TB)
-    small = _estimated_bytes(emb) <= GATE_MAX_EST_BYTES
-    if small:
-        q = caches.track(q.persist())
-    a1 = assign(q, seeds, "j", "cq")
-    if small:
-        a1 = caches.track(a1.persist())
+    q = caches.persist_if_small(q, emb)
+    a1 = caches.persist_if_small(assign(q, seeds, "j", "cq"), emb)
     sums = (
         a1.select("cluster", F.posexplode("q").alias("pos", "x"))
         .groupBy("cluster", "pos")

@@ -16,7 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import caches
-from ..operators.dedup import GATE_MAX_EST_BYTES, _estimated_bytes
 from . import query, table
 
 _TOP = 20
@@ -67,7 +66,7 @@ def olap_basket_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # brand counts, both pair-join sides) — persist pre-partitioned on the
     # pair-join key. Stats-gated on the lineitem scan estimate; a 100 TB
     # fact table keeps the recompute plan.
-    if _estimated_bytes(li) <= GATE_MAX_EST_BYTES:
+    if caches.is_small(li):
         b = caches.track(b.repartition("o").persist())
     n = b.agg(F.count_distinct("o").alias("n_orders"))
     s = b.groupBy("brand").agg(F.count(F.lit(1)).alias("n"))

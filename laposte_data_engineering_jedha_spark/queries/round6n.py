@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import caches
-from ..operators.dedup import GATE_MAX_EST_BYTES, _estimated_bytes
 from . import query, spread_table, table
 
 
@@ -86,8 +85,7 @@ def corpus_cross_source_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source", F.md5("passage").alias("k"))
         .distinct()
     )
-    if _estimated_bytes(docs) <= GATE_MAX_EST_BYTES:
-        p = caches.track(p.persist())
+    p = caches.persist_if_small(p, docs)
     keys = (
         p.groupBy("k")
         .agg(F.count_distinct("doc_id").alias("nd"))

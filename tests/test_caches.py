@@ -159,3 +159,26 @@ def test_pinned_cap_not_triggered_by_unpinned_pressure(spark):
     assert not any("MAX_PINNED" in str(w.message) for w in caught)
     assert all(d.storageLevel.useMemory is True for d in pins)
     caches.release_all()
+
+
+def test_persist_if_small_gates_on_threshold(spark, monkeypatch):
+    """The one size gate: a relation at or under GATE_MAX_EST_BYTES is
+    persisted and tracked, one over it comes back unchanged and untracked;
+    with several probes the smallest estimate decides."""
+    caches.release_all()
+    small = spark.range(10).select((F.col("id") + 7).alias("v"))
+    assert caches.persist_if_small(small) is small
+    assert small.storageLevel.useMemory is True
+    assert caches.release_all() == 1
+
+    big = spark.range(1 << 20).select((F.col("id") + 8).alias("v"))
+    monkeypatch.setattr(caches, "GATE_MAX_EST_BYTES", 1 << 10)
+    assert caches.persist_if_small(big) is big
+    assert big.storageLevel.useMemory is False
+    assert caches.release_all() == 0
+
+    # big relation, one small probe: min over probes passes the gate
+    assert caches.is_small(big, small)
+    assert not caches.is_small(big)
+    caches.persist_if_small(big, big, small)
+    assert caches.release_all() == 1

@@ -74,11 +74,11 @@ def test_strategy_gate_picks_form_by_row_count(spark, spend_df, monkeypatch):
 
 def test_stats_pregate_skips_count_for_big_estimates(spark, spend_df, monkeypatch):
     """At 100 TB the gate must never materialize the input to decide:
-    when Catalyst's size estimate exceeds GATE_MAX_EST_BYTES, auto takes
+    when Catalyst's size estimate exceeds caches.GATE_MAX_EST_BYTES, auto takes
     the offsets form with no persist+count of the input (only the
     offsets machinery's own pinned persist is tracked)."""
     caches.release_all()
-    monkeypatch.setattr(ranking, "GATE_MAX_EST_BYTES", 0)
+    monkeypatch.setattr(caches, "GATE_MAX_EST_BYTES", 0)
     ranked, total = ranking.global_ranks(
         spend_df, F.col("spend").desc(), "key", rank_col="rn"
     )

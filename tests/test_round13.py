@@ -660,7 +660,7 @@ def test_kcore_driver_and_distributed_paths_agree(spark):
 
 
 def test_label_prop_driver_and_distributed_paths_agree(spark, sf_dir):
-    """r13 optimization: under LP_DRIVER_MAX_EDGES the 2 synchronous LP
+    """r13 optimization: under graphs.DRIVER_MAX_EDGES the 2 synchronous LP
     rounds run in plain Python on the driver; both paths must emit the
     identical (user_id, community) labelling on the real fixture, for the
     auto cell cap AND a tight cap that actually binds (driver_max_edges=0
@@ -680,7 +680,7 @@ def test_label_prop_driver_and_distributed_paths_agree(spark, sf_dir):
 
 
 def test_triangles_driver_and_distributed_paths_agree(spark, sf_dir):
-    """r13 optimization: thresholded edge lists under TRI_DRIVER_MAX_EDGES
+    """r13 optimization: thresholded edge lists under graphs.DRIVER_MAX_EDGES
     orient/wedge/close on the driver. Both paths must agree on the real
     fixture for the exact AND the capped form (tight caps so the cap
     logic actually binds), and the exact registered query must equal the

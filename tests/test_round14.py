@@ -10,6 +10,13 @@ These tests force the spread branch at the smoke SF
 spread family and hash-compare the spread output against the unspread
 run — any site whose downstream algebra stopped being order-free exact
 diverges here.
+
+Recompute-branch hardening: every fixture estimate passes the size gate
+(operators/caches.py), so the oracle gate only ever runs the PERSIST
+branch. The same test forces the RECOMPUTE branch
+(caches.GATE_MAX_EST_BYTES = -1) for one representative per module that
+calls caches.persist_if_small / caches.is_small, and hash-compares it
+against the default (persisted) run.
 """
 
 from __future__ import annotations
@@ -28,25 +35,62 @@ from test_oracle_parity import canon_rows
 # - bare spread_scan over a substituted-table path (text_perplexity_proxy,
 #   round4)
 # - all-tables loop spread (dq_table_checksums, round6f)
+# - documents spread ahead of token counting (text_bigram_kn_probs,
+#   round13c) and ahead of the PPJoin shingle kernel
+#   (dedup_prefix_filter_jaccard, round13b)
 _SPREAD_REPS = [
     "olap_bootstrap_mean_ci",
     "olap_pricing_summary",
     "corpus_importance_sample",
     "text_perplexity_proxy",
     "dq_table_checksums",
+    "text_bigram_kn_probs",
+    "dedup_prefix_filter_jaccard",
 ]
 
+# one representative per module with a size-gate site
+_RECOMPUTE_REPS = [
+    "corpus_bloom_contains",  # operators/corpus.py
+    "dedup_prefix_filter_jaccard",  # operators/dedup.py
+    "dq_merkle_row_pulls",  # operators/reconcile.py
+    "ivf_index_search",  # operators/similarity.py
+    "corpus_fixed_n_hash_sample",  # operators/ranking.py (_auto_pick)
+    "corpus_clean_pipeline",  # queries/llmops.py
+    "text_perplexity_proxy",  # queries/round4.py
+    "corpus_clean_pipeline_sem",  # queries/round5.py
+    "corpus_passage_scrub",  # queries/round6.py
+    "embedding_kmedoid_step",  # queries/round6d.py
+    "olap_basket_affinity",  # queries/round6m.py
+    "corpus_cross_source_dupes",  # queries/round6n.py
+    "eval_cluster_silhouette",  # queries/round11e.py
+    "eval_ivf_recall_at_k",  # queries/round12c.py
+    "corpus_importance_sample",  # queries/round13c.py
+    "olap_market_basket_lift",  # queries/round13f.py
+]
 
-@pytest.mark.parametrize("name", _SPREAD_REPS)
-def test_forced_spread_branch_matches_unspread(name, spark, sf_dir, monkeypatch):
+# forced branch -> (module, attribute, value) that forces it
+_FORCE = {
+    "spread": (q, "_SPREAD_MIN_BYTES_OVERRIDE", 0),
+    "recompute": (caches, "GATE_MAX_EST_BYTES", -1),
+}
+
+
+@pytest.mark.parametrize(
+    "name, branch",
+    [pytest.param(n, "spread", id=n) for n in _SPREAD_REPS]
+    + [pytest.param(n, "recompute", id=f"recompute-{n}") for n in _RECOMPUTE_REPS],
+)
+def test_forced_spread_branch_matches_unspread(
+    name, branch, spark, sf_dir, monkeypatch
+):
     fn = q.queries()[name]
     base = fn(spark, sf_dir).toPandas()
     caches.release_all()
-    monkeypatch.setattr(q, "_SPREAD_MIN_BYTES_OVERRIDE", 0)
-    spread = fn(spark, sf_dir).toPandas()
+    monkeypatch.setattr(*_FORCE[branch])
+    forced = fn(spark, sf_dir).toPandas()
     caches.release_all()
-    assert sorted(base.columns) == sorted(spread.columns)
-    assert canon_rows(base) == canon_rows(spread)
+    assert sorted(base.columns) == sorted(forced.columns)
+    assert canon_rows(base) == canon_rows(forced)
 
 
 def test_spread_override_fires_at_smoke_sf(spark, sf_dir, monkeypatch):
