@@ -2,16 +2,20 @@
 `Window.orderBy(...)` with no partitionBy (which Catalyst executes as ONE
 task holding the whole relation: the classic 100 TB plan-killer).
 
-Two-pass partition-offset ranking:
+Two-pass bucket-offset ranking:
 
-1. `repartitionByRange` on the order columns (persisted via caches.track
-   so the sampled range boundaries are computed once and every consumer
-   sees the same partition assignment);
-2. per-partition counts -> each partition's global offset (a <= P-row
-   collect, driver-tiny, broadcast back);
-3. `row_number` over a window PARTITIONED by the range-partition id +
-   the offset = the exact global rank. No task ever sorts more than
-   ~N/P rows.
+1. range buckets from LITERAL bounds: a seeded sample of the order keys
+   (about 20 rows per bucket, as Spark's RangePartitioner sizes it) is
+   sorted in Spark and at most P-1 evenly spaced bound rows are
+   collected to the driver as one array literal. A row's bucket id is
+   the number of bounds it sorts after — lexicographic over the order
+   keys, following each key's direction and NULLS FIRST/LAST placement
+   — so it is a pure function of the row and monotone in the sort
+   order;
+2. per-bucket counts -> each bucket's global offset (a <= P-row
+   collect, driver-tiny, looked up by bucket id from an array literal);
+3. `row_number` over a window PARTITIONED by the bucket id + the offset
+   = the exact global rank. No task ever sorts more than ~N/P rows.
 
 `exact_ntile` layers the ntile(n) band arithmetic (first N mod n bands
 get ceil(N/n) rows) on top of the exact rank — bit-identical to
@@ -19,7 +23,7 @@ get ceil(N/n) rows) on top of the exact rank — bit-identical to
 ordering, at full parallelism.
 
 HYBRID GATE (r9 verdict item 3): the two-pass machinery costs a real
-fixed ~0.9 s/call (range-boundary sampling pass + the offsets action,
+fixed ~0.9 s/call (bound sampling pass + the offsets action,
 interleaved A/B at sf0.1) vs ~0.34 s for the single-partition window —
 the right trade only when the single sort task would actually be fat.
 The default `strategy="auto"` gates in two stages: (1) the size gate
@@ -39,13 +43,15 @@ For per-row FEATURE generation where exact tile boundaries don't matter,
 approximates the n-1 cut points with approx_percentile, broadcasts them,
 and buckets map-side (the events_rfm_segments pattern).
 
-CACHE-LIFECYCLE NOTE (ADVICE r9): the offsets form bakes driver-collected
-per-partition offsets into a lazy plan over a sampled repartitionByRange
-persist; evicting that persist before the consumer materializes would
-resample the range boundaries and silently corrupt ranks. The persists
-are therefore registered with `caches.track(..., pin=True)` — exempt
-from MAX_TRACKED LRU eviction, released only by `caches.release_all()`
-(which runners call strictly after materializing each query).
+CACHE-LIFECYCLE NOTE: the offsets form bakes driver-collected per-bucket
+offsets into a lazy plan, but the bounds are literals in that plan, so
+a row's bucket never depends on a cached relation. Recomputing the plan
+(cache eviction, `clearCache()`, a lost executor) reproduces the same
+buckets and the offsets stay valid. The sample decides only how
+balanced the buckets are; the ranks are exact because the offsets come
+from exact per-bucket aggregates. The offsets form persists nothing; it
+computes its input for the sample, the per-bucket aggregate and the
+result, so the input must be deterministic.
 """
 
 from __future__ import annotations
@@ -57,6 +63,11 @@ from . import caches
 
 _PID = "__rank_pid"
 _OFF = "__rank_off"
+
+# Sampled key rows per bucket (RangePartitioner's hint): enough for
+# balanced buckets. The sample never affects the ranks, only the balance.
+_SAMPLE_PER_BUCKET = 20
+_SAMPLE_SEED = 17
 
 # Auto-gate crossover: at or below this many rows the single-partition
 # window is both faster (no sampling pass, no offsets action) and safe
@@ -73,8 +84,8 @@ def _auto_pick(df: DataFrame) -> tuple[str, DataFrame, int | None]:
     recomputing the upstream (measured: the naive count-then-window
     paid 2x upstream and made cheap single-call shapes SLOWER than the
     offsets form they replaced). Returns (strategy, input, total|None);
-    the persist is tracked unpinned (eviction costs a recompute only —
-    no driver-side constants depend on it)."""
+    the persist is tracked (eviction costs a recompute only — no
+    driver-side constants depend on it)."""
     if not caches.is_small(df):
         return "offsets", df, None
     cached = caches.track(df.persist())
@@ -84,6 +95,144 @@ def _auto_pick(df: DataFrame) -> tuple[str, DataFrame, int | None]:
         cached,
         total,
     )
+
+
+def _pick(df: DataFrame, strategy: str) -> tuple[str, DataFrame, int | None]:
+    """Validate `strategy` and resolve "auto" through `_auto_pick`."""
+    if strategy == "auto":
+        return _auto_pick(df)
+    if strategy not in ("window", "offsets"):
+        raise ValueError(f"unknown strategy {strategy!r}")
+    return strategy, df, None
+
+
+def _column(df: DataFrame, jexpr) -> Column:
+    """A JVM Catalyst expression as a Column."""
+    return Column(
+        df.sparkSession._jvm.org.apache.spark.sql.classic.ExpressionUtils.column(jexpr)
+    )
+
+
+def _bucketed(df: DataFrame, order_cols, n_part: int, total: int | None) -> DataFrame:
+    """`df` + _PID: steps 1 and 3 of the module docstring. The bounds ride
+    in the plan as one array literal built on the JVM side (exact values
+    in each key's own type), and each row finds its bucket by binary
+    lifting over it: log2(P) comparisons per row, and a plan whose size
+    does not grow with P."""
+    out = df.withColumn(_PID, F.lit(0))
+    if n_part <= 1:
+        return out
+    # (key, ascending, nulls first) per order key, as Catalyst resolves them
+    orders = df.sort(*order_cols)._jdf.queryExecution().analyzed().order()
+    keys = [
+        (_column(df, o.child()), o.isAscending(), o.nullOrdering().sql() == "NULLS FIRST")
+        for o in (orders.apply(i) for i in range(orders.size()))
+    ]
+    names = [f"__k{i}" for i in range(len(keys))]
+    rows = total if total is not None else caches.estimated_rows(
+        df, row_bytes=8 + df._jdf.schema().defaultSize()
+    )
+    if rows is None:
+        rows = df.count()
+    # one task sorts the sample (~20 rows per bucket); row __i of __m is
+    # a bound when some j in 1..P-1 has j*__m/P in (__i-1, __i]
+    bounds = (
+        df.sample(
+            fraction=min(1.0, _SAMPLE_PER_BUCKET * n_part / max(rows, 1)),
+            seed=_SAMPLE_SEED,
+        )
+        .select(
+            *[c.alias(k) for k, (c, _, _) in zip(names, keys)],
+            F.row_number().over(Window.orderBy(*order_cols)).alias("__i"),
+            F.count(F.lit(1)).over(Window.partitionBy()).alias("__m"),
+        )
+        .where(
+            f"__i < __m AND CAST(__i AS BIGINT) * {n_part} div __m"
+            f" > CAST(__i - 1 AS BIGINT) * {n_part} div __m"
+        )
+        .agg(F.sort_array(F.collect_list(F.struct("__i", *names))))
+    )
+    jrow = bounds._jdf.first()
+    n_bounds = len(jrow.getList(0))
+    if n_bounds == 0:
+        return out
+    literal = df.sparkSession._jvm.org.apache.spark.sql.catalyst.expressions.Literal
+    arr = _column(
+        df, literal.create(jrow.get(0), bounds._jdf.schema().apply(0).dataType())
+    )
+    depth = n_bounds.bit_length()
+    # pad to 2^depth - 1 entries with the last bound, so every probe
+    # index below is in range
+    arr = F.concat(
+        arr, F.array_repeat(F.element_at(arr, -1), (1 << depth) - 1 - n_bounds)
+    )
+
+    def after(b: Column) -> Column:
+        # row > bound b in the sort order, built from the last key up:
+        # key i sorts after b's, or ties it and the later keys sort after
+        cond = F.lit(False)
+        for (c, asc, nulls_first), k in reversed(list(zip(keys, names))):
+            v = b[k]
+            beyond = c > v if asc else c < v
+            if nulls_first:
+                gt = c.isNotNull() & (v.isNull() | beyond)
+            else:
+                gt = v.isNotNull() & (c.isNull() | beyond)
+            cond = gt | (c.eqNullSafe(v) & cond)
+        return cond
+
+    # binary lifting: after the steps, _PID = how many bounds the row
+    # sorts after. The probed bound and each step are projections of
+    # their own, so the plan holds one copy of the bounds per step.
+    for step in (1 << d for d in reversed(range(depth))):
+        out = out.withColumn("__b", F.element_at(arr, F.col(_PID) + step))
+        out = out.withColumn(
+            _PID, F.col(_PID) + F.when(after(F.col("__b")), step).otherwise(0)
+        )
+    return out.drop("__b")
+
+
+def _offsets(
+    df: DataFrame,
+    order_cols,
+    n_partitions: int | None,
+    total: int | None,
+    part: Column,
+    off_type: str,
+    fold,
+    init,
+):
+    """The offsets form shared by the three operators: bucket every row
+    (`_bucketed`), collect the per-bucket aggregate `part`, fold it
+    driver-side in bucket order — a bucket's offset is the fold of
+    `init` over every prior bucket's value — and look each row's offset
+    up in an array literal indexed by bucket id. (A broadcast join of
+    the offsets would make Catalyst infer constraints through the
+    chained bucket projections, which grows exponentially with their
+    number.) Returns (df + _PID + _OFF, the window over one bucket in
+    sort order, the fold over all buckets).
+
+    Cost: the input is computed three times (sample, per-bucket
+    aggregate, result) plus a count when its row estimate is unknown.
+    Persisting the INPUT was measured net-negative at fixture scale
+    (cache fill > upstream recompute) — callers whose upstream is
+    genuinely expensive should persist it themselves."""
+    spark = df.sparkSession
+    n_part = n_partitions or max(
+        int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1
+    )
+    bucketed = _bucketed(df, order_cols, n_part, total)
+    parts = {
+        r[_PID]: r["v"] for r in bucketed.groupBy(_PID).agg(part.alias("v")).collect()
+    }
+    offsets, acc = [], init
+    for pid in range(max(parts, default=0) + 1):
+        offsets.append(F.lit(acc).cast(off_type))
+        if pid in parts:
+            acc = fold(acc, parts[pid])
+    off = F.element_at(F.array(*offsets), F.col(_PID) + 1)
+    w = Window.partitionBy(_PID).orderBy(*order_cols)
+    return bucketed.withColumn(_OFF, off), w, acc
 
 
 def global_ranks(
@@ -99,14 +248,9 @@ def global_ranks(
     tie-breaker column) for the ranks to be reproducible.
 
     strategy: "auto" (default) counts the input and picks the window
-    form at <= WINDOW_MAX_ROWS rows, else partition-offset; "window" /
+    form at <= WINDOW_MAX_ROWS rows, else bucket-offset; "window" /
     "offsets" force a form. Both forms are bit-identical."""
-    if strategy not in ("auto", "window", "offsets"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    spark = df.sparkSession
-    total: int | None = None
-    if strategy == "auto":
-        strategy, df, total = _auto_pick(df)
+    strategy, df, total = _pick(df, strategy)
     if strategy == "window":
         if total is None:
             total = df.count()
@@ -117,40 +261,14 @@ def global_ranks(
             df.withColumn(rank_col, F.row_number().over(w).cast("long")),
             total,
         )
-    n_part = n_partitions or max(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1
+    bucketed, w, total = _offsets(
+        df, order_cols, n_partitions, total,
+        F.count(F.lit(1)), "long", lambda acc, cnt: acc + cnt, 0,
     )
-    # NOTE on cost (interleaved A/B at sf0.1): the two-pass machinery adds
-    # ~0.9 s of fixed job overhead vs the single-partition window (range-
-    # boundary sampling pass + the offsets action) — a CONSTANT, not a
-    # scale term; the window variant's cost grows with the single task's
-    # data instead. Persisting the INPUT as well was measured net-negative
-    # at fixture scale (cache fill > upstream recompute) — callers whose
-    # upstream is genuinely expensive should persist it themselves.
-    parted = caches.track(
-        df.repartitionByRange(n_part, *order_cols)
-        .withColumn(_PID, F.spark_partition_id())
-        .persist(),
-        pin=True,  # offsets below are only valid for THIS materialization
-    )
-    counts = parted.groupBy(_PID).agg(F.count(F.lit(1)).alias("cnt")).collect()
-    offsets = []
-    acc = 0
-    for row in sorted(counts, key=lambda r: r[_PID]):  # range pids are ordered
-        offsets.append((row[_PID], acc))
-        acc += row["cnt"]
-    if not offsets:  # empty input: keep the schema contract
-        return parted.withColumn(rank_col, F.lit(None).cast("long")).drop(_PID), 0
-    off_df = F.broadcast(
-        spark.createDataFrame(offsets, f"{_PID} int, {_OFF} long")
-    )
-    w = Window.partitionBy(_PID).orderBy(*order_cols)
-    ranked = (
-        parted.join(off_df, _PID)
-        .withColumn(rank_col, (F.row_number().over(w) + F.col(_OFF)).cast("long"))
-        .drop(_PID, _OFF)
-    )
-    return ranked, acc
+    ranked = bucketed.withColumn(
+        rank_col, (F.row_number().over(w) + F.col(_OFF)).cast("long")
+    ).drop(_PID, _OFF)
+    return ranked, total
 
 
 def exact_ntile(
@@ -197,9 +315,9 @@ def global_prefix_sum(
 ) -> DataFrame:
     """Exact running `sum(value) OVER (ORDER BY order_cols ROWS UNBOUNDED
     PRECEDING)` without a fat single-partition window at scale:
-    range-partition on the order columns, collect the <= P per-partition
-    sums, prefix them driver-side (exact: DECIMAL stays Decimal, integers
-    stay int), and add each partition's offset to its LOCAL running sum.
+    bucket on the order columns, collect the <= P per-bucket sums,
+    prefix them driver-side (exact: DECIMAL stays Decimal, integers
+    stay int), and add each bucket's offset to its LOCAL running sum.
     For DECIMAL and integer inputs the result is bit-identical to the
     global window (addition is exact and associative); for DOUBLE inputs
     the grouping of additions changes, so use only where the consumer
@@ -208,67 +326,35 @@ def global_prefix_sum(
 
     NULL semantics match the global window (ADVICE r9): a row is NULL in
     out_col only when NO non-null value precedes it globally; a
-    partition whose local running sum is still NULL carries the prior
-    partitions' total. Offsets are carried at the SUM type (long for
+    bucket whose local running sum is still NULL carries the prior
+    buckets' total. Offsets are carried at the SUM type (long for
     integral inputs, widened decimal for DECIMAL), never the input
     column type, so a narrow int input cannot overflow the offset."""
-    if strategy not in ("auto", "window", "offsets"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    spark = df.sparkSession
     # the type Spark's own sum() yields for this input — long for
     # int/smallint, decimal(p+10, s) for decimal(p, s), double for double
     sum_type = (
         df.select(F.sum(value_col).alias("__s")).schema["__s"].dataType.simpleString()
     )
-    if strategy == "auto":
-        strategy, df, _ = _auto_pick(df)
+    strategy, df, total = _pick(df, strategy)
     if strategy == "window":
         w = Window.orderBy(*order_cols).rowsBetween(Window.unboundedPreceding, 0)
         return df.withColumn(out_col, F.sum(value_col).over(w).cast(sum_type))
-    n_part = n_partitions or max(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1
+    bucketed, w, _ = _offsets(
+        df, order_cols, n_partitions, total, F.sum(value_col), sum_type,
+        lambda acc, s: s if acc is None else (acc if s is None else acc + s),
+        None,
     )
-    parted = caches.track(
-        df.repartitionByRange(n_part, *order_cols)
-        .withColumn(_PID, F.spark_partition_id())
-        .persist(),
-        pin=True,  # offsets below are only valid for THIS materialization
-    )
-    psums = parted.groupBy(_PID).agg(F.sum(value_col).alias("s")).collect()
-    offsets = []
-    acc = None
-    for row in sorted(psums, key=lambda r: r[_PID]):
-        offsets.append((row[_PID], acc))
-        s = row["s"]
-        acc = s if acc is None else (acc + s if s is not None else acc)
-    if not offsets:
-        return parted.withColumn(out_col, F.lit(None).cast(sum_type)).drop(_PID)
-    off_df = F.broadcast(
-        spark.createDataFrame(
-            [(pid, off) for pid, off in offsets],
-            df.sparkSession.createDataFrame(
-                [], f"{_PID} int, {_OFF} {sum_type}"
-            ).schema,
-        )
-    )
-    w = Window.partitionBy(_PID).orderBy(*order_cols).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    local = F.sum(value_col).over(w)
+    local = F.sum(value_col).over(w.rowsBetween(Window.unboundedPreceding, 0))
     off = F.col(_OFF)
     # NULL only when both the local running sum and every prior
-    # partition's total are NULL — the global-window contract
+    # bucket's total are NULL — the global-window contract
     running = F.when(local.isNull() & off.isNull(), F.lit(None)).otherwise(
         F.coalesce(local, F.lit(0).cast(sum_type))
         + F.coalesce(off, F.lit(0).cast(sum_type))
     )
-    return (
-        parted.join(off_df, _PID)
-        # cast: decimal addition re-widens precision by 1; pin the output
-        # to the window form's sum type so both strategies agree exactly
-        .withColumn(out_col, running.cast(sum_type))
-        .drop(_PID, _OFF)
-    )
+    # cast: decimal addition re-widens precision by 1; pin the output to
+    # the window form's sum type so both strategies agree exactly
+    return bucketed.withColumn(out_col, running.cast(sum_type)).drop(_PID, _OFF)
 
 
 def global_prefix_max(
@@ -285,54 +371,30 @@ def global_prefix_max(
     the global_prefix_sum construction with max as the fold — and simpler,
     because max is exact and associative for EVERY comparable type (no
     double-grouping caveat) and the offset is just the running max of the
-    per-partition maxima. `inclusive=False` gives the STRICT-prefix max
+    per-bucket maxima. `inclusive=False` gives the STRICT-prefix max
     (frame ends at 1 PRECEDING): NULL/absent for the globally first row,
     which is the form dominance tests (Pareto frontiers, high-watermark
     breach detection) need. NULL semantics match the global window: max
     skips NULL values, so out_col is NULL only when no non-null value
     precedes. `strategy` gates the form exactly as in `global_ranks`."""
-    if strategy not in ("auto", "window", "offsets"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    spark = df.sparkSession
     val_type = df.schema[value_col].dataType.simpleString()
     hi = 0 if inclusive else -1
-    if strategy == "auto":
-        strategy, df, _ = _auto_pick(df)
+    strategy, df, total = _pick(df, strategy)
     if strategy == "window":
         w = Window.orderBy(*order_cols).rowsBetween(Window.unboundedPreceding, hi)
         return df.withColumn(out_col, F.max(value_col).over(w))
-    n_part = n_partitions or max(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1
-    )
-    parted = caches.track(
-        df.repartitionByRange(n_part, *order_cols)
-        .withColumn(_PID, F.spark_partition_id())
-        .persist(),
-        pin=True,  # offsets below are only valid for THIS materialization
-    )
-    pmaxes = parted.groupBy(_PID).agg(F.max(value_col).alias("m")).collect()
-    offsets = []  # per partition: max over ALL PRIOR partitions (strict)
-    acc = None
-    for row in sorted(pmaxes, key=lambda r: r[_PID]):
-        offsets.append((row[_PID], acc))
-        m = row["m"]
-        if m is not None:
-            acc = m if acc is None else max(acc, m)
-    if not offsets:
-        return parted.withColumn(out_col, F.lit(None).cast(val_type)).drop(_PID)
-    off_df = F.broadcast(
-        spark.createDataFrame(
-            [(pid, off) for pid, off in offsets],
-            spark.createDataFrame([], f"{_PID} int, {_OFF} {val_type}").schema,
-        )
-    )
-    w = Window.partitionBy(_PID).orderBy(*order_cols).rowsBetween(
-        Window.unboundedPreceding, hi
+    bucketed, w, _ = _offsets(
+        df, order_cols, n_partitions, total, F.max(value_col), val_type,
+        lambda acc, m: acc if m is None else (m if acc is None else max(acc, m)),
+        None,
     )
     # greatest() skips NULLs (returns NULL only when every input is NULL)
     # — exactly the global window's max-over-prefix NULL contract
-    running = F.greatest(F.max(value_col).over(w), F.col(_OFF))
-    return parted.join(off_df, _PID).withColumn(out_col, running).drop(_PID, _OFF)
+    running = F.greatest(
+        F.max(value_col).over(w.rowsBetween(Window.unboundedPreceding, hi)),
+        F.col(_OFF),
+    )
+    return bucketed.withColumn(out_col, running).drop(_PID, _OFF)
 
 
 def percentile_bands(

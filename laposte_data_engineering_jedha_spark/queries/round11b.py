@@ -192,7 +192,7 @@ def dedup_fuzzy_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("d").cast("long").alias("min_dist"),
             F.max("d").cast("long").alias("max_dist"),
         )
-        .transform(sort_report, "noun")
+        .orderBy("noun")
     )
 
 

@@ -378,7 +378,7 @@ def corpus_token_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     G = (2*sum(rank*x) - (n+1)*sum(x)) / (n*sum(x)) with ranks ordered
     (x, doc_id): numerator/denominator are BIGINT-exact, one final
     division. The global rank comes from the gated offsets machinery
-    (operators/ranking.py — repartitionByRange + per-partition offsets
+    (operators/ranking.py — range buckets + per-bucket offsets
     above the stats gate), never a naked single-partition window, so the
     plan holds at any document count."""
     from ..functions import texts

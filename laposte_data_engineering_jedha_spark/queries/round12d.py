@@ -179,7 +179,7 @@ def olap_join_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / 1e6
             ).alias("skew_ratio"),
         )
-        .transform(sort_report, "heavy_rank")
+        .orderBy("heavy_rank")
     )
 
 
@@ -206,7 +206,7 @@ def corpus_fixed_n_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     A/B eval needs exactly N, stable across runs and partitionings).
     The global rank comes from the gated offsets machinery
     (operators/ranking.py): a plain bounded window at fixture scale, a
-    repartitionByRange + per-partition-offset plan above the stats gate
+    range-bucket + per-bucket-offset plan above the stats gate
     — never a naked single-partition sort over the corpus. The md5 key
     makes the sample uniform and immune to doc_id assignment order."""
     h = table(spark, sf_dir, "documents").select(

@@ -75,8 +75,8 @@ def test_strategy_gate_picks_form_by_row_count(spark, spend_df, monkeypatch):
 def test_stats_pregate_skips_count_for_big_estimates(spark, spend_df, monkeypatch):
     """At 100 TB the gate must never materialize the input to decide:
     when Catalyst's size estimate exceeds caches.GATE_MAX_EST_BYTES, auto takes
-    the offsets form with no persist+count of the input (only the
-    offsets machinery's own pinned persist is tracked)."""
+    the offsets form with no persist+count of the input, and the offsets
+    form itself persists nothing."""
     caches.release_all()
     monkeypatch.setattr(caches, "GATE_MAX_EST_BYTES", 0)
     ranked, total = ranking.global_ranks(
@@ -84,7 +84,7 @@ def test_stats_pregate_skips_count_for_big_estimates(spark, spend_df, monkeypatc
     )
     plan = ranked._jdf.queryExecution().executedPlan().toString()
     assert "__rank_pid" in plan  # offsets form chosen
-    assert [pinned for _, pinned in caches._TRACKED] == [True]  # no input cache
+    assert caches._TRACKED == []  # no input cache, no offsets persist
     assert total == 997
     caches.release_all()
 
@@ -98,9 +98,9 @@ def test_auto_window_branch_reads_persisted_input(spark, spend_df):
         spend_df, F.col("spend").desc(), "key", rank_col="rn"
     )
     assert total == 997
-    tracked = [(d, p) for d, p in caches._TRACKED]
-    assert len(tracked) == 1 and tracked[0][1] is False  # unpinned input cache
-    assert tracked[0][0].storageLevel.useMemory is True
+    tracked = list(caches._TRACKED)
+    assert len(tracked) == 1  # the input cache
+    assert tracked[0].storageLevel.useMemory is True
     plan = ranked._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan or "TableCacheQueryStage" in plan
     caches.release_all()
@@ -217,20 +217,70 @@ def test_exact_ntile_plan_has_no_unpartitioned_window(spark, spend_df):
     assert "__rank_pid" in plan
 
 
-def test_ranking_persists_are_pinned(spark, spend_df):
-    """ADVICE r9: the offsets form bakes driver-collected offsets into a
-    lazy plan over a sampled repartitionByRange persist — that persist
-    must be pin-tracked so MAX_TRACKED eviction can never resample the
-    boundaries under a constructed-but-unmaterialized plan."""
+_OPS = ("ranks", "prefix_sum", "prefix_max")
+
+
+def _op_and_window(op, df, order, **kw):
+    """(operator output, the global window's {key: out}) for one of the
+    three offsets operators, ordered by `order`, over column "v"."""
+    frame = Window.orderBy(*order)
+    if op == "ranks":
+        out, _ = ranking.global_ranks(df, *order, rank_col="out", **kw)
+        ref = F.row_number().over(frame)
+    elif op == "prefix_sum":
+        out = ranking.global_prefix_sum(df, "v", *order, out_col="out", **kw)
+        ref = F.sum("v").over(frame.rowsBetween(Window.unboundedPreceding, 0))
+    else:
+        out = ranking.global_prefix_max(
+            df, "v", *order, out_col="out", inclusive=False, **kw
+        )
+        ref = F.max("v").over(frame.rowsBetween(Window.unboundedPreceding, -1))
+    want = {r["key"]: r["out"] for r in df.withColumn("out", ref).collect()}
+    return out, want
+
+
+@pytest.mark.parametrize("op", _OPS)
+def test_offsets_form_tracks_nothing_and_survives_clear_cache(spark, spend_df, op):
+    """The offsets form buckets rows by literal range bounds, so its plan
+    depends on no cached relation: building it tracks nothing, and
+    dropping every cache between plan build and action still gives the
+    global window's result."""
     caches.release_all()
-    ranking.global_ranks(
-        spend_df, F.col("spend").desc(), "key", rank_col="rn", strategy="offsets"
+    df = spend_df.withColumn("v", (F.col("key") * 7 % 101).cast("long"))
+    out, want = _op_and_window(
+        op, df, (F.col("spend").desc(), "key"), n_partitions=8, strategy="offsets"
     )
-    ranking.global_prefix_sum(
-        spend_df, "spend", F.col("spend").desc(), "key", strategy="offsets"
+    assert caches.release_all() == 0
+    spark.catalog.clearCache()
+    assert {r["key"]: r["out"] for r in out.collect()} == want
+
+
+@pytest.mark.parametrize("n_part", [1, 3, 8])
+def test_offsets_form_order_key_edge_cases(spark, n_part):
+    """NULLs in the first key (asc_nulls_last and desc_nulls_first), a
+    DESC string key and a three-key order: the bucket comparison must
+    follow each key's direction and NULL placement, at any bucket count."""
+    k = F.col("id")
+    df = spark.range(1, 301).select(
+        k.alias("key"),
+        F.when(k % 5 != 0, (k % 7).cast("int")).alias("g"),
+        F.format_string("s%02d", k % 11).alias("s"),
+        F.when(k % 13 != 0, k * 31 % 97).alias("v"),
     )
-    assert [pinned for _, pinned in caches._TRACKED] == [True, True]
-    caches.release_all()
+    orders = [
+        (F.col("g").asc_nulls_last(), "key"),
+        (F.col("g").desc_nulls_first(), "key"),
+        (F.col("s").desc(), "key"),
+        (F.col("g").asc_nulls_last(), F.col("s").desc(), F.col("key").desc()),
+    ]
+    for order in orders:
+        for op in _OPS:
+            out, want = _op_and_window(
+                op, df, order, n_partitions=n_part, strategy="offsets"
+            )
+            got = {r["key"]: r["out"] for r in out.collect()}
+            assert got == want, (op, order, n_part)
+    assert caches.release_all() == 0
 
 
 @pytest.mark.parametrize("strategy", ["window", "offsets"])

@@ -17,6 +17,11 @@ branch. The same test forces the RECOMPUTE branch
 (caches.GATE_MAX_EST_BYTES = -1) for one representative per module that
 calls caches.persist_if_small / caches.is_small, and hash-compares it
 against the default (persisted) run.
+
+Offsets-branch hardening: every fixture grain sits under
+ranking.WINDOW_MAX_ROWS, so the oracle gate only runs the WINDOW form of
+the ranking operators. The same test forces the OFFSETS form
+(ranking.WINDOW_MAX_ROWS = 0) for one registry caller per operator.
 """
 
 from __future__ import annotations
@@ -24,7 +29,7 @@ from __future__ import annotations
 import pytest
 
 import laposte_data_engineering_jedha_spark.queries as q
-from laposte_data_engineering_jedha_spark.operators import caches
+from laposte_data_engineering_jedha_spark.operators import caches, ranking
 
 from test_oracle_parity import canon_rows
 
@@ -68,17 +73,27 @@ _RECOMPUTE_REPS = [
     "olap_market_basket_lift",  # queries/round13f.py
 ]
 
+# one registry caller per ranking operator
+_OFFSETS_REPS = [
+    "corpus_ngram_coverage",  # global_ranks, DESC key
+    "olap_customer_quartiles",  # exact_ntile
+    "events_peak_concurrency",  # global_prefix_sum, three keys
+    "olap_pareto_frontier",  # global_prefix_max
+]
+
 # forced branch -> (module, attribute, value) that forces it
 _FORCE = {
     "spread": (q, "_SPREAD_MIN_BYTES_OVERRIDE", 0),
     "recompute": (caches, "GATE_MAX_EST_BYTES", -1),
+    "offsets": (ranking, "WINDOW_MAX_ROWS", 0),
 }
 
 
 @pytest.mark.parametrize(
     "name, branch",
     [pytest.param(n, "spread", id=n) for n in _SPREAD_REPS]
-    + [pytest.param(n, "recompute", id=f"recompute-{n}") for n in _RECOMPUTE_REPS],
+    + [pytest.param(n, "recompute", id=f"recompute-{n}") for n in _RECOMPUTE_REPS]
+    + [pytest.param(n, "offsets", id=f"offsets-{n}") for n in _OFFSETS_REPS],
 )
 def test_forced_spread_branch_matches_unspread(
     name, branch, spark, sf_dir, monkeypatch
