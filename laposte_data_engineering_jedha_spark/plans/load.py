@@ -1,9 +1,9 @@
 """Load stage — format fan-out + run manifest (reference core/load.py).
 
 The reference re-consumes an eagerly materialized frame per sink for free;
-Spark would recompute the lineage per format, so the Loader caches the
-DataFrame before a multi-format fan-out (SURVEY.md §4.1) and unpersists
-after.
+Spark would recompute the lineage per format, so `load_data` runs the
+lineage once into a staged parquet copy that every sink reads (SURVEY.md
+§4.1).
 """
 
 from __future__ import annotations
@@ -18,7 +18,7 @@ import tempfile
 import pyspark
 from pyspark.sql import DataFrame
 
-from ..sources.writers import WRITER_MAP
+from ..sources.writers import WRITER_MAP, parquet_dataset
 
 ALL_FORMATS = ["csv", "json", "parquet", "sqlite", "xlsx"]
 EXTENSIONS = {"csv": ".csv", "json": ".json", "parquet": ".parquet", "sqlite": ".db", "xlsx": ".xlsx"}
@@ -83,9 +83,12 @@ def load_data(df: DataFrame, config: dict) -> dict:
     # (round 6)? The in-memory cache unroll OOMs the JVM at 100M rows
     # (cache unroll competes with 32 concurrent writer tasks' buffers, 10x
     # e2e run), and a separate uncached count() action executes the whole
-    # lineage a second time. The staged count is a zero-column parquet
-    # scan (footer-speed); when a multi-part parquet OUTPUT is requested,
-    # the staged directory is MOVED into place instead of re-written.
+    # lineage a second time. The row count comes from the staged files'
+    # parquet footers, and the driver-side sinks (sqlite, xlsx) stream
+    # Arrow batches out of the same files (writers.parquet_dataset), so
+    # neither starts a Spark job. When a multi-part parquet OUTPUT is
+    # requested, the staged directory is MOVED into place instead of
+    # re-written, and the later sinks read it there.
     #
     # ADVICE r7 hardening: the stage dir lives INSIDE out_path (dot-
     # prefixed), so the parquet->output promotion is always a same-
@@ -117,7 +120,8 @@ def load_data(df: DataFrame, config: dict) -> dict:
         stage_target = os.path.join(staged, "deliveries.parquet")
         WRITER_MAP["parquet"](stage_target, single_file=False).write(df)
         staged_df = spark.read.parquet(stage_target).select(*df.columns)
-        n_rows = staged_df.count()  # zero-column scan over the stage
+        with parquet_dataset(staged_df) as dataset:
+            n_rows = dataset.count_rows()
         single = output_conf.get("single_file", "auto")
         if single == "auto":
             single = n_rows <= SINGLE_FILE_MAX_ROWS

@@ -4,8 +4,10 @@ manifest fields; plus multi-format fan-out and the CLI front-end."""
 
 from __future__ import annotations
 
+import datetime
 import json
 import sqlite3
+from collections import Counter
 
 import pytest
 
@@ -62,7 +64,34 @@ def test_e2e_multiformat_fanout(spark, tmp_path):
     from laposte_data_engineering_jedha_spark.sources.xlsx_codec import read_xlsx
 
     columns, rows = read_xlsx(str(out / "deliveries.xlsx"))
-    assert columns == ENRICHED_COLUMNS and len(list(rows)) == 100
+    assert columns == ENRICHED_COLUMNS
+    # sqlite and xlsx hold the parquet output's rows, compared as multisets
+    # of canonical cells (both sinks write timestamps as ISO text)
+    def canon(row):
+        return tuple(v.isoformat(sep=" ") if isinstance(v, datetime.datetime) else v for v in row)
+
+    expected = Counter(canon(r) for r in back.collect())
+    assert Counter(canon(r) for r in rows) == expected
+    with sqlite3.connect(out / "deliveries.db") as conn:
+        assert Counter(canon(r) for r in conn.execute("SELECT * FROM deliveries")) == expected
+
+
+def test_all_formats_start_no_python_worker(spark, tmp_path, monkeypatch):
+    """The `all` fan-out writes every sink, sqlite and xlsx included,
+    without a Python kernel (mapInPandas) on the executors."""
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("mapInPandas called during the ETL run")
+
+    monkeypatch.setattr(type(spark.range(0)), "mapInPandas", refuse)
+    out = tmp_path / "no_python"
+    config = {
+        "source": {"type": "generate", "rows": 50, "seed": 6},
+        "output": {"path": str(out), "format": "all"},
+    }
+    Pipeline(config, spark, weather_client=FakeWeatherClient()).run()
+    manifest = json.loads((out / "results_manifest.json").read_text())
+    assert manifest["shape"]["rows"] == 50
 
 
 def test_load_tolerates_void_columns_and_stages_inside_out_path(spark, tmp_path):

@@ -154,3 +154,58 @@ def test_xlsx_compressed_roundtrip(tmp_path):
     _, r2 = xlsx_codec.read_xlsx(packed)
     assert list(r1) == list(r2)
     assert os.path.getsize(packed) < os.path.getsize(stored) / 2
+
+
+@pytest.mark.parametrize("sink", ["xlsx", "sqlite"])
+def test_driver_sinks_read_scan_files_or_temporary_parquet(spark, tmp_path, sink):
+    """The driver-side sinks stream Arrow batches either from the parquet
+    files a plain scan reads (here under a directory whose name needs
+    percent-encoding in a file: URI) or, for a computed lineage, from a
+    temporary parquet write. Both branches write the same file."""
+    import datetime
+    import decimal
+    import sqlite3
+
+    from laposte_data_engineering_jedha_spark.sources.writers import (
+        SqliteWriter,
+        XlsxWriter,
+        _scanned_parquet_files,
+    )
+    from laposte_data_engineering_jedha_spark.sources.xlsx_codec import read_xlsx
+
+    rows = [
+        (1, None, True, datetime.date(2025, 9, 5), decimal.Decimal("1.50"),
+         datetime.datetime(2025, 9, 5, 10, 30, 15, 123456), 1e-05, "a&<>b"),
+        (2, 7, False, datetime.date(2025, 1, 1), decimal.Decimal("-2.25"),
+         datetime.datetime(2025, 1, 1, 8, 0, 0, 500000), 1e16, "x"),
+    ]
+    schema = "id long, n int, b boolean, d date, dec decimal(10,2), ts timestamp, f double, s string"
+    src = str(tmp_path / "src dir%" / "t.parquet")
+    # one part file, so both branches see one partition and one batch
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+    scan = spark.read.parquet(src)
+    computed = scan.filter(F.col("id") > 0)
+    assert _scanned_parquet_files(scan) is not None
+    assert _scanned_parquet_files(computed) is None
+
+    expected = [
+        [1, None, True, "2025-09-05", "1.50", "2025-09-05 10:30:15.123456", 1e-05, "a&<>b"],
+        [2, 7, False, "2025-01-01", "-2.25", "2025-01-01 08:00:00.500000", 1e16, "x"],
+    ]
+    paths = [str(tmp_path / f"{name}.{sink}") for name in ("scan", "computed")]
+    if sink == "xlsx":
+        for frame, path in zip([scan, computed], paths):
+            XlsxWriter(path).write(frame)
+        with open(paths[0], "rb") as a, open(paths[1], "rb") as b:
+            assert a.read() == b.read()
+        columns, back = read_xlsx(paths[0])
+        assert columns == scan.columns and list(back) == expected
+    else:
+        tables = []
+        for frame, path in zip([scan, computed], paths):
+            SqliteWriter(path).write(frame)
+            with sqlite3.connect(path) as conn:
+                tables.append(conn.execute("SELECT * FROM deliveries ORDER BY id").fetchall())
+        assert tables[0] == tables[1]
+        # sqlite has no bool type: True/False bind as 1/0
+        assert tables[0] == [tuple(int(v) if isinstance(v, bool) else v for v in r) for r in expected]
