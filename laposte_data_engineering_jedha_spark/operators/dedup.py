@@ -173,7 +173,6 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    persist_sigs: bool = True,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs: signature -> banded bucket join for
     candidates, exact Jaccard on candidates only.
@@ -184,11 +183,11 @@ def minhash_lsh_pairs(
     before banding — their empty-set signatures would otherwise all
     collide into one catastrophic bucket.
 
-    `persist_sigs` (default on) persists the (id, hashes, sig) relation —
-    the same fix as similarity.knn_graph's persisted banded projection:
-    the signature relation is referenced THREE times (band explode + both
-    verify sides), and because PythonUDF subtrees never canonicalize
-    equal (SCALE.md finding 11) each reference would otherwise re-run the
+    The (id, hashes, sig) relation is always persisted — the same fix as
+    similarity.knn_graph's persisted banded projection: the signature
+    relation is referenced THREE times (band explode + both verify
+    sides), and because PythonUDF subtrees never canonicalize equal
+    (SCALE.md finding 11) each reference would otherwise re-run the
     tokenize->shingle->minhash kernels AND the whole upstream input plan
     — ruinous when the input is itself a filter chain, as in
     corpus_clean_pipeline. The persisted projection is narrow (no text)
@@ -207,8 +206,7 @@ def minhash_lsh_pairs(
         # project-collapse from re-deriving the md5 pipeline per reference.
         .repartition(id_col)
     )
-    if persist_sigs:
-        sigs = caches.track(sigs.persist())
+    sigs = caches.track(sigs.persist())
     # Band join carries ONLY (id, band, key): shuffling the shingle-hash
     # arrays through the 4x band explode would quadruple the heavy shuffle
     # for no reason — signatures/hashes are re-attached by id afterwards.
@@ -288,7 +286,7 @@ def minhash_lsh_pairs_cross(
     # subtrees never canonicalize equal (SCALE.md finding 11) — unpersisted,
     # the tokenize -> shingle -> minhash kernels run twice per side per
     # query. Same persist rationale (and caches registration) as the
-    # self-join operator's persist_sigs; at 100 TB the base side's
+    # self-join operator's signature persist; at 100 TB the base side's
     # signatures are the precomputed stored index this operator models, so
     # persisting the narrow projection is the faithful shape, not a bench
     # trick.

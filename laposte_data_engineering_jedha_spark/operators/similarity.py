@@ -32,6 +32,7 @@ import uuid
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
@@ -164,7 +165,6 @@ def knn_graph(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     max_bucket: int = 256,
-    persist_src: bool = True,
 ) -> DataFrame:
     """Approximate k-NN graph over the WHOLE corpus — every vector's top-k
     band-local neighbors. The building block of SemDeDup-style semantic
@@ -173,11 +173,11 @@ def knn_graph(
     banded relation, hash-partitioned on the (band, key) LSH bucket id,
     joined with a sort-merge join on it. Spark cannot merge the two join
     aliases into a ReusedExchange because PythonUDF subtrees never
-    canonicalize equal (SCALE.md finding 11), so with `persist_src` (the
-    default) the banded projection is persisted MEMORY_AND_DISK after its
-    repartition: the Arrow kernels (norm + banded bucket ids) and the
-    (band, key) exchange run ONCE, both aliases read the cache, and the
-    join inherits the cached hashpartitioning — one exchange total where
+    canonicalize equal (SCALE.md finding 11), so the banded projection is
+    always persisted MEMORY_AND_DISK after its repartition: the Arrow
+    kernels (norm + banded bucket ids) and the (band, key) exchange run
+    ONCE, both aliases read the cache, and the join inherits the cached
+    hashpartitioning — one exchange total where
     round 4 measured two, plus a duplicated kernel pass (round-5 fix;
     measured plans in tests/test_plans.py pin the single-Exchange shape).
     The cache is the narrow (id, vec, norm, band, key) projection — at
@@ -232,12 +232,7 @@ def knn_graph(
         )
         .repartition("band", "key")
     )
-    if persist_src:
-        from pyspark import StorageLevel
-
-        from . import caches
-
-        src = caches.track(src.persist(StorageLevel.MEMORY_AND_DISK))
+    src = caches.track(src.persist(StorageLevel.MEMORY_AND_DISK))
     a = src.select(
         "band",
         "key",

@@ -1,9 +1,10 @@
 """Query registry — the driver contract surface.
 
 Every implemented operator from SURVEY.md §2 registers here as a
-`(spark, sf_dir) -> DataFrame` callable plus (where SQL-expressible) a
-DuckDB oracle twin. `__spark_entry__.py` re-exports `queries()` /
-`oracle_sql()` from this package.
+`(spark, sf_dir) -> DataFrame` callable plus its DuckDB oracle twin:
+`@query(name, oracle)` takes both, so no query is registered without one.
+`__spark_entry__.py` re-exports `queries()` / `oracle_sql()` from this
+package; both return the registry ordered by query name.
 
 Cross-engine determinism rules (so the driver's order-insensitive
 value-hash matches bit-for-bit):
@@ -20,9 +21,14 @@ value-hash matches bit-for-bit):
 - queries that LIMIT must sort on a unique key first (Spark row order is
   not deterministic across partitions).
 
-Submodules:
+Submodules (each registers its queries on import):
     parity      — SURVEY.md §2 reference-parity operators
-    llmops      — 100 TB-scale extensions (dedup, similarity, text, …)
+    io          — source/sink write→read round trips, one per format
+    olap, olap2 — TPC-H-shaped warehouse queries (aggregates, joins, top-k)
+    llmops      — 100 TB-scale extensions (dedup, similarity, text, events)
+    round4 … round13n — further olap, corpus/text, dedup, similarity/eval,
+                  events, dq, sketch, graph and streaming operators, one
+                  module per batch; each module docstring lists its queries
 """
 
 from __future__ import annotations
@@ -42,7 +48,7 @@ SPARK_QUERIES: dict[str, QueryFn] = {}
 ORACLE_SQL: dict[str, str] = {}
 
 
-def query(name: str, oracle: str | None = None):
+def query(name: str, oracle: str):
     def deco(fn: QueryFn) -> QueryFn:
         # a duplicate registration would silently REPLACE an existing
         # query + oracle (dict overwrite) — caught live in round 8 when a
@@ -50,8 +56,7 @@ def query(name: str, oracle: str | None = None):
         if name in SPARK_QUERIES:
             raise ValueError(f"duplicate query registration: {name!r}")
         SPARK_QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
+        ORACLE_SQL[name] = oracle
         return fn
 
     return deco
@@ -73,34 +78,37 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
             pass
 
 
-# schema memo for table(): (resolved path, mtime_ns, size) -> inferred schema.
+# schema memo for table(): absolute path -> (file signature, inferred schema).
 # r14 optimization (guide §1.2 — the same footer-metadata family as
 # table_rowcount): schema INFERENCE re-reads the parquet footer and pays a
 # py4j DataSource-resolution round trip on EVERY table() call — measured
 # 0.084 s vs 0.014 s with an explicit schema, and the bench pays it once
 # per table per timed run (~2 reads/query x 379 queries). The memo caches
-# only the INFERRED SCHEMA (immutable metadata of the file, keyed on
-# mtime+size so a rewritten fixture re-infers); every run still scans the
-# parquet data in full — no rows, plans, or results are reused across runs.
-# At 100 TB the same declare-don't-infer discipline is what keeps a
-# many-query session off the footer-read path.
-_SCHEMA_MEMO: dict[tuple[str, int, int], object] = {}
+# only the INFERRED SCHEMA; every run still scans the parquet data in full —
+# no rows, plans, or results are reused across runs. One entry per table
+# file: the signature (inode, mtime, ctime, size) is re-checked on every
+# call and a mismatch re-infers. A rewrite always moves ctime, so even a
+# same-size rewrite with its mtime restored is seen. At 100 TB the same
+# declare-don't-infer discipline is what keeps a many-query session off the
+# footer-read path.
+_SCHEMA_MEMO: dict[str, tuple[tuple[int, int, int, int], object]] = {}
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_runtime_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
     if not os.path.isfile(path):
-        # directory tables / remote paths: a dir's mtime+size does not
-        # track rewrites of the files inside it — always infer
+        # directory tables / remote paths: a dir's stat does not track
+        # rewrites of the files inside it — always infer
         return spark.read.parquet(path)
     st = os.stat(path)
-    key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
-    sch = _SCHEMA_MEMO.get(key)
-    if sch is None:
-        sch = spark.read.parquet(path).schema
-        _SCHEMA_MEMO[key] = sch
-    return spark.read.schema(sch).parquet(path)
+    key = os.path.abspath(path)
+    sig = (st.st_ino, st.st_mtime_ns, st.st_ctime_ns, st.st_size)
+    memo = _SCHEMA_MEMO.get(key)
+    if memo is None or memo[0] != sig:
+        memo = (sig, spark.read.parquet(path).schema)
+        _SCHEMA_MEMO[key] = memo
+    return spark.read.schema(memo[1]).parquet(path)
 
 
 # matches the session default for spark.sql.files.maxPartitionBytes (128 MiB,
@@ -441,666 +449,17 @@ def with_deliveries(body: str, weather: bool = False) -> str:
 
 # --- driver contract exports --------------------------------------------------
 #
-# The driver hash-checks only the FIRST 50 registered queries (dict insertion
-# order — CORRECTNESS_r02 truncated at 50 of 67). With 100 registered Op-IDs
-# the window is a priority decision, made explicit here and ROTATED per round
-# so every oracle-eligible query earns a hard driver CORRECTNESS row across
-# consecutive rounds:
-#
-#   round 3 window — the SURVEY §2 parity surface (24 parity exprs, 12 olap,
-#     6 io round-trips, 8 core llmops): ALL 50 green in CORRECTNESS_r03.json.
-#   round 4 window — the 47 oracle-eligible queries past slot 50 in round 3
-#     plus the 3 rows-only ops: ALL 50 green in CORRECTNESS_r04.json.
-#   round 5 window (this ordering) — the 50 oracle-bearing ROUND4_ADDED
-#     queries (replica-gate-only until now). The r3/r4-proven sets move past
-#     the window; ROUND5_DEFERRED queues for round 6.
-#
-# Everything outside the window keeps full oracle coverage via the in-repo
-# replica gate (tests/test_oracle_parity.py runs ALL registered oracles at
-# sf0.001) and is benched per-round by bench.py.
-
-# Round-3 window: externally hash-verified by CORRECTNESS_r03.json (50/50
-# green); now past the window, covered by the in-repo replica gate.
-ROUND3_VERIFIED = [
-    # parity (SURVEY §2.3–§2.6) — 24
-    "pipeline_delay_status",
-    "expr_ts_diff",
-    "expr_minutes",
-    "expr_mmss_display",
-    "expr_hour",
-    "expr_weekday_name",
-    "expr_date",
-    "expr_dict_map_strict",
-    "expr_between",
-    "expr_isin",
-    "expr_regex_ci",
-    "expr_theoretical",
-    "expr_status",
-    "expr_null_lit",
-    "expr_str_id",
-    "proj_with_columns",
-    "proj_drop",
-    "join_weather_left",
-    "agg_ndistinct_dates",
-    "agg_distinct_collect",
-    "agg_count_shape",
-    "agg_is_empty",
-    "setop_concat",
-    "limit_preview",
-    # olap suite — 12
-    "olap_pricing_summary",
-    "olap_revenue_filter",
-    "olap_topk_customers",
-    "join_semi_open_orders",
-    "join_anti_customers_no_orders",
-    "setop_intersect_repeat_buyers",
-    "setop_except_lapsed_buyers",
-    "olap_rollup_revenue",
-    "olap_cube_counts",
-    "events_pivot_type_counts",
-    "olap_above_class_avg",
-    "olap_monthly_top_supplier",
-    # io round-trips (SURVEY §2.1/§2.2) — 6
-    "src_csv_roundtrip",
-    "src_json_roundtrip",
-    "src_parquet_roundtrip",
-    "src_sqlite_roundtrip",
-    "src_xlsx_roundtrip",
-    "src_weather_flatten",
-    # llmops core — 8
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_embedding_cosine",
-    "corpus_clean_pipeline",
-    "knn_lsh",
-    "events_sessionize",
-    "events_asof_last_purchase",
-    "events_sketch_aggregates",
-]
-
-# Round-4 additions. In round 4 these sat past the 50-slot window (replica
-# gate only); in round 5 the first 50 oracle-bearing entries of this list
-# ARE the window. The two rows-only entries (embedding_pq_codes,
-# stream_funnel_detect) and the 51st oracle query (dedup_savings_report,
-# last-registered) queue for round 6 — an oracle hash row is strictly
-# stronger than the driver's rows-only check, so rows-only entries never
-# displace an oracle candidate.
-ROUND4_ADDED = [
-    "olap_local_supplier_volume",
-    "olap_returned_items",
-    "olap_order_priority",
-    "dedup_winnow",
-    "text_entropy",
-    "text_perplexity_proxy",
-    "embedding_domain_centroids",
-    "olap_top_balance_no_orders",
-    "events_interarrival_stats",
-    "embedding_outliers",
-    # TPC-H shape completion (queries/olap2.py)
-    "olap_shipping_priority",
-    "olap_nation_trade_volume",
-    "olap_product_margin",
-    "olap_late_lines_by_priority",
-    "olap_order_count_distribution",
-    "olap_promo_revenue_share",
-    "olap_top_supplier",
-    "olap_part_supplier_counts",
-    "olap_large_volume_customers",
-    "olap_brand_band_revenue",
-    "olap_waiting_suppliers",
-    "olap_regional_min_price_supplier",
-    # corpus-curation aggregate layer (queries/round4b.py)
-    "text_lang_confusion",
-    "text_gopher_rules",
-    "corpus_token_bigrams",
-    "text_zipf_fit",
-    "corpus_trigram_novelty",
-    "corpus_length_histogram",
-    "events_daily_stickiness",
-    "stream_session_window",
-    "olap_important_parts",
-    "olap_bulk_part_suppliers",
-    "embedding_truncation_fidelity",
-    "embedding_pq_codes",
-    # graph + chunking (queries/round4c.py)
-    "events_type_affinity",
-    "events_type_pagerank",
-    "corpus_cdc_chunks",
-    "src_orc_roundtrip",
-    "events_stickiness_hll",
-    "olap_cdc_merge",
-    "olap_customer_quartiles",
-    "events_gap_fill_ffill",
-    "events_path_trigrams",
-    "text_tokenizer_fertility",
-    "corpus_curriculum_order",
-    "multimodal_dedup_bytes",
-    "corpus_quality_calibration",
-    "events_user_triangles",
-    "olap_yearly_growth",
-    "corpus_source_overlap",
-    "corpus_split_assign",
-    "stream_funnel_detect",
-    "dedup_savings_report",
-]
-
-# The three ROUND4_ADDED entries that did not fit the round-5 window (one
-# rows-only + the funnel graduation + the last-registered oracle query),
-# first in the round-6 window. Registration order IS the queue.
-ROUND5_DEFERRED = [
-    "embedding_pq_codes",  # graduated r8: pinned Lloyd fit + generated SQL twin
-    "stream_funnel_detect",  # oracle added in round 5 (batch window twin; the
-    # stateful streaming operator itself stays linked via the equivalence test)
-    "dedup_savings_report",  # oracle-bearing, 51st in the round-4 queue
-]
-
-# Round-5 additions: replica-gate + judge-sweep coverage in round 5, first
-# external driver hash rows in the round-6 window.
-ROUND5_ADDED: list[str] = [
-    "embedding_pq_encode_pinned",
-    "ivf_assign_pinned",
-    "dedup_incremental",
-    "corpus_clean_pipeline_sem",
-    "corpus_decontaminate_sem",
-    "corpus_health_report",
-    # round-5 session batch 2 (queries/round5b.py)
-    "dedup_passage",
-    "corpus_pack_bins",
-    "multimodal_phash_dedup",
-    "olap_scd2_history",
-    "events_windowed_topk",
-    "text_oov_rate",
-    # round-5 session batch 3 (queries/round5c.py)
-    "dq_orders_checks",
-    "events_skew_report",
-    "text_typo_pairs",
-    "pq_adc_topk_pinned",
-    "events_salted_spend",
-    "olap_scd2_at_ship_price",
-    "dq_lineitem_checks",
-    "stream_windowed_topk",
-    "events_hll_rollup",
-    "multimodal_frame_dedup",
-    "olap_ivm_agg",
-    "graph_bfs_reach",
-    "olap_unpivot_metrics",
-    "events_nullsafe_match",
-    "events_variant_extract",
-    "text_quality_model_score",
-]
-
-# Round-4 window — externally hash-verified in CORRECTNESS_r04.json (47
-# oracle hash rows + 3 declared rows-only, 50/50 green); now past the
-# window, covered by the in-repo replica gate.
-ROUND4_VERIFIED = [
-    "dedup_ngram_jaccard",
-    "dedup_containment",
-    "dedup_simhash",
-    "dedup_clusters",
-    "dedup_survivors",
-    "corpus_pack_sequences",
-    "corpus_seq_manifest",
-    "corpus_hash_sample",
-    "corpus_stratified_sample",
-    "corpus_decontaminate",
-    "corpus_bloom_contains",
-    "corpus_mix_domains",
-    "corpus_chunk_overlap",
-    "corpus_weighted_sample",
-    "corpus_shard_shuffle",
-    "text_repetition",
-    "text_pii_scrub",
-    "text_rarity",
-    "events_anomaly_zscore",
-    "knn_brute_force",
-    "knn_graph",
-    "dedup_semantic",
-    "text_token_count",
-    "text_lang_id",
-    "text_quality",
-    "text_fingerprint",
-    "text_tfidf_topterms",
-    "events_session_window_native",
-    "stream_tumbling_counts",
-    "stream_sliding_counts",
-    "stream_click_attribution",
-    "stream_dedup_events",
-    "stream_enrich_users",
-    "events_topk_spenders",
-    "events_value_quantiles",
-    "events_json_extract",
-    "events_range_join",
-    "events_rolling_1h",
-    "events_funnel",
-    "events_markov_transitions",
-    "events_retention_cohorts",
-    "embedding_quantize",
-    "olap_grouping_sets",
-    "olap_nation_share",
-    "events_ab_conversion",
-    "multimodal_frame_sample",
-    "multimodal_features",
-    # ivf_knn sat here through round 6 (rows-only r04 row); it graduated to
-    # a full oracle in round 7 and moved to ROUND7_GRADUATED.
-]
-
-# Queries that graduated from rows-only to a full oracle in round 6 and
-# have therefore NEVER had an external hash row: src_generate now audits
-# the pinned-seed distribution against a closed-form VALUES oracle;
-# stream_sessionize registers the append-mode emission contract (sessions
-# closed by a subsequent event) as its deterministic batch twin.
-ROUND6_GRADUATED = [
-    "src_generate",
-    "stream_sessionize",
-]
-
-# Round-6 additions: registered AFTER the window (replica-gate coverage
-# now, round-7 window candidates).
-ROUND6_ADDED: list[str] = [
-    "corpus_passage_scrub",
-    "events_rfm_segments",
-    "events_interval_overlap",
-    "events_cohort_ltv",
-    "graph_label_prop_communities",
-    "events_session_revenue",
-    "text_bpe_pair_freqs",
-    "stream_rate_alert",
-    "events_time_to_convert",
-    "embedding_drift_monitor",
-    "dq_documents_checks",
-    # round-6 session batch 2 (queries/round6b.py)
-    "events_heavy_hitters",
-    "events_kmv_distinct",
-    "dq_schema_profile",
-    "events_ewma_daily",
-    "corpus_negative_pairs",
-    # round-6 session batch 3 (queries/round6c.py)
-    "events_debounce",
-    "events_pattern_match",
-    "dq_k_anonymity",
-    "events_anomaly_mad",
-    "events_attribution_position",
-    # round-6 session batch 4 (queries/round6d.py)
-    "embedding_kmedoid_step",
-    # round-6 session batch 5 (queries/round6e.py)
-    "events_asof_next_error",
-    "events_cep_completions",
-    # round-6 session batch 6 (queries/round6f.py)
-    "dq_table_checksums",
-    "events_audience_overlap",
-    # round-6 session batch 7 (queries/round6g.py)
-    "events_forecast_seasonal_naive",
-    "corpus_length_gini",
-    "text_readability",
-    # round-6 session batch 8 (queries/round6h.py)
-    "dedup_minhash_calibration",
-    "events_ab_health",
-    # round-6 session batch 9 (queries/io.py)
-    "src_partitioned_roundtrip",
-    # round-6 session batch 10 (queries/round6i.py)
-    "embedding_power_iteration",
-    # round-6 session batch 11 (queries/round6j.py)
-    "olap_cumulative_revenue_share",
-    "olap_supplier_hhi",
-    "events_lag_features",
-    "events_markov_absorb2",
-    # round-6 session batch 12 (queries/round6k.py)
-    "olap_abc_classification",
-    "events_sankey_edges",
-    "corpus_length_vs_norm_corr",
-    # round-6 session batch 13 (queries/round6l.py)
-    "olap_ship_cycle_percentiles",
-    "events_new_vs_returning",
-    "dq_referential_orphans",
-    # round-6 session batch 14 (queries/round6m.py)
-    "olap_basket_affinity",
-    # round-6 session batch 15 (queries/round6n.py)
-    "corpus_cross_source_dupes",
-    "olap_discount_quantity_corr",
-    # round-6 session batch 16 (queries/round6o.py)
-    "corpus_source_tv_distance",
-    # round-6 session batch 17 (queries/round6p.py)
-    "events_session_bounce_rate",
-    "embedding_knn_label_accuracy",
-]
-
-# `ivf_knn` graduated from rows-only to a full oracle in round 7: the
-# registered query (queries/round7.py) runs the complete pinned-codebook
-# retrieval path — assign, probe, cosine re-rank, top-k — with a DuckDB
-# twin, so it has NEVER had an external hash row and takes the 50th
-# round-7 window slot (precedent: ROUND6_GRADUATED). It is listed here,
-# not in ROUND4_VERIFIED (its r04 row was the weaker rows-only check).
-ROUND7_GRADUATED = [
-    "ivf_knn",
-]
-
-# Round-7 additions: registered AFTER the window (replica-gate coverage
-# now, round-8 window candidates).
-ROUND7_ADDED: list[str] = [
-    # round-7 session batch 2 (queries/round7b.py)
-    "events_target_encoding",
-    "eval_value_auc",
-    "olap_numeric_corr_matrix",
-    "events_bot_detection",
-    # round-7 session batch 3 (queries/round7c.py)
-    "dq_part_name_links",
-    "dq_uniqueness_report",
-    "events_dau_wau_ratio",
-    # round-7 session batch 4 (queries/round7d.py)
-    "events_holt_linear",
-    "events_weekday_seasonality",
-    "events_error_burn_rate",
-    # round-7 session batch 5 (queries/round7e.py)
-    "text_bpe_merge_step",
-    "corpus_ngram_coverage",
-    "corpus_vocab_first_seen",
-    # round-7 session batch 6 (queries/round7f.py)
-    "embedding_bucket_skew",
-    "embedding_norm_profile",
-    # round-7 session batch 7 (queries/round7g.py)
-    "olap_open_order_backlog",
-    "olap_monthly_median_order_value",
-    "events_transition_timing",
-    # round-7 session batch 8 (queries/round7h.py)
-    "events_asof_nearest_error",
-    "dedup_threshold_sweep",
-    "dq_snapshot_rowdiff",
-    # round-7 session batch 9 (queries/round7i.py)
-    "dq_freshness_report",
-    "olap_nation_share_momentum",
-    "multimodal_chunk_windows",
-    # round-7 session batch 10 (queries/round7j.py)
-    "stream_tumbling_dau",
-    "olap_returns_rate_by_brand",
-    "olap_supplier_delay_variance",
-    "olap_order_value_log2_histogram",
-    # round-7 session batch 11 (queries/round7k.py)
-    "embedding_triplet_violation_rate",
-    "events_engagement_breadth",
-    "olap_reorder_interval",
-    "corpus_shingle_df_profile",
-    # round-7 session batch 12 (queries/round7l.py)
-    "dedup_transitivity_gap",
-    "dq_value_first_digit",
-    "olap_customer_concentration",
-    "events_weekday_hour_heatmap",
-    # round-7 session batch 13 (queries/round7m.py)
-    "events_value_anova_f",
-    "corpus_lang_source_contingency",
-    # round-7 session batch 14 (queries/round7n.py)
-    "corpus_packing_efficiency_curve",
-    "events_user_lifetime_stats",
-    "embedding_ivf_cell_balance",
-    # round-7 session batch 15 (queries/round7o.py)
-    "dq_order_line_status_consistency",
-    "corpus_quality_percentiles_by_source",
-]
-
-# Round-8 additions: registered AFTER the window (replica-gate coverage
-# now, round-9 window candidates). Registration order IS the queue.
-ROUND8_ADDED: list[str] = [
-    # round-8 session batch 1 (queries/round8a.py)
-    "corpus_type_token_ratio",
-    "corpus_top_bigram_share",
-    "corpus_token_count_gate",
-    "corpus_repeated_token_runs",
-    # round-8 session batch 2 (queries/round8b.py)
-    "corpus_sampling_weights_sqrt",
-    "embedding_quantization_error_histogram",
-    "embedding_centroid_margin_profile",
-    "embedding_label_centroid_purity",
-    # round-8 session batch 3 (queries/round8c.py)
-    "olap_customer_decile_lift",
-    "olap_supplier_pareto_80",
-    "olap_order_weekday_priority",
-    # round-8 session batch 4 (queries/round8d.py)
-    "events_value_winsorized_stats",
-    "events_inactivity_churn",
-    "events_hourly_autocorr",
-    # round-8 session batch 5 (queries/round8e.py)
-    "dq_null_rate_report",
-    "dq_numeric_range_report",
-    "dq_duplicate_key_report",
-    "dq_ship_before_order",
-    # round-8 session batch 6 (queries/round8f.py)
-    "corpus_dedup_cluster_size_histogram",
-    "multimodal_payload_size_percentiles",
-    # round-8 session batch 7 (queries/round8g.py)
-    "sketch_histogram_quantiles",
-    "events_count_min_estimate",
-    "olap_monthly_revenue_anomaly",
-    "dq_cardinality_drift",
-    # round-8 session batch 8 (queries/round8h.py)
-    "events_attribution_time_decay",
-    "olap_fulfillment_latency_by_size",
-    "olap_customer_migration",
-]
-
-# Round-9 additions land here as they are built this round; they queue
-# past the window (round-10 external-hash candidates).
-ROUND9_ADDED: list[str] = [
-    # round-9 session batch 1 (queries/round9a.py): the persistent-IVF
-    # lifecycle graduates to the oracle surface (r8 verdict item 8)
-    "ivf_index_search",
-    # round-9 session batch 2 (queries/round9b.py): bounded graph analytics
-    "events_user_triangles_capped",
-    # round-9 session batch 3 (queries/round9c.py)
-    "sketch_kmv_union",
-    "events_survival_hazard",
-    "events_hashed_features",
-    "embedding_dim_stats",
-    "eval_knn_label_precision",
-    # round-9 session batch 4 (queries/round9d.py)
-    "olap_incremental_agg_merge",
-    "eval_score_calibration",
-    "embedding_principal_direction",
-    # round-9 session batch 5 (queries/round9e.py)
-    "dq_l_diversity",
-    "events_peak_concurrency",
-    "stream_topk_trending",
-    # round-9 session batch 6 (queries/round9f.py)
-    "events_cumulative_unique_users",
-    "olap_bootstrap_mean_ci",
-    # round-9 session batch 7 (queries/round9g.py)
-    "dq_merkle_bucket_diff",
-    "olap_join_size_estimate",
-]
-
-# Round-10 additions land here as they are built this round; they queue
-# past the window (round-11 external-hash candidates).
-ROUND10_ADDED: list[str] = [
-    # round-10 session batch 1 (queries/round10a.py): the Merkle ladder's
-    # row-level reconcile API (r9 verdict item 5)
-    "dq_merkle_row_pulls",
-    # round-10 session batch 2 (queries/round10b.py)
-    "sketch_theta_intersection",
-    "olap_bloom_join_prune",
-    "dq_sequential_gap_report",
-    # round-10 session batch 3 (queries/round10c.py)
-    "eval_matryoshka_prefix_recall",
-    "dq_functional_dependency",
-    # round-10 session batch 4 (queries/round10d.py)
-    "corpus_token_budget_batches",
-    "olap_exact_grouped_quantiles",
-    # round-10 session batch 5 (queries/round10e.py)
-    "olap_revenue_trend_by_segment",
-]
-
-# The r05-verified ROUND4 batch in rotation order (ROUND4_ADDED minus the
-# three ROUND5_DEFERRED rows): the oldest fill pool for window rotation.
-_R4_FILL = [name for name in ROUND4_ADDED if name not in ROUND5_DEFERRED]
-
-# Round-11 additions: registered as the session progresses; staged AFTER
-# the 50-query window (round-12 window candidates), per the standing
-# rotation protocol.
-ROUND11_ADDED: list[str] = [
-    # round-11 session batch 1 (queries/round11a.py): the physical-layout
-    # operators' oracle surface (r10 verdict item 4)
-    "layout_compact_identity",
-    "layout_zorder_identity",
-    "layout_bucketed_join",
-    # round-11 session batch 2 (queries/round11b.py)
-    "olap_pareto_frontier",
-    "dedup_fuzzy_blocked",
-    "corpus_priority_sample",
-    "dq_benford_first_digit",
-    # round-11 session batch 3 (queries/round11c.py)
-    "eval_ndcg_truncated",
-    # round-11 session batch 4 (queries/round11d.py)
-    "events_cusum_changepoint",
-    "olap_weighted_median_price",
-    # round-11 session batch 5 (queries/round11e.py)
-    "eval_cluster_silhouette",
-]
-
-# Round-12 additions land here as they are built this round; they queue
-# past the window (round-13 window candidates). Registration order IS the
-# queue.
-ROUND12_ADDED: list[str] = [
-    # round-12 session batch 1 (queries/round12a.py): the embedding-LSH
-    # oracle surface moves to auto-banding (r11 verdict item 6) and the
-    # IVF lifecycle gains incremental append (r11 verdict item 8)
-    "dedup_embedding_cosine_auto",
-    "ivf_index_append_search",
-    # round-12 session batch 2 (queries/round12b.py)
-    "olap_rfm_segments",
-    "dq_outlier_mad_report",
-    "olap_price_quantity_slope_by_brand",
-    "events_user_hhi_histogram",
-    "corpus_token_gini",
-    # round-12 session batch 3 (queries/round12c.py)
-    "eval_ivf_recall_at_k",
-    # round-12 session batch 4 (queries/round12d.py)
-    "dq_order_total_drift",
-    "olap_join_skew_report",
-    "corpus_fixed_n_hash_sample",
-    "embedding_cosine_histogram",
-    # round-12 session batch 5 (queries/round12e.py)
-    "olap_ivm_join_delta",
-    "eval_ab_sample_ratio_mismatch",
-    # round-12 session batch 6 (queries/round12f.py)
-    "events_mann_kendall_trend",
-    "events_user_fano_burstiness",
-    # round-12 session batch 7 (queries/round12g.py): the streaming CUSUM
-    # control chart's oracle-checked batch twin
-    "events_cusum_control",
-]
-
-# Round-13 additions land here as they are built this round; they queue
-# past the window (round-14 window candidates). Registration order IS the
-# queue.
-ROUND13_ADDED: list[str] = [
-    # round-13 session batch 1 (queries/round13a.py): the 7th stateful
-    # streaming operator's oracle-checked batch twin (r12 verdict item 6)
-    "events_holt_forecast",
-    # round-13 session batch 2 (queries/round13b.py)
-    "dedup_prefix_filter_jaccard",
-    "corpus_band_occupancy_stats",
-    "eval_langid_auc",
-    # round-13 session batch 3 (queries/round13c.py)
-    "text_bigram_kn_probs",
-    "corpus_importance_sample",
-    "olap_decile_lift",
-    # round-13 session batch 4 (queries/round13d.py)
-    "events_countmin_estimates",
-    "corpus_mix_epoch_plan",
-    "events_session_length_hist",
-    # round-13 session batch 5 (queries/round13e.py)
-    "layout_partition_prune_identity",
-    # round-13 session batch 6 (queries/round13f.py)
-    "olap_market_basket_lift",
-    "corpus_dedup_audit_sample",
-    # round-13 session batch 7 (queries/round13g.py): the foreachBatch
-    # IVM sink's oracle-checked batch twin
-    "stream_ivm_counts",
-    # round-13 session batch 8 (queries/round13h.py)
-    "src_binary_ingest",
-    # round-13 session batch 9 (queries/round13i.py): AMS F2 sketch,
-    # lift-ranked collocations, seasonal Holt-Winters fold
-    "sketch_ams_f2",
-    "text_pmi_lift_pairs",
-    "events_holt_winters_daily",
-    # round-13 session batch 10 (queries/round13j.py): deterministic
-    # distributed GD training with an unrolled-CTE oracle
-    "ml_gate_distill_gd",
-    # round-13 session batch 11 (queries/round13b.py): the PPJoin
-    # pre-flight pair-mass report, oracle-registered after the decade
-    # ladder proved it the dense-regime router
-    "dedup_ppjoin_pair_mass",
-    # round-13 session batch 12 (queries/round13k.py): k-core peeling
-    "graph_kcore_peel",
-    # round-13 session batch 13 (queries/round13l.py): auto-banded scale
-    # twins for the kNN-graph family (semdedup ladder finding)
-    "knn_graph_auto",
-    "dedup_semantic_auto",
-    # round-13 session batch 14 (queries/round13m.py): multi-step BPE
-    # trainer (unrolled-CTE oracle, the GD pattern on tokenizer induction)
-    "text_bpe_train_merges",
-    # round-13 session batch 15 (queries/round13n.py): density clustering
-    "embedding_dbscan_lite",
-]
-
-# Round-13 window (first 50), exactly as staged at round-12 close and
-# confirmed by the round-12 verdict (next-round item 1): the 17 round-12
-# additions (replica-gate-only until now — the only registered queries
-# with no driver hash row ever) + the next-oldest verified fill rows
-# (ROUND5_ADDED[10:] — 18 queries whose freshest external rows are r06 —
-# then the two ROUND6_GRADUATED oracles, then ROUND3_VERIFIED[:13]) to
-# reach exactly 50.
-#
-# ROUND-14 ROTATION (stage at round-14 start): window = ROUND13_ADDED
-# (whatever lands this round) + as many of the next-oldest verified rows
-# (ROUND3_VERIFIED[13:], then ROUND6_ADDED, in listed order) as needed to
-# reach exactly 50. Move that slice to the head of
-# DRIVER_WINDOW_PRIORITY and update
-# tests/test_drivers.py::test_driver_window_priority_matches_registry;
-# stage ROUND14_ADDED after the window as this round did.
-DRIVER_WINDOW_PRIORITY = [
-    *ROUND12_ADDED,
-    *ROUND5_ADDED[10:],
-    *ROUND6_GRADUATED,
-    *ROUND3_VERIFIED[:13],
-    # --- past the 50-query window: externally verified in earlier rounds,
-    # kept on the in-repo replica gate; oldest remaining rows first (next
-    # in the rotation) ---
-    *ROUND3_VERIFIED[13:17],
-    *ROUND6_ADDED,
-    *ROUND7_GRADUATED,
-    *ROUND7_ADDED,
-    *ROUND3_VERIFIED[17:24],
-    *ROUND8_ADDED,
-    *ROUND3_VERIFIED[24:47],
-    *ROUND3_VERIFIED[47:],
-    *ROUND9_ADDED,
-    *_R4_FILL[:30],
-    *ROUND10_ADDED,
-    "embedding_pq_codes",
-    *_R4_FILL[30:],
-    *ROUND4_VERIFIED[:20],
-    # --- re-verified in the round-12 window (freshest external rows) ---
-    *ROUND11_ADDED,
-    *ROUND4_VERIFIED[20:],
-    *[n for n in ROUND5_DEFERRED if n != "embedding_pq_codes"],
-    *ROUND5_ADDED[:10],
-    # --- round-14 window queue: this round's additions ---
-    *ROUND13_ADDED,
-]
-
-_PRIORITY_RANK = {name: i for i, name in enumerate(DRIVER_WINDOW_PRIORITY)}
-
-
-def _priority_ordered(d: dict) -> dict:
-    return dict(
-        sorted(d.items(), key=lambda kv: (_PRIORITY_RANK.get(kv[0], len(_PRIORITY_RANK)), kv[0]))
-    )
+# Both maps are ordered by query name. The order is derived from the data, so
+# adding a query edits no list; the external driver hash-checks the first 50
+# names, and tests/test_oracle_parity.py checks every oracle.
 
 
 def queries() -> dict[str, QueryFn]:
-    return _priority_ordered(SPARK_QUERIES)
+    return dict(sorted(SPARK_QUERIES.items()))
 
 
 def oracle_sql() -> dict[str, str]:
-    return _priority_ordered(ORACLE_SQL)
+    return dict(sorted(ORACLE_SQL.items()))
 
 
 # Submodules register their queries on import (kept at the bottom so they can

@@ -496,7 +496,7 @@ def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round-6 stage-count fix for this chain (each stage turnaround costs
     # ~0.2 s on the bench host; at scale it is simply one fewer shuffle).
     w = Window.partitionBy(F.md5(F.trim(F.lower("text")))).orderBy("doc_id")
-    # minhash persists its signature relation (persist_sigs default), and
+    # minhash always persists its signature relation, and
     # since r13 `kept` itself is stats-gated persisted too: the
     # quality+lang kernels + exact-dedup window execute ONCE (signature
     # build) instead of twice (again for the anti-join left side);

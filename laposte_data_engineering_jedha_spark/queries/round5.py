@@ -263,7 +263,7 @@ def corpus_clean_pipeline_sem(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "text", "quality")
     # exact dedup as ONE window pass (keep rank 1 == keep min id per md5
     # key) — same round-6 stage-count fix as corpus_clean_pipeline; the
-    # minhash stage persists its signature relation (persist_sigs default)
+    # minhash stage always persists its signature relation
     # so this prefix executes twice total, not 4x.
     w = Window.partitionBy(F.md5(F.trim(F.lower("text")))).orderBy("doc_id")
     # kept feeds the minhash signature build AND the anti-join left side —

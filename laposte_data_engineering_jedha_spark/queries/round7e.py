@@ -20,7 +20,7 @@ operators, all with full DuckDB oracle twins.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import texts
@@ -250,62 +250,29 @@ def corpus_vocab_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     first {_VOCAB_CHECKPOINTS}% of documents (id order, ceil prefix
     sizes). doc_id is unique, so "first seen within the n-th prefix"
     reduces to min(doc_id) per term <= the n-th smallest doc_id — the 4
-    checkpoint THRESHOLDS are order statistics computed by two-pass
-    partition-offset ranking (range-partition doc_ids, per-partition
-    counts give each partition's global offset, a PARTITIONED window
-    ranks only inside the <=4 partitions that contain a checkpoint), not
-    a doc-grain global sort: no single task ever sees more than ~N/P
-    rows. Each term then costs one min(doc_id) aggregate off a single
-    tokenize scan; the curve itself is a vocabulary-grain rollup against
-    a broadcast 4-row threshold relation. A flattening curve says the
-    corpus has stopped contributing new vocabulary — the signal mixture
-    designers read before adding more of a source."""
-    from ..operators import caches
+    checkpoint THRESHOLDS are order statistics: the rows of
+    ranking.global_ranks over doc_id whose rank is a prefix size,
+    collected at build time (the gated exact ranking: no single task
+    sorts the corpus once it is past the window gate), not a doc-grain
+    global sort in the returned plan. Each term then costs one
+    min(doc_id) aggregate off a single tokenize scan; the curve itself
+    is a vocabulary-grain rollup against a broadcast 4-row threshold
+    relation. A flattening curve says the corpus has stopped
+    contributing new vocabulary — the signal mixture designers read
+    before adding more of a source."""
+    from ..operators import ranking
 
     docs = table(spark, sf_dir, "documents")
-    n_part = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
-    # pass 1: range-partition the ids and pin the (sampled) boundaries so
-    # the count job and the threshold job see the same assignment
-    ids = caches.track(
-        docs.select("doc_id")
-        .repartitionByRange(n_part, "doc_id")
-        .select("doc_id", F.spark_partition_id().alias("pid"))
-        .persist()
-    )
-    part_counts = {
-        r["pid"]: r["cnt"]
-        for r in ids.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    n_docs = sum(part_counts.values())
-    # locate each checkpoint's (partition, local-rank) via the offsets —
-    # driver-side arithmetic over <= n_part rows
+    ranked, n_docs = ranking.global_ranks(docs.select("doc_id"), "doc_id")
     prefixes = {
         p: max((p * n_docs + 99) // 100, 1) for p in _VOCAB_CHECKPOINTS
     }
-    need: dict[tuple[int, int], list[int]] = {}
-    for pct, n_prefix in prefixes.items():
-        off = 0
-        for pid in sorted(part_counts):  # range partitions are id-ordered
-            if n_prefix <= off + part_counts[pid]:
-                need.setdefault((pid, n_prefix - off), []).append(pct)
-                break
-            off += part_counts[pid]
-    # pass 2: rank ONLY inside the partitions that hold a checkpoint
-    w = Window.partitionBy("pid").orderBy("doc_id")
-    hit = F.lit(False)
-    for pid, lrn in need:
-        hit = hit | ((F.col("pid") == pid) & (F.col("lrn") == lrn))
-    th_rows = (
-        ids.where(F.col("pid").isin([pid for pid, _ in need]))
-        .withColumn("lrn", F.row_number().over(w))
-        .where(hit)
-        .collect()
-    )
-    thresholds: dict[int, int] = {p: 0 for p in _VOCAB_CHECKPOINTS}  # empty-corpus: fs is empty anyway
-    by_key = {(r["pid"], r["lrn"]): r["doc_id"] for r in th_rows}
-    for key, pcts in need.items():
-        for pct in pcts:
-            thresholds[pct] = by_key[key]
+    by_rank = {
+        r["rank"]: r["doc_id"]
+        for r in ranked.where(F.col("rank").isin(sorted(set(prefixes.values())))).collect()
+    }
+    # empty corpus: no ranked rows, threshold 0 (fs is empty anyway)
+    thresholds = {p: by_rank.get(prefixes[p], 0) for p in _VOCAB_CHECKPOINTS}
     cp = F.broadcast(
         spark.createDataFrame(
             [(p, prefixes[p], thresholds[p]) for p in _VOCAB_CHECKPOINTS],

@@ -35,6 +35,20 @@ WINDOW = "5 minutes"
 WATERMARK = "10 minutes"
 
 
+def _run_to_memory(stream: DataFrame, query_name: str, output_mode: str) -> DataFrame:
+    """Drain `stream` into a memory sink named `query_name` with one
+    availableNow trigger, wait for it, and return the sink's table."""
+    q = (
+        stream.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return stream.sparkSession.table(query_name)
+
+
 def tumbling_counts(events: DataFrame, with_watermark: bool = False) -> DataFrame:
     """Per-(5-min window, event_type) count + exact decimal value sum.
 
@@ -140,15 +154,7 @@ def run_attribution_available_now(
         ev.where(F.col("event_type") == "purchase"),
         with_watermark=True,
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _run_to_memory(stream, query_name, "append")
 
 
 def enrich_users(events: DataFrame, customers: DataFrame) -> DataFrame:
@@ -183,15 +189,7 @@ def run_enrich_available_now(
     """Drive the stream-static enrichment over the directory stream into a
     memory sink; returns the enriched events."""
     stream = enrich_users(read_events_stream(spark, events_dir), customers)
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _run_to_memory(stream, query_name, "append")
 
 
 def dedup_events(events: DataFrame, with_watermark: bool = False) -> DataFrame:
@@ -221,15 +219,7 @@ def run_dedup_available_now(
     """Drive the watermarked dedup over the directory stream (append mode)
     into a memory sink; returns the deduplicated events."""
     stream = dedup_events(read_events_stream(spark, events_dir), with_watermark=True)
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _run_to_memory(stream, query_name, "append")
 
 
 SESSION_GAP_S = 1800  # 30 min, matches queries/llmops.py:events_sessionize
@@ -341,15 +331,7 @@ def run_sessionize_available_now(
     """Drive the stateful sessionizer over the whole directory with
     availableNow into a memory sink; returns emitted (closed) sessions."""
     stream = sessionize_stream(read_events_stream(spark, events_dir))
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _run_to_memory(stream, query_name, "append")
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -371,15 +353,7 @@ def run_tumbling_counts_available_now(
     """Drive the streaming job to completion with the availableNow trigger
     into a memory sink; returns the final result as a batch DataFrame."""
     stream = tumbling_counts(read_events_stream(spark, events_dir), with_watermark=True)
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _run_to_memory(stream, query_name, "complete")
 
 
 SESSION_GAP = "30 minutes"
@@ -418,15 +392,7 @@ def run_session_window_available_now(
     """Drive the native session-window job over the directory stream with
     availableNow into a memory sink; returns the closed sessions."""
     stream = session_window_counts(read_events_stream(spark, events_dir), with_watermark=True)
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _run_to_memory(stream, query_name, "complete")
 
 
 def upsert_batch_to_parquet(batch: DataFrame, batch_id: int, out_dir: str) -> None:
@@ -569,15 +535,7 @@ def run_funnel_detect_available_now(
     """Drive the funnel detector over the directory stream with
     availableNow into a memory sink; returns completed funnels."""
     stream = funnel_detect_stream(read_events_stream(spark, events_dir))
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _run_to_memory(stream, query_name, "append")
 
 
 CEP_OUT_SCHEMA = "user_id long, view_us long, purchase_us long"
@@ -688,15 +646,7 @@ def run_pattern_completions_available_now(
     """Drive the CEP automaton over the directory stream with availableNow
     into a memory sink; returns the completion rows."""
     stream = pattern_completions_stream(read_events_stream(spark, events_dir))
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _run_to_memory(stream, query_name, "append")
 
 
 def daily_type_revenue(events: DataFrame, with_watermark: bool = False) -> DataFrame:
@@ -745,15 +695,7 @@ def run_daily_topk_available_now(
     shows the append-mode shape); the watermark set upstream matters
     THERE."""
     stream = daily_type_revenue(read_events_stream(spark, events_dir), with_watermark=True)
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return rank_daily_topk(spark.table(query_name))
+    return rank_daily_topk(_run_to_memory(stream, query_name, "complete"))
 
 
 RATE_ALERT_K = 3  # events within the trailing hour that trip the alert
@@ -905,15 +847,7 @@ def run_rate_alert_available_now(
     """Drive the rate alerter over the directory stream with availableNow
     into a memory sink; returns emitted alerts."""
     stream = rate_alert_stream(read_events_stream(spark, events_dir))
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _run_to_memory(stream, query_name, "append")
 
 
 def tumbling_distinct_users(events: DataFrame, with_watermark: bool = False) -> DataFrame:
@@ -950,15 +884,7 @@ def run_tumbling_dau_available_now(
     stream = tumbling_distinct_users(
         read_events_stream(spark, events_dir), with_watermark=True
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _run_to_memory(stream, query_name, "append")
 
 
 # --- windowed top-k trending (custom stateful operator #5) -------------------
@@ -1076,15 +1002,7 @@ def run_topk_trending_available_now(
     """Drive the trending top-k over the directory stream with availableNow
     into a memory sink; returns the finalized-window emissions."""
     stream = topk_trending_stream(read_events_stream(spark, events_dir))
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _run_to_memory(stream, query_name, "append")
 
 
 # ===================== CUSUM control chart (streaming) ========================
@@ -1221,15 +1139,7 @@ def run_cusum_control_available_now(
     """Drive the streaming CUSUM over the directory stream with
     availableNow into a memory sink; returns finalized-day emissions."""
     stream = cusum_control_stream(read_events_stream(spark, events_dir))
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _run_to_memory(stream, query_name, "append")
 
 
 # ================= Holt linear-trend forecaster (streaming) ====================
@@ -1388,15 +1298,7 @@ def run_holt_forecast_available_now(
     """Drive the streaming Holt forecaster over the directory stream with
     availableNow into a memory sink; returns finalized-day emissions."""
     stream = holt_forecast_stream(read_events_stream(spark, events_dir))
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _run_to_memory(stream, query_name, "append")
 
 
 # ===================== Holt-Winters (additive, period 7) =====================
@@ -1582,12 +1484,4 @@ def run_holt_winters_available_now(
     """Drive the streaming Holt-Winters chart over the directory stream
     with availableNow into a memory sink; returns finalized-day rows."""
     stream = holt_winters_stream(read_events_stream(spark, events_dir))
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _run_to_memory(stream, query_name, "append")

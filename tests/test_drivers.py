@@ -237,62 +237,40 @@ def test_benchmark_matrix_shape(spark, tmp_path, monkeypatch):
     assert len(rows) == 2 and rows[0]["rows"] == "100"
 
 
-def test_driver_window_priority_matches_registry():
-    """The explicit window ordering and the registry must agree exactly —
-    a typo'd or unlisted name would silently land outside the driver's
-    50-query correctness window."""
+def test_registry_is_name_sorted_and_oracle_required():
+    """The driver contract orders the registry by query name (the external
+    driver hash-checks the first 50), oracle_sql() has the same keys in the
+    same order, and no query registers without its oracle."""
     from laposte_data_engineering_jedha_spark import queries as q
 
-    assert set(q.DRIVER_WINDOW_PRIORITY) == set(q.SPARK_QUERIES)
-    assert len(q.DRIVER_WINDOW_PRIORITY) == len(set(q.DRIVER_WINDOW_PRIORITY))
-    # every oracle belongs to a registered query
-    assert set(q.ORACLE_SQL) <= set(q.SPARK_QUERIES)
-    # round-13 rotation (staged at round-12 close, confirmed by the
-    # round-12 verdict item 1): the 50-slot window = the 17 round-12
-    # additions (first external hash rows ever) + the next-oldest
-    # verified fill rows (ROUND5_ADDED[10:], ROUND6_GRADUATED, then
-    # ROUND3_VERIFIED[:13]).
-    window = q.DRIVER_WINDOW_PRIORITY[:50]
-    assert len(window) == 50
-    assert len(q.ROUND12_ADDED) == 17
-    assert window == (
-        list(q.ROUND12_ADDED)
-        + list(q.ROUND5_ADDED[10:])
-        + list(q.ROUND6_GRADUATED)
-        + list(q.ROUND3_VERIFIED[:13])
-    )
-    # every window slot carries a full hash (the whole round-10 window is
-    # oracle-bearing — no rows-only entries; ADVICE r9: assert ORACLE_SQL
-    # membership directly, not the tautological SPARK_QUERIES fallback)
-    assert all(name in q.ORACLE_SQL for name in window)
-    # the graduations really did graduate
-    assert all(name in q.ORACLE_SQL for name in q.ROUND6_GRADUATED)
-    assert all(name in q.ORACLE_SQL for name in q.ROUND7_GRADUATED)
-    # registry partition covers everything registered
-    assert set(q.ROUND6_ADDED) | set(q.ROUND7_GRADUATED) | set(
-        q.ROUND3_VERIFIED
-    ) | set(q.ROUND4_ADDED) | set(q.ROUND4_VERIFIED) | set(
-        q.ROUND5_ADDED
-    ) | set(q.ROUND6_GRADUATED) | set(q.ROUND7_ADDED) | set(
-        q.ROUND8_ADDED
-    ) | set(q.ROUND9_ADDED) | set(q.ROUND10_ADDED) | set(q.ROUND11_ADDED) | set(
-        q.ROUND12_ADDED
-    ) | set(q.ROUND13_ADDED) == set(q.SPARK_QUERIES)
-    # round-13 additions queue behind the window (round-14 candidates)
-    assert all(
-        q.DRIVER_WINDOW_PRIORITY.index(name) >= 50 for name in q.ROUND13_ADDED
-    )
-    # the staged ROUND-14 window arithmetic must already close: this
-    # round's additions + the oldest remaining fill rows (the round-3
-    # parity remainder, then the round-6 additions) can compose exactly
-    # 50 oracle-bearing slots.
-    r14_head = list(q.ROUND13_ADDED)
-    r14_fill = list(q.ROUND3_VERIFIED[13:]) + list(q.ROUND6_ADDED)
-    assert len(r14_head) <= 50, "round-13 additions overflow the round-14 window"
-    assert len(r14_head) + len(r14_fill) >= 50, "not enough fill rows for round 14"
-    r14_window = r14_head + r14_fill[: 50 - len(r14_head)]
-    assert len(r14_window) == len(set(r14_window)) == 50
-    assert all(name in q.ORACLE_SQL for name in r14_window)
+    assert list(q.queries()) == sorted(q.SPARK_QUERIES)
+    assert list(q.oracle_sql()) == list(q.queries())
+    with pytest.raises(TypeError):
+        q.query("x")
+
+
+def test_table_schema_memo_sees_same_size_rewrite(spark, tmp_path):
+    """table()'s schema memo re-infers after a rewrite that keeps both the
+    file size and the mtime (a copy that preserves mtime): the memo keys
+    on the path and checks the file's ctime and inode too."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from laposte_data_engineering_jedha_spark import queries as q
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2, 3]}), path)
+    assert q.table(spark, str(tmp_path), "t").columns == ["a"]
+    st = os.stat(path)
+    pq.write_table(pa.table({"b": [1, 2, 3]}), path)
+    assert os.path.getsize(path) == st.st_size
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert os.stat(path).st_mtime_ns == st.st_mtime_ns
+    df = q.table(spark, str(tmp_path), "t")
+    assert df.columns == ["b"]
+    assert sorted(r["b"] for r in df.collect()) == [1, 2, 3]
 
 
 def test_webapi_serves_console_ui(webapp):

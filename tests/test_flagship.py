@@ -32,4 +32,4 @@ def test_entry_smoke(spark):
     spec.loader.exec_module(mod)
     df = mod.entry(spark)
     assert df.count() > 0
-    assert set(mod.queries()) >= set(mod.oracle_sql())
+    assert set(mod.queries()) == set(mod.oracle_sql())

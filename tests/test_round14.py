@@ -21,7 +21,7 @@ against the default (persisted) run.
 Offsets-branch hardening: every fixture grain sits under
 ranking.WINDOW_MAX_ROWS, so the oracle gate only runs the WINDOW form of
 the ranking operators. The same test forces the OFFSETS form
-(ranking.WINDOW_MAX_ROWS = 0) for one registry caller per operator.
+(ranking.WINDOW_MAX_ROWS = 0) for at least one registry caller per operator.
 """
 
 from __future__ import annotations
@@ -73,9 +73,10 @@ _RECOMPUTE_REPS = [
     "olap_market_basket_lift",  # queries/round13f.py
 ]
 
-# one registry caller per ranking operator
+# registry callers of each ranking operator
 _OFFSETS_REPS = [
     "corpus_ngram_coverage",  # global_ranks, DESC key
+    "corpus_vocab_first_seen",  # global_ranks, thresholds collected at build
     "olap_customer_quartiles",  # exact_ntile
     "events_peak_concurrency",  # global_prefix_sum, three keys
     "olap_pareto_frontier",  # global_prefix_max
