@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import texts, vectors
 from ..functions.vectors import _ltr_dot
+from ..session import local_table
 from . import caches
 from .graphs import DRIVER_MAX_EDGES
 
@@ -952,7 +953,7 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
     schema = T.StructType(
         [T.StructField("node", id_type), T.StructField("component", id_type)]
     )
-    return edges.sparkSession.createDataFrame(data, schema)
+    return local_table(edges.sparkSession, data, schema)
 
 
 def connected_components(

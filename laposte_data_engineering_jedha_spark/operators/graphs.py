@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_table
+
 #: omit-the-args production caps: per-bucket pair fan-out <= 128^2 and
 #: per-node wedge fan-out <= 64^2, both deterministic — large enough to
 #: be exact on typical co-activity graphs (fixture maxima are far below
@@ -149,9 +151,8 @@ def co_activity_triangles(
             e, n, t = _driver_triangles(
                 [(row[0], row[1]) for row in edges.collect()], max_out_deg
             )
-            return ev.sparkSession.createDataFrame(
-                ev.sparkSession.sparkContext.parallelize([(e, n, t)], 1),
-                "n_edges long, n_nodes long, n_triangles long",
+            return local_table(
+                ev.sparkSession, [(e, n, t)], "n_edges long, n_nodes long, n_triangles long"
             )
     deg = (
         edges.select(F.col("x").alias("u"))

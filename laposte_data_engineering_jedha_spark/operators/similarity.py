@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
 from ..functions import vectors
+from ..session import local_table
 from . import caches
 
 
@@ -427,8 +428,8 @@ def ivf_index_write(
         assign = vectors.pd_fold_assign_d2(vec_col, centers)["centroid"]
     else:
         assign = F.element_at(vectors.pd_nearest_centroids(vec_col, centers, 1), 1)
-    spark = df.sparkSession
-    spark.createDataFrame(
+    local_table(
+        df.sparkSession,
         [(int(i), [float(x) for x in c]) for i, c in enumerate(centers)],
         "centroid int, vals array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids.parquet")

@@ -119,7 +119,9 @@ def load_data(df: DataFrame, config: dict) -> dict:
     try:
         stage_target = os.path.join(staged, "deliveries.parquet")
         WRITER_MAP["parquet"](stage_target, single_file=False).write(df)
-        staged_df = spark.read.parquet(stage_target).select(*df.columns)
+        # the stage's schema is df's: reading with it skips the footer-merge
+        # job that schema inference would run over the staged files
+        staged_df = spark.read.schema(df.schema).parquet(stage_target)
         with parquet_dataset(staged_df) as dataset:
             n_rows = dataset.count_rows()
         single = output_conf.get("single_file", "auto")
@@ -134,7 +136,7 @@ def load_data(df: DataFrame, config: dict) -> dict:
                 elif os.path.exists(target):
                     os.remove(target)
                 shutil.move(stage_target, target)
-                staged_df = spark.read.parquet(target).select(*df.columns)
+                staged_df = spark.read.schema(df.schema).parquet(target)
                 continue
             WRITER_MAP[f](target, single_file=single).write(staged_df)
         manifest = generate_manifest(staged_df, output_conf, n_rows=n_rows)

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import reconcile
+from ..session import local_table
 from . import events_table, query
 
 _RP_UPD_ID = 17  # value bumped one cent in the replica
@@ -71,7 +72,8 @@ def dq_merkle_row_pulls(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    ins = spark.createDataFrame(
+    ins = local_table(
+        spark,
         [(_RP_INS_ID, 0, 0, "synthetic", 0)],
         "event_id long, ts_us long, user_id long, event_type string, cents long",
     )

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import graphs
+from ..session import local_table
 from . import query, table
 
 _KC_K = 3
@@ -92,13 +93,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     stats = graphs.kcore_peel(edges, k=_KC_K, rounds=_KC_ROUNDS)
-    # 3-row audit emission: one partition + in-partition sort IS the total
-    # order; a global orderBy would run a range-sampling pass (an extra
-    # Spark job) over 3 rows, and the default createDataFrame fans them
-    # into defaultParallelism near-empty partitions
-    return (
-        spark.createDataFrame(
-            spark.sparkContext.parallelize(sorted(stats), 1),
-            "round long, n_nodes long, n_edges long",
-        ).sortWithinPartitions("round")
-    )
+    # 3-row audit emission, sorted on the driver: a local relation's scan
+    # slices its rows into partitions in order, so collect keeps the sort,
+    # where a global orderBy would run a range-sampling job over 3 rows
+    return local_table(spark, sorted(stats), "round long, n_nodes long, n_edges long")

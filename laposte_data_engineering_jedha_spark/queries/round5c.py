@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_table
 from . import events_table, query, table
 
 _DQ_SQL = """
@@ -748,7 +749,8 @@ def events_nullsafe_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.get_json_object("props", "$.k").cast("int") % 4)
         .alias("segment")
     )
-    dim = spark.createDataFrame(
+    dim = local_table(
+        spark,
         [(0, "seg-0"), (1, "seg-1"), (2, "seg-2"), (None, "unknown")],
         "segment int, label string",
     )

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from ..functions import texts, vectors
 from ..operators import caches, graphs
+from ..session import local_table
 from . import events_table, query, table, table_rowcount
 from .llmops import sql_toks
 
@@ -602,9 +603,7 @@ def graph_label_prop_communities(
             for r in ev.select(F.col("user_id").alias("node")).distinct().collect()
         ]
         labels = graphs._driver_label_prop(edge_rows, node_ids, rounds=2)
-        return spark.createDataFrame(
-            list(labels.items()), "user_id long, community long"
-        )
+        return local_table(spark, list(labels.items()), "user_id long, community long")
     edges = e0.unionByName(
         e0.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")
     )

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import texts
+from ..session import local_table
 from . import query, table
 from .llmops import sql_toks
 
@@ -191,7 +192,7 @@ def corpus_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = tok.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("n"))
     r, _ = ranking.global_ranks(g, F.col("n").desc(), "term", rank_col="rnk")
     t = g.agg(F.sum("n").cast("long").alias("total"))
-    ks = spark.createDataFrame([(k,) for k in _COVERAGE_KS], "k int")
+    ks = local_table(spark, [(k,) for k in _COVERAGE_KS], "k int")
     return (
         r.crossJoin(F.broadcast(t))
         .crossJoin(F.broadcast(ks))
@@ -274,7 +275,8 @@ def corpus_vocab_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # empty corpus: no ranked rows, threshold 0 (fs is empty anyway)
     thresholds = {p: by_rank.get(prefixes[p], 0) for p in _VOCAB_CHECKPOINTS}
     cp = F.broadcast(
-        spark.createDataFrame(
+        local_table(
+            spark,
             [(p, prefixes[p], thresholds[p]) for p in _VOCAB_CHECKPOINTS],
             "pct int, n_prefix long, threshold long",
         )

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_table
 from . import events_table, query, table
 from .llmops import sql_toks
 from .round5 import _EMB_DIM, _IVF_K, _spark_argmin, _sql_argmin
@@ -64,7 +65,7 @@ def corpus_packing_efficiency_curve(spark: SparkSession, sf_dir: str) -> DataFra
     from ..functions import texts
 
     d = docs.select(F.size(texts.tokens("text")).cast("long").alias("n_tok"))
-    ls = spark.createDataFrame([(k,) for k in _PACK_LENGTHS], "L int")
+    ls = local_table(spark, [(k,) for k in _PACK_LENGTHS], "L int")
     g = (
         d.crossJoin(F.broadcast(ls))
         .groupBy("L")

@@ -6,7 +6,8 @@ driver entry point all run with the same, scale-aware configuration:
 - AQE on (runtime partition coalescing + skew-join splitting),
 - shuffle partitions sized to the local core count (on a real cluster this
   is overridden to ~2-3x total cores; AQE coalesces the excess),
-- Arrow enabled for the few driver<->pandas bridges (xlsx/sqlite sinks),
+- Arrow enabled for the pandas readers (xlsx/sqlite sources) and for
+  `local_table`; the xlsx/sqlite sinks stream pyarrow batches directly,
 - UTC session timezone so timestamp semantics are deterministic and match
   the DuckDB oracle.
 """
@@ -15,7 +16,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def default_parallelism() -> int:
@@ -64,3 +66,26 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_table(spark: SparkSession, rows: list[tuple], schema: StructType | str) -> DataFrame:
+    """Driver-side rows -> a JVM `LocalRelation` with exactly `schema`.
+
+    `spark.createDataFrame(list, schema)` builds a `LogicalRDD` over a
+    `PythonRDD`, so every scan of it forks Spark's Python daemon and one
+    worker per partition to unpickle rows the driver already holds. An
+    Arrow table goes to the JVM once, as batches, and the scan stays in
+    the JVM. `rows` is a sequence of tuples in schema order; `schema` is a
+    `StructType` or a DDL string ("k int, vals array<double>")."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

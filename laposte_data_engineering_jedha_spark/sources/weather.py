@@ -16,9 +16,12 @@ loop. Here:
   reference does in a driver loop becomes a distributed plan
   (SURVEY.md §2.1 src_weather_flatten).
 
-Driver-side fan-out is fine at ≤31 distinct dates; for a 100 TB backfill
-over years of dates the same fetch becomes `mapInPandas` over a dates
-DataFrame (commented in fetch_weather_table).
+Driver-side fan-out is fine at ≤31 distinct dates. The fetched
+(date, payload) pairs enter Spark through `session.local_table`, a JVM
+local relation, so the ≤744-row table the transform broadcasts never
+starts a Python worker. For a backfill over years of dates the same fetch
+runs from the executors: `fetch_weather_table_distributed` fans it out
+with `mapInPandas` over a dates DataFrame.
 """
 
 from __future__ import annotations
@@ -30,6 +33,8 @@ from concurrent.futures import ThreadPoolExecutor, as_completed
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import local_table
 
 try:
     import requests
@@ -131,7 +136,7 @@ def flatten_weather(spark: SparkSession, payloads: list[tuple[str, str]]) -> Dat
     Returns None when nothing was fetched (the all-null fallback path)."""
     if not payloads:
         return None
-    raw = spark.createDataFrame(payloads, "date STRING, payload STRING")
+    raw = local_table(spark, payloads, "date STRING, payload STRING")
     parsed = raw.select("date", F.from_json("payload", FORECAST_SCHEMA).alias("p"))
     hours = parsed.select(
         "date", F.explode(F.col("p.forecast.forecastday")[0]["hour"]).alias("h")

@@ -39,6 +39,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import local_table
 from . import jobs
 
 _MANIFEST = "manifest.json"
@@ -57,7 +58,7 @@ def read_view(spark: SparkSession, root: str) -> DataFrame:
     view, _ = _view_paths(root)
     if os.path.exists(os.path.join(view, "_SUCCESS")):
         return spark.read.parquet(view)
-    return spark.createDataFrame([], VIEW_SCHEMA)
+    return local_table(spark, [], VIEW_SCHEMA)
 
 
 def last_applied_batch(root: str) -> int:

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 from laposte_data_engineering_jedha_spark import queries as q
 from laposte_data_engineering_jedha_spark.schemas import ENRICHED_COLUMNS
 
@@ -27,7 +29,8 @@ def test_flagship_shape_and_domains(spark, sf_dir):
 def test_entry_smoke(spark):
     import importlib.util
 
-    spec = importlib.util.spec_from_file_location("spark_entry", "/root/repo/__spark_entry__.py")
+    entry = os.path.join(os.path.dirname(os.path.dirname(__file__)), "__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("spark_entry", entry)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     df = mod.entry(spark)

@@ -10,23 +10,20 @@ from laposte_data_engineering_jedha_spark.queries.round4c import (
     events_user_triangles,
 )
 
-SF = "/root/testdata/sf0.001"
-
-
 def _row(df):
     r = df.collect()[0]
     return (r["n_edges"], r["n_nodes"], r["n_triangles"])
 
 
-def test_uncapped_operator_matches_exact_registered_query(spark):
-    ev = events_table(spark, SF)
+def test_uncapped_operator_matches_exact_registered_query(spark, sf_dir):
+    ev = events_table(spark, sf_dir)
     got = _row(graphs.co_activity_triangles(ev, min_w=5))
-    want = _row(events_user_triangles(spark, SF))
+    want = _row(events_user_triangles(spark, sf_dir))
     assert got == want
 
 
-def test_loose_caps_are_exact_and_binding_caps_undercount(spark):
-    ev = events_table(spark, SF)
+def test_loose_caps_are_exact_and_binding_caps_undercount(spark, sf_dir):
+    ev = events_table(spark, sf_dir)
     exact = _row(graphs.co_activity_triangles(ev, min_w=2))
     loose = _row(
         graphs.co_activity_triangles(ev, min_w=2, bucket_cap=10**6, max_out_deg=10**6)

@@ -247,3 +247,39 @@ def test_fanout_stages_through_parquet_above_threshold(spark, tmp_path, monkeypa
         assert conn.execute("SELECT count(*) FROM deliveries").fetchone()[0] == 5000
     manifest = json.loads((out / "results_manifest.json").read_text())
     assert manifest["shape"]["rows"] == 5000
+
+
+def test_staged_reads_carry_the_loaded_frames_schema(spark, tmp_path, monkeypatch):
+    """load_data reads its staged parquet, and the moved multi-part parquet
+    output, with the loaded frame's own schema (no inference job): every
+    sink gets the frame's column names and types, in order."""
+    from laposte_data_engineering_jedha_spark.plans import load as load_mod
+
+    seen = {}
+
+    def capturing(fmt):
+        real = load_mod.WRITER_MAP[fmt]
+
+        class Capture(real):
+            def write(self, df):
+                seen[fmt] = df
+                super().write(df)
+
+        return Capture
+
+    for fmt in ("csv", "sqlite"):  # before and after the parquet move
+        monkeypatch.setitem(load_mod.WRITER_MAP, fmt, capturing(fmt))
+    config = {
+        "source": {"type": "generate", "rows": 50, "seed": 7},
+        "output": {"path": str(tmp_path / "out"), "format": "all_but_xlsx", "single_file": False},
+    }
+    pipe = Pipeline(config, spark, weather_client=FakeWeatherClient(), progress=None)
+    df = pipe.transform(pipe.extract())
+    load_mod.load_data(df, config)
+    want = [(f.name, f.dataType) for f in df.schema.fields]
+    assert set(seen) == {"csv", "sqlite"}
+    for fmt, staged in seen.items():
+        assert [(f.name, f.dataType) for f in staged.schema.fields] == want, fmt
+    assert seen["sqlite"].inputFiles()[0].startswith(
+        (tmp_path / "out" / "deliveries.parquet").as_uri()
+    )

@@ -11,13 +11,10 @@ import pytest
 from laposte_data_engineering_jedha_spark.queries import round9a
 
 
-def _copy_corpus(tmp_path):
+def _copy_corpus(tmp_path, sf_dir):
     sf = tmp_path / "sf"
     sf.mkdir()
-    shutil.copy(
-        "/root/testdata/sf0.001/embeddings.parquet",
-        sf / "embeddings.parquet",
-    )
+    shutil.copy(os.path.join(sf_dir, "embeddings.parquet"), sf / "embeddings.parquet")
     return str(sf)
 
 
@@ -28,10 +25,10 @@ def _markers_ok(path: str) -> bool:
     )
 
 
-def test_ivf_index_build_once_then_reuse(spark, tmp_path):
+def test_ivf_index_build_once_then_reuse(spark, sf_dir, tmp_path):
     """Same corpus -> same key -> the second ensure reuses the stored
     index without rebuilding (the _SUCCESS marker is untouched)."""
-    sf = _copy_corpus(tmp_path)
+    sf = _copy_corpus(tmp_path, sf_dir)
     p1 = round9a._ensure_index(spark, sf)
     assert _markers_ok(p1)
     marker = os.path.join(p1, "postings.parquet", "_SUCCESS")
@@ -41,14 +38,14 @@ def test_ivf_index_build_once_then_reuse(spark, tmp_path):
     shutil.rmtree(p1, ignore_errors=True)
 
 
-def test_ivf_index_rekeys_and_rebuilds_on_corpus_mutation(spark, tmp_path):
+def test_ivf_index_rekeys_and_rebuilds_on_corpus_mutation(spark, sf_dir, tmp_path):
     """Mutate ONE vector in the embeddings table: the fingerprint must
     re-key the index path and the next ensure must build a fresh index
     there — a mutated corpus can never be served from the stale index
     (ADVICE r9: the old key was (sf_dir, contract) only)."""
     import pyarrow.parquet as pq
 
-    sf = _copy_corpus(tmp_path)
+    sf = _copy_corpus(tmp_path, sf_dir)
     p1 = round9a._ensure_index(spark, sf)
     assert _markers_ok(p1)
 
@@ -69,12 +66,14 @@ def test_ivf_index_rekeys_and_rebuilds_on_corpus_mutation(spark, tmp_path):
     shutil.rmtree(p2, ignore_errors=True)
 
 
-def test_ivf_index_concurrent_publish_loser_discards(spark, tmp_path, monkeypatch):
+def test_ivf_index_concurrent_publish_loser_discards(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """If another process publishes the index between this builder's
     write and its rename, the rename fails (destination exists) and the
     loser must discard its scratch build and serve the winner's —
     overwrite-mode writes can never interleave into the served path."""
-    sf = _copy_corpus(tmp_path)
+    sf = _copy_corpus(tmp_path, sf_dir)
     path = round9a._index_path(sf)
     shutil.rmtree(path, ignore_errors=True)
 
@@ -105,7 +104,7 @@ def test_ivf_fingerprint_missing_corpus(tmp_path):
     assert round9a._corpus_fingerprint(str(tmp_path)) == "missing"
 
 
-def test_triangles_default_entry_point_is_capped(spark):
+def test_triangles_default_entry_point_is_capped(spark, sf_dir):
     """r9 verdict item 2: omitting the cap args must apply the bounded
     production form (both row_number cap windows present in the plan);
     the exact unbounded form requires explicit None for both. On the
@@ -115,7 +114,7 @@ def test_triangles_default_entry_point_is_capped(spark):
     from laposte_data_engineering_jedha_spark.operators import graphs
     from laposte_data_engineering_jedha_spark.queries import events_table
 
-    ev = events_table(spark, "/root/testdata/sf0.001")
+    ev = events_table(spark, sf_dir)
     # plan-shape assertions target the DISTRIBUTED branch (the r13 driver
     # fast path collapses small edge lists to a local relation, applying
     # max_out_deg in the driver mirror instead of a window)
@@ -288,13 +287,13 @@ def test_sessionize_stream_survives_null_event_times(spark, tmp_path):
     assert (1, 2) in got  # the two timestamped events, poison row dropped
 
 
-def test_triangles_tight_caps_undercount_never_overcount(spark):
+def test_triangles_tight_caps_undercount_never_overcount(spark, sf_dir):
     """Binding caps must only ever drop triangles (monotone undercount —
     the documented error contract)."""
     from laposte_data_engineering_jedha_spark.operators import graphs
     from laposte_data_engineering_jedha_spark.queries import events_table
 
-    ev = events_table(spark, "/root/testdata/sf0.001")
+    ev = events_table(spark, sf_dir)
     exact = graphs.co_activity_triangles(
         ev, min_w=2, bucket_cap=None, max_out_deg=None
     ).collect()[0]
