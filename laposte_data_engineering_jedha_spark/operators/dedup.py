@@ -33,8 +33,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from ..functions import texts, vectors
 from ..functions.vectors import _ltr_dot
 from ..session import local_table
-from . import caches
-from .graphs import DRIVER_MAX_EDGES
+from . import caches, graphs
 
 
 def _ltr_sq(m):
@@ -608,7 +607,6 @@ def embedding_dup_pairs_lsh(
     bands: int = 8,
     band_planes: int = 4,
     persist_src: bool = False,
-    carry_vectors: bool | None = None,
     persist_banded: bool | None = None,
 ) -> DataFrame:
     """Embedding cosine near-dup pairs via banded hyperplane LSH — the
@@ -617,8 +615,8 @@ def embedding_dup_pairs_lsh(
     Per-row banded bucket ids are map-side Arrow-kernel compute
     (`vectors.pd_lsh_buckets_banded`); the candidate stage is a
     self-equi-join keyed on (band, bucket). TWO verify plans, gated by
-    expected bucket occupancy (`carry_vectors=None` reads Catalyst's
-    size estimate — no action; pass True/False to force):
+    expected bucket occupancy (Catalyst's size estimate over
+    2**band_planes buckets against CARRY_MAX_OCCUPANCY — no action):
 
     - CARRIED-VECTOR (occupancy <= CARRY_MAX_OCCUPANCY, the
       auto_band_planes regime): the banded join carries (vector, norm)
@@ -687,13 +685,12 @@ def embedding_dup_pairs_lsh(
     input_small = persist_banded
     if persist_src:
         src = caches.track(src.persist())
-    if carry_vectors is None:
-        # stats-only gate (no action): unknown estimates take the narrow
-        # form — it is the conservative pre-round-11 plan
-        est = caches.estimated_rows(src, row_bytes=4 * dim + 48)
-        carry_vectors = (
-            est is not None and est / (1 << band_planes) <= CARRY_MAX_OCCUPANCY
-        )
+    # stats-only gate (no action): unknown estimates take the narrow
+    # form — it is the conservative pre-round-11 plan
+    est = caches.estimated_rows(src, row_bytes=4 * dim + 48)
+    carry_vectors = (
+        est is not None and est / (1 << band_planes) <= CARRY_MAX_OCCUPANCY
+    )
     cos = vectors.pd_dot("va", "vb") / (F.col("na") * F.col("nb"))
     if carry_vectors:
         banded = src.select(
@@ -962,7 +959,6 @@ def connected_components(
     id_b: str = "id_b",
     max_iter: int = 25,
     jump_after: int = 3,
-    driver_max_edges: int = DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """Connected components over near-dup pairs: (node, component) where
     component = the minimum node id in the node's component — the cluster
@@ -1000,10 +996,11 @@ def connected_components(
     rev = pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v"))
     edges = fwd.unionByName(rev).distinct().localCheckpoint(eager=False)
     # Post-threshold near-dup graphs are tiny relative to the corpus; when
-    # the materialized edge set fits the driver bound, one union-find pass
-    # replaces O(log diameter) join+checkpoint rounds (each a full driver
-    # round-trip + shuffle). The count reads the just-checkpointed RDD.
-    if driver_max_edges and edges.count() <= driver_max_edges:
+    # the materialized edge set fits the driver bound
+    # (graphs.DRIVER_MAX_EDGES), one union-find pass replaces O(log
+    # diameter) join+checkpoint rounds (each a full driver round-trip +
+    # shuffle). The count reads the just-checkpointed RDD.
+    if edges.count() <= graphs.DRIVER_MAX_EDGES:
         return _driver_union_find(edges)
     labels = edges.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("component")

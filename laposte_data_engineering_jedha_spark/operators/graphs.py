@@ -64,8 +64,9 @@ DEFAULT_MAX_OUT_DEG = 64
 #: co-activity graphs are sparse relative to the corpus (the sf0.1
 #: semantic graph is 218 pairs out of 5.5k vectors), so the gate routes
 #: by MEASURED edge count, never by configuration, like a broadcast-join
-#: side; bigger graphs take the unchanged distributed loops. Each
-#: operator's `driver_max_edges=0` forces the distributed branch.
+#: side; bigger graphs take the unchanged distributed loops. Every
+#: operator reads this constant at call time and nothing else picks the
+#: branch: setting it to -1 forces the distributed branch everywhere.
 DRIVER_MAX_EDGES = 1 << 17
 
 
@@ -110,7 +111,6 @@ def co_activity_triangles(
     min_w: int,
     bucket_cap: int | None = DEFAULT_BUCKET_CAP,
     max_out_deg: int | None = DEFAULT_MAX_OUT_DEG,
-    driver_max_edges: int = DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """Triangle count of the user co-activity graph (edge = two users
     sharing >= min_w distinct (hour, event-type) buckets) via the
@@ -139,21 +139,19 @@ def co_activity_triangles(
         .agg(F.count(F.lit(1)).alias("w"))
     )
     edges = co.where(F.col("w") >= min_w).select("x", "y")
-    if driver_max_edges:
-        # materialize the thresholded edge list once: the driver gate reads
-        # its count, and if the graph stays distributed all four downstream
-        # references (degree union, orientation join, n_edges aggregate)
-        # share the checkpointed RDD instead of re-running the bucket
-        # self-join. (driver_max_edges=0 keeps the fully-lazy legacy plan —
-        # the plan-shape tests inspect it.)
-        edges = edges.localCheckpoint(eager=False)
-        if edges.count() <= driver_max_edges:
-            e, n, t = _driver_triangles(
-                [(row[0], row[1]) for row in edges.collect()], max_out_deg
-            )
-            return local_table(
-                ev.sparkSession, [(e, n, t)], "n_edges long, n_nodes long, n_triangles long"
-            )
+    # materialize the thresholded edge list once: the driver gate reads
+    # its count, and if the graph stays distributed all four downstream
+    # references (degree union, orientation join, n_edges aggregate)
+    # share the checkpointed RDD instead of re-running the bucket
+    # self-join
+    edges = edges.localCheckpoint(eager=False)
+    if edges.count() <= DRIVER_MAX_EDGES:
+        e, n, t = _driver_triangles(
+            [(row[0], row[1]) for row in edges.collect()], max_out_deg
+        )
+        return local_table(
+            ev.sparkSession, [(e, n, t)], "n_edges long, n_nodes long, n_triangles long"
+        )
     deg = (
         edges.select(F.col("x").alias("u"))
         .unionAll(edges.select(F.col("y").alias("u")))
@@ -270,7 +268,6 @@ def kcore_peel(
     edges: DataFrame,
     k: int,
     rounds: int | None = None,
-    driver_max_edges: int = DRIVER_MAX_EDGES,
 ) -> list[tuple[int, int, int]]:
     """Iterative k-core PEELING over an undirected edge list (u, v):
     each round drops every node with degree < k and every edge touching
@@ -295,7 +292,7 @@ def kcore_peel(
     # collect + pure-Python peel replaces 3 driver-round-trip jobs per
     # round (semi-joins + two counts) — the CC driver-union-find precedent
     ed = edges.select("u", "v").localCheckpoint(eager=False)
-    if driver_max_edges and ed.count() <= driver_max_edges:
+    if ed.count() <= DRIVER_MAX_EDGES:
         return _driver_kcore_peel(
             [(row[0], row[1]) for row in ed.collect()], k, rounds
         )

@@ -6,11 +6,13 @@ Arrow-batched Python over `mapInPandas`, so bytes move driver-free from
 parquet scan to Python in columnar batches and the stage parallelizes by
 input partition.
 
-The actual codec step is STUBBED (no image/audio libs in this container):
-`decode_stub` raises NotImplementedError for real decoding and instead
-emits a deterministic md5-derived feature vector, so the Spark-side
-plumbing — schema, batch iteration, partition-parallelism, output shape —
-is fully real and oracle-checkable (md5 is reproducible in SQL).
+The codec step is a stand-in (no image/audio libraries are a
+dependency): each payload yields a deterministic md5-derived feature
+vector, so the Spark-side plumbing — schema, batch iteration,
+partition-parallelism, output shape — is fully real and oracle-checkable
+(md5 is reproducible in SQL). A real decoder (PIL for images,
+soundfile/librosa for audio, pyav for video keyframes) slots in where
+`_fake_features` and the frame chunking run.
 """
 
 from __future__ import annotations
@@ -87,16 +89,6 @@ def media_table(docs: DataFrame) -> DataFrame:
     )
 
 
-def _decode_real(payload: bytes, media_type: str):  # pragma: no cover - stub
-    """REAL decode hook — intentionally unimplemented in this container.
-
-    Production wiring: image -> PIL.Image.open(io.BytesIO(payload)),
-    audio -> soundfile/librosa frame decode, video -> pyav keyframe sample;
-    each returns a numpy array the feature extractor consumes.
-    """
-    raise NotImplementedError("media codecs are not available in this environment")
-
-
 def _fake_features(payload: bytes) -> tuple[int, list[float]]:
     """Deterministic stand-in features: 32-bit md5 prefix ints scaled to
     [0,1) by 2^-32 (exact in double, so the SQL oracle reproduces them)."""
@@ -106,7 +98,7 @@ def _fake_features(payload: bytes) -> tuple[int, list[float]]:
     return content_hash, feats
 
 
-def extract_features(media: DataFrame, use_real_codecs: bool = False) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary payload column.
 
     mapInPandas: each input partition arrives as an iterator of Arrow-backed
@@ -122,8 +114,6 @@ def extract_features(media: DataFrame, use_real_codecs: bool = False) -> DataFra
                 pdf["doc_id"], pdf["media_type"], pdf["payload"], pdf["meta"]
             ):
                 data = bytes(payload)
-                if use_real_codecs:
-                    _decode_real(data, media_type)  # raises: stub boundary
                 content_hash, feats = _fake_features(data)
                 rows.append(
                     (int(doc_id), media_type, int(meta["n_bytes"]), content_hash, feats)
@@ -135,17 +125,16 @@ def extract_features(media: DataFrame, use_real_codecs: bool = False) -> DataFra
     return media.mapInPandas(run, schema=FEATURES_SCHEMA)
 
 
-def sample_frames(media: DataFrame, use_real_codecs: bool = False) -> DataFrame:
+def sample_frames(media: DataFrame) -> DataFrame:
     """Frame sampling — the 1 -> N multimodal batch shape: each payload
     expands to up to MAX_FRAMES fixed-size "frames" (the keyframe-sample /
-    audio-window pattern). Real video decode is behind the same stub
-    boundary as extract_features; the fake deterministically chunks the
-    payload bytes so the output is oracle-reproducible (md5 per chunk).
+    audio-window pattern). Like extract_features it stands in for a real
+    decode: it deterministically chunks the payload bytes so the output
+    is oracle-reproducible (md5 per chunk).
 
     Output rows-per-input varies, which is exactly what mapInPandas allows
     and column-count-preserving UDFs don't.
     """
-    import hashlib
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -154,8 +143,6 @@ def sample_frames(media: DataFrame, use_real_codecs: bool = False) -> DataFrame:
                 pdf["doc_id"], pdf["media_type"], pdf["payload"]
             ):
                 data = bytes(payload)
-                if use_real_codecs:
-                    _decode_real(data, media_type)  # raises: stub boundary
                 n = min(MAX_FRAMES, (len(data) + FRAME_SIZE - 1) // FRAME_SIZE)
                 for i in range(n):
                     chunk = data[i * FRAME_SIZE : (i + 1) * FRAME_SIZE]

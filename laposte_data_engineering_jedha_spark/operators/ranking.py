@@ -26,17 +26,18 @@ HYBRID GATE (r9 verdict item 3): the two-pass machinery costs a real
 fixed ~0.9 s/call (bound sampling pass + the offsets action,
 interleaved A/B at sf0.1) vs ~0.34 s for the single-partition window —
 the right trade only when the single sort task would actually be fat.
-The default `strategy="auto"` gates in two stages: (1) the size gate
-of operators/caches.py, its one home (`caches.is_small`: Catalyst's
-size ESTIMATE against the gate threshold, no action) — estimated-big
-inputs take the offsets form without the gate ever touching the data
-(the only acceptable behavior at 100 TB); (2) otherwise persist +
-count once — the count fills the cache, so the chosen branch reads it
-instead of recomputing upstream — and pick the window form at or below
-`WINDOW_MAX_ROWS` rows. Both forms are bit-identical by contract, so
-the gate is a pure plan choice. Pass `strategy="offsets"` /
-`strategy="window"` to force a form (tests, or callers that already
-know the grain).
+Every operator gates in two stages: (1) the size gate of
+operators/caches.py, its one home (`caches.is_small`: Catalyst's size
+ESTIMATE against `caches.GATE_MAX_EST_BYTES`, no action) —
+estimated-big inputs take the offsets form without the gate ever
+touching the data (the only acceptable behavior at 100 TB); (2)
+otherwise persist + count once — the count fills the cache, so the
+chosen branch reads it instead of recomputing upstream — and pick the
+window form at or below `WINDOW_MAX_ROWS` rows. Both forms are
+bit-identical by contract, so the gate is a pure plan choice, and the
+two thresholds are its only switches: both are read at call time, so
+setting `caches.GATE_MAX_EST_BYTES = -1` forces the offsets form with
+no action, and `WINDOW_MAX_ROWS = 0` forces it after the count.
 
 For per-row FEATURE generation where exact tile boundaries don't matter,
 `percentile_bands` trades exactness for a zero-extra-shuffle plan: it
@@ -83,7 +84,7 @@ def _auto_pick(df: DataFrame) -> tuple[str, DataFrame, int | None]:
     the count fills the cache, so the window branch reads it instead of
     recomputing the upstream (measured: the naive count-then-window
     paid 2x upstream and made cheap single-call shapes SLOWER than the
-    offsets form they replaced). Returns (strategy, input, total|None);
+    offsets form they replaced). Returns (form, input, total|None);
     the persist is tracked (eviction costs a recompute only — no
     driver-side constants depend on it)."""
     if not caches.is_small(df):
@@ -95,15 +96,6 @@ def _auto_pick(df: DataFrame) -> tuple[str, DataFrame, int | None]:
         cached,
         total,
     )
-
-
-def _pick(df: DataFrame, strategy: str) -> tuple[str, DataFrame, int | None]:
-    """Validate `strategy` and resolve "auto" through `_auto_pick`."""
-    if strategy == "auto":
-        return _auto_pick(df)
-    if strategy not in ("window", "offsets"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    return strategy, df, None
 
 
 def _column(df: DataFrame, jexpr) -> Column:
@@ -240,20 +232,17 @@ def global_ranks(
     *order_cols: Column | str,
     rank_col: str = "rank",
     n_partitions: int | None = None,
-    strategy: str = "auto",
 ) -> tuple[DataFrame, int]:
     """Exact dense 1-based global row_number over `order_cols` without a
     fat single-partition sort at scale. Returns (df + rank_col,
     total_rows). Ordering must be deterministic (include a unique
     tie-breaker column) for the ranks to be reproducible.
 
-    strategy: "auto" (default) counts the input and picks the window
-    form at <= WINDOW_MAX_ROWS rows, else bucket-offset; "window" /
-    "offsets" force a form. Both forms are bit-identical."""
-    strategy, df, total = _pick(df, strategy)
-    if strategy == "window":
-        if total is None:
-            total = df.count()
+    The gate (`_auto_pick`) picks the window form for inputs of at most
+    WINDOW_MAX_ROWS rows, else bucket-offset. Both forms are
+    bit-identical."""
+    form, df, total = _auto_pick(df)
+    if form == "window":
         if total == 0:
             return df.withColumn(rank_col, F.lit(None).cast("long")), 0
         w = Window.orderBy(*order_cols)
@@ -277,7 +266,6 @@ def exact_ntile(
     *order_cols: Column | str,
     band_col: str = "band",
     n_partitions: int | None = None,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Exact `ntile(n) OVER (ORDER BY order_cols)` at full parallelism:
     global rank via the gated ranking (see module docstring), then the
@@ -289,7 +277,6 @@ def exact_ntile(
         *order_cols,
         rank_col="__grank",
         n_partitions=n_partitions,
-        strategy=strategy,
     )
     if total == 0:
         return ranked.withColumn(band_col, F.lit(None).cast("long")).drop("__grank")
@@ -311,7 +298,6 @@ def global_prefix_sum(
     *order_cols: Column | str,
     out_col: str = "cum",
     n_partitions: int | None = None,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Exact running `sum(value) OVER (ORDER BY order_cols ROWS UNBOUNDED
     PRECEDING)` without a fat single-partition window at scale:
@@ -321,8 +307,8 @@ def global_prefix_sum(
     For DECIMAL and integer inputs the result is bit-identical to the
     global window (addition is exact and associative); for DOUBLE inputs
     the grouping of additions changes, so use only where the consumer
-    tolerates last-ulp differences. `strategy` gates the form exactly as
-    in `global_ranks`.
+    tolerates last-ulp differences. The form is gated exactly as in
+    `global_ranks`.
 
     NULL semantics match the global window (ADVICE r9): a row is NULL in
     out_col only when NO non-null value precedes it globally; a
@@ -335,8 +321,8 @@ def global_prefix_sum(
     sum_type = (
         df.select(F.sum(value_col).alias("__s")).schema["__s"].dataType.simpleString()
     )
-    strategy, df, total = _pick(df, strategy)
-    if strategy == "window":
+    form, df, total = _auto_pick(df)
+    if form == "window":
         w = Window.orderBy(*order_cols).rowsBetween(Window.unboundedPreceding, 0)
         return df.withColumn(out_col, F.sum(value_col).over(w).cast(sum_type))
     bucketed, w, _ = _offsets(
@@ -353,7 +339,7 @@ def global_prefix_sum(
         + F.coalesce(off, F.lit(0).cast(sum_type))
     )
     # cast: decimal addition re-widens precision by 1; pin the output to
-    # the window form's sum type so both strategies agree exactly
+    # the window form's sum type so both forms agree exactly
     return bucketed.withColumn(out_col, running.cast(sum_type)).drop(_PID, _OFF)
 
 
@@ -364,7 +350,6 @@ def global_prefix_max(
     out_col: str = "runmax",
     inclusive: bool = True,
     n_partitions: int | None = None,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Exact running `max(value) OVER (ORDER BY order_cols ROWS UNBOUNDED
     PRECEDING [AND 1 PRECEDING])` without a fat single-partition window:
@@ -376,11 +361,11 @@ def global_prefix_max(
     which is the form dominance tests (Pareto frontiers, high-watermark
     breach detection) need. NULL semantics match the global window: max
     skips NULL values, so out_col is NULL only when no non-null value
-    precedes. `strategy` gates the form exactly as in `global_ranks`."""
+    precedes. The form is gated exactly as in `global_ranks`."""
     val_type = df.schema[value_col].dataType.simpleString()
     hi = 0 if inclusive else -1
-    strategy, df, total = _pick(df, strategy)
-    if strategy == "window":
+    form, df, total = _auto_pick(df)
+    if form == "window":
         w = Window.orderBy(*order_cols).rowsBetween(Window.unboundedPreceding, hi)
         return df.withColumn(out_col, F.max(value_col).over(w))
     bucketed, w, _ = _offsets(

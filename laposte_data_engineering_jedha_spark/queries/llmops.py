@@ -348,7 +348,7 @@ def _sql_band_key(e: str, band_planes: int = _EMB_BAND_PLANES) -> str:
     )
 
 
-# strategy="auto" gate (VERDICT r12 item 2): above this corpus size the
+# scale gate (VERDICT r12 item 2): above this corpus size the
 # fixture-pinned 4-plane banding is no longer the plan a production run
 # should execute (constant bucket count -> candidate mass ~n^2/2^planes,
 # measured exponent 1.32-1.72 across rounds); the query switches to
@@ -363,16 +363,13 @@ def _sql_band_key(e: str, band_planes: int = _EMB_BAND_PLANES) -> str:
 _EMB_PINNED_MAX_N = 5_000
 
 
-def _emb_cosine_sql(force_scaled: bool = False) -> str:
-    """The dedup_embedding_cosine DuckDB twin. `force_scaled` replaces
-    the count(*) CASE with the unconditional auto-banding formula — the
-    branch-parity test's twin for strategy="scaled" at fixture sizes
-    the gate would otherwise leave pinned."""
+def _emb_cosine_sql() -> str:
+    """The dedup_embedding_cosine DuckDB twin. The count(*) CASE reads
+    _EMB_PINNED_MAX_N when the text is built, so a twin built under a
+    patched threshold mirrors the query's branch under the same patch."""
     scaled = "GREATEST(4, CAST(ceil(log2(count(*) / 64.0)) AS BIGINT))"
     np_expr = (
-        scaled
-        if force_scaled
-        else f"CASE WHEN count(*) > {_EMB_PINNED_MAX_N} THEN {scaled} "
+        f"CASE WHEN count(*) > {_EMB_PINNED_MAX_N} THEN {scaled} "
         f"ELSE {_EMB_BAND_PLANES} END"
     )
     return f"""
@@ -394,9 +391,7 @@ WHERE cosine >= CAST(0.4 AS DOUBLE)"""
 
 
 @query("dedup_embedding_cosine", _emb_cosine_sql())
-def dedup_embedding_cosine(
-    spark: SparkSession, sf_dir: str, strategy: str = "auto"
-) -> DataFrame:
+def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding cosine near-dup pairs via banded hyperplane LSH — the
     scale path (no driver collect; candidates from a (band, bucket)
     equi-join, exact cosine verify). The oracle regenerates the identical
@@ -404,25 +399,20 @@ def dedup_embedding_cosine(
     both hash-checked. Exact-recall block-NL baseline:
     dedup.embedding_dup_pairs (sub-driver-memory corpora only).
 
-    SCALE GATE (r12 verdict item 2): with the default `strategy="auto"`,
-    a corpus above _EMB_PINNED_MAX_N vectors takes
-    auto_band_planes(count(*)) instead of the fixture-pinned
-    {_EMB_BAND_PLANES} planes (the production banding,
+    SCALE GATE (r12 verdict item 2): a corpus above _EMB_PINNED_MAX_N
+    vectors takes auto_band_planes(count(*)) instead of the
+    fixture-pinned {_EMB_BAND_PLANES} planes (the production banding,
     dedup_embedding_cosine_auto's configuration — exponent 0.417 vs 1.32
     pinned). The SQL twin computes the SAME CASE from the same count(*),
     so the two engines can never disagree about the branch and the
-    oracle is exact on both. strategy="pinned" forces the fixed
-    {_EMB_BAND_PLANES}-plane fixture banding (the regression row);
-    strategy="scaled" forces auto-banding at any size (the
-    branch-parity test does)."""
-    if strategy not in ("auto", "pinned", "scaled"):
-        raise ValueError(f"unknown strategy {strategy!r}")
+    oracle is exact on both. The threshold, read at call time, is the
+    only switch: the branch-parity test lowers it to reach auto-banding
+    at fixture sizes."""
     emb = table(spark, sf_dir, "embeddings")
     planes = _EMB_BAND_PLANES
-    if strategy != "pinned":
-        n = table_rowcount(spark, sf_dir, "embeddings")
-        if strategy == "scaled" or n > _EMB_PINNED_MAX_N:
-            planes = dedup.auto_band_planes(n)
+    n = table_rowcount(spark, sf_dir, "embeddings")
+    if n > _EMB_PINNED_MAX_N:
+        planes = dedup.auto_band_planes(n)
     return dedup.embedding_dup_pairs_lsh(
         emb,
         threshold=0.4,

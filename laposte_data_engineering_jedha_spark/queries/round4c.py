@@ -615,7 +615,7 @@ def multimodal_dedup_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TRI_MIN_W = 5  # co-activity support threshold: >= 5 shared (hour, type) buckets
 
-# strategy="auto" gate (VERDICT r12 item 2): above this many input events
+# scale gate (VERDICT r12 item 2): above this many input events
 # the exact all-pairs bucket join is no longer the plan a 100 TB run
 # should execute — the query takes the deterministically capped
 # co_activity_triangles plan (generous production caps) automatically.
@@ -662,9 +662,7 @@ SELECT (SELECT count(*) FROM edges) AS n_edges,
        n_triangles
 FROM tri""",
 )
-def events_user_triangles(
-    spark: SparkSession, sf_dir: str, strategy: str = "auto"
-) -> DataFrame:
+def events_user_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle count of the user co-activity graph (edge = two users
     sharing >= {_TRI_MIN_W} distinct (hour, event-type) buckets) via the
     DEGREE-ORDERED wedge join — the classic distributed triangle
@@ -684,33 +682,23 @@ def events_user_triangles(
     counts are integers; one three-scalar output row assembled from
     one-row broadcast aggregates.
 
-    SCALE GATE (r12 verdict item 2 — the ranking-family strategy="auto"
+    SCALE GATE (r12 verdict item 2 — the ranking-family size-gate
     pattern): the exact form's bucket self-join volume is
     sum-of-squared bucket occupancy and wedge volume is out-degree^2
-    (measured sf0.1→sf1 exponent 1.40-1.53 across rounds), so with the
-    default `strategy="auto"` the query counts the events input (one
-    metadata-backed parquet count) and, above _TRI_EXACT_MAX_EVENTS,
-    executes the deterministically capped co_activity_triangles plan
-    instead (generous production caps bucket_cap=128 / max_out_deg=64,
-    (md5,id)-ordered — undercounts only, O(edges) at any scale; the
-    tighter-capped twin is registered as events_user_triangles_capped,
-    exponent 0.41 at the third decade). The oracle scales (1k / 10k
-    events) stay on the exact branch, so the hash rows remain exact
-    evidence; pass strategy="exact" for the unbounded count at any
-    size, strategy="capped" to force the gated plan (the branch-parity
-    test does)."""
-    if strategy not in ("auto", "exact", "capped"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    ev = events_table(spark, sf_dir)
-    if strategy == "auto":
-        strategy = (
-            "capped"
-            if table_rowcount(spark, sf_dir, "events") > _TRI_EXACT_MAX_EVENTS
-            else "exact"
-        )
+    (measured sf0.1→sf1 exponent 1.40-1.53 across rounds), so the query
+    counts the events input (one metadata-backed parquet count) and,
+    above _TRI_EXACT_MAX_EVENTS, executes the deterministically capped
+    co_activity_triangles plan instead (generous production caps
+    bucket_cap=128 / max_out_deg=64, (md5,id)-ordered — undercounts
+    only, O(edges) at any scale; the tighter-capped twin is registered
+    as events_user_triangles_capped, exponent 0.41 at the third decade).
+    The oracle scales (1k / 10k events) stay on the exact branch, so the
+    hash rows remain exact evidence; the threshold, read at call time,
+    is the only switch (the branch-parity test sets it to -1)."""
     from ..operators import graphs
 
-    if strategy == "capped":
+    ev = events_table(spark, sf_dir)
+    if table_rowcount(spark, sf_dir, "events") > _TRI_EXACT_MAX_EVENTS:
         return graphs.co_activity_triangles(ev, min_w=_TRI_MIN_W)
     # the exact form IS the operator with both caps disabled (the former
     # inline copy of the same stages was removed in the r13 optimization

@@ -394,7 +394,7 @@ def events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LP_CELL_CAP = 64  # md5-head representatives per (type, cell) bucket
 
-# strategy-auto cap tightening (VERDICT r12 item 2): the 64-rep cap only
+# scale-gated cap tightening (VERDICT r12 item 2): the 64-rep cap only
 # BINDS above ~64 users/cell (sf1 has ~270), so the sf0.1→sf1 decade sat
 # in the quadratic transition regime (measured exponent 1.40 — members x
 # cap only bounds pair volume once the cap binds). Above this many
@@ -466,12 +466,7 @@ SELECT node AS user_id, lbl AS community FROM l2"""
 
 
 @query("graph_label_prop_communities", _LP_SQL)
-def graph_label_prop_communities(
-    spark: SparkSession,
-    sf_dir: str,
-    max_cell_members: int | None | str = "auto",
-    driver_max_edges: int = graphs.DRIVER_MAX_EDGES,
-) -> DataFrame:
+def graph_label_prop_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection via synchronous label propagation (2 unrolled
     rounds) over the co-presence graph: users are linked when they have
     events of the SAME TYPE in the same hour cell, edge weight = number
@@ -487,13 +482,13 @@ def graph_label_prop_communities(
     all partitioned by node. Rounds unroll statically (2 here) exactly
     like graph_bfs_reach unrolls its frontier.
 
-    `max_cell_members` is the hot-cell knob — since round 8 the
-    REGISTERED default is the capped path (_LP_CELL_CAP = 64, mirrored
-    exactly in the DuckDB twin's `bh` CTE; fixture cells never reach the
-    cap, so the hash row is unchanged): the r8 sf1 sweep OOM'd the exact
-    formulation's pair aggregation at 1M events (~270 users/cell x 3.7k
-    cells -> 135M pairs partial-aggregated inside AQE-coalesced join
-    tasks). With the cap, every bucket member STAR-JOINS the md5-head
+    The per-cell representative cap is the hot-cell bound — since round
+    8 the query always takes the capped path (_LP_CELL_CAP = 64,
+    mirrored exactly in the DuckDB twin's `bh` CTE; fixture cells never
+    reach the cap, so the hash row is unchanged): the r8 sf1 sweep OOM'd
+    the exact formulation's pair aggregation at 1M events (~270
+    users/cell x 3.7k cells -> 135M pairs partial-aggregated inside
+    AQE-coalesced join tasks). With the cap, every bucket member STAR-JOINS the md5-head
     representatives only (the connectivity-preserving capped join shape
     shared with hamming_band_pairs since the round-5 fix), bounding
     pairs per bucket at members x cap while every member keeps edges
@@ -502,79 +497,62 @@ def graph_label_prop_communities(
     as ONE post-shuffle aggregate on size-balanced partitions instead of
     a map-side hash partial on the join's fan-out (the actual OOM site —
     AQE coalesces by INPUT size and a fan-out join breaks that
-    estimate). Pass None for the exact all-pairs variant.
+    estimate). A cap above every cell's occupancy gives exactly the
+    all-pairs edges: each pair is emitted once per shared cell.
 
-    Since round 13 the default is `max_cell_members="auto"` (VERDICT
-    r12 item 2): one metadata-backed count of the events input picks
-    _LP_CELL_CAP_BIG above _LP_EXACT_MAX_EVENTS rows, else
-    _LP_CELL_CAP. The 64-cap only BINDS above ~64 users/cell, so the
-    sf0.1→sf1 decade sat in the quadratic transition regime (exponent
-    1.40); the 16-cap already binds at sf0.1 occupancy, making pair
-    volume ~linear across the decade. The SQL twin computes the SAME
+    Since round 13 the cap is size-gated (VERDICT r12 item 2): one
+    metadata-backed count of the events input picks _LP_CELL_CAP_BIG
+    above _LP_EXACT_MAX_EVENTS rows, else _LP_CELL_CAP. The 64-cap
+    only BINDS above ~64 users/cell, so the sf0.1→sf1 decade sat in the
+    quadratic transition regime (exponent 1.40); the 16-cap already
+    binds at sf0.1 occupancy, making pair volume ~linear across the
+    decade. The SQL twin computes the SAME
     CASE from count(*) (see _LP_SQL_CAP), so both engines always pick
     the same branch and the oracle stays exact at any scale."""
     ev = events_table(spark, sf_dir)
     n_events = table_rowcount(spark, sf_dir, "events")  # footer metadata, no job
-    if max_cell_members == "auto":
-        max_cell_members = (
-            _LP_CELL_CAP_BIG if n_events > _LP_EXACT_MAX_EVENTS else _LP_CELL_CAP
-        )
+    cap = _LP_CELL_CAP_BIG if n_events > _LP_EXACT_MAX_EVENTS else _LP_CELL_CAP
     cell = F.floor(F.unix_timestamp("ts") / 3600).cast("long")
     sess = ev.select("user_id", "event_type", cell.alias("cell")).distinct()
-    a, b = sess.alias("a"), sess.alias("b")
-    join_cond = (F.col("a.cell") == F.col("b.cell")) & (
-        F.col("a.event_type") == F.col("b.event_type")
+    # star-to-representatives with normalized pairs, emitted EXACTLY ONCE
+    # per (pair, bucket) — r13 optimization (guide §1.2/§2.4): only
+    # rep-rep pairs produce both join orientations (the b side holds
+    # representatives only, so a non-rep member can never appear as `a`
+    # against itself reversed), and keeping the a-side's bucket rank lets
+    # the predicate `a < b OR a is non-rep` keep exactly one orientation —
+    # the dropDuplicates pass over the 4-column fan-out (its own exchange
+    # + dedup aggregate over the join's full output, the measured cost
+    # center) disappears, and w = count(*) still counts SHARED BUCKETS.
+    # Both join sides read the same ranked-window subtree, whose
+    # (event_type, cell) output partitioning is exactly the join
+    # distribution — no exchange at the join. The fan-out is explicitly
+    # repartitioned on the (u, v) aggregate key: the join's output is a
+    # fan-out whose size AQE under-estimates from its inputs, and the
+    # plain exchange streams shuffle blocks (no map-side hash state on
+    # the fan-out — the r8 OOM fix) before one post-shuffle aggregate.
+    cap_w = Window.partitionBy("event_type", "cell").orderBy(
+        F.md5(F.col("user_id").cast("string")), F.col("user_id")
     )
-    if max_cell_members is None:
-        # explicit repartition on the aggregate key: the join's output is
-        # a fan-out whose size AQE under-estimates from its inputs; the
-        # plain exchange streams shuffle blocks (no map-side hash state)
-        # and the count then runs as one post-shuffle aggregate
-        raw = (
-            a.join(b, join_cond & (F.col("a.user_id") < F.col("b.user_id")))
-            .select(F.col("a.user_id").alias("u"), F.col("b.user_id").alias("v"))
-            .repartition("u", "v")
+    ranked = sess.withColumn("_r", F.row_number().over(cap_w))
+    a = ranked.alias("a")
+    b = ranked.where(F.col("_r") <= cap).drop("_r").alias("b")
+    raw = (
+        a.join(
+            b,
+            (F.col("a.cell") == F.col("b.cell"))
+            & (F.col("a.event_type") == F.col("b.event_type"))
+            & (F.col("a.user_id") != F.col("b.user_id"))
+            & (
+                (F.col("a.user_id") < F.col("b.user_id"))
+                | (F.col("a._r") > cap)
+            ),
         )
-    else:
-        # star-to-representatives with normalized pairs, emitted
-        # EXACTLY ONCE per (pair, bucket) — r13 optimization (guide
-        # §1.2/§2.4): only rep-rep pairs produce both join orientations
-        # (the b side holds representatives only, so a non-rep member
-        # can never appear as `a` against itself reversed), and keeping
-        # the a-side's bucket rank lets the predicate
-        # `a < b OR a is non-rep` keep exactly one orientation — the
-        # dropDuplicates pass over the 4-column fan-out (its own
-        # exchange + dedup aggregate over the join's full output, the
-        # measured cost center) disappears, and w = count(*) still
-        # counts SHARED BUCKETS. Both join sides now read the same
-        # ranked-window subtree, whose (event_type, cell) output
-        # partitioning is exactly the join distribution — no exchange
-        # at the join. Same explicit fan-out repartition before the
-        # aggregate (plain exchange streams blocks; no map-side hash
-        # state on the fan-out — the r8 OOM fix), now on the final
-        # (u, v) key only.
-        cap_w = Window.partitionBy("event_type", "cell").orderBy(
-            F.md5(F.col("user_id").cast("string")), F.col("user_id")
+        .select(
+            F.least(F.col("a.user_id"), F.col("b.user_id")).alias("u"),
+            F.greatest(F.col("a.user_id"), F.col("b.user_id")).alias("v"),
         )
-        ranked = sess.withColumn("_r", F.row_number().over(cap_w))
-        a = ranked.alias("a")
-        b = ranked.where(F.col("_r") <= max_cell_members).drop("_r").alias("b")
-        raw = (
-            a.join(
-                b,
-                join_cond
-                & (F.col("a.user_id") != F.col("b.user_id"))
-                & (
-                    (F.col("a.user_id") < F.col("b.user_id"))
-                    | (F.col("a._r") > max_cell_members)
-                ),
-            )
-            .select(
-                F.least(F.col("a.user_id"), F.col("b.user_id")).alias("u"),
-                F.greatest(F.col("a.user_id"), F.col("b.user_id")).alias("v"),
-            )
-            .repartition("u", "v")
-        )
+        .repartition("u", "v")
+    )
     e0 = raw.groupBy("u", "v").agg(F.count(F.lit(1)).alias("w"))
     # materialize the unique-pair edge relation once: each LP round
     # references it, and without the checkpoint round 2's lineage re-runs
@@ -591,11 +569,11 @@ def graph_label_prop_communities(
     # round-trip at bench scale) collapse. graphs._driver_label_prop
     # mirrors the struct-max tie-break bit-for-bit (pinned by
     # tests/test_round13.py::test_label_prop_driver_and_distributed_paths_agree);
-    # larger graphs take the unchanged distributed loop by measured size.
+    # larger graphs take the unchanged distributed loop by measured size
+    # (graphs.DRIVER_MAX_EDGES, read at call time).
     if (
-        driver_max_edges
-        and n_events <= driver_max_edges
-        and e0.count() <= driver_max_edges
+        n_events <= graphs.DRIVER_MAX_EDGES
+        and e0.count() <= graphs.DRIVER_MAX_EDGES
     ):
         edge_rows = [(r["u"], r["v"], r["w"]) for r in e0.collect()]
         node_ids = [

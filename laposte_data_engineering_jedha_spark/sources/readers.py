@@ -66,10 +66,25 @@ class OrcReader(BaseReader):
         return spark.read.orc(self.path)
 
 
+def _arrow_table(pdf: pd.DataFrame):
+    """A driver-read pandas frame as one Arrow table typed from the pandas
+    dtypes. Zero rows tell no type for an object column (Arrow infers
+    null), so such columns become strings: an empty table still reads,
+    with its column names."""
+    import pyarrow as pa
+
+    table = pa.Table.from_pandas(pdf, preserve_index=False)
+    return table.cast(
+        pa.schema(
+            [f.with_type(pa.string()) if pa.types.is_null(f.type) else f for f in table.schema]
+        )
+    )
+
+
 class SqliteReader(BaseReader):
     """SQLite, fixed query `SELECT * FROM deliveries` (reference
-    sources/readers.py:45-50). Driver-side sqlite3 -> Arrow-backed
-    createDataFrame; on a cluster this becomes
+    sources/readers.py:45-50). Driver-side sqlite3 -> one Arrow table
+    -> createDataFrame; on a cluster this becomes
     `spark.read.format('jdbc').option('url', 'jdbc:sqlite:...')` with a
     partitioned read (no sqlite-jdbc jar in this sandbox)."""
 
@@ -78,7 +93,7 @@ class SqliteReader(BaseReader):
     def read(self, spark: SparkSession) -> DataFrame:
         with sqlite3.connect(self.path) as conn:
             pdf = pd.read_sql_query(f"SELECT * FROM {self.TABLE}", conn)
-        return spark.createDataFrame(pdf)
+        return spark.createDataFrame(_arrow_table(pdf))
 
 
 class XlsxReader(BaseReader):
@@ -97,7 +112,7 @@ class XlsxReader(BaseReader):
             from . import xlsx_codec
 
             pdf = xlsx_codec.read_xlsx_pandas(self.path)
-        return spark.createDataFrame(pdf)
+        return spark.createDataFrame(_arrow_table(pdf))
 
 
 READER_MAP: dict[str, type[BaseReader]] = {

@@ -16,12 +16,11 @@ loop. Here:
   reference does in a driver loop becomes a distributed plan
   (SURVEY.md §2.1 src_weather_flatten).
 
-Driver-side fan-out is fine at ≤31 distinct dates. The fetched
+The fetch fans out on a driver-side thread pool, which is right at the
+≤31 distinct dates a month of deliveries holds. The fetched
 (date, payload) pairs enter Spark through `session.local_table`, a JVM
 local relation, so the ≤744-row table the transform broadcasts never
-starts a Python worker. For a backfill over years of dates the same fetch
-runs from the executors: `fetch_weather_table_distributed` fans it out
-with `mapInPandas` over a dates DataFrame.
+starts a Python worker.
 """
 
 from __future__ import annotations
@@ -151,58 +150,8 @@ def flatten_weather(spark: SparkSession, payloads: list[tuple[str, str]]) -> Dat
 def fetch_weather_table(
     spark: SparkSession, deliveries: DataFrame, client, location: str = "Paris"
 ) -> DataFrame | None:
-    """distinct dates -> concurrent fetch -> native flatten.
-
-    Driver-side pool is right at <=31 distinct dates; use
-    `fetch_weather_table_distributed` for backfills over years of dates.
-    """
+    """distinct dates -> concurrent fetch on the driver pool -> native
+    flatten."""
     dates = distinct_pickup_dates(deliveries)
     return flatten_weather(spark, fetch_payloads(client, dates, location))
 
-
-def fetch_weather_table_distributed(
-    deliveries: DataFrame,
-    client,
-    location: str = "Paris",
-    fetch_partitions: int = 8,
-) -> DataFrame:
-    """Backfill-scale fetch: the distinct-dates DataFrame is repartitioned
-    and each partition fans out its HTTP calls from the EXECUTORS via
-    mapInPandas (the client object ships pickled in the closure). The HTTP
-    fan-out therefore scales with the cluster, not the driver, and the
-    flatten is the same native explode. Returns the hourly weather dim
-    (possibly empty — caller handles the all-null fallback).
-
-    `fetch_partitions` bounds concurrency against the API (rate limits), a
-    knob the driver pool expressed as max_workers.
-    """
-    import pandas as pd
-
-    dates_df = (
-        deliveries.select(F.to_date("Pickup_DateTime").alias("date"))
-        .where(F.col("date").isNotNull())
-        .distinct()
-        .repartition(fetch_partitions)
-    )
-
-    def fetch_batch(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["date"]:
-                iso = d.isoformat() if hasattr(d, "isoformat") else str(d)
-                iso = iso[:10]
-                payload = client.get_historical_weather(location, iso)
-                if payload and "forecast" in payload:
-                    rows.append((iso, json.dumps(payload)))
-            yield pd.DataFrame(rows, columns=["date", "payload"])
-
-    raw = dates_df.mapInPandas(fetch_batch, schema="date string, payload string")
-    parsed = raw.select("date", F.from_json("payload", FORECAST_SCHEMA).alias("p"))
-    hours = parsed.select(
-        "date", F.explode(F.col("p.forecast.forecastday")[0]["hour"]).alias("h")
-    )
-    return hours.select(
-        F.to_date("date").alias("date"),
-        F.hour(F.to_timestamp(F.col("h.time"), "yyyy-MM-dd HH:mm")).alias("Hour"),
-        F.col("h.condition.text").alias("Weather_Condition"),
-    )

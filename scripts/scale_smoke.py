@@ -970,13 +970,12 @@ def round6_scale(spark) -> None:
             "events_interval_overlap @10M events",
             round6.events_interval_overlap(spark, shim_dir),
         )
-        # label prop: the UNCAPPED edge build is quadratic in hot-cell
+        # label prop: an uncapped edge build is quadratic in hot-cell
         # membership by construction (this synthetic 100x peak puts every
         # replica's users in the same hour cells -> measured OOM); run the
-        # capped star-to-representatives variant at 20x (2M events,
-        # ~2.6k-member peak cells) — the max_cell_members knob is the
-        # documented hot-cell escape hatch, exact results stay the
-        # oracle-checked default on realistic bucket sizes.
+        # capped star-to-representatives build at 20x (2M events,
+        # ~2.6k-member peak cells), where the size gate picks the
+        # _LP_CELL_CAP_BIG representatives per cell.
         sub = spark.read.parquet(tmp).where(F.col("event_id") < 200_000_000 + 10_000_000 * 20)
         tmp20 = tmp + "_20"
         sub.write.mode("overwrite").parquet(tmp20)
@@ -985,8 +984,8 @@ def round6_scale(spark) -> None:
         if not os.path.exists(f"{shim20}/events.parquet"):
             os.symlink(tmp20, f"{shim20}/events.parquet")
         timed(
-            "label_prop (cap 8) @2M events",
-            round6.graph_label_prop_communities(spark, shim20, max_cell_members=8),
+            f"label_prop (cap {round6._LP_CELL_CAP_BIG}) @2M events",
+            round6.graph_label_prop_communities(spark, shim20),
         )
         timed(
             "events_session_revenue @10M events",

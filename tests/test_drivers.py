@@ -240,11 +240,20 @@ def test_benchmark_matrix_shape(spark, tmp_path, monkeypatch):
 def test_registry_is_name_sorted_and_oracle_required():
     """The driver contract orders the registry by query name (the external
     driver hash-checks the first 50), oracle_sql() has the same keys in the
-    same order, and no query registers without its oracle."""
+    same order, no query registers without its oracle, and every query
+    takes exactly the `(spark, sf_dir)` that QueryFn declares — a
+    per-call switch would be a branch the driver never runs."""
+    import inspect
+
     from laposte_data_engineering_jedha_spark import queries as q
 
     assert list(q.queries()) == sorted(q.SPARK_QUERIES)
     assert list(q.oracle_sql()) == list(q.queries())
+    assert {
+        name: list(inspect.signature(fn).parameters)
+        for name, fn in q.queries().items()
+        if list(inspect.signature(fn).parameters) != ["spark", "sf_dir"]
+    } == {}
     with pytest.raises(TypeError):
         q.query("x")
 

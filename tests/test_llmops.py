@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 import conftest
 from laposte_data_engineering_jedha_spark.functions import texts, vectors
-from laposte_data_engineering_jedha_spark.operators import dedup, similarity
+from laposte_data_engineering_jedha_spark.operators import dedup, graphs, similarity
 
 
 @pytest.fixture(scope="module")
@@ -274,9 +274,9 @@ def test_connected_components_long_chain_converges(spark):
     assert out.count() == 13
 
 
-def test_connected_components_driver_and_distributed_paths_agree(spark):
+def test_connected_components_driver_and_distributed_paths_agree(spark, monkeypatch):
     # r13 optimization: small edge sets take a driver union-find fast path
-    # (driver_max_edges gate); both paths must emit identical (node,
+    # (graphs.DRIVER_MAX_EDGES gate); both paths must emit identical (node,
     # component) sets on a graph mixing chains, a cycle, islands and
     # out-of-order ids — and the distributed loop stays covered by forcing
     # the gate off.
@@ -291,9 +291,10 @@ def test_connected_components_driver_and_distributed_paths_agree(spark):
         (r["node"], r["component"])
         for r in dedup.connected_components(pairs).collect()
     }
+    monkeypatch.setattr(graphs, "DRIVER_MAX_EDGES", -1)
     dist = {
         (r["node"], r["component"])
-        for r in dedup.connected_components(pairs, driver_max_edges=0).collect()
+        for r in dedup.connected_components(pairs).collect()
     }
     assert fast == dist
     assert {c for _, c in fast} == {200, 300, 900, 777}

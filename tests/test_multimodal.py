@@ -1,6 +1,6 @@
 """Multimodal plumbing tests: binary payload column, typed metadata struct,
-Arrow-batched mapInPandas feature extraction, and the stubbed codec
-boundary (real decode must raise, fake features must be deterministic)."""
+Arrow-batched mapInPandas feature extraction, and the stand-in codec
+(its md5-derived features and frames must be deterministic)."""
 
 from __future__ import annotations
 
@@ -43,11 +43,6 @@ def test_feature_extraction_matches_hashlib(spark, media):
         assert all(0.0 <= f < 1.0 for f in r["features"])
 
 
-def test_real_codec_path_is_stubbed(spark, media):
-    with pytest.raises(Exception, match="NotImplementedError|not available"):
-        multimodal.extract_features(media.limit(1), use_real_codecs=True).collect()
-
-
 def test_frame_sampling_chunks(spark, media):
     frames = multimodal.sample_frames(media)
     one = media.first()
@@ -62,11 +57,6 @@ def test_frame_sampling_chunks(spark, media):
         chunk = data[i * multimodal.FRAME_SIZE : (i + 1) * multimodal.FRAME_SIZE]
         expect.append((i, len(chunk), int(hashlib.md5(chunk).hexdigest()[:8], 16)))
     assert got == expect and len(got) >= 1
-
-
-def test_frame_sampling_real_codec_stubbed(spark, media):
-    with pytest.raises(Exception, match="NotImplementedError|not available"):
-        multimodal.sample_frames(media.limit(1), use_real_codecs=True).collect()
 
 
 def test_extraction_is_partition_parallel(spark, media):

@@ -512,27 +512,24 @@ def test_pinned_fold_twins_run_arrow_kernels(spark, sf_dir):
 
 @pytest.fixture(scope="module")
 def registry_dfs(spark, sf_dir):
-    """Every registered non-streaming query built ONCE (construction is the
-    expensive part for the eager-fit queries) and shared by the blanket
-    registry guardrails below. Streaming queries are excluded (calling them
-    runs the availableNow job; their sink-side plans are covered by
-    tests/test_streaming.py and their output schemas by the atomic-columns
-    test's explicit stream pass)."""
-    return {
-        name: fn(spark, sf_dir)
-        for name, fn in q.queries().items()
-        if not name.startswith("stream_")
-    }
+    """Every registered query built ONCE (construction is the expensive
+    part for the eager-fit queries, and building a streaming query runs
+    its availableNow job) and shared by the blanket registry guardrails
+    below."""
+    return {name: fn(spark, sf_dir) for name, fn in q.queries().items()}
 
 
 def test_no_registered_query_plans_a_cartesian_product(registry_dfs):
-    """Blanket scale guardrail: NO registered (non-streaming) query may
-    compile to a CartesianProduct — every cross join in the registry is a
-    broadcast of a contractually-tiny side (scalar totals, k-row centroid
-    tables), which AQE/planner must render as BroadcastNestedLoopJoin.
-    A CartesianProduct appearing anywhere means a scalar side silently
+    """Blanket scale guardrail: NO registered query may compile to a
+    CartesianProduct — every cross join in the registry is a broadcast
+    of a contractually-tiny side (scalar totals, k-row centroid tables),
+    which AQE/planner must render as BroadcastNestedLoopJoin. A
+    CartesianProduct appearing anywhere means a scalar side silently
     grew or lost its broadcast and would be a full N x M shuffle at
-    100 TB."""
+    100 TB. (The r12 sweep caught exactly one — embedding_cosine_histogram's
+    pair-level hash gate planned as a nested-loop cartesian — only after
+    it hit the 300 s watchdog at sf1; this lint fails the suite the day
+    such a plan is written instead.)"""
     offenders = []
     for name, df in registry_dfs.items():
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -553,23 +550,6 @@ def test_registry_returns_atomic_columns_only(registry_dfs):
 
     offenders = []
     for name, df in registry_dfs.items():
-        for field in df.schema.fields:
-            if isinstance(field.dataType, (ArrayType, MapType, StructType)):
-                offenders.append(f"{name}.{field.name}: {field.dataType.simpleString()}")
-    assert offenders == []
-
-
-def test_stream_registry_returns_atomic_columns_only(spark, sf_dir):
-    """Same driver-contract guardrail for the streaming queries (built
-    separately — constructing them runs the availableNow micro-batch
-    job, so they are kept out of the shared registry_dfs fixture)."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    offenders = []
-    for name, fn in q.queries().items():
-        if not name.startswith("stream_"):
-            continue
-        df = fn(spark, sf_dir)
         for field in df.schema.fields:
             if isinstance(field.dataType, (ArrayType, MapType, StructType)):
                 offenders.append(f"{name}.{field.name}: {field.dataType.simpleString()}")
@@ -618,30 +598,3 @@ def test_theta_sketch_windows_are_scope_partitioned(plans):
     specs = re.findall(r"windowspecdefinition\((\w+)#", p)
     assert specs and all(s == "scope" for s in specs), specs
     assert "SortMergeJoin" not in p
-
-
-def test_registry_has_no_cartesian_products(spark, sf_dir):
-    """Registry-wide plan lint (round 13): no registered query may plan a
-    CartesianProduct node — the r12 sweep caught exactly one
-    (embedding_cosine_histogram's pair-level hash gate planned as a
-    nested-loop cartesian) only AFTER it hit the 300 s watchdog at sf1;
-    this lint fails the suite the day such a plan is written instead.
-    BroadcastNestedLoopJoin is allowed: every registered use is a
-    crossJoin against a broadcast one-row aggregate (a constant-fold,
-    not a pair explosion). Uses the pre-AQE physical plan, so nothing is
-    executed beyond the driver-side work a query does at build time."""
-    from laposte_data_engineering_jedha_spark import queries as q
-    from laposte_data_engineering_jedha_spark.operators import caches
-
-    offenders = []
-    for name, fn in q.queries().items():
-        try:
-            plan = fn(spark, sf_dir)._jdf.queryExecution().sparkPlan().toString()
-        except Exception as exc:  # pragma: no cover - lint must name the query
-            offenders.append(f"{name}: plan build failed: {exc}")
-            continue
-        finally:
-            caches.release_all()
-        if "CartesianProduct" in plan:
-            offenders.append(f"{name}: CartesianProduct in physical plan")
-    assert not offenders, "\n".join(offenders)

@@ -2,9 +2,11 @@
 fat single-partition window at scale (r8 verdict weak items: the
 customer-grain ntile family and the doc-grain row_number were the
 registry's last fat-task shapes). The contract under test: bit-identical
-results to the global window at ANY partition count, under EITHER
-strategy of the round-10 row-count gate (r9 verdict item 3), including
-the NULL / narrow-int edge cases from ADVICE r9."""
+results to the global window at ANY partition count, under EITHER form
+the round-10 row-count gate (r9 verdict item 3) picks, including the
+NULL / narrow-int edge cases from ADVICE r9. The gate's thresholds are
+its only switches, so each test reaches a form by patching them
+(`_force`)."""
 
 from __future__ import annotations
 
@@ -14,6 +16,24 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from laposte_data_engineering_jedha_spark.operators import caches, ranking
+from laposte_data_engineering_jedha_spark.session import local_table
+
+#: the gate's three routes and the thresholds that force each one:
+#: "window" keeps the defaults, which persist + count a small input of
+#: known size and take the window form; "auto" persists + counts too but
+#: takes the offsets form because every count exceeds WINDOW_MAX_ROWS = 0;
+#: "offsets" rejects every size estimate, so it takes the offsets form
+#: with no persist and no count
+_ROUTES = {
+    "window": [],
+    "auto": [(ranking, "WINDOW_MAX_ROWS", 0)],
+    "offsets": [(caches, "GATE_MAX_EST_BYTES", -1)],
+}
+
+
+def _force(monkeypatch, route):
+    for module, name, value in _ROUTES[route]:
+        monkeypatch.setattr(module, name, value)
 
 
 @pytest.fixture(scope="module")
@@ -40,10 +60,11 @@ def _window_ranks(df):
     }
 
 
-@pytest.mark.parametrize("strategy", ["auto", "window", "offsets"])
-def test_global_ranks_matches_global_window(spark, spend_df, strategy):
+@pytest.mark.parametrize("route", ["auto", "window", "offsets"])
+def test_global_ranks_matches_global_window(spark, spend_df, route, monkeypatch):
+    _force(monkeypatch, route)
     ranked, total = ranking.global_ranks(
-        spend_df, F.col("spend").desc(), "key", rank_col="rn", strategy=strategy
+        spend_df, F.col("spend").desc(), "key", rank_col="rn"
     )
     got = {r["key"]: r["rn"] for r in ranked.collect()}
     caches.release_all()
@@ -123,20 +144,14 @@ def test_unknown_stats_choose_offsets_conservatively(spark):
     assert total == 199
 
 
-def test_invalid_strategy_raises(spark, spend_df):
-    with pytest.raises(ValueError):
-        ranking.global_ranks(spend_df, "key", strategy="eager")
-    with pytest.raises(ValueError):
-        ranking.global_prefix_sum(spend_df, "spend", "key", strategy="eager")
-
-
 @pytest.mark.parametrize("n", [3, 4, 10, 1000])
-def test_exact_ntile_matches_window_ntile(spark, spend_df, n):
+def test_exact_ntile_matches_window_ntile(spark, spend_df, n, monkeypatch):
     """Including n > N (1000 bands over 997 rows: every band is one row —
-    the q == 0 branch). strategy='offsets' forces the two-pass machinery
-    (auto would pick the window form at this size; the auto path is
+    the q == 0 branch). The "offsets" route forces the two-pass machinery
+    (the defaults would pick the window form at this size; that path is
     covered by test_strategy_gate_picks_form_by_row_count +
     test_exact_ntile_strategy_agreement)."""
+    _force(monkeypatch, "offsets")
     want = {
         r["key"]: r["band"]
         for r in spend_df.withColumn(
@@ -146,71 +161,70 @@ def test_exact_ntile_matches_window_ntile(spark, spend_df, n):
     }
     got = {
         r["key"]: r["band"]
-        for r in ranking.exact_ntile(
-            spend_df, n, F.col("spend").desc(), "key", strategy="offsets"
-        ).collect()
+        for r in ranking.exact_ntile(spend_df, n, F.col("spend").desc(), "key").collect()
     }
     caches.release_all()
     assert got == want
 
 
-def test_exact_ntile_strategy_agreement(spark, spend_df):
+def test_exact_ntile_strategy_agreement(spark, spend_df, monkeypatch):
     """The gate is a pure plan choice: both forms must produce identical
     band assignments."""
-    by_strategy = {}
-    for strategy in ("window", "offsets"):
-        by_strategy[strategy] = {
-            r["key"]: r["band"]
-            for r in ranking.exact_ntile(
-                spend_df, 7, F.col("spend").desc(), "key", strategy=strategy
-            ).collect()
-        }
+    by_route = {}
+    for route in ("window", "offsets"):
+        with monkeypatch.context() as m:
+            _force(m, route)
+            by_route[route] = {
+                r["key"]: r["band"]
+                for r in ranking.exact_ntile(
+                    spend_df, 7, F.col("spend").desc(), "key"
+                ).collect()
+            }
         caches.release_all()
-    assert by_strategy["window"] == by_strategy["offsets"]
+    assert by_route["window"] == by_route["offsets"]
 
 
-def test_exact_ntile_partition_count_invariance(spark, spend_df):
+def test_exact_ntile_partition_count_invariance(spark, spend_df, monkeypatch):
     """The band assignment must not depend on how many range partitions
     the two-pass ranking used (1 partition == the degenerate global
     case; 64 > distinct values forces empty partitions)."""
+    _force(monkeypatch, "offsets")
     base = {
         r["key"]: r["band"]
         for r in ranking.exact_ntile(
-            spend_df, 4, F.col("spend").desc(), "key", n_partitions=8,
-            strategy="offsets",
+            spend_df, 4, F.col("spend").desc(), "key", n_partitions=8
         ).collect()
     }
     for n_part in (1, 64):
         got = {
             r["key"]: r["band"]
             for r in ranking.exact_ntile(
-                spend_df, 4, F.col("spend").desc(), "key", n_partitions=n_part,
-                strategy="offsets",
+                spend_df, 4, F.col("spend").desc(), "key", n_partitions=n_part
             ).collect()
         }
         assert got == base, n_part
     caches.release_all()
 
 
-@pytest.mark.parametrize("strategy", ["auto", "offsets"])
-def test_global_ranks_empty_input(spark, strategy):
-    df = spark.createDataFrame([], "key long, spend double")
-    ranked, total = ranking.global_ranks(
-        df, "spend", rank_col="rn", strategy=strategy
-    )
+@pytest.mark.parametrize("route", ["auto", "offsets"])
+def test_global_ranks_empty_input(spark, route, monkeypatch):
+    """"auto": the count (0 <= WINDOW_MAX_ROWS = 0) picks the window form's
+    empty branch; "offsets": the bucketing of an empty input."""
+    _force(monkeypatch, route)
+    df = local_table(spark, [], "key long, spend double")
+    ranked, total = ranking.global_ranks(df, "spend", rank_col="rn")
     assert total == 0
     assert ranked.count() == 0
     assert "rn" in ranked.columns
     caches.release_all()
 
 
-def test_exact_ntile_plan_has_no_unpartitioned_window(spark, spend_df):
+def test_exact_ntile_plan_has_no_unpartitioned_window(spark, spend_df, monkeypatch):
     """The point of the offsets form: the only Window in the plan
     partitions by the range-partition id; ntile never appears (in EITHER
     form — the band split is rank arithmetic)."""
-    df = ranking.exact_ntile(
-        spend_df, 4, F.col("spend").desc(), "key", strategy="offsets"
-    )
+    _force(monkeypatch, "offsets")
+    df = ranking.exact_ntile(spend_df, 4, F.col("spend").desc(), "key")
     plan = df._jdf.queryExecution().executedPlan().toString()
     caches.release_all()
     assert "ntile(" not in plan
@@ -240,15 +254,18 @@ def _op_and_window(op, df, order, **kw):
 
 
 @pytest.mark.parametrize("op", _OPS)
-def test_offsets_form_tracks_nothing_and_survives_clear_cache(spark, spend_df, op):
+def test_offsets_form_tracks_nothing_and_survives_clear_cache(
+    spark, spend_df, op, monkeypatch
+):
     """The offsets form buckets rows by literal range bounds, so its plan
     depends on no cached relation: building it tracks nothing, and
     dropping every cache between plan build and action still gives the
     global window's result."""
     caches.release_all()
+    _force(monkeypatch, "offsets")
     df = spend_df.withColumn("v", (F.col("key") * 7 % 101).cast("long"))
     out, want = _op_and_window(
-        op, df, (F.col("spend").desc(), "key"), n_partitions=8, strategy="offsets"
+        op, df, (F.col("spend").desc(), "key"), n_partitions=8
     )
     assert caches.release_all() == 0
     spark.catalog.clearCache()
@@ -256,10 +273,11 @@ def test_offsets_form_tracks_nothing_and_survives_clear_cache(spark, spend_df, o
 
 
 @pytest.mark.parametrize("n_part", [1, 3, 8])
-def test_offsets_form_order_key_edge_cases(spark, n_part):
+def test_offsets_form_order_key_edge_cases(spark, n_part, monkeypatch):
     """NULLs in the first key (asc_nulls_last and desc_nulls_first), a
     DESC string key and a three-key order: the bucket comparison must
     follow each key's direction and NULL placement, at any bucket count."""
+    _force(monkeypatch, "offsets")
     k = F.col("id")
     df = spark.range(1, 301).select(
         k.alias("key"),
@@ -275,22 +293,21 @@ def test_offsets_form_order_key_edge_cases(spark, n_part):
     ]
     for order in orders:
         for op in _OPS:
-            out, want = _op_and_window(
-                op, df, order, n_partitions=n_part, strategy="offsets"
-            )
+            out, want = _op_and_window(op, df, order, n_partitions=n_part)
             got = {r["key"]: r["out"] for r in out.collect()}
             assert got == want, (op, order, n_part)
     assert caches.release_all() == 0
 
 
-@pytest.mark.parametrize("strategy", ["window", "offsets"])
+@pytest.mark.parametrize("route", ["window", "offsets"])
 def test_global_prefix_sum_matches_global_window_decimal_and_long(
-    spark, spend_df, strategy
+    spark, spend_df, route, monkeypatch
 ):
     """Bit-exact for exact-arithmetic types (DECIMAL, BIGINT) at any
     partition count — including a partition count far above the row
     count (empty partitions) and 1 (the degenerate global case) — and
     identical between the two gated forms (including output types)."""
+    _force(monkeypatch, route)
     df = spend_df.select(
         "key",
         "spend",
@@ -311,23 +328,23 @@ def test_global_prefix_sum_matches_global_window_decimal_and_long(
     for n_part in (1, 8, 2048):
         got_d = ranking.global_prefix_sum(
             df, "d", F.col("spend").desc(), "key", out_col="cd",
-            n_partitions=n_part, strategy=strategy,
+            n_partitions=n_part,
         )
         out = ranking.global_prefix_sum(
             got_d, "v", F.col("spend").desc(), "key", out_col="cv",
-            n_partitions=n_part, strategy=strategy,
+            n_partitions=n_part,
         )
-        # output types must not depend on the strategy (ADVICE r9: the
+        # output types must not depend on the form (ADVICE r9: the
         # offsets form previously carried the INPUT type, re-widened by
         # the offset addition)
         assert out.schema["cd"].dataType.simpleString() == "decimal(30,2)"
         assert out.schema["cv"].dataType.simpleString() == "bigint"
         got = {r["key"]: (str(r["cd"]), r["cv"]) for r in out.collect()}
         caches.release_all()
-        assert got == want, (strategy, n_part)
+        assert got == want, (route, n_part)
 
 
-def test_global_prefix_sum_null_runs_match_global_window(spark):
+def test_global_prefix_sum_null_runs_match_global_window(spark, monkeypatch):
     """ADVICE r9: a range partition whose local running sum is still NULL
     must carry the prior partitions' total (NULL + offset was NULL). A
     row is NULL in out_col only when no non-null value precedes it
@@ -336,43 +353,45 @@ def test_global_prefix_sum_null_runs_match_global_window(spark):
     rows = [
         (k, None if k <= 3 or 21 <= k <= 30 else k * 10) for k in range(1, 41)
     ]
-    df = spark.createDataFrame(rows, "key long, v long")
+    df = local_table(spark, rows, "key long, v long")
     w = Window.orderBy("key").rowsBetween(Window.unboundedPreceding, 0)
     want = {r["key"]: r["cum"] for r in df.withColumn("cum", F.sum("v").over(w)).collect()}
     assert want[2] is None and want[25] is not None  # the fixture bites
-    for strategy in ("window", "offsets"):
-        got = {
-            r["key"]: r["cum"]
-            for r in ranking.global_prefix_sum(
-                df, "v", "key", n_partitions=4, strategy=strategy
-            ).collect()
-        }
+    for route in ("window", "offsets"):
+        with monkeypatch.context() as m:
+            _force(m, route)
+            got = {
+                r["key"]: r["cum"]
+                for r in ranking.global_prefix_sum(
+                    df, "v", "key", n_partitions=4
+                ).collect()
+            }
         caches.release_all()
-        assert got == want, strategy
+        assert got == want, route
 
 
-def test_global_prefix_sum_narrow_int_offsets_do_not_overflow(spark):
+def test_global_prefix_sum_narrow_int_offsets_do_not_overflow(spark, monkeypatch):
     """ADVICE r9: per-partition sums of a smallint column overflow a
     smallint offset schema — offsets must ride at the SUM type (long)."""
+    _force(monkeypatch, "offsets")
     df = spark.range(1, 201).select(
         F.col("id").alias("key"), F.lit(30000).cast("smallint").alias("v")
     )
     w = Window.orderBy("key").rowsBetween(Window.unboundedPreceding, 0)
     want = {r["key"]: r["cum"] for r in df.withColumn("cum", F.sum("v").over(w)).collect()}
     assert max(want.values()) == 200 * 30000  # far beyond smallint
-    got_df = ranking.global_prefix_sum(
-        df, "v", "key", n_partitions=8, strategy="offsets"
-    )
+    got_df = ranking.global_prefix_sum(df, "v", "key", n_partitions=8)
     assert got_df.schema["cum"].dataType.simpleString() == "bigint"
     got = {r["key"]: r["cum"] for r in got_df.collect()}
     caches.release_all()
     assert got == want
 
 
-@pytest.mark.parametrize("strategy", ["auto", "offsets"])
-def test_global_prefix_sum_empty_input(spark, strategy):
-    df = spark.createDataFrame([], "key long, v long")
-    out = ranking.global_prefix_sum(df, "v", "key", out_col="cum", strategy=strategy)
+@pytest.mark.parametrize("route", ["auto", "offsets"])
+def test_global_prefix_sum_empty_input(spark, route, monkeypatch):
+    _force(monkeypatch, route)
+    df = local_table(spark, [], "key long, v long")
+    out = ranking.global_prefix_sum(df, "v", "key", out_col="cum")
     assert out.count() == 0 and "cum" in out.columns
     caches.release_all()
 

@@ -104,40 +104,34 @@ def test_ivf_fingerprint_missing_corpus(tmp_path):
     assert round9a._corpus_fingerprint(str(tmp_path)) == "missing"
 
 
-def test_triangles_default_entry_point_is_capped(spark, sf_dir):
+def test_triangles_default_entry_point_is_capped(spark, sf_dir, monkeypatch):
     """r9 verdict item 2: omitting the cap args must apply the bounded
-    production form (both row_number cap windows present in the plan);
-    the exact unbounded form requires explicit None for both. On the
-    fixture graph the default caps exceed the true maxima, so the
-    default-capped count equals the exact count — bounded by default,
-    exact where the caps don't bind."""
+    production caps; the exact unbounded form requires explicit None for
+    both. Each cap binds once tightened — checked through the results,
+    on the driver and the distributed path alike — and on the fixture
+    graph the default caps exceed the true maxima, so the default-capped
+    count equals the exact count: bounded by default, exact where the
+    caps don't bind."""
+    import inspect
+
     from laposte_data_engineering_jedha_spark.operators import graphs
     from laposte_data_engineering_jedha_spark.queries import events_table
 
+    params = inspect.signature(graphs.co_activity_triangles).parameters
+    assert params["bucket_cap"].default == graphs.DEFAULT_BUCKET_CAP
+    assert params["max_out_deg"].default == graphs.DEFAULT_MAX_OUT_DEG
     ev = events_table(spark, sf_dir)
-    # plan-shape assertions target the DISTRIBUTED branch (the r13 driver
-    # fast path collapses small edge lists to a local relation, applying
-    # max_out_deg in the driver mirror instead of a window)
-    capped_dist = graphs.co_activity_triangles(ev, min_w=2, driver_max_edges=0)
-    plan = capped_dist._jdf.queryExecution().executedPlan().toString()
-    assert "__br" in plan and "__or" in plan  # both caps applied
-    exact_dist = graphs.co_activity_triangles(
-        ev, min_w=2, bucket_cap=None, max_out_deg=None, driver_max_edges=0
-    )
-    exact_plan = exact_dist._jdf.queryExecution().executedPlan().toString()
-    assert "__br" not in exact_plan and "__or" not in exact_plan
-    # the DEFAULT entry point (fast path engaged) must agree with both
-    capped_df = graphs.co_activity_triangles(ev, min_w=2)
-    exact_df = graphs.co_activity_triangles(
-        ev, min_w=2, bucket_cap=None, max_out_deg=None
-    )
-    assert capped_df.collect() == capped_dist.collect()
-    assert exact_df.collect() == exact_dist.collect()
-    capped, exact = capped_df.collect()[0], exact_df.collect()[0]
-    assert capped["n_triangles"] == exact["n_triangles"] > 0
-    assert (capped["n_edges"], capped["n_nodes"]) == (
-        exact["n_edges"], exact["n_nodes"],
-    )
+
+    def run(**caps):
+        return tuple(graphs.co_activity_triangles(ev, min_w=2, **caps).first())
+
+    for driver_max_edges in (graphs.DRIVER_MAX_EDGES, -1):
+        monkeypatch.setattr(graphs, "DRIVER_MAX_EDGES", driver_max_edges)
+        n_edges, n_nodes, n_tri = run(bucket_cap=None, max_out_deg=None)
+        assert n_tri > 0
+        assert run() == (n_edges, n_nodes, n_tri)
+        assert run(bucket_cap=2, max_out_deg=None)[0] < n_edges
+        assert run(bucket_cap=None, max_out_deg=2)[2] < n_tri
 
 
 _REC_SCHEMA = "k long, name string, grp long, val double"

@@ -4,8 +4,8 @@ sampling, Benford audit, integer-unit NDCG.
 
 The cross-engine value checks live in the replica gate
 (tests/test_oracle_parity.py — parametrized over the whole registry);
-these tests pin the OPERATOR-level contracts: strategy equivalence for
-global_prefix_max, brute-force dominance agreement for the frontier,
+these tests pin the OPERATOR-level contracts: window/offsets equivalence
+for global_prefix_max, brute-force dominance agreement for the frontier,
 exact pair arithmetic for the multiplicity-grain fuzzy dedup, and the
 weighted-inclusion property of priority sampling.
 """
@@ -15,26 +15,30 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from laposte_data_engineering_jedha_spark.operators import ranking
+from laposte_data_engineering_jedha_spark.operators import caches, ranking
+from laposte_data_engineering_jedha_spark.session import local_table
 
 
 # ---------------------------- global_prefix_max ------------------------------
 
 
 @pytest.mark.parametrize("inclusive", [True, False])
-def test_global_prefix_max_strategies_agree(spark, inclusive):
+def test_global_prefix_max_strategies_agree(spark, inclusive, monkeypatch):
+    """The gate's two forms agree: a small input of known size takes the
+    window form at the default thresholds, and a size gate below every
+    estimate forces the offsets form."""
     rows = [(i, float((i * 37) % 19) if i % 7 else None) for i in range(200)]
-    df = spark.createDataFrame(rows, "k long, v double")
+    df = local_table(spark, rows, "k long, v double")
     got_w = {
         (r["k"], r["runmax"])
-        for r in ranking.global_prefix_max(
-            df, "v", "k", inclusive=inclusive, strategy="window"
-        ).collect()
+        for r in ranking.global_prefix_max(df, "v", "k", inclusive=inclusive).collect()
     }
+    caches.release_all()
+    monkeypatch.setattr(caches, "GATE_MAX_EST_BYTES", -1)
     got_o = {
         (r["k"], r["runmax"])
         for r in ranking.global_prefix_max(
-            df, "v", "k", inclusive=inclusive, strategy="offsets", n_partitions=7
+            df, "v", "k", inclusive=inclusive, n_partitions=7
         ).collect()
     }
     assert got_w == got_o
@@ -51,15 +55,13 @@ def test_global_prefix_max_strategies_agree(spark, inclusive):
     assert got_w == want
 
 
-def test_global_prefix_max_all_null_and_empty(spark):
+def test_global_prefix_max_all_null_and_empty(spark, monkeypatch):
+    monkeypatch.setattr(caches, "GATE_MAX_EST_BYTES", -1)  # the offsets form
     df = spark.createDataFrame([(1, None), (2, None)], "k long, v double")
-    out = ranking.global_prefix_max(df, "v", "k", strategy="offsets").collect()
+    out = ranking.global_prefix_max(df, "v", "k").collect()
     assert all(r["runmax"] is None for r in out)
     empty = spark.createDataFrame([], "k long, v double")
-    assert (
-        ranking.global_prefix_max(empty, "v", "k", strategy="offsets").count()
-        == 0
-    )
+    assert ranking.global_prefix_max(empty, "v", "k").count() == 0
 
 
 # ------------------------------ Pareto frontier ------------------------------
@@ -286,18 +288,21 @@ def test_weighted_median_matches_bruteforce(spark, sf_dir):
 # ----------------------- embedding LSH verify-plan gate ----------------------
 
 
-def test_embedding_lsh_carry_gate_plans_agree(spark, sf_dir):
+def test_embedding_lsh_carry_gate_plans_agree(spark, sf_dir, monkeypatch):
     """The occupancy-gated verify plans (carried-vector banded join vs
     narrow-candidates + verify joins) must be result-identical; the gate
-    is a pure plan choice (second-decade ladder + sf1 sweep, round 11)."""
+    is a pure plan choice (second-decade ladder + sf1 sweep, round 11).
+    CARRY_MAX_OCCUPANCY is the gate's only switch: a bound above every
+    estimate forces the carried plan, -1 the narrow one."""
     from laposte_data_engineering_jedha_spark.operators import dedup
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     got = {}
-    for carry in (True, False):
-        pairs = dedup.embedding_dup_pairs_lsh(
-            emb, threshold=0.4, carry_vectors=carry
-        )
+    for carry, bound in ((True, 1 << 62), (False, -1)):
+        monkeypatch.setattr(dedup, "CARRY_MAX_OCCUPANCY", bound)
+        pairs = dedup.embedding_dup_pairs_lsh(emb, threshold=0.4)
+        joins = pairs._jdf.queryExecution().optimizedPlan().toString().count("Join")
+        assert joins == (1 if carry else 3), joins
         got[carry] = {
             (r["id_a"], r["id_b"], r["cosine"]) for r in pairs.collect()
         }
@@ -305,7 +310,7 @@ def test_embedding_lsh_carry_gate_plans_agree(spark, sf_dir):
 
 
 def test_embedding_lsh_gate_reads_stats_only(spark, sf_dir):
-    """carry_vectors=None must decide from Catalyst's estimate without
+    """The carry gate must decide from Catalyst's estimate without
     running a job: a low-occupancy corpus picks carried (no verify
     joins => exactly one Join in the plan), a high-occupancy parameter
     set picks narrow (three Joins)."""

@@ -1,15 +1,17 @@
-"""Round-13 tests — the strategy="auto" scale gates (VERDICT r12 item 2).
+"""Round-13 tests — the size-gated scale plans (VERDICT r12 item 2).
 
 The three >1-exponent regression rows (events_user_triangles 1.40,
 graph_label_prop_communities 1.40, dedup_embedding_cosine 1.32) now gate
 on input size: estimated-big inputs take the capped/auto scale plan
-automatically (the ranking-family strategy="auto" pattern), while the
+automatically (the ranking-family size-gate pattern), while the
 oracle fixtures (1k/10k events, 500 vectors) stay on the exact/pinned
 branch so the recorded driver hash rows are unchanged. These tests prove
 (a) both branches agree where the caps don't bind, (b) the Python gate
 and the SQL twin's count(*) CASE can never pick different parameters,
 and (c) the binding-regime branch still matches DuckDB cross-engine at
-sf0.1 for the two queries whose SQL mirrors the gate.
+sf0.1 for the two queries whose SQL mirrors the gate. Each gate's
+threshold is its only switch, so the tests reach the other branch by
+patching it.
 """
 
 from __future__ import annotations
@@ -38,28 +40,35 @@ def _duck_on(sf: str):
 # --------------------------- events_user_triangles ---------------------------
 
 
-def test_triangles_branches_agree_at_fixture_scale(spark, sf_dir):
+def test_triangles_branches_agree_at_fixture_scale(spark, sf_dir, monkeypatch):
     """The generous production caps (bucket_cap=128, max_out_deg=64)
     never bind at fixture occupancy, so the capped branch must equal the
     exact branch bit-for-bit — same schema, same one-row counts."""
-    exact = round4c.events_user_triangles(spark, sf_dir, strategy="exact")
-    capped = round4c.events_user_triangles(spark, sf_dir, strategy="capped")
+    exact = round4c.events_user_triangles(spark, sf_dir)
+    monkeypatch.setattr(round4c, "_TRI_EXACT_MAX_EVENTS", -1)
+    capped = round4c.events_user_triangles(spark, sf_dir)
     assert exact.columns == capped.columns == ["n_edges", "n_nodes", "n_triangles"]
     assert exact.collect() == capped.collect()
 
 
 def test_triangles_auto_gate_picks_branch(spark, sf_dir, monkeypatch):
-    """auto == exact below the threshold; with the threshold forced to 0
-    the auto gate must route to the capped plan."""
-    auto = round4c.events_user_triangles(spark, sf_dir).collect()
-    exact = round4c.events_user_triangles(spark, sf_dir, strategy="exact").collect()
-    assert auto == exact
-    monkeypatch.setattr(round4c, "_TRI_EXACT_MAX_EVENTS", 0)
-    forced = round4c.events_user_triangles(spark, sf_dir).collect()
-    capped = round4c.events_user_triangles(spark, sf_dir, strategy="capped").collect()
-    assert forced == capped
-    with pytest.raises(ValueError):
-        round4c.events_user_triangles(spark, sf_dir, strategy="bogus")
+    """Below the threshold the gate runs the operator with both caps off
+    (exact); with the threshold forced to -1 it runs the capped plan
+    with the production caps."""
+    from laposte_data_engineering_jedha_spark.operators import graphs
+
+    calls = []
+    real = graphs.co_activity_triangles
+
+    def spy(ev, min_w, **caps):
+        calls.append(caps)
+        return real(ev, min_w, **caps)
+
+    monkeypatch.setattr(graphs, "co_activity_triangles", spy)
+    round4c.events_user_triangles(spark, sf_dir)
+    monkeypatch.setattr(round4c, "_TRI_EXACT_MAX_EVENTS", -1)
+    round4c.events_user_triangles(spark, sf_dir)
+    assert calls == [{"bucket_cap": None, "max_out_deg": None}, {}]
 
 
 # --------------------------- dedup_embedding_cosine --------------------------
@@ -85,30 +94,36 @@ def test_embedding_planes_gate_formula_parity(n):
 
 
 def test_embedding_cosine_pinned_branch_unchanged(spark, sf_dir):
-    """At fixture size (500 vectors) the auto gate stays pinned, so the
-    default result must equal strategy='pinned' — the recorded driver
-    hash rows are untouched by the gate."""
+    """At fixture size (500 vectors) the gate stays pinned, so the
+    registered result must equal the operator run with the fixed
+    fixture banding — the recorded driver hash rows are untouched by
+    the gate."""
     auto = llmops.dedup_embedding_cosine(spark, sf_dir)
-    pinned = llmops.dedup_embedding_cosine(spark, sf_dir, strategy="pinned")
+    pinned = dedup.embedding_dup_pairs_lsh(
+        q.table(spark, sf_dir, "embeddings"),
+        threshold=0.4,
+        bands=llmops._EMB_BANDS,
+        band_planes=llmops._EMB_BAND_PLANES,
+    )
     assert sorted(map(tuple, auto.collect())) == sorted(map(tuple, pinned.collect()))
-    with pytest.raises(ValueError):
-        llmops.dedup_embedding_cosine(spark, sf_dir, strategy="bogus")
 
 
 @pytest.mark.skipif(not os.path.isdir(SF01), reason="driver fixtures absent")
-def test_embedding_cosine_scaled_branch_oracle_sf01(spark):
+def test_embedding_cosine_scaled_branch_oracle_sf01(spark, monkeypatch):
     """Cross-engine check of the SCALED branch at a size where it is
     genuinely different: at sf0.1 (2,000 vectors) auto_band_planes gives
-    5 planes != the pinned 4, so forcing strategy='scaled' against the
-    force_scaled SQL twin proves the auto-banding branch matches DuckDB
-    — the branch the fixture hash rows never exercise. (The registered
-    CASE leaves 2,000 vectors pinned — the gate threshold sits at the
-    measured plan crossover, not at the fixture boundary.)"""
+    5 planes != the pinned 4, so lowering the threshold to -1 — in the
+    query and in the SQL twin built under the same patch — proves the
+    auto-banding branch matches DuckDB, the branch the fixture hash rows
+    never exercise. (The registered CASE leaves 2,000 vectors pinned —
+    the gate threshold sits at the measured plan crossover, not at the
+    fixture boundary.)"""
     assert dedup.auto_band_planes(2_000) == 5  # genuinely != the pinned 4
-    sdf = llmops.dedup_embedding_cosine(spark, SF01, strategy="scaled").toPandas()
+    monkeypatch.setattr(llmops, "_EMB_PINNED_MAX_N", -1)
+    sdf = llmops.dedup_embedding_cosine(spark, SF01).toPandas()
     con = _duck_on(SF01)
     try:
-        odf = con.execute(llmops._emb_cosine_sql(force_scaled=True)).df()
+        odf = con.execute(llmops._emb_cosine_sql()).df()
     finally:
         con.close()
     assert canon_rows(sdf) == canon_rows(odf)
@@ -116,14 +131,10 @@ def test_embedding_cosine_scaled_branch_oracle_sf01(spark):
 
 def test_embedding_cosine_registered_sql_is_case_gated():
     """The registered oracle must carry the count(*) CASE (both-branch
-    mirror), and the force_scaled twin must not."""
+    mirror)."""
     assert f"CASE WHEN count(*) > {llmops._EMB_PINNED_MAX_N}" in q.ORACLE_SQL[
         "dedup_embedding_cosine"
     ]
-    assert (
-        f"CASE WHEN count(*) > {llmops._EMB_PINNED_MAX_N}"
-        not in llmops._emb_cosine_sql(force_scaled=True)
-    )
 
 
 # ------------------------ graph_label_prop_communities -----------------------
@@ -143,19 +154,15 @@ def test_label_prop_cap_gate_formula_parity(n):
     assert py == sql, (n, py, sql)
 
 
-def test_label_prop_auto_equals_exact_cap_at_fixture_scale(spark, sf_dir):
-    """Below the gate the auto default is the 64-cap branch, and at
-    fixture occupancy (max well under 16 users/cell) even the BIG cap is
-    non-binding — all three forms must agree, proving the tightened cap
-    cannot change fixture hash rows."""
+def test_label_prop_auto_equals_exact_cap_at_fixture_scale(spark, sf_dir, monkeypatch):
+    """Below the gate the default is the 64-cap branch, and at fixture
+    occupancy (max well under 16 users/cell) even the BIG cap is
+    non-binding — the 64-cap branch run with the BIG cap must agree,
+    proving the tightened cap cannot change fixture hash rows."""
     auto = round6.graph_label_prop_communities(spark, sf_dir).collect()
-    c64 = round6.graph_label_prop_communities(
-        spark, sf_dir, max_cell_members=round6._LP_CELL_CAP
-    ).collect()
-    c16 = round6.graph_label_prop_communities(
-        spark, sf_dir, max_cell_members=round6._LP_CELL_CAP_BIG
-    ).collect()
-    assert sorted(auto) == sorted(c64) == sorted(c16)
+    monkeypatch.setattr(round6, "_LP_CELL_CAP", round6._LP_CELL_CAP_BIG)
+    c16 = round6.graph_label_prop_communities(spark, sf_dir).collect()
+    assert sorted(auto) == sorted(c16)
 
 
 @pytest.mark.skipif(not os.path.isdir(SF01), reason="driver fixtures absent")
@@ -637,12 +644,12 @@ def test_kcore_fixpoint_matches_bounded_rounds(spark, sf_dir):
     assert fix[-1][1:] == (rows[3]["n_nodes"], rows[3]["n_edges"])
 
 
-def test_kcore_driver_and_distributed_paths_agree(spark):
+def test_kcore_driver_and_distributed_paths_agree(spark, monkeypatch):
     """r13 optimization: small edge lists peel on the driver
-    (driver_max_edges gate); both paths must emit identical per-round
-    stats on a graph with a chain (peels away), a clique (survives) and
-    a star (collapses) — and forcing the gate off keeps the distributed
-    loop covered, for both bounded and fixpoint forms."""
+    (graphs.DRIVER_MAX_EDGES gate); both paths must emit identical
+    per-round stats on a graph with a chain (peels away), a clique
+    (survives) and a star (collapses) — and forcing the gate off keeps
+    the distributed loop covered, for both bounded and fixpoint forms."""
     from laposte_data_engineering_jedha_spark.operators import graphs
 
     raw = (
@@ -651,35 +658,32 @@ def test_kcore_driver_and_distributed_paths_agree(spark):
         + [(900, t) for t in range(901, 908)]            # star: hub deg 7
     )
     pairs = spark.createDataFrame(raw, "u long, v long")
-    for rounds in (3, None):
-        fast = graphs.kcore_peel(pairs, k=3, rounds=rounds)
-        dist = graphs.kcore_peel(pairs, k=3, rounds=rounds, driver_max_edges=0)
-        assert fast == dist
+    fast = {rounds: graphs.kcore_peel(pairs, k=3, rounds=rounds) for rounds in (3, None)}
     # the K5 clique is the 3-core fixpoint: 5 nodes, 10 edges
-    assert graphs.kcore_peel(pairs, k=3, rounds=None)[-1][1:] == (5, 10)
+    assert fast[None][-1][1:] == (5, 10)
+    monkeypatch.setattr(graphs, "DRIVER_MAX_EDGES", -1)
+    for rounds in (3, None):
+        assert graphs.kcore_peel(pairs, k=3, rounds=rounds) == fast[rounds]
 
 
-def test_label_prop_driver_and_distributed_paths_agree(spark, sf_dir):
+def test_label_prop_driver_and_distributed_paths_agree(spark, sf_dir, monkeypatch):
     """r13 optimization: under graphs.DRIVER_MAX_EDGES the 2 synchronous LP
     rounds run in plain Python on the driver; both paths must emit the
     identical (user_id, community) labelling on the real fixture, for the
-    auto cell cap AND a tight cap that actually binds (driver_max_edges=0
-    keeps the distributed loop covered)."""
-    from laposte_data_engineering_jedha_spark.queries.round6 import (
-        graph_label_prop_communities,
-    )
+    default cell cap AND a tight cap that actually binds
+    (graphs.DRIVER_MAX_EDGES = -1 keeps the distributed loop covered)."""
+    from laposte_data_engineering_jedha_spark.operators import graphs
 
-    for cap in ("auto", 2):
-        fast = graph_label_prop_communities(spark, sf_dir, max_cell_members=cap)
-        dist = graph_label_prop_communities(
-            spark, sf_dir, max_cell_members=cap, driver_max_edges=0
-        )
-        assert sorted(map(tuple, fast.collect())) == sorted(
-            map(tuple, dist.collect())
-        ), cap
+    for cap in (round6._LP_CELL_CAP, 2):
+        with monkeypatch.context() as m:
+            m.setattr(round6, "_LP_CELL_CAP", cap)
+            fast = round6.graph_label_prop_communities(spark, sf_dir).collect()
+            m.setattr(graphs, "DRIVER_MAX_EDGES", -1)
+            dist = round6.graph_label_prop_communities(spark, sf_dir).collect()
+        assert sorted(map(tuple, fast)) == sorted(map(tuple, dist)), cap
 
 
-def test_triangles_driver_and_distributed_paths_agree(spark, sf_dir):
+def test_triangles_driver_and_distributed_paths_agree(spark, sf_dir, monkeypatch):
     """r13 optimization: thresholded edge lists under graphs.DRIVER_MAX_EDGES
     orient/wedge/close on the driver. Both paths must agree on the real
     fixture for the exact AND the capped form (tight caps so the cap
@@ -691,13 +695,14 @@ def test_triangles_driver_and_distributed_paths_agree(spark, sf_dir):
 
     ev = events_table(spark, sf_dir)
     for caps in ((None, None), (4, 2)):
-        fast = graphs.co_activity_triangles(
-            ev, min_w=2, bucket_cap=caps[0], max_out_deg=caps[1]
-        ).collect()
-        dist = graphs.co_activity_triangles(
-            ev, min_w=2, bucket_cap=caps[0], max_out_deg=caps[1],
-            driver_max_edges=0,
-        ).collect()
+        with monkeypatch.context() as m:
+            fast = graphs.co_activity_triangles(
+                ev, min_w=2, bucket_cap=caps[0], max_out_deg=caps[1]
+            ).collect()
+            m.setattr(graphs, "DRIVER_MAX_EDGES", -1)
+            dist = graphs.co_activity_triangles(
+                ev, min_w=2, bucket_cap=caps[0], max_out_deg=caps[1]
+            ).collect()
         assert [tuple(r) for r in fast] == [tuple(r) for r in dist], caps
 
 

@@ -22,6 +22,26 @@ Offsets-branch hardening: every fixture grain sits under
 ranking.WINDOW_MAX_ROWS, so the oracle gate only runs the WINDOW form of
 the ranking operators. The same test forces the OFFSETS form
 (ranking.WINDOW_MAX_ROWS = 0) for at least one registry caller per operator.
+
+Every other size gate gets the same treatment, because a gate's
+threshold is the only thing that picks its branch and the fixtures sit
+on one side of each:
+- graphs.DRIVER_MAX_EDGES = -1 forces the distributed loops of
+  connected_components, co_activity_triangles, kcore_peel and
+  graph_label_prop_communities (one registry caller each);
+- round4c._TRI_EXACT_MAX_EVENTS = -1 forces events_user_triangles onto
+  its capped plan;
+- round6._LP_EXACT_MAX_EVENTS = -1 forces graph_label_prop_communities
+  onto the _LP_CELL_CAP_BIG cap (non-binding at fixture occupancy);
+- dedup.CARRY_MAX_OCCUPANCY = -1 forces embedding_dup_pairs_lsh onto its
+  narrow-candidates plan (dedup_embedding_cosine estimates 33 vectors
+  per bucket at sf0.001, so it carries vectors by default).
+
+`_FORCE` is the list of every gate and the value that forces it. The one
+size threshold missing from it is llmops._EMB_PINNED_MAX_N: its branch
+changes the banding and so the result by design, and
+tests/test_round13.py checks that branch against its DuckDB twin at
+sf0.1 instead.
 """
 
 from __future__ import annotations
@@ -29,7 +49,8 @@ from __future__ import annotations
 import pytest
 
 import laposte_data_engineering_jedha_spark.queries as q
-from laposte_data_engineering_jedha_spark.operators import caches, ranking
+from laposte_data_engineering_jedha_spark.operators import caches, dedup, graphs, ranking
+from laposte_data_engineering_jedha_spark.queries import round4c, round6
 
 from test_oracle_parity import canon_rows
 
@@ -82,19 +103,43 @@ _OFFSETS_REPS = [
     "olap_pareto_frontier",  # global_prefix_max
 ]
 
-# forced branch -> (module, attribute, value) that forces it
+# registry callers of each graph operator's driver fast path
+_DISTRIBUTED_REPS = [
+    "dedup_clusters",  # dedup.connected_components
+    "events_user_triangles_capped",  # graphs.co_activity_triangles
+    "graph_kcore_peel",  # graphs.kcore_peel
+    "graph_label_prop_communities",  # its own label-propagation rounds
+]
+
+# forced branch -> (module, attribute, value) that forces it, and the
+# representatives that run under it
 _FORCE = {
     "spread": (q, "_SPREAD_MIN_BYTES_OVERRIDE", 0),
     "recompute": (caches, "GATE_MAX_EST_BYTES", -1),
     "offsets": (ranking, "WINDOW_MAX_ROWS", 0),
+    "distributed": (graphs, "DRIVER_MAX_EDGES", -1),
+    "capped": (round4c, "_TRI_EXACT_MAX_EVENTS", -1),
+    "bigcap": (round6, "_LP_EXACT_MAX_EVENTS", -1),
+    "narrow": (dedup, "CARRY_MAX_OCCUPANCY", -1),
+}
+_REPS = {
+    "spread": _SPREAD_REPS,
+    "recompute": _RECOMPUTE_REPS,
+    "offsets": _OFFSETS_REPS,
+    "distributed": _DISTRIBUTED_REPS,
+    "capped": ["events_user_triangles"],
+    "bigcap": ["graph_label_prop_communities"],
+    "narrow": ["dedup_embedding_cosine"],
 }
 
 
 @pytest.mark.parametrize(
     "name, branch",
-    [pytest.param(n, "spread", id=n) for n in _SPREAD_REPS]
-    + [pytest.param(n, "recompute", id=f"recompute-{n}") for n in _RECOMPUTE_REPS]
-    + [pytest.param(n, "offsets", id=f"offsets-{n}") for n in _OFFSETS_REPS],
+    [
+        pytest.param(n, branch, id=n if branch == "spread" else f"{branch}-{n}")
+        for branch, names in _REPS.items()
+        for n in names
+    ],
 )
 def test_forced_spread_branch_matches_unspread(
     name, branch, spark, sf_dir, monkeypatch

@@ -129,13 +129,13 @@ def test_dq_documents_clean_fixture(spark, sf_dir):
     assert r["n_dup_ids"] == 0
 
 
-def test_label_prop_capped_variant_labels_every_user(spark, sf_dir):
+def test_label_prop_capped_variant_labels_every_user(spark, sf_dir, monkeypatch):
     """The hot-cell cap (star-to-representatives) must still label every
     user — no bucket member may vanish from the output, whatever its
     md5 rank (the same connectivity property pinned for
     hamming_band_pairs' cap)."""
-    exact = round6.graph_label_prop_communities(spark, sf_dir)
-    capped = round6.graph_label_prop_communities(spark, sf_dir, max_cell_members=4)
-    n_users = exact.count()
+    n_users = round6.graph_label_prop_communities(spark, sf_dir).count()
+    monkeypatch.setattr(round6, "_LP_CELL_CAP", 4)
+    capped = round6.graph_label_prop_communities(spark, sf_dir)
     assert capped.count() == n_users
     assert capped.where(F.col("community").isNull()).count() == 0

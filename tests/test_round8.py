@@ -96,22 +96,22 @@ def test_repeated_token_runs_planted(spark, tmp_path):
     assert got == {3: 1, 1: 2, 4: 1}
 
 
-def test_label_prop_cap_preserves_fixture_exactness(spark):
-    """The round-8 capped default must equal the exact all-pairs variant
+def test_label_prop_cap_preserves_fixture_exactness(spark, monkeypatch):
+    """The round-8 capped default must equal the exact all-pairs edges
     on the fixture (no cell reaches the cap there) — the same contract
-    the unchanged oracle hash asserts, pinned here against the exact
-    in-engine formulation too."""
-    from laposte_data_engineering_jedha_spark.queries.round6 import (
-        graph_label_prop_communities,
-    )
+    the unchanged oracle hash asserts, pinned here against a cap above
+    every cell's occupancy, which emits each pair once per shared cell
+    exactly as the all-pairs join does."""
+    from laposte_data_engineering_jedha_spark.queries import round6
 
     capped = {
         (r["user_id"], r["community"])
-        for r in graph_label_prop_communities(spark, SF).collect()
+        for r in round6.graph_label_prop_communities(spark, SF).collect()
     }
+    monkeypatch.setattr(round6, "_LP_CELL_CAP", 10**9)
     exact = {
         (r["user_id"], r["community"])
-        for r in graph_label_prop_communities(spark, SF, max_cell_members=None).collect()
+        for r in round6.graph_label_prop_communities(spark, SF).collect()
     }
     assert capped == exact and len(capped) > 0
 

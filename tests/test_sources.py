@@ -66,6 +66,29 @@ def test_read_file_unknown_extension(spark, tmp_path):
         read_file(spark, str(p))
 
 
+@pytest.mark.parametrize("ext", ["db", "xlsx"])
+def test_read_file_empty_table_keeps_columns(spark, tmp_path, ext):
+    """A sqlite table or xlsx sheet with columns and no rows reads as zero
+    rows under the table's column names (zero rows tell no types, so the
+    columns are strings), and the timestamp contract still applies."""
+    import sqlite3
+
+    from laposte_data_engineering_jedha_spark.sources.xlsx_codec import write_xlsx
+
+    path = str(tmp_path / f"empty.{ext}")
+    if ext == "db":
+        with sqlite3.connect(path) as conn:
+            conn.execute(f"CREATE TABLE deliveries ({', '.join(RAW_COLUMNS)})")
+        conn.close()
+    else:
+        write_xlsx(path, RAW_COLUMNS, [])
+    df = cast_timestamp_contract(read_file(spark, path))
+    assert df.columns == RAW_COLUMNS
+    assert df.count() == 0
+    assert df.schema["Pickup_DateTime"].dataType.typeName() == "timestamp"
+    assert df.schema["Delivery_ID"].dataType.typeName() == "string"
+
+
 def test_extract_unknown_source_type(spark):
     with pytest.raises(ValueError, match="Unknown or missing source type"):
         extract_data(spark, {"source": {"type": "teleport"}})

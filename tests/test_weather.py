@@ -14,7 +14,6 @@ from laposte_data_engineering_jedha_spark.sources.weather import (
     distinct_pickup_dates,
     fetch_payloads,
     fetch_weather_table,
-    fetch_weather_table_distributed,
     flatten_weather,
 )
 
@@ -57,20 +56,3 @@ def test_enrich_joins_on_date_hour(spark):
     dates = distinct_pickup_dates(df)
     assert wx.count() == 24 * len(dates)
 
-
-def test_distributed_fetch_matches_driver_fetch(spark):
-    """Executor-side mapInPandas fan-out must produce the identical weather
-    dim as the driver thread-pool path."""
-    df = generate_deliveries(spark, 300, seed=7)
-    client = FakeWeatherClient()
-    driver_side = fetch_weather_table(spark, df, client)
-    executor_side = fetch_weather_table_distributed(df, client, fetch_partitions=4)
-    a = sorted(map(tuple, driver_side.collect()))
-    b = sorted(map(tuple, executor_side.collect()))
-    assert a == b and len(a) > 0
-
-
-def test_distributed_fetch_empty_on_failure(spark):
-    df = generate_deliveries(spark, 20, seed=1)
-    wx = fetch_weather_table_distributed(df, FakeWeatherClient(fail=True))
-    assert wx.count() == 0
