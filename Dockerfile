@@ -11,7 +11,7 @@ RUN apt-get update \
 ENV JAVA_HOME=/usr/lib/jvm/java-17-openjdk-amd64
 
 RUN pip install --no-cache-dir \
-    pyspark==4.1.2 pyarrow pandas numpy "fastapi[all]" uvicorn
+    pyspark==4.1.2 pyarrow pandas numpy uvicorn
 
 WORKDIR /app
 COPY laposte_data_engineering_jedha_spark /app/laposte_data_engineering_jedha_spark

@@ -234,7 +234,7 @@ def pd_nearest_centroids(vec: Column | str, centers: "np.ndarray", n: int) -> Co
 def _fold_d2(m: "np.ndarray", centers: "np.ndarray") -> "np.ndarray":
     """(n, k) squared distances of each row of `m` to each centroid with
     the SAME left-to-right per-dimension fold as the Catalyst/DuckDB twin
-    expressions (queries/round5.py:_spark_d2 / _sql_d2): acc = acc +
+    expressions (queries/similarity.py:_spark_d2 / _sql_d2): acc = acc +
     diff*diff per dimension in IEEE float64, vectorized across rows — NOT
     a gemm or numpy axis-sum (pairwise summation reorders additions), so
     results are bit-identical to the HOF fold and the oracle."""
@@ -254,7 +254,7 @@ def _fold_d2(m: "np.ndarray", centers: "np.ndarray") -> "np.ndarray":
 def pd_fold_codes(vec: Column | str, codebooks: "np.ndarray") -> Column:
     """Per-subspace nearest-centroid codes (`array<int>`, ties -> lowest
     id) against an (m, k, sub) codebook — the Arrow-batched twin of the
-    per-centroid Catalyst fold argmin (queries/round5.py:_spark_argmin),
+    per-centroid Catalyst fold argmin (queries/similarity.py:_spark_argmin),
     bit-identical by construction (see _fold_d2) and ~20x faster: the
     fold is interpreted per (row, centroid, dim) on the JVM, while here
     each dimension step is one fused numpy op across the whole batch.
@@ -296,7 +296,7 @@ def pd_fold_assign_d2(vec: Column | str, centers: "np.ndarray") -> Column:
 
 def pd_fold_topn_centroids(vec: Column | str, centers: "np.ndarray", n: int) -> Column:
     """The `n` nearest centroid ids ordered by (d2, id) — fold-faithful
-    twin of the struct array_sort slice (queries/round7.py:_probe_array):
+    twin of the struct array_sort slice (queries/similarity.py:_probe_array):
     np.argsort(kind='stable') keeps ties in index order, matching the
     lexicographic (d, c) struct sort on both engines."""
     c = np.asarray(centers, dtype="float64")
@@ -315,7 +315,7 @@ def pd_fold_d2_tables(vec: Column | str, codebooks: "np.ndarray") -> Column:
     """Per-subspace ADC lookup tables (`array<array<double>>`, m arrays of
     k squared distances) against an (m, k, sub) codebook — fold-faithful
     twin of the per-centroid Catalyst d2 folds that build the query-side
-    tables in pq_adc_topk_pinned (queries/round5.py). Each table value is
+    tables in pq_adc_topk_pinned (queries/similarity.py). Each table value is
     the exact _fold_d2 result, so downstream `element_at` lookups and the
     pinned left-to-right adds stay bit-identical to the oracle."""
     books = np.asarray(codebooks, dtype="float64")

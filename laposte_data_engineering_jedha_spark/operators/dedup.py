@@ -1297,7 +1297,7 @@ def ppjoin_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     explode's natural key; the candidate equi-join's inverted lists are
     per-PREFIX-shingle — boilerplate shingles fall outside every
     prefix, so frequency-skewed corpora self-mitigate; survivors verify
-    by int64 array intersection. Used by queries/round13b.py (oracle-
+    by int64 array intersection. Used by queries/dedup.py (oracle-
     registered) and the decade ladder."""
     if threshold != 0.5:
         raise ValueError("ppjoin_pairs implements the exact t=0.5 bounds only")

@@ -1,5 +1,5 @@
 """Co-activity graph analytics at scale — the bounded production variant
-of the exact triangle count (queries/round4c.py:events_user_triangles).
+of the exact triangle count (queries/events.py:events_user_triangles).
 
 The exact pipeline's two superlinear inflation points, measured by the
 round-8 sf1 sweep (family exponent 1.53 — wedge volume is degree², so a
@@ -272,7 +272,7 @@ def kcore_peel(
     """Iterative k-core PEELING over an undirected edge list (u, v):
     each round drops every node with degree < k and every edge touching
     one, until fixpoint (`rounds=None`) or for a bounded number of
-    rounds (the SQL-expressible form queries/round13k.py registers).
+    rounds (the SQL-expressible form queries/graph.py:graph_kcore_peel registers).
     Returns [(round, n_nodes, n_edges)] after each peel.
 
     Scale shape: a round is one degree aggregate (explode both

@@ -81,7 +81,7 @@ def scd2_history(
     SCD2 is the other half of CDC ingestion next to `apply_changes`
     (which produces the LATEST snapshot and discards history); dimension
     joins against facts then use [valid_from, valid_to) containment —
-    see queries/llmops.py events_range_join for that join shape.
+    see queries/events.py events_range_join for that join shape.
 
     One per-key window, partitioned by the dimension key — at any scale
     each key's version list is tiny (bounded by change frequency), so the

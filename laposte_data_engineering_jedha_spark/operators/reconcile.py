@@ -1,7 +1,7 @@
 """Anti-entropy reconciliation between two table snapshots ("replicas")
 via hierarchical Merkle bucket digests — the incremental-reconcile
 operator promised by the registered `dq_merkle_bucket_diff` oracle
-(queries/round9g.py, whose fixed one-mutation shape stays the external
+(queries/dq.py:dq_merkle_bucket_diff, whose fixed one-mutation shape stays the external
 hash surface; this module is the general API over ARBITRARY snapshots).
 
 The 100 TB shape: two replicas of a table diverge by a handful of rows.

@@ -278,7 +278,7 @@ def pinned_codebook(m: int, k: int, sub: int) -> np.ndarray:
     division, a DuckDB oracle can reproduce the codebook bit-for-bit,
     which turns the otherwise iterative-fit-only PQ/IVF *encode and
     assignment* math into hash-checkable queries
-    (queries/round5.py: embedding_pq_encode_pinned, ivf_assign_pinned)."""
+    (queries/similarity.py: embedding_pq_encode_pinned, ivf_assign_pinned)."""
     j, c, d = np.ogrid[:m, :k, :sub]
     return (((c * sub + d + j * 31) % 17) - 8) / 8.0
 
@@ -577,6 +577,28 @@ def ivf_index_append(
     # both reuse it); per-delta counts come from their publish-time
     # manifests, not a re-read of every delta (ADVICE r12)
     new_postings = new_postings.persist()
+    # search drops a repeated cand_id only when its copies carry the same
+    # vector (equal copies rank next to each other in _ranked_topk_dedup),
+    # so an id may be republished only with the vector it is stored with
+    changed = (
+        _index_postings(spark, path)
+        .select("cand_id", F.col("cv").alias("stored_cv"))
+        .join(new_postings.select("cand_id", "cv"), "cand_id")
+        .where(~F.col("cv").eqNullSafe(F.col("stored_cv")))
+        .select("cand_id")
+        .distinct()
+        .orderBy("cand_id")
+        .limit(20)
+        .collect()
+    )
+    if changed:
+        new_postings.unpersist()
+        ids = [r["cand_id"] for r in changed]
+        raise ValueError(
+            f"ivf_index_append: {id_col} {ids} already indexed at {path!r} "
+            "with a different vector; rebuild the index with ivf_index_write "
+            "to change a stored vector"
+        )
     n_new = new_postings.count()
     n_delta = sum(_delta_rowcount(spark, d) for d in deltas) + n_new
 
@@ -613,10 +635,11 @@ def ivf_index_append(
         )
         with open(os.path.join(scratch, _CONSUMED_MANIFEST), "w") as fh:
             json.dump(sorted(consumed), fh)
-        # single-writer swap (documented contract, same as the scratch
-        # paths in queries/round11a.py): tear down the old root, move the
-        # compacted index into place. Concurrent READERS of the same path
-        # during a compaction are outside the single-writer contract.
+        # single-writer swap (documented contract, same as the layout
+        # queries' scratch paths in queries/io.py): tear down the old root,
+        # move the compacted index into place. Concurrent READERS of the
+        # same path during a compaction are outside the single-writer
+        # contract.
         old = f"{path}.old-{uuid.uuid4().hex[:8]}"
         os.rename(path, old)
         os.rename(scratch, path)
@@ -745,7 +768,7 @@ def pq_fit_lloyd_pinned(
 ) -> np.ndarray:
     """DETERMINISTIC product-quantization fit — seeded init + quantized
     Lloyd steps, bit-reproducible in plain SQL (the DuckDB twin in
-    queries/round8b.py runs the identical procedure), which is what turns
+    queries/similarity.py runs the identical procedure), which is what turns
     the otherwise iterative-fit-only `embedding_pq_codes` into a full
     hash row:
 

@@ -3,14 +3,12 @@ api:app --host 0.0.0.0 --port 80).
 
     python -m laposte_data_engineering_jedha_spark.plans.serve --port 8000
 
-Serving strategy mirrors `create_app()`'s framework fallback: when uvicorn
-is importable it serves (FastAPI app or MiniApp — both are ASGI
-callables); otherwise a dependency-free stdlib bridge
+`create_app()` returns the ASGI `MiniApp`. When uvicorn is importable it
+serves that app; otherwise a dependency-free stdlib bridge
 (`run_stdlib_server`) maps http.server requests onto the ASGI protocol —
 enough for the three JSON/zip endpoints, so the API is launchable in any
-environment that can run the engine itself. The bridge is a deployment
-shim for this container, not a production server: uvicorn (the Docker
-path) is the real front door.
+environment that can run the engine itself. The bridge is a fallback, not
+a production server: uvicorn (the Docker path) is the real front door.
 """
 
 from __future__ import annotations

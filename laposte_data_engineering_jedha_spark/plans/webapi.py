@@ -3,14 +3,14 @@ generate) -> background job -> zip download; GET /status/{id} poll;
 GET /download/{id}.
 
 The endpoint logic (`submit_job` / `status_payload` / `download_payload`)
-is framework-free; `create_app()` wires it into FastAPI when the library
-is importable and otherwise returns `MiniApp`, a dependency-free ASGI
-implementation of the SAME three routes (query params + multipart upload
-parsed with the stdlib), so the full POST -> poll -> download flow is
-endpoint-testable in this sandbox (tests/test_drivers.py). Job state lives
-in a module dict keyed by session id (reference api.py:26), one shared
-SparkSession serves all jobs, and each job gets its own output dir + zip.
-"""
+is framework-free; `create_app()` returns `MiniApp`, a dependency-free ASGI
+app serving those routes (query params + multipart upload parsed with the
+stdlib). Any ASGI server runs it (uvicorn in Docker, the stdlib bridge in
+plans/serve.py), and the full POST -> poll -> download flow is
+endpoint-testable without a web framework (tests/test_drivers.py). Job
+state lives in a module dict keyed by session id (reference api.py:26),
+one shared SparkSession serves all jobs, and each job gets its own output
+dir + zip."""
 
 from __future__ import annotations
 
@@ -138,18 +138,21 @@ def _parse_multipart(content_type: str, body: bytes) -> tuple[str, bytes] | None
 
 
 class MiniApp:
-    """Minimal ASGI implementation of the three endpoints — the fallback
-    `create_app()` returns when fastapi is absent. Speaks enough of the
-    ASGI http protocol for any ASGI server or test client: reads the full
-    request body, dispatches on (method, path), responds JSON (or the zip
-    bytes for /download)."""
+    """Minimal ASGI implementation of the three endpoints. Speaks enough of
+    the ASGI http protocol for any ASGI server or test client: reads the
+    full request body, dispatches on (method, path), responds JSON (or the
+    zip bytes for /download). Other scope types (a server's `lifespan`
+    probe, websockets) are ignored: the app needs no startup or shutdown
+    hook, and a server treats an app that returns on `lifespan` as one
+    without lifespan support."""
 
     def __init__(self, spark, workdir: str):
         self.spark = spark
         self.workdir = workdir
 
     async def __call__(self, scope, receive, send):
-        assert scope["type"] == "http"
+        if scope["type"] != "http":
+            return
         body = b""
         while True:
             message = await receive()
@@ -216,65 +219,11 @@ async def _respond(send, status: int, body: bytes, content_type: str) -> None:
 # --- app factory --------------------------------------------------------------
 
 
-def create_app(spark=None, workdir: str | None = None):
-    """Build the web app: a FastAPI app when the library is available,
-    otherwise the dependency-free `MiniApp` with the same routes."""
+def create_app(spark=None, workdir: str | None = None) -> MiniApp:
+    """Build the web app: one `MiniApp` over a shared SparkSession and a
+    job working directory."""
     from ..session import get_spark
 
     spark = spark or get_spark(app_name="laposte_etl_api")
     workdir = workdir or tempfile.mkdtemp(prefix="laposte_api_")
-    try:
-        return _create_fastapi_app(spark, workdir)
-    except ImportError:
-        return MiniApp(spark, workdir)
-
-
-def _create_fastapi_app(spark, workdir: str):  # pragma: no cover - env-dependent
-    from fastapi import BackgroundTasks, FastAPI, UploadFile
-    from fastapi.responses import FileResponse, JSONResponse
-
-    app = FastAPI(title="SuperCourier ETL (PySpark)")
-
-    @app.get("/")
-    def root():
-        return _service_descriptor()
-
-    @app.get("/ui")
-    def ui():
-        from fastapi.responses import Response
-
-        body, ctype = web_asset("index.html")
-        return Response(content=body, media_type=ctype)
-
-    @app.get("/static/app.css")
-    def css():
-        from fastapi.responses import Response
-
-        body, ctype = web_asset("app.css")
-        return Response(content=body, media_type=ctype)
-
-    @app.post("/run-etl")
-    async def run_etl(
-        background_tasks: BackgroundTasks,
-        rows: int = 1000,
-        formats: str = "all",
-        file: UploadFile | None = None,
-    ):
-        upload = (file.filename or "upload.csv", await file.read()) if file else None
-        session_id, config = prepare_job(workdir, rows, formats, upload)
-        background_tasks.add_task(run_etl_job, spark, session_id, config, workdir)
-        return {"session_id": session_id}
-
-    @app.get("/status/{session_id}")
-    def status(session_id: str):
-        code, payload = status_payload(session_id)
-        return payload if code == 200 else JSONResponse(payload, status_code=code)
-
-    @app.get("/download/{session_id}")
-    def download(session_id: str):
-        code, payload = download_path(session_id)
-        if code != 200:
-            return JSONResponse(payload, status_code=code)
-        return FileResponse(payload, filename=f"{session_id}.zip")
-
-    return app
+    return MiniApp(spark, workdir)

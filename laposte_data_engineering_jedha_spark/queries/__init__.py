@@ -21,14 +21,25 @@ value-hash matches bit-for-bit):
 - queries that LIMIT must sort on a unique key first (Spark row order is
   not deterministic across partitions).
 
-Submodules (each registers its queries on import):
-    parity      — SURVEY.md §2 reference-parity operators
-    io          — source/sink write→read round trips, one per format
-    olap, olap2 — TPC-H-shaped warehouse queries (aggregates, joins, top-k)
-    llmops      — 100 TB-scale extensions (dedup, similarity, text, events)
-    round4 … round13n — further olap, corpus/text, dedup, similarity/eval,
-                  events, dq, sketch, graph and streaming operators, one
-                  module per batch; each module docstring lists its queries
+Submodules, one per query domain (each registers its queries on import; a
+query lives in the module its name prefix maps to):
+    parity      — agg, expr, join, limit, pipeline, proj, setop: SURVEY.md §2
+                  reference-parity operators
+    io          — src, layout, multimodal: source/sink round trips, storage
+                  layout and multimodal payloads
+    olap        — TPC-H-shaped warehouse queries
+    events      — clickstream analytics over the events fact
+    text        — text, corpus: tokenization and corpus curation
+    dedup       — exact, near-duplicate and semantic deduplication
+    similarity  — embedding, eval, ivf, knn, pq: vector search and its
+                  quality metrics
+    dq          — data-quality checks and reconciliation
+    sketch      — mergeable approximate sketches
+    graph       — graph analytics over derived edge lists
+    stream      — stream, ml: incremental/streaming jobs and the pinned
+                  learning steps
+Helpers used by one domain live in its module; helpers used by several live
+here.
 """
 
 from __future__ import annotations
@@ -40,7 +51,11 @@ from collections.abc import Callable, Mapping
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import exprs
+from ..functions import exprs, texts, vectors
+# aliased: the query submodules `dedup` and `similarity` imported at the
+# bottom of this file rebind those two names in the package namespace
+from ..operators import dedup as dedup_ops
+from ..operators import similarity as similarity_ops
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -270,9 +285,164 @@ def sql_num_case(col: str, mapping: Mapping[str, float], default: float) -> str:
     return f"CASE {arms} ELSE CAST({default!r} AS DOUBLE) END"
 
 
-def sql_round2(x: str) -> str:
-    """SQL twin of exprs.round2 — the cross-engine 2-decimal convention."""
-    return f"round(({x}) * 100) / 100"
+# --- oracle-SQL helpers shared by more than one domain module ----------------
+
+
+def sql_md5i(x: str) -> str:
+    """Twin of texts.md5int32."""
+    return f"CAST('0x' || substr(md5({x}), 1, 8) AS BIGINT)"
+
+
+def sql_toks(c: str) -> str:
+    """Twin of texts.tokens."""
+    return rf"string_split_regex(trim(lower({c})), '\s+')"
+
+
+def sql_reduce_sum(products: str) -> str:
+    """Strict left-to-right double sum — twin of F.aggregate(_, 0.0, +)."""
+    return f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), {products}), (a, x) -> a + x)"
+
+
+def sql_round(x: str, scale: int) -> str:
+    m = 10**scale
+    return f"round(({x}) * {m}) / {m}"
+
+
+SQL_SHINGLES = "list_distinct([array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)])"
+
+SQL_STOP = {lang: "[" + ", ".join(f"'{w}'" for w in ws) + "]" for lang, ws in texts.STOPWORDS.items()}
+
+
+def sql_stop_hits(lang: str) -> str:
+    return f"len([x for x in t if list_contains({SQL_STOP[lang]}, x)])"
+
+
+SQL_NORM = (
+    "sqrt(" + sql_reduce_sum("[CAST(x AS DOUBLE) * x for x in embedding]") + ")"
+)
+
+
+def sql_dot(a: str, b: str, dim: int = 64) -> str:
+    return sql_reduce_sum(f"[CAST({a}[i] AS DOUBLE) * {b}[i] for i in range(1, {dim + 1})]")
+
+
+def _sql_hp_weight() -> str:
+    """Twin of vectors.py_hyperplane_weights: md5("p_i") -> [-1000, 1000]."""
+    h = "CAST('0x' || substr(md5(CAST(p AS VARCHAR) || '_' || CAST(i AS VARCHAR)), 1, 8) AS BIGINT)"
+    return f"({h} % {vectors.HP_MOD} - {vectors.HP_SHIFT})"
+
+
+_SQL_SHINGLE_CTES = f"""
+toks AS (SELECT doc_id, {sql_toks('text')} AS t FROM documents),
+sh AS (SELECT doc_id, {SQL_SHINGLES} AS s FROM toks)"""
+
+_P = texts.MERSENNE31
+
+_SQL_SIG = (
+    f"[coalesce(list_min([(x * (j * 2 + 3) + (j * j + 7)) % {_P} for x in h]), {_P}) "
+    f"for j in range(0, {texts.MINHASH_PERMS})]"
+)
+
+_ROWS = texts.MINHASH_PERMS // texts.MINHASH_BANDS
+
+_W = texts.SIMHASH_BITS // 4
+
+_SQL_SIMHASH = (
+    "list_reduce(list_prepend(CAST(0 AS BIGINT), "
+    f"[CASE WHEN list_sum([((x >> b) & 1) * 2 - 1 for x in h]) >= 0 THEN 1 ELSE 0 END "
+    f"for b in range(0, {texts.SIMHASH_BITS})]), (a, x) -> a * 2 + x)"
+)
+
+_EMB_BANDS, _EMB_BAND_PLANES = 8, 4
+
+
+def _sql_band_key(e: str, band_planes: int = _EMB_BAND_PLANES) -> str:
+    """Bucket id of band `band` (a column in scope): sign bits of planes
+    [band*band_planes, (band+1)*band_planes) packed MSB-first — the SQL twin
+    of vectors.pd_lsh_buckets_banded, same md5 hyperplanes."""
+    w = _sql_hp_weight()
+    d = sql_reduce_sum(f"[CAST({e}[i + 1] AS DOUBLE) * CAST({w} AS DOUBLE) for i in range(0, 64)]")
+    return (
+        "list_reduce(list_prepend(CAST(0 AS BIGINT), "
+        f"[CASE WHEN {d} >= 0 THEN 1 ELSE 0 END "
+        f"for p in range(band * {band_planes}, (band + 1) * {band_planes})]), "
+        "(a, x) -> a * 2 + x)"
+    )
+
+
+# Banded-LSH corpus-wide top-3 graph CTEs, shared by knn_graph and the
+# SemDeDup-style dedup_semantic composition. 4 bands x 6 planes
+# (OR-amplification — round-4 fix: the single-band shape measured
+# recall@3 = 0.0871, the one-band collision probability itself; banding
+# lifts recall to 1-(1-p)^4 for ~4x candidate compute, SCALE.md table).
+_GRAPH_BANDS, _GRAPH_BAND_PLANES = 4, 6
+
+_SQL_KNN_GRAPH_CTES = f"""n AS (SELECT vec_id, embedding AS e, {SQL_NORM} AS nrm FROM embeddings),
+nb AS (SELECT vec_id, e, nrm, CAST(r.range AS BIGINT) AS band
+       FROM n CROSS JOIN range(0, {_GRAPH_BANDS}) r WHERE nrm > 0),
+cb AS (SELECT vec_id, e, nrm, band, {_sql_band_key('e', _GRAPH_BAND_PLANES)} AS key FROM nb),
+capped AS (
+  SELECT *, row_number() OVER (
+    PARTITION BY band, key ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS _r
+  FROM cb),
+gpairs AS (
+  SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS cand_id,
+         {sql_round(f"{sql_dot('a.e', 'b.e')} / (a.nrm * b.nrm)", 6)} AS cosine
+  FROM cb a JOIN capped b ON a.band = b.band AND a.key = b.key
+  WHERE b._r <= 256 AND a.vec_id <> b.vec_id),
+granked AS (
+  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
+  FROM gpairs),
+knn AS (SELECT query_id, cand_id, cosine, rank FROM granked WHERE rank <= 3)"""
+
+
+def _r4(c: F.Column) -> F.Column:
+    return F.round(c * 10000) / 10000
+
+
+_PASSAGE_TOKENS = 8  # tokens per passage (dedup_passage)
+
+_HV52 = "CAST('0x' || substr(md5({x}), 1, 13) AS BIGINT)"
+
+# planes = max(4, ceil(log2(n / 64))) — the exact twin of
+# operators/dedup.auto_band_planes (target_bucket=64, floor=4). count(*)
+# is over the raw embeddings table on BOTH sides so the two engines can
+# never disagree about n.
+_SQL_AUTO_PLANES = (
+    "SELECT GREATEST(4, CAST(ceil(log2(count(*) / 64.0)) AS BIGINT)) AS planes "
+    "FROM embeddings"
+)
+
+# the graph CTE block of _SQL_KNN_GRAPH_CTES with the band width
+# COMPUTED from count(*) (np CTE) instead of the pinned constant
+_SQL_KNN_AUTO_CTES = f"""np AS ({_SQL_AUTO_PLANES}),
+n AS (SELECT vec_id, embedding AS e, {SQL_NORM} AS nrm FROM embeddings),
+nb AS (SELECT vec_id, e, nrm, CAST(r.range AS BIGINT) AS band, planes
+       FROM n CROSS JOIN np CROSS JOIN range(0, {_GRAPH_BANDS}) r
+       WHERE nrm > 0),
+cb AS (SELECT vec_id, e, nrm, band, {_sql_band_key('e', 'planes')} AS key
+       FROM nb),
+capped AS (
+  SELECT *, row_number() OVER (
+    PARTITION BY band, key ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS _r
+  FROM cb),
+gpairs AS (
+  SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS cand_id,
+         {sql_round(f"{sql_dot('a.e', 'b.e')} / (a.nrm * b.nrm)", 6)} AS cosine
+  FROM cb a JOIN capped b ON a.band = b.band AND a.key = b.key
+  WHERE b._r <= 256 AND a.vec_id <> b.vec_id),
+granked AS (
+  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
+  FROM gpairs),
+knn AS (SELECT query_id, cand_id, cosine, rank FROM granked WHERE rank <= 3)"""
+
+
+def _auto_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = table(spark, sf_dir, "embeddings")
+    planes = dedup_ops.auto_band_planes(table_rowcount(spark, sf_dir, "embeddings"))
+    return similarity_ops.knn_graph(
+        emb, k=3, dim=64, bands=_GRAPH_BANDS, band_planes=planes
+    )
 
 
 SQL_WEEKDAY_NAME = (
@@ -464,7 +634,7 @@ def oracle_sql() -> dict[str, str]:
 
 # Submodules register their queries on import (kept at the bottom so they can
 # import the helpers above).
-from . import io, llmops, olap, olap2, parity, round4, round4b, round4c, round5, round5b, round5c, round6, round6b, round6c, round6d, round6e, round6f, round6g, round6h, round6i, round6j, round6k, round6l, round6m, round6n, round6o, round6p, round7, round7b, round7c, round7d, round7e, round7f, round7g, round7h, round7i, round7j, round7k, round7l, round7m, round7n, round7o, round8a, round8b, round8c, round8d, round8e, round8f, round8g, round8h, round9a, round9b, round9c, round9d, round9e, round9f, round9g, round10a, round10b, round10c, round10d, round10e, round11a, round11b, round11c, round11d, round11e, round12a, round12b, round12c, round12d, round12e, round12f, round12g, round13a, round13b, round13c, round13d, round13e, round13f, round13g, round13h, round13i, round13j, round13k, round13l, round13m, round13n  # noqa: E402,F401
+from . import dedup, dq, events, graph, io, olap, parity, similarity, sketch, stream, text  # noqa: E402,F401
 from .parity import pipeline_delay_status  # noqa: E402,F401  (flagship re-export)
 
 

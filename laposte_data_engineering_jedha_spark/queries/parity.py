@@ -1,10 +1,11 @@
-"""Reference-parity queries — one registry entry per SURVEY.md §2 Op-ID.
+"""Reference-parity queries — one registry entry per SURVEY.md §2 Op-ID
+(name prefixes agg, expr, join, limit, pipeline, proj, setop).
 
 Each query phrases its operator over the driver's TPC-H-ish tables
 (TESTDATA.md) through the deterministic deliveries view, with a DuckDB
-oracle twin built from the shared SQL fragments so both sides stay in
-lockstep. Reference citations are in the wrapped library functions
-(functions/exprs.py, operators/transform.py).
+oracle twin built from the shared SQL fragments in queries/__init__.py so
+both sides stay in lockstep. Reference citations are in the wrapped library
+functions (functions/exprs.py, operators/transform.py).
 """
 
 from __future__ import annotations
@@ -23,15 +24,116 @@ from . import (
     deliveries_from_orders,
     query,
     sql_num_case,
-    sql_round2,
+    sql_round,
     sql_theoretical,
     synthetic_weather,
     table,
     with_deliveries,
 )
 
-_SECS = "date_diff('second', Pickup_DateTime, Delivery_Timestamp)"
 
+@query(
+    "join_semi_open_orders",
+    """
+SELECT o_orderpriority, count(*) AS n_orders
+FROM orders
+WHERE EXISTS (SELECT 1 FROM lineitem
+              WHERE l_orderkey = o_orderkey
+                AND l_shipdate > TIMESTAMP '2000-01-01 00:00:00')
+GROUP BY o_orderpriority""",
+)
+def join_semi_open_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LEFT SEMI join (TPC-H Q4 shape): orders having >=1 late-shipped line.
+    Semi joins never duplicate the left side, so no post-join distinct is
+    needed — the probe side short-circuits on first match."""
+    orders = table(spark, sf_dir, "orders")
+    late = (
+        table(spark, sf_dir, "lineitem")
+        .where(F.col("l_shipdate") > F.lit("2000-01-01 00:00:00").cast("timestamp"))
+        .select("l_orderkey")
+    )
+    return (
+        orders.join(late, orders.o_orderkey == late.l_orderkey, "left_semi")
+        .groupBy("o_orderpriority")
+        .agg(F.count(F.lit(1)).alias("n_orders"))
+    )
+
+
+@query(
+    "join_anti_customers_no_orders",
+    """
+SELECT c_mktsegment, count(*) AS n_customers
+FROM customer
+WHERE NOT EXISTS (SELECT 1 FROM orders
+                  WHERE o_custkey = c_custkey
+                    AND o_orderdate >= TIMESTAMP '1997-01-01 00:00:00')
+GROUP BY c_mktsegment""",
+)
+def join_anti_customers_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LEFT ANTI join: customers with no order since 1997, by segment — the
+    null-safe NOT EXISTS shape (anti join avoids NOT IN's null trap)."""
+    cust = table(spark, sf_dir, "customer")
+    orders = (
+        table(spark, sf_dir, "orders")
+        .where(F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
+        .select("o_custkey")
+    )
+    return (
+        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
+        .groupBy("c_mktsegment")
+        .agg(F.count(F.lit(1)).alias("n_customers"))
+    )
+
+
+@query(
+    "setop_intersect_repeat_buyers",
+    """
+SELECT o_custkey AS custkey FROM orders
+WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+  AND o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
+INTERSECT
+SELECT o_custkey FROM orders
+WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
+  AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'""",
+)
+def setop_intersect_repeat_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """INTERSECT (distinct semantics): customers active in both 1996 and
+    1997. Catalyst plans it as a left-semi join over pre-aggregated sides."""
+    orders = table(spark, sf_dir, "orders")
+
+    def active(year: int):
+        return orders.where(
+            (F.col("o_orderdate") >= F.lit(f"{year}-01-01 00:00:00").cast("timestamp"))
+            & (F.col("o_orderdate") < F.lit(f"{year + 1}-01-01 00:00:00").cast("timestamp"))
+        ).select(F.col("o_custkey").alias("custkey"))
+
+    return active(1996).intersect(active(1997))
+
+
+@query(
+    "setop_except_lapsed_buyers",
+    """
+SELECT o_custkey AS custkey FROM orders
+WHERE o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
+EXCEPT
+SELECT o_custkey FROM orders
+WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'""",
+)
+def setop_except_lapsed_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXCEPT (distinct semantics): customers who ordered before 1997 but
+    never after — planned as a left-anti join."""
+    orders = table(spark, sf_dir, "orders")
+    cutoff = F.lit("1997-01-01 00:00:00").cast("timestamp")
+    before = orders.where(F.col("o_orderdate") < cutoff).select(
+        F.col("o_custkey").alias("custkey")
+    )
+    after = orders.where(F.col("o_orderdate") >= cutoff).select(
+        F.col("o_custkey").alias("custkey")
+    )
+    return before.subtract(after)
+
+
+_SECS = "date_diff('second', Pickup_DateTime, Delivery_Timestamp)"
 
 # --- flagship: the full pipeline ---------------------------------------------
 
@@ -49,7 +151,7 @@ t2 AS (
 ),
 t3 AS (
   SELECT t2.*,
-         {sql_round2(f"{_SECS} / 60")} AS Actual_Delivery_Time_Minutes,
+         {sql_round(f"{_SECS} / 60", 2)} AS Actual_Delivery_Time_Minutes,
          CAST({_SECS} // 60 AS VARCHAR) || '.' ||
            lpad(CAST({_SECS} % 60 AS VARCHAR), 2, '0')
            AS Actual_Delivery_Time_Display,
@@ -59,7 +161,7 @@ t3 AS (
 SELECT Delivery_ID, Pickup_DateTime, Delivery_Timestamp, Package_Type, Distance,
        Delivery_Zone, Hour, Weekday, Weather_Condition,
        Actual_Delivery_Time_Minutes, Actual_Delivery_Time_Display,
-       {sql_round2('theo')} AS Theoretical_Time_Minutes,
+       {sql_round('theo', 2)} AS Theoretical_Time_Minutes,
        CASE WHEN Actual_Delivery_Time_Minutes > theo * CAST(1.2 AS DOUBLE)
             THEN 'Delayed' ELSE 'On-time' END AS Status
 FROM t3
@@ -100,7 +202,7 @@ def expr_ts_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "expr_minutes",
     oracle=with_deliveries(
-        f"SELECT Delivery_ID, {sql_round2(f'{_SECS} / 60')} AS actual_minutes FROM deliveries"
+        f"SELECT Delivery_ID, {sql_round(f'{_SECS} / 60', 2)} AS actual_minutes FROM deliveries"
     ),
 )
 def expr_minutes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -240,7 +342,7 @@ def expr_regex_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     "expr_theoretical",
     oracle=with_deliveries(
         f"""SELECT Delivery_ID,
-        {sql_round2(sql_theoretical(hour='CAST(hour(Pickup_DateTime) AS INTEGER)', weekday=SQL_WEEKDAY_NAME.format(ts='Pickup_DateTime'), weather='NULL'))}
+        {sql_round(sql_theoretical(hour='CAST(hour(Pickup_DateTime) AS INTEGER)', weekday=SQL_WEEKDAY_NAME.format(ts='Pickup_DateTime'), weather='NULL'), 2)}
           AS Theoretical_Time_Minutes
         FROM deliveries"""
     ),
@@ -262,7 +364,7 @@ def expr_theoretical(spark: SparkSession, sf_dir: str) -> DataFrame:
     "expr_status",
     oracle=with_deliveries(
         f"""SELECT Delivery_ID,
-        CASE WHEN {sql_round2(f'{_SECS} / 60')} >
+        CASE WHEN {sql_round(f'{_SECS} / 60', 2)} >
                   {sql_theoretical(hour='CAST(hour(Pickup_DateTime) AS INTEGER)', weekday=SQL_WEEKDAY_NAME.format(ts='Pickup_DateTime'), weather='NULL')} * CAST(1.2 AS DOUBLE)
              THEN 'Delayed' ELSE 'On-time' END AS Status
         FROM deliveries"""

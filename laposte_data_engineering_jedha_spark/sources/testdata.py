@@ -42,6 +42,9 @@ PART_TYPES = ["ECONOMY", "STANDARD", "PROMO", "SMALL", "MEDIUM", "LARGE"]
 RETURN_FLAGS = ["R", "A", "N"]
 EVENT_TYPES = ["view", "click", "purchase", "signup", "error"]
 DOC_LANGS = ["en", "fr", "de", "es", "zh"]
+# width of every fixture embedding; the vector queries and their oracle SQL
+# read it from here
+EMB_DIM = 64
 DOC_VOCAB = (
     "the a data spark table row column key value join merge sort hash scan "
     "filter group agg window batch stream query part order line customer "
@@ -234,7 +237,7 @@ def generate(out_dir: str, sf: float = 0.001, seed: int = 42) -> dict[str, int]:
     )
 
     n_emb = _rows(20_000, sf, 500)
-    vecs = rng.standard_normal((n_emb, 64)).astype(np.float32)
+    vecs = rng.standard_normal((n_emb, EMB_DIM)).astype(np.float32)
     vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
     write(
         "embeddings",

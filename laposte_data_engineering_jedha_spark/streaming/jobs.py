@@ -10,7 +10,7 @@ Scale notes: tumbling-window counts are a streaming state store keyed by
 operators run on `applyInPandasWithState` with event-time timeouts, each
 with a batch twin it is equivalence-tested against (several oracle-
 registered): the 30-min-gap sessionizer (user_id key; batch twin
-queries/llmops.py:events_sessionize), funnel detection, CEP pattern
+queries/events.py:events_sessionize), funnel detection, CEP pattern
 completions, trailing-hour rate alerts, exactly-once windowed top-k
 trending, the per-type CUSUM control chart, the per-type Holt
 linear-trend forecaster, and its seasonal Holt-Winters upgrade (period-7
@@ -106,7 +106,7 @@ def attribution_join(
 ) -> DataFrame:
     """Stream-stream join: every click attributed to the same-user
     purchase whose 2-hour follow-window contains it (the streaming twin of
-    the batch range join in queries/llmops.py:events_range_join).
+    the batch range join in queries/events.py:events_range_join).
     how="left_outer" additionally null-extends unconverted clicks once the
     watermark passes their window close — withheld until provably
     unmatched, never emitted early (pinned by
@@ -222,7 +222,7 @@ def run_dedup_available_now(
     return _run_to_memory(stream, query_name, "append")
 
 
-SESSION_GAP_S = 1800  # 30 min, matches queries/llmops.py:events_sessionize
+SESSION_GAP_S = 1800  # 30 min, matches queries/events.py:events_sessionize
 
 SESSION_OUT_SCHEMA = (
     "user_id long, session_start timestamp, session_end timestamp, n_events long"
@@ -362,7 +362,7 @@ SESSION_GAP = "30 minutes"
 def session_window_counts(events: DataFrame, with_watermark: bool = False) -> DataFrame:
     """Native session-window per-user counts — the SAME merge-on-overlap
     operator as the batch query events_session_window_native (see
-    queries/llmops.py for the empirically-pinned exact-30:00 boundary
+    queries/events.py for the empirically-pinned exact-30:00 boundary
     semantics), here built once for both batch and streaming inputs.
 
     In streaming mode the watermark gives session state an expiry: a
@@ -1035,7 +1035,7 @@ def cusum_control_stream(events: DataFrame) -> DataFrame:
     longs + the pending (day, count) pairs inside one watermark horizon;
     keys are event types, so state is O(types) forever — the
     run-forever shape. Batch twin (oracle-checked, recursive-CTE SQL):
-    queries/round12g.py:events_cusum_control."""
+    queries/events.py:events_cusum_control."""
 
     def fold(key, pdfs, state: GroupState):
         (event_type,) = key
@@ -1192,7 +1192,7 @@ def holt_forecast_stream(events: DataFrame) -> DataFrame:
     finalize). The smoothing recursion is integer fixed-point (1/256
     units, power-of-two floor divisions) so the fold is bit-exact across
     the stream, the batch twin, and the recursive-CTE oracle
-    (queries/round13a.py:events_holt_forecast). State per key = 2 longs
+    (queries/events.py:events_holt_forecast). State per key = 2 longs
     + one watermark horizon of pending (day, count) pairs; keys are
     event types, so state is O(types) forever — the run-forever shape."""
 
@@ -1353,7 +1353,7 @@ def batch_holt_winters(events: DataFrame) -> DataFrame:
     CALENDAR (Monday = 0), so day gaps skip slots instead of shifting
     the season — the property that keeps the fold mergeable across
     ingest backfills. Oracle: recursive CTE carrying the seasonal
-    7-list (queries/round13i.py)."""
+    7-list (queries/events.py:events_holt_winters_daily)."""
     daily = events.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
     ).agg(F.count(F.lit(1)).cast("long").alias("x"))
@@ -1404,7 +1404,7 @@ def holt_winters_stream(events: DataFrame) -> DataFrame:
     gaps skip slots rather than shift the season. Integer fixed-point
     fold (_hw_step) bit-exact across the stream, the batch twin
     (batch_holt_winters), and the list-state recursive-CTE oracle
-    (queries/round13i.py:events_holt_winters_daily). State per key =
+    (queries/events.py:events_holt_winters_daily). State per key =
     9 longs + one watermark horizon of pending (day, count) pairs;
     keys are event types — O(types) forever, the run-forever shape."""
 

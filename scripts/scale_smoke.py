@@ -944,7 +944,7 @@ def round6_scale(spark) -> None:
     (events x100 with shifted users ~ 10M events / 150k users) drives the
     interval-overlap join, label propagation, and session revenue; the
     1M-doc corpus drives the passage scrub."""
-    from laposte_data_engineering_jedha_spark.queries import round6
+    from laposte_data_engineering_jedha_spark.queries import events, graph
 
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
     reps = spark.range(100).select(F.col("id").alias("rep"))
@@ -968,7 +968,7 @@ def round6_scale(spark) -> None:
             os.symlink(tmp, f"{shim_dir}/events.parquet")
         timed(
             "events_interval_overlap @10M events",
-            round6.events_interval_overlap(spark, shim_dir),
+            events.events_interval_overlap(spark, shim_dir),
         )
         # label prop: an uncapped edge build is quadratic in hot-cell
         # membership by construction (this synthetic 100x peak puts every
@@ -984,12 +984,12 @@ def round6_scale(spark) -> None:
         if not os.path.exists(f"{shim20}/events.parquet"):
             os.symlink(tmp20, f"{shim20}/events.parquet")
         timed(
-            f"label_prop (cap {round6._LP_CELL_CAP_BIG}) @2M events",
-            round6.graph_label_prop_communities(spark, shim20),
+            f"label_prop (cap {graph._LP_CELL_CAP_BIG}) @2M events",
+            graph.graph_label_prop_communities(spark, shim20),
         )
         timed(
             "events_session_revenue @10M events",
-            round6.events_session_revenue(spark, shim_dir),
+            events.events_session_revenue(spark, shim_dir),
         )
         docs1m = blown_up_docs(spark, 200)
         toks = docs1m.select("doc_id", texts.tokens("text").alias("t"))
@@ -1048,10 +1048,9 @@ def round6b_scale(spark) -> None:
     import tempfile
 
     from laposte_data_engineering_jedha_spark.queries import (
+        events,
         events_table,
-        round6b,
-        round6c,
-        round6d,
+        similarity as q_similarity,
     )
 
     tmp = tempfile.mkdtemp(prefix="scale_round6b_")
@@ -1079,10 +1078,10 @@ def round6b_scale(spark) -> None:
         big.unionByName(hot).write.mode("overwrite").parquet(f"{tmp}/events.parquet")
 
         timed("heavy_hitters (MG 2-pass) @21M events",
-              round6b.events_heavy_hitters(spark, tmp))
+              events.events_heavy_hitters(spark, tmp))
         got = {
             (r["user_id"], r["n_events"])
-            for r in round6b.events_heavy_hitters(spark, tmp).collect()
+            for r in events.events_heavy_hitters(spark, tmp).collect()
         }
         plain = events_table(spark, tmp).groupBy("user_id").agg(
             F.count(F.lit(1)).alias("n_events")
@@ -1095,16 +1094,16 @@ def round6b_scale(spark) -> None:
         assert got == want, (got, want)
         print(f"  MG result == plain GROUP BY/HAVING: {sorted(got)}")
         timed("kmv_distinct @21M events / 30k users",
-              round6b.events_kmv_distinct(spark, tmp))
+              events.events_kmv_distinct(spark, tmp))
         timed("pattern_match @21M events",
-              round6c.events_pattern_match(spark, tmp))
+              events.events_pattern_match(spark, tmp))
         timed("attribution_position @21M events",
-              round6c.events_attribution_position(spark, tmp))
+              events.events_attribution_position(spark, tmp))
 
         vecs = blown_up_vecs(spark, 80)
         vecs.write.mode("overwrite").parquet(f"{tmp}/embeddings.parquet")
         timed("kmedoid_step @400k vectors",
-              round6d.embedding_kmedoid_step(spark, tmp))
+              q_similarity.embedding_kmedoid_step(spark, tmp))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1118,11 +1117,10 @@ def round6c_scale(spark) -> None:
     import tempfile
 
     from laposte_data_engineering_jedha_spark.queries import (
+        dedup as q_dedup,
+        events,
         events_table,
-        round6e,
-        round6f,
-        round6g,
-        round6h,
+        text,
     )
 
     tmp = tempfile.mkdtemp(prefix="scale_round6c_")
@@ -1140,34 +1138,34 @@ def round6c_scale(spark) -> None:
         big.write.mode("overwrite").parquet(f"{tmp}/events.parquet")
 
         timed("asof_next_error (forward) @21M events",
-              round6e.events_asof_next_error(spark, tmp))
+              events.events_asof_next_error(spark, tmp))
         timed("cep_completions @21M events",
-              round6e.events_cep_completions(spark, tmp))
+              events.events_cep_completions(spark, tmp))
         timed("audience_overlap @21M events",
-              round6f.events_audience_overlap(spark, tmp))
+              events.events_audience_overlap(spark, tmp))
         timed("forecast_seasonal_naive @21M events",
-              round6g.events_forecast_seasonal_naive(spark, tmp))
+              events.events_forecast_seasonal_naive(spark, tmp))
 
         docs = blown_up_docs(spark, 200)
         docs.select(
             "doc_id", "text", F.lit("en").alias("lang"),
             F.lit("web").alias("source"), F.length("text").alias("n_chars"),
         ).write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
-        timed("length_gini @1M docs", round6g.corpus_length_gini(spark, tmp))
+        timed("length_gini @1M docs", text.corpus_length_gini(spark, tmp))
         docs100k = blown_up_docs(spark, 20)
         docs100k.select(
             "doc_id", "text", F.lit("en").alias("lang"),
             F.lit("web").alias("source"), F.length("text").alias("n_chars"),
         ).write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
         timed("minhash_calibration @100k docs",
-              round6h.dedup_minhash_calibration(spark, tmp))
+              q_dedup.dedup_minhash_calibration(spark, tmp))
 
-        from laposte_data_engineering_jedha_spark.queries import round6i
+        from laposte_data_engineering_jedha_spark.queries import similarity as q_similarity
 
         vecs = blown_up_vecs(spark, 80)
         vecs.write.mode("overwrite").parquet(f"{tmp}/embeddings.parquet")
         timed("power_iteration @400k vectors",
-              round6i.embedding_power_iteration(spark, tmp))
+              q_similarity.embedding_power_iteration(spark, tmp))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1180,13 +1178,7 @@ def round6d_scale(spark) -> None:
     import shutil
     import tempfile
 
-    from laposte_data_engineering_jedha_spark.queries import (
-        events_table,
-        round6j,
-        round6k,
-        round6l,
-        round6m,
-    )
+    from laposte_data_engineering_jedha_spark.queries import events, events_table, olap
 
     tmp = tempfile.mkdtemp(prefix="scale_round6d_")
     try:
@@ -1205,14 +1197,14 @@ def round6d_scale(spark) -> None:
         # aggregate a produced column so the windows actually execute
         timed(
             "lag_features @21M events",
-            round6j.events_lag_features(spark, tmp).agg(
+            events.events_lag_features(spark, tmp).agg(
                 F.sum("roll5_cents").alias("_chk")
             ),
         )
-        timed("markov_absorb2 @21M events", round6j.events_markov_absorb2(spark, tmp))
-        timed("sankey_edges @21M events", round6k.events_sankey_edges(spark, tmp))
+        timed("markov_absorb2 @21M events", events.events_markov_absorb2(spark, tmp))
+        timed("sankey_edges @21M events", events.events_sankey_edges(spark, tmp))
         timed("new_vs_returning @21M events",
-              round6l.events_new_vs_returning(spark, tmp))
+              events.events_new_vs_returning(spark, tmp))
 
         li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
         lcopies = spark.range(10).select(F.col("id").alias("_c"))
@@ -1234,14 +1226,14 @@ def round6d_scale(spark) -> None:
             *rest,
         ).write.mode("overwrite").parquet(f"{tmp}/orders.parquet")
 
-        timed("supplier_hhi @6M lines", round6j.olap_supplier_hhi(spark, tmp))
+        timed("supplier_hhi @6M lines", olap.olap_supplier_hhi(spark, tmp))
         timed("cumulative_share @6M lines",
-              round6j.olap_cumulative_revenue_share(spark, tmp))
+              olap.olap_cumulative_revenue_share(spark, tmp))
         timed("abc_classification @6M lines",
-              round6k.olap_abc_classification(spark, tmp))
+              olap.olap_abc_classification(spark, tmp))
         timed("ship_cycle_percentiles @6M lines",
-              round6l.olap_ship_cycle_percentiles(spark, tmp))
-        timed("basket_affinity @6M lines", round6m.olap_basket_affinity(spark, tmp))
+              olap.olap_ship_cycle_percentiles(spark, tmp))
+        timed("basket_affinity @6M lines", olap.olap_basket_affinity(spark, tmp))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1255,10 +1247,10 @@ def round6e_scale(spark) -> None:
     import tempfile
 
     from laposte_data_engineering_jedha_spark.queries import (
+        events,
         events_table,
-        round6n,
-        round6o,
-        round6p,
+        similarity as q_similarity,
+        text,
     )
 
     tmp = tempfile.mkdtemp(prefix="scale_round6e_")
@@ -1270,9 +1262,9 @@ def round6e_scale(spark) -> None:
             F.concat("text", F.lit(" rep"), F.col("rep")).alias("text"),
             "lang", "source", "n_chars",
         ).write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
-        timed("tv_distance @1M docs", round6o.corpus_source_tv_distance(spark, tmp))
+        timed("tv_distance @1M docs", text.corpus_source_tv_distance(spark, tmp))
         timed("cross_source_dupes @1M docs (worst case)",
-              round6n.corpus_cross_source_dupes(spark, tmp))
+              text.corpus_cross_source_dupes(spark, tmp))
 
         ev = events_table(spark, SF_DIR)
         copies = spark.range(200).select(F.col("id").alias("_copy"))
@@ -1283,7 +1275,7 @@ def round6e_scale(spark) -> None:
             "event_type", "value", "props",
         ).write.mode("overwrite").parquet(f"{tmp}/events.parquet")
         timed("bounce_rate @21M events",
-              round6p.events_session_bounce_rate(spark, tmp))
+              events.events_session_bounce_rate(spark, tmp))
 
         emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
         emb.crossJoin(reps).select(
@@ -1291,7 +1283,7 @@ def round6e_scale(spark) -> None:
             "embedding", "label",
         ).write.mode("overwrite").parquet(f"{tmp}/embeddings.parquet")
         timed("knn_label_accuracy (gemm) @400k vectors",
-              round6p.embedding_knn_label_accuracy(spark, tmp))
+              q_similarity.embedding_knn_label_accuracy(spark, tmp))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1306,10 +1298,10 @@ def round7_scale(spark) -> None:
     import tempfile
 
     from laposte_data_engineering_jedha_spark.queries import (
+        dq,
+        events,
         events_table,
-        round6,
-        round6l,
-        round6n,
+        olap,
     )
 
     tmp = tempfile.mkdtemp(prefix="scale_round7_")
@@ -1322,8 +1314,8 @@ def round7_scale(spark) -> None:
             (F.col("user_id") + F.col("_copy") * 1_000_000).alias("user_id"),
             "event_type", "value", "props",
         ).write.mode("overwrite").parquet(f"{tmp}/events.parquet")
-        timed("rfm_segments @21M events", round6.events_rfm_segments(spark, tmp))
-        timed("cohort_ltv @21M events", round6.events_cohort_ltv(spark, tmp))
+        timed("rfm_segments @21M events", events.events_rfm_segments(spark, tmp))
+        timed("cohort_ltv @21M events", events.events_cohort_ltv(spark, tmp))
 
         lcopies = spark.range(10).select(F.col("id").alias("_c"))
         li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
@@ -1343,9 +1335,9 @@ def round7_scale(spark) -> None:
                 "overwrite"
             ).parquet(f"{tmp}/{t}.parquet")
         timed("discount_quantity_corr @6M lines",
-              round6n.olap_discount_quantity_corr(spark, tmp))
+              olap.olap_discount_quantity_corr(spark, tmp))
         timed("referential_orphans @6M lines",
-              round6l.dq_referential_orphans(spark, tmp))
+              dq.dq_referential_orphans(spark, tmp))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1360,15 +1352,14 @@ def round7b_scale(spark) -> None:
     import tempfile
 
     from laposte_data_engineering_jedha_spark.queries import (
+        dedup as q_dedup,
+        dq,
+        events,
         events_table,
-        round7b,
-        round7c,
-        round7d,
-        round7e,
-        round7f,
-        round7g,
-        round7h,
-        round7i,
+        io,
+        olap,
+        similarity as q_similarity,
+        text,
     )
 
     tmp = tempfile.mkdtemp(prefix="scale_round7b_")
@@ -1382,20 +1373,20 @@ def round7b_scale(spark) -> None:
             "event_type", "value", "props",
         ).write.mode("overwrite").parquet(f"{tmp}/events.parquet")
         timed("target_encoding @21M events",
-              round7b.events_target_encoding(spark, tmp)
+              events.events_target_encoding(spark, tmp)
               .agg(F.sum("te_value").alias("_chk")))
-        timed("value_auc @21M events", round7b.eval_value_auc(spark, tmp))
-        timed("bot_detection @21M events", round7b.events_bot_detection(spark, tmp))
-        timed("dau_wau @21M events", round7c.events_dau_wau_ratio(spark, tmp))
-        timed("holt_linear @21M events", round7d.events_holt_linear(spark, tmp))
+        timed("value_auc @21M events", q_similarity.eval_value_auc(spark, tmp))
+        timed("bot_detection @21M events", events.events_bot_detection(spark, tmp))
+        timed("dau_wau @21M events", events.events_dau_wau_ratio(spark, tmp))
+        timed("holt_linear @21M events", events.events_holt_linear(spark, tmp))
         timed("weekday_seasonality @21M events",
-              round7d.events_weekday_seasonality(spark, tmp))
+              events.events_weekday_seasonality(spark, tmp))
         timed("error_burn_rate @21M events",
-              round7d.events_error_burn_rate(spark, tmp))
+              events.events_error_burn_rate(spark, tmp))
         timed("transition_timing @21M events",
-              round7g.events_transition_timing(spark, tmp))
+              events.events_transition_timing(spark, tmp))
         timed("asof_nearest @21M events",
-              round7h.events_asof_nearest_error(spark, tmp))
+              events.events_asof_nearest_error(spark, tmp))
 
         lcopies = spark.range(10).select(F.col("id").alias("_c"))
         li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
@@ -1415,18 +1406,18 @@ def round7b_scale(spark) -> None:
             spark.read.parquet(f"{SF_DIR}/{t}.parquet").write.mode(
                 "overwrite"
             ).parquet(f"{tmp}/{t}.parquet")
-        timed("corr_matrix @6M lines", round7b.olap_numeric_corr_matrix(spark, tmp))
+        timed("corr_matrix @6M lines", olap.olap_numeric_corr_matrix(spark, tmp))
         timed("open_order_backlog @6M lines",
-              round7g.olap_open_order_backlog(spark, tmp))
+              olap.olap_open_order_backlog(spark, tmp))
         timed("monthly_median @6M lines",
-              round7g.olap_monthly_median_order_value(spark, tmp))
+              olap.olap_monthly_median_order_value(spark, tmp))
         timed("share_momentum @6M lines",
-              round7i.olap_nation_share_momentum(spark, tmp))
+              olap.olap_nation_share_momentum(spark, tmp))
         timed("uniqueness_report @6M lines (7 tables)",
-              round7c.dq_uniqueness_report(spark, tmp))
+              dq.dq_uniqueness_report(spark, tmp))
         timed("snapshot_rowdiff @1.5M orders",
-              round7h.dq_snapshot_rowdiff(spark, tmp))
-        timed("freshness_report @27M rows", round7i.dq_freshness_report(spark, tmp))
+              dq.dq_snapshot_rowdiff(spark, tmp))
+        timed("freshness_report @27M rows", dq.dq_freshness_report(spark, tmp))
 
         docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
         reps = spark.range(200).select(F.col("id").alias("rep"))
@@ -1435,31 +1426,31 @@ def round7b_scale(spark) -> None:
             F.concat("text", F.lit(" rep"), F.col("rep")).alias("text"),
             "lang", "source", "n_chars",
         ).write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
-        timed("bpe_merge_step @1M docs", round7e.text_bpe_merge_step(spark, tmp))
-        timed("ngram_coverage @1M docs", round7e.corpus_ngram_coverage(spark, tmp))
+        timed("bpe_merge_step @1M docs", text.text_bpe_merge_step(spark, tmp))
+        timed("ngram_coverage @1M docs", text.corpus_ngram_coverage(spark, tmp))
         timed("vocab_first_seen @1M docs",
-              round7e.corpus_vocab_first_seen(spark, tmp))
+              text.corpus_vocab_first_seen(spark, tmp))
         timed("chunk_windows @1M docs",
-              round7i.multimodal_chunk_windows(spark, tmp)
+              io.multimodal_chunk_windows(spark, tmp)
               .agg(F.sum("end_ms").alias("_chk")))
         timed("part_name_links @20k parts (distinct-name grain)",
-              round7c.dq_part_name_links(spark, tmp))
+              dq.dq_part_name_links(spark, tmp))
 
         docs.crossJoin(spark.range(20).select(F.col("id").alias("rep"))).select(
             (F.col("doc_id") + F.col("rep") * 1_000_000).alias("doc_id"),
             F.concat("text", F.lit(" rep"), F.col("rep")).alias("text"),
             "lang", "source", "n_chars",
         ).write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
-        timed("threshold_sweep @100k docs", round7h.dedup_threshold_sweep(spark, tmp))
+        timed("threshold_sweep @100k docs", q_dedup.dedup_threshold_sweep(spark, tmp))
 
         emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
         emb.crossJoin(reps).select(
             (F.col("vec_id") + F.col("rep") * 1_000_000).alias("vec_id"),
             "embedding", "label",
         ).write.mode("overwrite").parquet(f"{tmp}/embeddings.parquet")
-        timed("bucket_skew @400k vectors", round7f.embedding_bucket_skew(spark, tmp))
+        timed("bucket_skew @400k vectors", q_similarity.embedding_bucket_skew(spark, tmp))
         timed("norm_profile @400k vectors",
-              round7f.embedding_norm_profile(spark, tmp))
+              q_similarity.embedding_norm_profile(spark, tmp))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1471,11 +1462,14 @@ def round7c_scale(spark) -> None:
     import tempfile
 
     from laposte_data_engineering_jedha_spark.queries import (
+        dedup as q_dedup,
+        dq,
+        events,
         events_table,
-        round7h,
-        round7j,
-        round7k,
-        round7l,
+        olap,
+        similarity as q_similarity,
+        stream,
+        text,
     )
 
     tmp = tempfile.mkdtemp(prefix="scale_round7c_")
@@ -1488,12 +1482,12 @@ def round7c_scale(spark) -> None:
             (F.col("user_id") + F.col("_copy") * 1_000_000).alias("user_id"),
             "event_type", "value", "props",
         ).write.mode("overwrite").parquet(f"{tmp}/events.parquet")
-        timed("tumbling_dau chain @21M events", round7j.stream_tumbling_dau(spark, tmp))
+        timed("tumbling_dau chain @21M events", stream.stream_tumbling_dau(spark, tmp))
         timed("engagement_breadth @21M events",
-              round7k.events_engagement_breadth(spark, tmp))
-        timed("first_digit @21M events", round7l.dq_value_first_digit(spark, tmp))
+              events.events_engagement_breadth(spark, tmp))
+        timed("first_digit @21M events", dq.dq_value_first_digit(spark, tmp))
         timed("weekday_hour_heatmap @21M events",
-              round7l.events_weekday_hour_heatmap(spark, tmp))
+              events.events_weekday_hour_heatmap(spark, tmp))
 
         lcopies = spark.range(10).select(F.col("id").alias("_c"))
         li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
@@ -1512,14 +1506,14 @@ def round7c_scale(spark) -> None:
             spark.read.parquet(f"{SF_DIR}/{t}.parquet").write.mode(
                 "overwrite"
             ).parquet(f"{tmp}/{t}.parquet")
-        timed("returns_rate @6M lines", round7j.olap_returns_rate_by_brand(spark, tmp))
+        timed("returns_rate @6M lines", olap.olap_returns_rate_by_brand(spark, tmp))
         timed("delay_variance @6M lines",
-              round7j.olap_supplier_delay_variance(spark, tmp))
+              olap.olap_supplier_delay_variance(spark, tmp))
         timed("log2_histogram @6M lines",
-              round7j.olap_order_value_log2_histogram(spark, tmp))
-        timed("reorder_interval @1.5M orders", round7k.olap_reorder_interval(spark, tmp))
+              olap.olap_order_value_log2_histogram(spark, tmp))
+        timed("reorder_interval @1.5M orders", olap.olap_reorder_interval(spark, tmp))
         timed("customer_concentration @1.5M orders",
-              round7l.olap_customer_concentration(spark, tmp))
+              olap.olap_customer_concentration(spark, tmp))
 
         docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
         reps = spark.range(200).select(F.col("id").alias("rep"))
@@ -1529,13 +1523,13 @@ def round7c_scale(spark) -> None:
             "lang", "source", "n_chars",
         ).write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
         timed("shingle_df_profile @1M docs",
-              round7k.corpus_shingle_df_profile(spark, tmp))
+              text.corpus_shingle_df_profile(spark, tmp))
         docs.crossJoin(spark.range(20).select(F.col("id").alias("rep"))).select(
             (F.col("doc_id") + F.col("rep") * 1_000_000).alias("doc_id"),
             F.concat("text", F.lit(" rep"), F.col("rep")).alias("text"),
             "lang", "source", "n_chars",
         ).write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
-        timed("transitivity_gap @100k docs", round7l.dedup_transitivity_gap(spark, tmp))
+        timed("transitivity_gap @100k docs", q_dedup.dedup_transitivity_gap(spark, tmp))
 
         emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
         emb.crossJoin(reps).select(
@@ -1543,7 +1537,7 @@ def round7c_scale(spark) -> None:
             "embedding", "label",
         ).write.mode("overwrite").parquet(f"{tmp}/embeddings.parquet")
         timed("triplet_violation_rate @400k vectors",
-              round7k.embedding_triplet_violation_rate(spark, tmp))
+              q_similarity.embedding_triplet_violation_rate(spark, tmp))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Second-decade ladder for the END-TO-END SemDeDup composition
-(queries/llmops.py:dedup_semantic — banded-LSH kNN graph -> cosine
+(queries/dedup.py:dedup_semantic — banded-LSH kNN graph -> cosine
 threshold -> connected components -> survivor selection), 20k -> 200k
 vectors on the embedding ladder's planted corpora.
 
@@ -45,7 +45,7 @@ from laposte_data_engineering_jedha_spark.operators import (  # noqa: E402
     dedup,
     similarity,
 )
-from laposte_data_engineering_jedha_spark.queries import llmops  # noqa: E402
+from laposte_data_engineering_jedha_spark.queries import _GRAPH_BANDS  # noqa: E402
 from laposte_data_engineering_jedha_spark.session import get_spark  # noqa: E402
 
 N_RUNS = 3
@@ -68,7 +68,7 @@ def run_semdedup(spark, path: str) -> tuple[float, int, dict]:
         emb,
         k=3,
         dim=64,
-        bands=llmops._GRAPH_BANDS,
+        bands=_GRAPH_BANDS,
         band_planes=planes,
     )
     pairs = (

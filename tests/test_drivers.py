@@ -297,3 +297,165 @@ def test_webapi_serves_console_ui(webapp):
     status, css = _asgi_call(webapp, "GET", "/static/app.css")
     assert status == 200
     assert b".spinner" in css and b".filebox" in css
+
+
+def test_webapi_ignores_non_http_scopes(tmp_path):
+    """An ASGI server's `lifespan` probe (uvicorn sends one at startup)
+    must not raise: the app returns without sending anything, which the
+    server reads as "no lifespan support"."""
+    import asyncio
+
+    app = webapi.MiniApp(None, str(tmp_path))
+    sent = []
+
+    async def receive():
+        return {"type": "lifespan.startup"}
+
+    async def send(message):
+        sent.append(message)
+
+    asyncio.run(app({"type": "lifespan", "asgi": {"version": "3.0"}}, receive, send))
+    assert sent == []
+
+
+# --- query-module layout ---------------------------------------------------------
+
+# each query lives in the module named for its name prefix
+_QUERY_MODULES = {
+    "parity": ("agg", "expr", "join", "limit", "pipeline", "proj", "setop"),
+    "io": ("src", "layout", "multimodal"),
+    "olap": ("olap",),
+    "events": ("events",),
+    "text": ("text", "corpus"),
+    "dedup": ("dedup",),
+    "similarity": ("embedding", "eval", "ivf", "knn", "pq"),
+    "dq": ("dq",),
+    "sketch": ("sketch",),
+    "graph": ("graph",),
+    "stream": ("stream", "ml"),
+}
+_PKG = "laposte_data_engineering_jedha_spark.queries"
+
+
+def _queries_dir():
+    import os
+
+    from laposte_data_engineering_jedha_spark import queries as q
+
+    return os.path.dirname(q.__file__)
+
+
+def test_query_modules_are_named_for_their_domain():
+    """queries/ holds __init__.py plus one module per domain, and every
+    registered query is defined in the module its name prefix maps to."""
+    import os
+
+    from laposte_data_engineering_jedha_spark import queries as q
+
+    files = {f for f in os.listdir(_queries_dir()) if f.endswith(".py")}
+    assert files == {"__init__.py"} | {f"{m}.py" for m in _QUERY_MODULES}
+    home = {p: m for m, prefixes in _QUERY_MODULES.items() for p in prefixes}
+    misplaced = {
+        name: fn.__module__
+        for name, fn in q.queries().items()
+        if fn.__module__ != f"{_PKG}.{home.get(name.split('_')[0])}"
+    }
+    assert misplaced == {}
+
+
+def test_query_modules_bind_each_name_once():
+    """No query module binds a top-level name twice (a later binding
+    would silently shadow an earlier one); a rebinding that reads the old
+    value, like `X = X.replace(...)`, is an edit of one binding."""
+    import ast
+    import os
+    from collections import Counter
+
+    twice = {}
+    for m in _QUERY_MODULES:
+        with open(os.path.join(_queries_dir(), f"{m}.py")) as fh:
+            tree = ast.parse(fh.read())
+        seen = Counter()
+        for st in tree.body:
+            if isinstance(st, (ast.Import, ast.ImportFrom)):
+                names = [a.asname or a.name.split(".")[0] for a in st.names]
+            elif isinstance(st, (ast.FunctionDef, ast.ClassDef)):
+                names = [st.name]
+            elif isinstance(st, (ast.Assign, ast.AnnAssign)):
+                targets = st.targets if isinstance(st, ast.Assign) else [st.target]
+                reads = {n.id for n in ast.walk(st.value) if isinstance(n, ast.Name)}
+                names = [
+                    n.id
+                    for t in targets
+                    for n in ast.walk(t)
+                    if isinstance(n, ast.Name) and not (n.id in reads and seen[n.id])
+                ]
+            else:
+                names = []
+            seen.update(names)
+        if dups := sorted(n for n, c in seen.items() if c > 1):
+            twice[m] = dups
+    assert twice == {}
+
+
+def test_queries_references_in_tests_and_scripts_resolve():
+    """Every `...queries import X`, `...queries.M import Y` and attribute
+    read `alias.X` on an imported queries module, in tests/ and scripts/,
+    names something that exists. Tier-1 never runs most of scripts/, so a
+    stale module path there would otherwise go unnoticed."""
+    import ast
+    import importlib
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [
+        os.path.join(root, d, f)
+        for d in ("tests", "scripts")
+        for f in sorted(os.listdir(os.path.join(root, d)))
+        if f.endswith(".py")
+    ]
+    stale = []
+    for path in paths:
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        modules = {}  # local name -> imported queries module
+        for node in ast.walk(tree):
+            where = f"{os.path.relpath(path, root)}:{getattr(node, 'lineno', 0)}"
+            if isinstance(node, ast.ImportFrom) and node.module and (
+                node.module == _PKG or node.module.startswith(_PKG + ".")
+            ):
+                try:
+                    mod = importlib.import_module(node.module)
+                except ImportError:
+                    stale.append(f"{where} {node.module}")
+                    continue
+                for a in node.names:
+                    sub = f"{node.module}.{a.name}"
+                    if node.module == _PKG and os.path.exists(
+                        os.path.join(_queries_dir(), f"{a.name}.py")
+                    ):
+                        modules[a.asname or a.name] = importlib.import_module(sub)
+                    elif not hasattr(mod, a.name):
+                        stale.append(f"{where} {node.module} import {a.name}")
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name == _PKG or a.name.startswith(_PKG + "."):
+                        try:
+                            mod = importlib.import_module(a.name)
+                        except ImportError:
+                            stale.append(f"{where} import {a.name}")
+                            continue
+                        if a.asname:
+                            modules[a.asname] = mod
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and node.value.id in modules
+                and not hasattr(modules[node.value.id], node.attr)
+            ):
+                stale.append(
+                    f"{os.path.relpath(path, root)}:{node.lineno} "
+                    f"{node.value.id}.{node.attr}"
+                )
+    assert stale == []

@@ -6,9 +6,7 @@ from __future__ import annotations
 
 from laposte_data_engineering_jedha_spark.operators import graphs
 from laposte_data_engineering_jedha_spark.queries import events_table
-from laposte_data_engineering_jedha_spark.queries.round4c import (
-    events_user_triangles,
-)
+from laposte_data_engineering_jedha_spark.queries.events import events_user_triangles
 
 def _row(df):
     r = df.collect()[0]

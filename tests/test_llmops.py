@@ -200,7 +200,7 @@ def test_ivf_kmeans_fits_on_a_sample(spark):
 
 def test_sketch_accuracy(spark, sf_dir):
     """Sketch estimates must land within their documented error of exact."""
-    from laposte_data_engineering_jedha_spark.queries.llmops import (
+    from laposte_data_engineering_jedha_spark.queries.sketch import (
         sketch_aggregates_raw,
     )
     from laposte_data_engineering_jedha_spark.queries import events_table
@@ -493,17 +493,17 @@ def test_chunk_overlap_oracle_cap_covers_fixture(sf):
     assertion instead (round-3 advice item)."""
     import duckdb
 
-    from laposte_data_engineering_jedha_spark.queries import llmops
+    from laposte_data_engineering_jedha_spark.queries import sql_toks, text as q_text
 
     max_chunks = duckdb.sql(
         f"""SELECT max(greatest(1, CAST(ceil(
-                (len({llmops.sql_toks('text')}) - {llmops._OVERLAP})
-                / CAST({llmops._CHUNK_STRIDE} AS DOUBLE)) AS INTEGER)))
+                (len({sql_toks('text')}) - {q_text._OVERLAP})
+                / CAST({q_text._CHUNK_STRIDE} AS DOUBLE)) AS INTEGER)))
             FROM read_parquet('{sf}/documents.parquet')"""
     ).fetchone()[0]
-    assert max_chunks <= llmops._CHUNK_CAP, (
+    assert max_chunks <= q_text._CHUNK_CAP, (
         f"{sf}: fixture needs {max_chunks} chunks > oracle cap "
-        f"{llmops._CHUNK_CAP} — raise _CHUNK_CAP in queries/llmops.py"
+        f"{q_text._CHUNK_CAP} — raise _CHUNK_CAP in queries/text.py"
     )
 
 
@@ -563,7 +563,7 @@ def test_quantize_int8_values(spark):
 
 
 def test_events_funnel_ordering(spark, sf_dir):
-    from laposte_data_engineering_jedha_spark.queries.llmops import events_funnel
+    from laposte_data_engineering_jedha_spark.queries.events import events_funnel
 
     # sanity on the fixture: funnel counts are monotone non-increasing
     row = events_funnel(spark, sf_dir).collect()[0]
@@ -640,7 +640,7 @@ def test_quantize_error_bound_property(spark, sf_dir):
 
 
 def test_bloom_no_false_negatives(spark, sf_dir):
-    from laposte_data_engineering_jedha_spark.queries.llmops import corpus_bloom_contains
+    from laposte_data_engineering_jedha_spark.queries.text import corpus_bloom_contains
 
     out = corpus_bloom_contains(spark, sf_dir).collect()
     assert len(out) > 0

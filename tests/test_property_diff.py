@@ -204,7 +204,7 @@ def test_holt_fold_matches_recursive_cte(counts):
 )
 @settings(max_examples=60, deadline=None)
 def test_cusum_fold_matches_recursive_cte(counts):
-    """Same fuzz for the CUSUM chart (queries/round12g.py): the
+    """Same fuzz for the CUSUM chart (queries/events.py): the
     max(0, cusum + x - target - slack) fold in pure Python vs the
     recursive-CTE oracle over hypothesis-random daily counts — baselines
     of zero, flat series, and spike-then-crash shapes included."""
@@ -258,7 +258,7 @@ def test_cusum_fold_matches_recursive_cte(counts):
 def test_holt_winters_fold_matches_recursive_cte(counts):
     """The seasonal Holt-Winters recursion (streaming/jobs._hw_step) vs
     the registered recursive-CTE oracle whose state row carries the
-    7-slot seasonal LIST (queries/round13i.py) over hypothesis-random
+    7-slot seasonal LIST (queries/events.py) over hypothesis-random
     daily counts on CONSECUTIVE calendar days — so every weekday slot is
     exercised, the isodow(1-based)/weekday(0-based) alignment is proven
     by value, and crashing series drive level/trend/seasonal negative
@@ -326,14 +326,14 @@ def test_bpe_train_oracle_matches_python_reference(docs):
     import duckdb as ddb
     import pandas as pd
 
-    from laposte_data_engineering_jedha_spark.queries import round13m
-    from laposte_data_engineering_jedha_spark.queries.round7e import _CLAMP, _SEP
+    from laposte_data_engineering_jedha_spark.queries import text
+    from laposte_data_engineering_jedha_spark.queries.text import _CLAMP, _SEP
 
     texts_ = [" ".join(words) for words in docs]
     con = ddb.connect()
     try:
         con.register("documents", pd.DataFrame({"text": texts_}))
-        got = con.execute(round13m._bpe_train_sql()).fetchall()
+        got = con.execute(text._bpe_train_sql()).fetchall()
     finally:
         con.close()
 
@@ -346,7 +346,7 @@ def test_bpe_train_oracle_matches_python_reference(docs):
     syms = {_SEP.join(tok[:_CLAMP]): w for tok, w in wc.items()}
     # identical token strings collapse identically in both framings
     want = []
-    for step in range(1, round13m._BPE_STEPS + 1):
+    for step in range(1, text._BPE_STEPS + 1):
         counts: dict[tuple[str, str], int] = {}
         for m, w in syms.items():
             a = m.split(_SEP)
@@ -390,7 +390,7 @@ def test_gd_trainer_oracle_matches_python_loop(rows):
     import duckdb as ddb
     import pandas as pd
 
-    from laposte_data_engineering_jedha_spark.queries import round13j
+    from laposte_data_engineering_jedha_spark.queries import stream
 
     texts_ = []
     for n_tok, n_chars, n_sp in rows:
@@ -404,7 +404,7 @@ def test_gd_trainer_oracle_matches_python_loop(rows):
             "documents",
             pd.DataFrame({"text": texts_, "n_chars": [len(t) for t in texts_]}),
         )
-        got = con.execute(round13j._gd_oracle_sql()).fetchall()
+        got = con.execute(stream._gd_oracle_sql()).fetchall()
     finally:
         con.close()
 
@@ -413,15 +413,15 @@ def test_gd_trainer_oracle_matches_python_loop(rows):
         if len(t) == 0:
             continue
         toks = [w for w in re.split(r"\s+", t.strip().lower()) if w != ""]
-        y = 1 if len(toks) >= round13j._GD_GATE else 0
+        y = 1 if len(toks) >= stream._GD_GATE else 0
         x1 = len(t) / 1000
         x2 = (len(t) - len(t.replace(" ", ""))) / len(t)
         feats.append((y, x1, x2))
     n = len(feats)
-    Q = round13j._GD_Q
+    Q = stream._GD_Q
     w0 = w1 = w2 = 0.0
     want = []
-    for k in range(1, round13j._GD_STEPS + 1):
+    for k in range(1, stream._GD_STEPS + 1):
         q0 = q1 = q2 = 0
         for y, x1, x2 in feats:
             z = w0 + w1 * x1 + w2 * x2
@@ -429,9 +429,9 @@ def test_gd_trainer_oracle_matches_python_loop(rows):
             q0 += int(_round_half_up(r * Q))
             q1 += int(_round_half_up(r * x1 * Q))
             q2 += int(_round_half_up(r * x2 * Q))
-        w0 = w0 - round13j._GD_LR * (q0 / (Q * n))
-        w1 = w1 - round13j._GD_LR * (q1 / (Q * n))
-        w2 = w2 - round13j._GD_LR * (q2 / (Q * n))
+        w0 = w0 - stream._GD_LR * (q0 / (Q * n))
+        w1 = w1 - stream._GD_LR * (q1 / (Q * n))
+        w2 = w2 - stream._GD_LR * (q2 / (Q * n))
         n_correct = sum(
             1 for y, x1, x2 in feats
             if ((w0 + w1 * x1 + w2 * x2) > 0) == (y == 1)

@@ -8,7 +8,8 @@ import shutil
 
 import pytest
 
-from laposte_data_engineering_jedha_spark.queries import round9a
+from laposte_data_engineering_jedha_spark.operators import similarity as similarity_ops
+from laposte_data_engineering_jedha_spark.queries import similarity
 
 
 def _copy_corpus(tmp_path, sf_dir):
@@ -29,11 +30,11 @@ def test_ivf_index_build_once_then_reuse(spark, sf_dir, tmp_path):
     """Same corpus -> same key -> the second ensure reuses the stored
     index without rebuilding (the _SUCCESS marker is untouched)."""
     sf = _copy_corpus(tmp_path, sf_dir)
-    p1 = round9a._ensure_index(spark, sf)
+    p1 = similarity._ensure_index(spark, sf)
     assert _markers_ok(p1)
     marker = os.path.join(p1, "postings.parquet", "_SUCCESS")
     m1 = os.stat(marker).st_mtime_ns
-    assert round9a._ensure_index(spark, sf) == p1
+    assert similarity._ensure_index(spark, sf) == p1
     assert os.stat(marker).st_mtime_ns == m1
     shutil.rmtree(p1, ignore_errors=True)
 
@@ -46,7 +47,7 @@ def test_ivf_index_rekeys_and_rebuilds_on_corpus_mutation(spark, sf_dir, tmp_pat
     import pyarrow.parquet as pq
 
     sf = _copy_corpus(tmp_path, sf_dir)
-    p1 = round9a._ensure_index(spark, sf)
+    p1 = similarity._ensure_index(spark, sf)
     assert _markers_ok(p1)
 
     src = os.path.join(sf, "embeddings.parquet")
@@ -59,7 +60,7 @@ def test_ivf_index_rekeys_and_rebuilds_on_corpus_mutation(spark, sf_dir, tmp_pat
 
     pq.write_table(pa.Table.from_pandas(df, schema=tbl.schema), src)
 
-    p2 = round9a._ensure_index(spark, sf)
+    p2 = similarity._ensure_index(spark, sf)
     assert p2 != p1, "mutated corpus must re-key the index"
     assert _markers_ok(p2)
     shutil.rmtree(p1, ignore_errors=True)
@@ -74,10 +75,10 @@ def test_ivf_index_concurrent_publish_loser_discards(
     loser must discard its scratch build and serve the winner's —
     overwrite-mode writes can never interleave into the served path."""
     sf = _copy_corpus(tmp_path, sf_dir)
-    path = round9a._index_path(sf)
+    path = similarity._index_path(sf)
     shutil.rmtree(path, ignore_errors=True)
 
-    real_write = round9a.similarity.ivf_index_write
+    real_write = similarity_ops.ivf_index_write
     scratches: list[str] = []
 
     def write_and_simulate_winner(df, scratch, **kw):
@@ -87,9 +88,9 @@ def test_ivf_index_concurrent_publish_loser_discards(
         shutil.copytree(scratch, path)
 
     monkeypatch.setattr(
-        round9a.similarity, "ivf_index_write", write_and_simulate_winner
+        similarity_ops, "ivf_index_write", write_and_simulate_winner
     )
-    got = round9a._ensure_index(spark, sf)
+    got = similarity._ensure_index(spark, sf)
     assert got == path
     assert _markers_ok(path)
     assert len(scratches) == 1
@@ -101,7 +102,7 @@ def test_ivf_fingerprint_missing_corpus(tmp_path):
     """A missing embeddings table fingerprints as a sentinel rather than
     raising — _ensure_index will then fail in the build with Spark's own
     missing-path error, not a confusing os.stat one."""
-    assert round9a._corpus_fingerprint(str(tmp_path)) == "missing"
+    assert similarity._corpus_fingerprint(str(tmp_path)) == "missing"
 
 
 def test_triangles_default_entry_point_is_capped(spark, sf_dir, monkeypatch):

@@ -68,9 +68,7 @@ def test_global_prefix_max_all_null_and_empty(spark, monkeypatch):
 
 
 def test_pareto_frontier_matches_bruteforce(spark, sf_dir):
-    from laposte_data_engineering_jedha_spark.queries.round11b import (
-        olap_pareto_frontier,
-    )
+    from laposte_data_engineering_jedha_spark.queries.olap import olap_pareto_frontier
 
     got = {r["p_partkey"] for r in olap_pareto_frontier(spark, sf_dir).collect()}
     pts = [
@@ -113,9 +111,7 @@ def test_fuzzy_blocked_pair_arithmetic(spark, tmp_path):
     ).withColumn("p_retailprice", F.lit(1.0)).write.mode("overwrite").parquet(
         str(tmp_path / "part.parquet")
     )
-    from laposte_data_engineering_jedha_spark.queries.round11b import (
-        dedup_fuzzy_blocked,
-    )
+    from laposte_data_engineering_jedha_spark.queries.dedup import dedup_fuzzy_blocked
 
     got = {
         r["noun"]: (r["n_parts"], r["n_pairs"], r["n_exact"], r["min_dist"], r["max_dist"])
@@ -133,9 +129,7 @@ def test_fuzzy_blocked_pair_arithmetic(spark, tmp_path):
 
 
 def test_priority_sample_is_deterministic_and_weighted(spark, sf_dir):
-    from laposte_data_engineering_jedha_spark.queries.round11b import (
-        corpus_priority_sample,
-    )
+    from laposte_data_engineering_jedha_spark.queries.text import corpus_priority_sample
 
     a = corpus_priority_sample(spark, sf_dir).collect()
     b = corpus_priority_sample(spark, sf_dir).collect()
@@ -158,9 +152,7 @@ def test_priority_sample_is_deterministic_and_weighted(spark, sf_dir):
 
 
 def test_benford_shares_sum_to_one(spark, sf_dir):
-    from laposte_data_engineering_jedha_spark.queries.round11b import (
-        dq_benford_first_digit,
-    )
+    from laposte_data_engineering_jedha_spark.queries.dq import dq_benford_first_digit
 
     rows = dq_benford_first_digit(spark, sf_dir).collect()
     assert [r["digit"] for r in rows] == list(range(1, 10))
@@ -173,7 +165,7 @@ def test_benford_shares_sum_to_one(spark, sf_dir):
 
 
 def test_ndcg_bounds_and_consistency(spark, sf_dir):
-    from laposte_data_engineering_jedha_spark.queries.round11c import (
+    from laposte_data_engineering_jedha_spark.queries.similarity import (
         _NDCG_IDCG,
         eval_ndcg_truncated,
     )
@@ -195,7 +187,7 @@ def test_layout_queries_are_pure_rewrites(spark, sf_dir):
     """Identity digests equal across original and rewritten data, and the
     compaction emits exactly the contracted file count (the oracle row
     checks the same via DuckDB; this pins it in-process)."""
-    from laposte_data_engineering_jedha_spark.queries.round11a import (
+    from laposte_data_engineering_jedha_spark.queries.io import (
         _LC_N_FILES,
         layout_compact_identity,
         layout_zorder_identity,
@@ -238,7 +230,7 @@ def test_cusum_changepoint_detects_planted_shift(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string",
     ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    from laposte_data_engineering_jedha_spark.queries.round11d import (
+    from laposte_data_engineering_jedha_spark.queries.events import (
         events_cusum_changepoint,
     )
 
@@ -255,7 +247,7 @@ def test_cusum_changepoint_detects_planted_shift(spark, tmp_path):
 
 
 def test_weighted_median_matches_bruteforce(spark, sf_dir):
-    from laposte_data_engineering_jedha_spark.queries.round11d import (
+    from laposte_data_engineering_jedha_spark.queries.olap import (
         olap_weighted_median_price,
     )
 

@@ -73,6 +73,54 @@ def test_ivf_append_delta_is_idempotent(spark, sf_dir, tmp_path):
     assert similarity._index_postings(spark, idx).count() == emb.count()
 
 
+def test_ivf_append_rejects_changed_vector_for_indexed_id(spark, sf_dir, tmp_path):
+    """An id already in the base or a delta may not come back with a
+    different vector: search would rank both copies and return the id
+    twice. The append raises, names the id, and publishes nothing."""
+    import pytest
+
+    emb = table(spark, sf_dir, "embeddings")
+    centers = similarity.pinned_codebook(1, 16, 64)[0]
+    idx = str(tmp_path / "idx")
+    similarity.ivf_index_write(
+        emb.where(F.col("vec_id") % 4 != 0), idx, n_centroids=16,
+        centers=centers, fold_faithful=True,
+    )
+    assert similarity.ivf_index_append(
+        spark, idx, emb.where(F.col("vec_id") % 4 == 0), fold_faithful=True,
+        rebuild_fraction=5.0, delta_tag="d1",
+    ) == "delta"
+    n_before = similarity._index_postings(spark, idx).count()
+    negated = F.transform("embedding", lambda x: -x).alias("embedding")
+    for vec_id in (1, 4):  # 1 is in the base, 4 in delta d1
+        moved = emb.where(F.col("vec_id") == vec_id).select("vec_id", negated)
+        with pytest.raises(ValueError, match=rf"\[{vec_id}\]"):
+            similarity.ivf_index_append(
+                spark, idx, moved, fold_faithful=True, rebuild_fraction=5.0,
+                delta_tag=f"moved{vec_id}",
+            )
+    assert similarity._index_delta_dirs(idx) == [os.path.join(idx, "deltas", "d1")]
+    assert similarity._index_postings(spark, idx).count() == n_before
+
+
+def test_ivf_append_accepts_same_vector_republish(spark, sf_dir, tmp_path):
+    """Republishing an indexed id with its stored vector is accepted: the
+    copies carry equal cosines, so search returns the id once."""
+    emb = table(spark, sf_dir, "embeddings")
+    centers = similarity.pinned_codebook(1, 16, 64)[0]
+    idx = str(tmp_path / "idx")
+    similarity.ivf_index_write(emb, idx, n_centroids=16, centers=centers, fold_faithful=True)
+    again = emb.where(F.col("vec_id") < 8)
+    assert similarity.ivf_index_append(
+        spark, idx, again, fold_faithful=True, delta_tag="again"
+    ) == "delta"
+    queries_df = emb.where(F.col("vec_id") < 8).select("vec_id", "embedding")
+    got = _canon(_search(spark, idx, queries_df))
+    pairs = [(q, c) for q, c, _, _ in got]
+    assert len(got) > 0
+    assert len(pairs) == len(set(pairs))
+
+
 def test_ivf_append_drift_triggers_compaction(spark, sf_dir, tmp_path):
     """Past rebuild_fraction the LSM stack compacts: one fresh single-base
     index (no deltas left), same search answers as the full build."""

@@ -23,7 +23,13 @@ import pytest
 
 from laposte_data_engineering_jedha_spark import queries as q
 from laposte_data_engineering_jedha_spark.operators import dedup
-from laposte_data_engineering_jedha_spark.queries import llmops, round4c, round6
+from laposte_data_engineering_jedha_spark.queries import (
+    _EMB_BAND_PLANES,
+    _EMB_BANDS,
+    dedup as q_dedup,
+    events,
+    graph,
+)
 
 from tests.test_oracle_parity import TABLES, canon_rows
 
@@ -44,9 +50,9 @@ def test_triangles_branches_agree_at_fixture_scale(spark, sf_dir, monkeypatch):
     """The generous production caps (bucket_cap=128, max_out_deg=64)
     never bind at fixture occupancy, so the capped branch must equal the
     exact branch bit-for-bit — same schema, same one-row counts."""
-    exact = round4c.events_user_triangles(spark, sf_dir)
-    monkeypatch.setattr(round4c, "_TRI_EXACT_MAX_EVENTS", -1)
-    capped = round4c.events_user_triangles(spark, sf_dir)
+    exact = events.events_user_triangles(spark, sf_dir)
+    monkeypatch.setattr(events, "_TRI_EXACT_MAX_EVENTS", -1)
+    capped = events.events_user_triangles(spark, sf_dir)
     assert exact.columns == capped.columns == ["n_edges", "n_nodes", "n_triangles"]
     assert exact.collect() == capped.collect()
 
@@ -65,9 +71,9 @@ def test_triangles_auto_gate_picks_branch(spark, sf_dir, monkeypatch):
         return real(ev, min_w, **caps)
 
     monkeypatch.setattr(graphs, "co_activity_triangles", spy)
-    round4c.events_user_triangles(spark, sf_dir)
-    monkeypatch.setattr(round4c, "_TRI_EXACT_MAX_EVENTS", -1)
-    round4c.events_user_triangles(spark, sf_dir)
+    events.events_user_triangles(spark, sf_dir)
+    monkeypatch.setattr(events, "_TRI_EXACT_MAX_EVENTS", -1)
+    events.events_user_triangles(spark, sf_dir)
     assert calls == [{"bucket_cap": None, "max_out_deg": None}, {}]
 
 
@@ -81,14 +87,14 @@ def test_embedding_planes_gate_formula_parity(n):
     the two engines derive the parameter from the same count(*), so a
     formula drift here would surface as a hash mismatch at exactly one
     scale. Checked across the gate boundary and both regimes."""
-    if n > llmops._EMB_PINNED_MAX_N:
+    if n > q_dedup._EMB_PINNED_MAX_N:
         py = dedup.auto_band_planes(n)
     else:
-        py = llmops._EMB_BAND_PLANES
+        py = _EMB_BAND_PLANES
     sql = duckdb.sql(
-        f"SELECT CASE WHEN {n} > {llmops._EMB_PINNED_MAX_N} "
+        f"SELECT CASE WHEN {n} > {q_dedup._EMB_PINNED_MAX_N} "
         f"THEN GREATEST(4, CAST(ceil(log2({n} / 64.0)) AS BIGINT)) "
-        f"ELSE {llmops._EMB_BAND_PLANES} END"
+        f"ELSE {_EMB_BAND_PLANES} END"
     ).fetchone()[0]
     assert py == sql, (n, py, sql)
 
@@ -98,12 +104,12 @@ def test_embedding_cosine_pinned_branch_unchanged(spark, sf_dir):
     registered result must equal the operator run with the fixed
     fixture banding — the recorded driver hash rows are untouched by
     the gate."""
-    auto = llmops.dedup_embedding_cosine(spark, sf_dir)
+    auto = q_dedup.dedup_embedding_cosine(spark, sf_dir)
     pinned = dedup.embedding_dup_pairs_lsh(
         q.table(spark, sf_dir, "embeddings"),
         threshold=0.4,
-        bands=llmops._EMB_BANDS,
-        band_planes=llmops._EMB_BAND_PLANES,
+        bands=_EMB_BANDS,
+        band_planes=_EMB_BAND_PLANES,
     )
     assert sorted(map(tuple, auto.collect())) == sorted(map(tuple, pinned.collect()))
 
@@ -119,11 +125,11 @@ def test_embedding_cosine_scaled_branch_oracle_sf01(spark, monkeypatch):
     the gate threshold sits at the measured plan crossover, not at the
     fixture boundary.)"""
     assert dedup.auto_band_planes(2_000) == 5  # genuinely != the pinned 4
-    monkeypatch.setattr(llmops, "_EMB_PINNED_MAX_N", -1)
-    sdf = llmops.dedup_embedding_cosine(spark, SF01).toPandas()
+    monkeypatch.setattr(q_dedup, "_EMB_PINNED_MAX_N", -1)
+    sdf = q_dedup.dedup_embedding_cosine(spark, SF01).toPandas()
     con = _duck_on(SF01)
     try:
-        odf = con.execute(llmops._emb_cosine_sql()).df()
+        odf = con.execute(q_dedup._emb_cosine_sql()).df()
     finally:
         con.close()
     assert canon_rows(sdf) == canon_rows(odf)
@@ -132,7 +138,7 @@ def test_embedding_cosine_scaled_branch_oracle_sf01(spark, monkeypatch):
 def test_embedding_cosine_registered_sql_is_case_gated():
     """The registered oracle must carry the count(*) CASE (both-branch
     mirror)."""
-    assert f"CASE WHEN count(*) > {llmops._EMB_PINNED_MAX_N}" in q.ORACLE_SQL[
+    assert f"CASE WHEN count(*) > {q_dedup._EMB_PINNED_MAX_N}" in q.ORACLE_SQL[
         "dedup_embedding_cosine"
     ]
 
@@ -143,13 +149,13 @@ def test_embedding_cosine_registered_sql_is_case_gated():
 @pytest.mark.parametrize("n", [1, 1_000, 10_000, 50_000, 50_001, 100_000, 10**6])
 def test_label_prop_cap_gate_formula_parity(n):
     py = (
-        round6._LP_CELL_CAP_BIG
-        if n > round6._LP_EXACT_MAX_EVENTS
-        else round6._LP_CELL_CAP
+        graph._LP_CELL_CAP_BIG
+        if n > graph._LP_EXACT_MAX_EVENTS
+        else graph._LP_CELL_CAP
     )
     sql = duckdb.sql(
-        f"SELECT CASE WHEN {n} > {round6._LP_EXACT_MAX_EVENTS} "
-        f"THEN {round6._LP_CELL_CAP_BIG} ELSE {round6._LP_CELL_CAP} END"
+        f"SELECT CASE WHEN {n} > {graph._LP_EXACT_MAX_EVENTS} "
+        f"THEN {graph._LP_CELL_CAP_BIG} ELSE {graph._LP_CELL_CAP} END"
     ).fetchone()[0]
     assert py == sql, (n, py, sql)
 
@@ -159,9 +165,9 @@ def test_label_prop_auto_equals_exact_cap_at_fixture_scale(spark, sf_dir, monkey
     occupancy (max well under 16 users/cell) even the BIG cap is
     non-binding — the 64-cap branch run with the BIG cap must agree,
     proving the tightened cap cannot change fixture hash rows."""
-    auto = round6.graph_label_prop_communities(spark, sf_dir).collect()
-    monkeypatch.setattr(round6, "_LP_CELL_CAP", round6._LP_CELL_CAP_BIG)
-    c16 = round6.graph_label_prop_communities(spark, sf_dir).collect()
+    auto = graph.graph_label_prop_communities(spark, sf_dir).collect()
+    monkeypatch.setattr(graph, "_LP_CELL_CAP", graph._LP_CELL_CAP_BIG)
+    c16 = graph.graph_label_prop_communities(spark, sf_dir).collect()
     assert sorted(auto) == sorted(c16)
 
 
@@ -171,10 +177,10 @@ def test_label_prop_big_branch_oracle_sf01(spark):
     ~27 users/cell) both engines' count(*) CASE picks the 16-cap, which
     BINDS — the branch the fixture hash rows never exercise. DuckDB runs
     the registered oracle SQL unmodified."""
-    sdf = round6.graph_label_prop_communities(spark, SF01).toPandas()
+    sdf = graph.graph_label_prop_communities(spark, SF01).toPandas()
     con = _duck_on(SF01)
     try:
-        odf = con.execute(round6._LP_SQL).df()
+        odf = con.execute(graph._LP_SQL).df()
     finally:
         con.close()
     assert canon_rows(sdf) == canon_rows(odf)
@@ -189,12 +195,12 @@ def test_cosine_histogram_rate_formula_parity(n):
     GREATEST/// formula (positive operands, so DuckDB's truncating //
     equals floor), and must land exactly on the original constant 64 at
     the 500-vector oracle fixtures."""
-    from laposte_data_engineering_jedha_spark.queries import round12d
+    from laposte_data_engineering_jedha_spark.queries import similarity as q_similarity
 
-    py = max(round12d._CH_RATE_FLOOR, (n * n) // round12d._CH_RATE_DIV)
+    py = max(q_similarity._CH_RATE_FLOOR, (n * n) // q_similarity._CH_RATE_DIV)
     sql = duckdb.sql(
-        f"SELECT GREATEST({round12d._CH_RATE_FLOOR}, "
-        f"({n}::BIGINT * {n}::BIGINT) // {round12d._CH_RATE_DIV})"
+        f"SELECT GREATEST({q_similarity._CH_RATE_FLOOR}, "
+        f"({n}::BIGINT * {n}::BIGINT) // {q_similarity._CH_RATE_DIV})"
     ).fetchone()[0]
     assert py == sql, (n, py, sql)
     if n == 500:
@@ -207,10 +213,10 @@ def test_cosine_histogram_scaled_rate_oracle_sf01(spark):
     regime: at sf0.1 (2,000 vectors) both engines compute rate = 1024
     from count(*), and the sampled pair mass stays ~2k — fixed, not
     ~n^2/64."""
-    from laposte_data_engineering_jedha_spark.queries import round12d
+    from laposte_data_engineering_jedha_spark.queries import similarity as q_similarity
 
-    assert max(64, (2_000 * 2_000) // round12d._CH_RATE_DIV) == 1024
-    sdf = round12d.embedding_cosine_histogram(spark, SF01).toPandas()
+    assert max(64, (2_000 * 2_000) // q_similarity._CH_RATE_DIV) == 1024
+    sdf = q_similarity.embedding_cosine_histogram(spark, SF01).toPandas()
     assert 1_000 < int(sdf["n_pairs"].sum()) < 4_000
     con = _duck_on(SF01)
     try:
@@ -289,7 +295,7 @@ def test_label_prop_cap_binds_at_sf01():
         ).fetchone()[0]
     finally:
         con.close()
-    assert mx > round6._LP_CELL_CAP_BIG
+    assert mx > graph._LP_CELL_CAP_BIG
 
 
 # ----------------------- round-13 query additions -----------------------------
@@ -301,15 +307,15 @@ def test_prefix_filter_contains_minhash_pairs(spark, sf_dir):
     family's (whose banding can only lose pairs, never invent them —
     both verify exact Jaccard, so false positives are impossible in
     either)."""
-    from laposte_data_engineering_jedha_spark.queries import llmops, round13b
+    from laposte_data_engineering_jedha_spark.queries import dedup as q_dedup
 
     exact = {
         (r["id_a"], r["id_b"])
-        for r in round13b.dedup_prefix_filter_jaccard(spark, sf_dir).collect()
+        for r in q_dedup.dedup_prefix_filter_jaccard(spark, sf_dir).collect()
     }
     lsh = {
         (r["id_a"], r["id_b"])
-        for r in llmops.dedup_minhash_lsh(spark, sf_dir).collect()
+        for r in q_dedup.dedup_minhash_lsh(spark, sf_dir).collect()
     }
     assert lsh <= exact
     assert len(exact) > 0
@@ -321,11 +327,11 @@ def test_band_occupancy_pair_mass_bounds_candidates(spark, sf_dir):
     over bands it must upper-bound the DISTINCT candidate pairs the
     join would emit."""
     from laposte_data_engineering_jedha_spark.operators import dedup as ded
-    from laposte_data_engineering_jedha_spark.queries import round13b, table as tbl
+    from laposte_data_engineering_jedha_spark.queries import table as tbl, text
 
     from pyspark.sql import functions as F
 
-    stats = round13b.corpus_band_occupancy_stats(spark, sf_dir).collect()
+    stats = text.corpus_band_occupancy_stats(spark, sf_dir).collect()
     assert [r["band"] for r in stats] == [0, 1, 2, 3]
     total_mass = sum(r["pair_mass"] for r in stats)
     sigs = ded._minhash_sigs(tbl(spark, sf_dir, "documents"), "text", "doc_id")
@@ -351,9 +357,12 @@ def test_band_occupancy_pair_mass_bounds_candidates(spark, sf_dir):
 
 def test_langid_auc_bounds(spark, sf_dir):
     """AUC must be a valid probability and P/N must partition the corpus."""
-    from laposte_data_engineering_jedha_spark.queries import round13b, table as tbl
+    from laposte_data_engineering_jedha_spark.queries import (
+        similarity as q_similarity,
+        table as tbl,
+    )
 
-    row = round13b.eval_langid_auc(spark, sf_dir).collect()[0]
+    row = q_similarity.eval_langid_auc(spark, sf_dir).collect()[0]
     n_docs = tbl(spark, sf_dir, "documents").count()
     assert row["n_pos"] + row["n_neg"] == n_docs
     assert 0.0 <= row["auc"] <= 1.0
@@ -362,9 +371,9 @@ def test_langid_auc_bounds(spark, sf_dir):
 def test_countmin_estimate_upper_bounds_truth(spark, sf_dir):
     """The CM guarantee: estimate >= true count for every key (min over
     rows of counters that each include the key's own mass)."""
-    from laposte_data_engineering_jedha_spark.queries import round13d
+    from laposte_data_engineering_jedha_spark.queries import events
 
-    rows = round13d.events_countmin_estimates(spark, sf_dir).collect()
+    rows = events.events_countmin_estimates(spark, sf_dir).collect()
     assert len(rows) == 5
     assert all(r["overcount"] >= 0 for r in rows)
     assert all(r["cm_estimate"] >= r["true_n"] for r in rows)
@@ -373,10 +382,10 @@ def test_countmin_estimate_upper_bounds_truth(spark, sf_dir):
 def test_importance_sample_deterministic_and_sized(spark, sf_dir):
     """The md5-coin sample must be bit-identical across runs (no RNG
     state) and near its expected size."""
-    from laposte_data_engineering_jedha_spark.queries import round13c
+    from laposte_data_engineering_jedha_spark.queries import text
 
-    a = round13c.corpus_importance_sample(spark, sf_dir).collect()
-    b = round13c.corpus_importance_sample(spark, sf_dir).collect()
+    a = text.corpus_importance_sample(spark, sf_dir).collect()
+    b = text.corpus_importance_sample(spark, sf_dir).collect()
     assert a == b
     assert 50 <= len(a) <= 200  # k = 100 expected over 500 docs
 
@@ -387,9 +396,9 @@ def test_kn_probs_are_valid_and_reserve_backoff_mass(spark, sf_dir):
     backoff mass reserved for unseen continuations)."""
     import duckdb as ddb
 
-    from laposte_data_engineering_jedha_spark.queries import round13c, llmops
+    from laposte_data_engineering_jedha_spark.queries import text
 
-    rows = round13c.text_bigram_kn_probs(spark, sf_dir).collect()
+    rows = text.text_bigram_kn_probs(spark, sf_dir).collect()
     assert len(rows) == 20
     assert all(0.0 < r["p_kn"] <= 1.0 for r in rows)
     con = ddb.connect()
@@ -410,24 +419,24 @@ def test_kn_probs_are_valid_and_reserve_backoff_mass(spark, sf_dir):
 
 def test_session_length_hist_totals_match_sessionizer(spark, sf_dir):
     """The histogram must partition exactly the sessionizer's sessions."""
-    from laposte_data_engineering_jedha_spark.queries import llmops, round13d
+    from laposte_data_engineering_jedha_spark.queries import events
 
-    hist = round13d.events_session_length_hist(spark, sf_dir).collect()
-    n_sessions = llmops.events_sessionize(spark, sf_dir).count()
+    hist = events.events_session_length_hist(spark, sf_dir).collect()
+    n_sessions = events.events_sessionize(spark, sf_dir).count()
     assert sum(r["n_sessions"] for r in hist) == n_sessions
 
 
 def test_mix_epoch_plan_invariants(spark, sf_dir):
     """planned + deficit == want, epochs respect the cap, and a source
     with enough tokens plans zero deficit."""
-    from laposte_data_engineering_jedha_spark.queries import round13d
+    from laposte_data_engineering_jedha_spark.queries import text
 
-    rows = round13d.corpus_mix_epoch_plan(spark, sf_dir).collect()
+    rows = text.corpus_mix_epoch_plan(spark, sf_dir).collect()
     assert {r["source"] for r in rows} == {"src0", "src1", "src2", "src3", "src4"}
     for r in rows:
         assert r["planned_tokens"] + r["deficit_tokens"] == r["want_tokens"]
-        assert 0 < r["epochs_bp"] <= round13d._EP_CAP_BP
-        if r["epochs_bp"] < round13d._EP_CAP_BP:
+        assert 0 < r["epochs_bp"] <= text._EP_CAP_BP
+        if r["epochs_bp"] < text._EP_CAP_BP:
             # uncapped -> the plan fills the want (floor-division slack only)
             assert r["deficit_tokens"] <= r["have_tokens"] // 10_000 + 1
 
@@ -437,16 +446,16 @@ def test_partition_prune_plan_has_filters(spark, sf_dir):
     carries a PartitionFilters entry on the day key, DataFilters stays
     empty (nothing is filtered row-wise), and the pruned slice is a
     strict subset of the corpus."""
-    from laposte_data_engineering_jedha_spark.queries import round13e
+    from laposte_data_engineering_jedha_spark.queries import io
 
-    back, day = round13e._pruned_scan(spark, sf_dir)
+    back, day = io._pruned_scan(spark, sf_dir)
     plan = back._jdf.queryExecution().executedPlan().toString()
     scan = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
     assert scan, plan
     assert f"= {day})" in scan[0]
     assert "DataFilters: []" in scan[0]
     n_pruned = back.count()
-    n_all = round13e._events_projected(spark, sf_dir).count()
+    n_all = io._events_projected(spark, sf_dir).count()
     assert 0 < n_pruned < n_all
 
 
@@ -461,10 +470,10 @@ def test_ams_f2_invariants(spark, sf_dir):
     probabilistic bound, so the test is deterministic)."""
     from pyspark.sql import functions as F
 
-    from laposte_data_engineering_jedha_spark.queries import round13i
+    from laposte_data_engineering_jedha_spark.queries import sketch
 
-    rows = round13i.sketch_ams_f2(spark, sf_dir).collect()
-    assert [r["j"] for r in rows] == list(range(round13i._AMS_DEPTH))
+    rows = sketch.sketch_ams_f2(spark, sf_dir).collect()
+    assert [r["j"] for r in rows] == list(range(sketch._AMS_DEPTH))
     truth = (
         q.events_table(spark, sf_dir)
         .groupBy("event_type")
@@ -487,10 +496,10 @@ def test_pmi_lift_hand_recomputed(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from laposte_data_engineering_jedha_spark.functions import texts
-    from laposte_data_engineering_jedha_spark.queries import round13i
+    from laposte_data_engineering_jedha_spark.queries import text
 
-    rows = round13i.text_pmi_lift_pairs(spark, sf_dir).collect()
-    assert 0 < len(rows) <= round13i._PMI_TOP
+    rows = text.text_pmi_lift_pairs(spark, sf_dir).collect()
+    assert 0 < len(rows) <= text._PMI_TOP
     toks = q.table(spark, sf_dir, "documents").select(
         texts.tokens("text").alias("t")
     )
@@ -507,7 +516,7 @@ def test_pmi_lift_hand_recomputed(spark, sf_dir):
     assert len(set(keys)) == len(keys)
     prev = None
     for r in rows:
-        assert r["c"] >= round13i._PMI_MIN_C
+        assert r["c"] >= text._PMI_MIN_C
         want = round(r["c"] * nn / (uni[r["w1"]] * uni[r["w2"]]) * 1e6) / 1e6
         assert r["lift"] == pytest.approx(want, abs=2e-6)
         key = (-r["lift"], r["w1"], r["w2"])
@@ -523,13 +532,13 @@ def test_holt_winters_hand_computed_prefix(spark, sf_dir):
     has been learned yet (the first occurrence of every weekday)."""
     from pyspark.sql import functions as F
 
-    from laposte_data_engineering_jedha_spark.queries import round13a, round13i
+    from laposte_data_engineering_jedha_spark.queries import events
     from laposte_data_engineering_jedha_spark.streaming import jobs
 
-    hw = round13i.events_holt_winters_daily(spark, sf_dir).collect()
+    hw = events.events_holt_winters_daily(spark, sf_dir).collect()
     holt = {
         (r["event_type"], r["day"]): r
-        for r in round13a.events_holt_forecast(spark, sf_dir).collect()
+        for r in events.events_holt_forecast(spark, sf_dir).collect()
     }
     by_type: dict = {}
     for r in hw:
@@ -579,16 +588,16 @@ def test_gate_distill_learns_and_rows_shape(spark, sf_dir):
     weights are finite micro-unit-rounded doubles."""
     import math
 
-    from laposte_data_engineering_jedha_spark.queries import round13j
+    from laposte_data_engineering_jedha_spark.queries import stream
 
-    rows = round13j.ml_gate_distill_gd(spark, sf_dir).collect()
-    assert [r["step"] for r in rows] == list(range(1, round13j._GD_STEPS + 1))
+    rows = stream.ml_gate_distill_gd(spark, sf_dir).collect()
+    assert [r["step"] for r in rows] == list(range(1, stream._GD_STEPS + 1))
     accs = [r["acc_ppm"] for r in rows]
     assert accs[-1] > accs[0]
     for r in rows:
         for c in ("w0", "w1", "w2"):
             assert math.isfinite(r[c])
-            assert r[c] == round(r[c] * round13j._GD_Q) / round13j._GD_Q
+            assert r[c] == round(r[c] * stream._GD_Q) / stream._GD_Q
 
 
 def test_ppjoin_pair_mass_is_admissible_bound(spark, sf_dir):
@@ -597,13 +606,13 @@ def test_ppjoin_pair_mass_is_admissible_bound(spark, sf_dir):
     counted in some posting list's C(f,2)), and its fields must be
     internally consistent."""
     from laposte_data_engineering_jedha_spark.operators import dedup
-    from laposte_data_engineering_jedha_spark.queries import round13b
+    from laposte_data_engineering_jedha_spark.queries import dedup as q_dedup
 
     docs = q.table(spark, sf_dir, "documents")
     m = dedup.ppjoin_pair_mass(docs).first()
     assert m["n_prefix_postings"] >= m["n_distinct_prefix_toks"] > 0
     assert m["max_posting_list"] >= 1
-    n_pairs = round13b.dedup_prefix_filter_jaccard(spark, sf_dir).count()
+    n_pairs = q_dedup.dedup_prefix_filter_jaccard(spark, sf_dir).count()
     assert m["pair_mass"] >= n_pairs
 
 
@@ -619,28 +628,28 @@ def test_kcore_fixpoint_matches_bounded_rounds(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from laposte_data_engineering_jedha_spark.operators import graphs
-    from laposte_data_engineering_jedha_spark.queries import round13k
+    from laposte_data_engineering_jedha_spark.queries import graph
 
-    rows = {r["round"]: r for r in round13k.graph_kcore_peel(spark, sf_dir).collect()}
+    rows = {r["round"]: r for r in graph.graph_kcore_peel(spark, sf_dir).collect()}
     assert (rows[2]["n_nodes"], rows[2]["n_edges"]) == (
         rows[3]["n_nodes"], rows[3]["n_edges"],
     )
     orders = q.table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = (
         q.table(spark, sf_dir, "lineitem")
-        .where(F.col("l_quantity") >= round13k._KC_QMIN)
+        .where(F.col("l_quantity") >= graph._KC_QMIN)
         .select("l_orderkey", "l_suppkey")
     )
     edges = (
         orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
         .select(
             F.col("o_custkey").alias("u"),
-            (F.col("l_suppkey") + round13k._KC_OFF).alias("v"),
+            (F.col("l_suppkey") + graph._KC_OFF).alias("v"),
         )
         .distinct()
     )
     assert rows[1]["n_edges"] < edges.count()  # the peel bound
-    fix = graphs.kcore_peel(edges, k=round13k._KC_K, rounds=None)
+    fix = graphs.kcore_peel(edges, k=graph._KC_K, rounds=None)
     assert fix[-1][1:] == (rows[3]["n_nodes"], rows[3]["n_edges"])
 
 
@@ -674,12 +683,12 @@ def test_label_prop_driver_and_distributed_paths_agree(spark, sf_dir, monkeypatc
     (graphs.DRIVER_MAX_EDGES = -1 keeps the distributed loop covered)."""
     from laposte_data_engineering_jedha_spark.operators import graphs
 
-    for cap in (round6._LP_CELL_CAP, 2):
+    for cap in (graph._LP_CELL_CAP, 2):
         with monkeypatch.context() as m:
-            m.setattr(round6, "_LP_CELL_CAP", cap)
-            fast = round6.graph_label_prop_communities(spark, sf_dir).collect()
+            m.setattr(graph, "_LP_CELL_CAP", cap)
+            fast = graph.graph_label_prop_communities(spark, sf_dir).collect()
             m.setattr(graphs, "DRIVER_MAX_EDGES", -1)
-            dist = round6.graph_label_prop_communities(spark, sf_dir).collect()
+            dist = graph.graph_label_prop_communities(spark, sf_dir).collect()
         assert sorted(map(tuple, fast)) == sorted(map(tuple, dist)), cap
 
 
@@ -715,12 +724,15 @@ def test_auto_graph_twins_use_count_derived_planes(spark, sf_dir):
     their own hash rows, not aliases), and the auto survivor set must
     cover every embedding exactly once via its cluster representative."""
     from laposte_data_engineering_jedha_spark.operators import dedup
-    from laposte_data_engineering_jedha_spark.queries import llmops, round13l
+    from laposte_data_engineering_jedha_spark.queries import (
+        _GRAPH_BAND_PLANES,
+        dedup as q_dedup,
+    )
 
     n = q.table(spark, sf_dir, "embeddings").count()
     planes = dedup.auto_band_planes(n)
-    assert planes != llmops._GRAPH_BAND_PLANES
-    rows = round13l.dedup_semantic_auto(spark, sf_dir).collect()
+    assert planes != _GRAPH_BAND_PLANES
+    rows = q_dedup.dedup_semantic_auto(spark, sf_dir).collect()
     ids = [r["vec_id"] for r in rows]
     assert len(ids) == len(set(ids))
     assert sum(r["cluster_size"] for r in rows) == n
@@ -734,11 +746,11 @@ def test_bpe_train_merges_invariants(spark, sf_dir):
     the four learned merges are distinct; and the winning pair count is
     non-increasing (a merge only creates pairs bounded by its own count
     and leaves others unchanged — the BPE monotonicity)."""
-    from laposte_data_engineering_jedha_spark.queries import round13m, round7e
+    from laposte_data_engineering_jedha_spark.queries import text
 
-    rows = round13m.text_bpe_train_merges(spark, sf_dir).collect()
+    rows = text.text_bpe_train_merges(spark, sf_dir).collect()
     assert [r["step"] for r in rows] == [1, 2, 3, 4]
-    single = round7e.text_bpe_merge_step(spark, sf_dir).collect()
+    single = text.text_bpe_merge_step(spark, sf_dir).collect()
     assert rows[0]["s1"] + rows[0]["s2"] == single[0]["merged_pair"]
     pairs = [(r["s1"], r["s2"]) for r in rows]
     assert len(set(pairs)) == len(pairs)
@@ -757,9 +769,9 @@ def test_dbscan_lite_label_semantics(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from laposte_data_engineering_jedha_spark.operators import dedup
-    from laposte_data_engineering_jedha_spark.queries import round13n
+    from laposte_data_engineering_jedha_spark.queries import similarity as q_similarity
 
-    rows = round13n.embedding_dbscan_lite(spark, sf_dir).collect()
+    rows = q_similarity.embedding_dbscan_lite(spark, sf_dir).collect()
     emb_n = q.table(spark, sf_dir, "embeddings").count()
     assert len(rows) == emb_n
     by_label = {}
@@ -770,7 +782,7 @@ def test_dbscan_lite_label_semantics(spark, sf_dir):
     emb = q.table(spark, sf_dir, "embeddings")
     planes = dedup.auto_band_planes(emb.count())
     pairs = dedup.embedding_dup_pairs_lsh(
-        emb, threshold=round13n._DB_EPS, bands=8, band_planes=planes
+        emb, threshold=q_similarity._DB_EPS, bands=8, band_planes=planes
     ).select("id_a", "id_b")
     sym = pairs.unionAll(
         pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
@@ -782,7 +794,7 @@ def test_dbscan_lite_label_semantics(spark, sf_dir):
     cluster = {r["vec_id"]: r["cluster_id"] for r in rows}
     label = {r["vec_id"]: r["label"] for r in rows}
     for r in by_label.get("core", []):
-        assert deg.get(r["vec_id"], 0) >= round13n._DB_MINPTS
+        assert deg.get(r["vec_id"], 0) >= q_similarity._DB_MINPTS
     for r in by_label.get("border", []):
         cores = [
             v for v in adj.get(r["vec_id"], ())

@@ -29,16 +29,16 @@ on one side of each:
 - graphs.DRIVER_MAX_EDGES = -1 forces the distributed loops of
   connected_components, co_activity_triangles, kcore_peel and
   graph_label_prop_communities (one registry caller each);
-- round4c._TRI_EXACT_MAX_EVENTS = -1 forces events_user_triangles onto
+- events._TRI_EXACT_MAX_EVENTS = -1 forces events_user_triangles onto
   its capped plan;
-- round6._LP_EXACT_MAX_EVENTS = -1 forces graph_label_prop_communities
+- graph._LP_EXACT_MAX_EVENTS = -1 forces graph_label_prop_communities
   onto the _LP_CELL_CAP_BIG cap (non-binding at fixture occupancy);
 - dedup.CARRY_MAX_OCCUPANCY = -1 forces embedding_dup_pairs_lsh onto its
   narrow-candidates plan (dedup_embedding_cosine estimates 33 vectors
   per bucket at sf0.001, so it carries vectors by default).
 
 `_FORCE` is the list of every gate and the value that forces it. The one
-size threshold missing from it is llmops._EMB_PINNED_MAX_N: its branch
+size threshold missing from it is dedup._EMB_PINNED_MAX_N: its branch
 changes the banding and so the result by design, and
 tests/test_round13.py checks that branch against its DuckDB twin at
 sf0.1 instead.
@@ -50,20 +50,18 @@ import pytest
 
 import laposte_data_engineering_jedha_spark.queries as q
 from laposte_data_engineering_jedha_spark.operators import caches, dedup, graphs, ranking
-from laposte_data_engineering_jedha_spark.queries import round4c, round6
+from laposte_data_engineering_jedha_spark.queries import events, graph
 
 from test_oracle_parity import canon_rows
 
 # one representative per spread family (OPTIMIZATION_r13.md):
-# - orders spread w/ key (olap_bootstrap_mean_ci, round9f)
-# - lineitem spread w/ key (olap_pricing_summary, olap.py)
-# - documents spread w/ key + low floor (corpus_importance_sample, round13c)
-# - bare spread_scan over a substituted-table path (text_perplexity_proxy,
-#   round4)
-# - all-tables loop spread (dq_table_checksums, round6f)
-# - documents spread ahead of token counting (text_bigram_kn_probs,
-#   round13c) and ahead of the PPJoin shingle kernel
-#   (dedup_prefix_filter_jaccard, round13b)
+# - orders spread w/ key (olap_bootstrap_mean_ci)
+# - lineitem spread w/ key (olap_pricing_summary)
+# - documents spread w/ key + low floor (corpus_importance_sample)
+# - bare spread_scan over a substituted-table path (text_perplexity_proxy)
+# - all-tables loop spread (dq_table_checksums)
+# - documents spread ahead of token counting (text_bigram_kn_probs) and
+#   ahead of the PPJoin shingle kernel (dedup_prefix_filter_jaccard)
 _SPREAD_REPS = [
     "olap_bootstrap_mean_ci",
     "olap_pricing_summary",
@@ -81,17 +79,17 @@ _RECOMPUTE_REPS = [
     "dq_merkle_row_pulls",  # operators/reconcile.py
     "ivf_index_search",  # operators/similarity.py
     "corpus_fixed_n_hash_sample",  # operators/ranking.py (_auto_pick)
-    "corpus_clean_pipeline",  # queries/llmops.py
-    "text_perplexity_proxy",  # queries/round4.py
-    "corpus_clean_pipeline_sem",  # queries/round5.py
-    "corpus_passage_scrub",  # queries/round6.py
-    "embedding_kmedoid_step",  # queries/round6d.py
-    "olap_basket_affinity",  # queries/round6m.py
-    "corpus_cross_source_dupes",  # queries/round6n.py
-    "eval_cluster_silhouette",  # queries/round11e.py
-    "eval_ivf_recall_at_k",  # queries/round12c.py
-    "corpus_importance_sample",  # queries/round13c.py
-    "olap_market_basket_lift",  # queries/round13f.py
+    "corpus_clean_pipeline",  # queries/text.py
+    "text_perplexity_proxy",  # queries/text.py
+    "corpus_clean_pipeline_sem",  # queries/text.py
+    "corpus_passage_scrub",  # queries/text.py
+    "embedding_kmedoid_step",  # queries/similarity.py
+    "olap_basket_affinity",  # queries/olap.py
+    "corpus_cross_source_dupes",  # queries/text.py
+    "eval_cluster_silhouette",  # queries/similarity.py
+    "eval_ivf_recall_at_k",  # queries/similarity.py
+    "corpus_importance_sample",  # queries/text.py
+    "olap_market_basket_lift",  # queries/olap.py
 ]
 
 # registry callers of each ranking operator
@@ -118,8 +116,8 @@ _FORCE = {
     "recompute": (caches, "GATE_MAX_EST_BYTES", -1),
     "offsets": (ranking, "WINDOW_MAX_ROWS", 0),
     "distributed": (graphs, "DRIVER_MAX_EDGES", -1),
-    "capped": (round4c, "_TRI_EXACT_MAX_EVENTS", -1),
-    "bigcap": (round6, "_LP_EXACT_MAX_EVENTS", -1),
+    "capped": (events, "_TRI_EXACT_MAX_EVENTS", -1),
+    "bigcap": (graph, "_LP_EXACT_MAX_EVENTS", -1),
     "narrow": (dedup, "CARRY_MAX_OCCUPANCY", -1),
 }
 _REPS = {

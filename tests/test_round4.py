@@ -13,7 +13,7 @@ import conftest
 
 from laposte_data_engineering_jedha_spark.functions import texts
 from laposte_data_engineering_jedha_spark.operators import dedup
-from laposte_data_engineering_jedha_spark.queries import round4
+from laposte_data_engineering_jedha_spark.queries import dedup as q_dedup, events, olap
 
 _K, _W = 3, 4
 _GUARANTEE = _W + _K - 1  # shared token run length that MUST share a fingerprint
@@ -135,7 +135,7 @@ def test_q5_plan_broadcasts_dims_no_cartesian(spark, sf_dir_small):
     """Q5's supplier/nation/region side must broadcast (lineitem never
     shuffles for the dim join) and nothing degrades to a cartesian/BNL
     product."""
-    plan = _plan(round4.olap_local_supplier_volume(spark, sf_dir_small))
+    plan = _plan(olap.olap_local_supplier_volume(spark, sf_dir_small))
     assert plan.count("BroadcastHashJoin") >= 2
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -145,7 +145,7 @@ def test_q4_plan_is_semi_join_with_residual(spark, sf_dir_small):
     """The EXISTS must compile to a LEFT SEMI hash join on orderkey with the
     shipdate inequality as a residual condition — not an inner join +
     distinct."""
-    plan = _plan(round4.olap_order_priority(spark, sf_dir_small))
+    plan = _plan(olap.olap_order_priority(spark, sf_dir_small))
     assert "LeftSemi" in plan
     assert "HashAggregate" in plan
 
@@ -161,7 +161,7 @@ def test_winnow_plan_mapside_selection_no_self_cartesian(spark, sf_dir_small):
     test exists to catch.)"""
     import re as _re
 
-    plan = _plan(round4.dedup_winnow(spark, sf_dir_small))
+    plan = _plan(q_dedup.dedup_winnow(spark, sf_dir_small))
     assert not _re.search(r"windowspecdefinition\(doc_id", plan)
     for spec in _re.findall(r"windowspecdefinition\((\w+)#", plan):
         assert spec == "fp", plan
@@ -185,7 +185,7 @@ def test_perplexity_proxy_known_corpus(spark, monkeypatch):
     two singleton tokens scores highest; empty doc -> (0, NULL)."""
     import math
 
-    from laposte_data_engineering_jedha_spark.queries import round4
+    from laposte_data_engineering_jedha_spark.queries import text
 
     rows = [
         (1, "common common"),
@@ -194,8 +194,8 @@ def test_perplexity_proxy_known_corpus(spark, monkeypatch):
         (4, ""),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    monkeypatch.setattr(round4, "table", lambda s, d, n: df)
-    out = {r["doc_id"]: r for r in round4.text_perplexity_proxy(spark, "unused").collect()}
+    monkeypatch.setattr(text, "table", lambda s, d, n: df)
+    out = {r["doc_id"]: r for r in text.text_perplexity_proxy(spark, "unused").collect()}
     # corpus: common x6, rare1 x1, rare2 x1 -> N=8
     p_common, p_rare = 6 / 8, 1 / 8
     assert out[4]["n_tokens"] == 0 and out[4]["xent_bits"] is None
@@ -213,7 +213,7 @@ def test_q22_plan_anti_join_one_row_broadcast(spark, sf_dir_small):
     """The NOT EXISTS must be a LEFT ANTI join and the scalar threshold a
     broadcast of a one-row aggregate — no driver collect in the plan
     path, no cartesian of anything bigger than one row."""
-    plan = _plan(round4.olap_top_balance_no_orders(spark, sf_dir_small))
+    plan = _plan(olap.olap_top_balance_no_orders(spark, sf_dir_small))
     assert "LeftAnti" in plan
     assert "BroadcastNestedLoopJoin" in plan  # the 1-row threshold cross join
     assert "CartesianProduct" not in plan
@@ -222,7 +222,7 @@ def test_q22_plan_anti_join_one_row_broadcast(spark, sf_dir_small):
 def test_interarrival_reuses_user_partitioning(spark, sf_dir_small):
     """lag window and the per-user aggregate share the user_id hash
     partitioning: exactly ONE user_id Exchange in the whole plan."""
-    plan = _plan(round4.events_interarrival_stats(spark, sf_dir_small))
+    plan = _plan(events.events_interarrival_stats(spark, sf_dir_small))
     import re
 
     exchanges = re.findall(r"hashpartitioning\(user_id", plan)
@@ -235,14 +235,14 @@ def test_embedding_outliers_values_and_plan(spark):
     first; centroid side must broadcast."""
     rows = [(i, [0.0, 0.0], 0) for i in range(1, 7)] + [(99, [12.0, 16.0], 0)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    import laposte_data_engineering_jedha_spark.queries.round4 as r4
+    from laposte_data_engineering_jedha_spark.queries import similarity
 
-    orig = r4.table
+    orig = similarity.table
     try:
-        r4.table = lambda s, d, n: df
-        out = r4.embedding_outliers(spark, "unused").collect()
+        similarity.table = lambda s, d, n: df
+        out = similarity.embedding_outliers(spark, "unused").collect()
     finally:
-        r4.table = orig
+        similarity.table = orig
     top = max(out, key=lambda r: r["dist"])
     assert top["vec_id"] == 99
     # centroid of 7 vecs: (12/7, 16/7); dist of planted point = sqrt((12-12/7)^2+(16-16/7)^2) = 20*6/7

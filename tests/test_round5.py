@@ -1,6 +1,6 @@
 """Round-5 additions: pinned-codebook PQ/IVF verification twins.
 
-The DuckDB hash parity of queries/round5.py is covered by the oracle gate
+The DuckDB hash parity of the pinned-codebook twins (queries/similarity.py) is covered by the oracle gate
 (tests/test_oracle_parity.py runs every registered oracle); these tests pin
 the OTHER equivalence — the pure-Catalyst twin must agree with the
 production Arrow kernels (similarity.pq_encode / vectors.pd_nearest_centroids)
@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from laposte_data_engineering_jedha_spark.functions import vectors
 from laposte_data_engineering_jedha_spark.operators import similarity
-from laposte_data_engineering_jedha_spark.queries import round5, table
+from laposte_data_engineering_jedha_spark.queries import similarity as q_similarity, table
 
 
 def test_pinned_codebook_shape_and_values():
@@ -35,7 +35,7 @@ def test_pq_pinned_catalyst_equals_arrow_kernel(spark, sf_dir):
         r["vec_id"]: r["codes"]
         for r in similarity.pq_encode(emb, cb).collect()
     }
-    catalyst = round5.embedding_pq_encode_pinned(spark, sf_dir).collect()
+    catalyst = q_similarity.embedding_pq_encode_pinned(spark, sf_dir).collect()
     assert len(catalyst) == len(kernel) > 0
     for r in catalyst:
         assert [r[f"code{j}"] for j in range(4)] == kernel[r["vec_id"]]
@@ -50,7 +50,7 @@ def test_ivf_pinned_catalyst_equals_arrow_kernel(spark, sf_dir):
             "vec_id", vectors.pd_nearest_centroids("embedding", centers, 1).alias("cent")
         ).collect()
     }
-    rows = round5.ivf_assign_pinned(spark, sf_dir).collect()
+    rows = q_similarity.ivf_assign_pinned(spark, sf_dir).collect()
     assert len(rows) == len(kernel) > 0
     for r in rows:
         assert r["centroid"] == kernel[r["vec_id"]]
@@ -63,7 +63,7 @@ def test_ivf_pinned_d2_is_true_min_distance(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings")
     centers = similarity.pinned_codebook(1, 16, 64)[0]
     vecs = {r["vec_id"]: np.array(r["embedding"], dtype="float64") for r in emb.collect()}
-    for r in round5.ivf_assign_pinned(spark, sf_dir).limit(50).collect():
+    for r in q_similarity.ivf_assign_pinned(spark, sf_dir).limit(50).collect():
         d2 = ((vecs[r["vec_id"]] - centers[r["centroid"]]) ** 2).sum()
         assert abs(d2 - r["d2"]) < 1e-6
 
@@ -83,26 +83,24 @@ def test_fold_kernels_bit_identical_to_catalyst_folds(spark, sf_dir):
         "vec_id",
         vectors.pd_fold_codes("embedding", cb).alias("k_codes"),
         F.array(
-            *[round5._spark_argmin(j, 16, 16).cast("int") for j in range(4)]
+            *[q_similarity._spark_argmin(j, 16, 16).cast("int") for j in range(4)]
         ).alias("c_codes"),
         vectors.pd_fold_assign_d2("embedding", centers).alias("k_assign"),
-        round5._spark_argmin(0, 16, 64).cast("int").alias("c_centroid"),
-        F.least(*[round5._spark_d2(0, c, 64) for c in range(16)]).alias("c_d2"),
+        q_similarity._spark_argmin(0, 16, 64).cast("int").alias("c_centroid"),
+        F.least(*[q_similarity._spark_d2(0, c, 64) for c in range(16)]).alias("c_d2"),
         vectors.pd_fold_topn_centroids("embedding", centers, 4).alias("k_probes"),
         vectors.pd_fold_d2_tables("embedding", cb).alias("k_tabs"),
         F.array(
             *[
-                F.array(*[round5._spark_d2(j, c, 16) for c in range(16)])
+                F.array(*[q_similarity._spark_d2(j, c, 16) for c in range(16)])
                 for j in range(4)
             ]
         ).alias("c_tabs"),
     ).collect()
     assert len(rows) > 0
 
-    from laposte_data_engineering_jedha_spark.queries import round7
-
     probe_rows = emb.select(
-        "vec_id", round7._probe_array().alias("c_probes")
+        "vec_id", q_similarity._probe_array().alias("c_probes")
     ).collect()
     c_probes = {r["vec_id"]: r["c_probes"] for r in probe_rows}
 
@@ -163,7 +161,7 @@ def test_minhash_cross_consistent_with_self_join(spark, sf_dir):
     """Cross pairs over the %5 split == the self-join pairs with exactly one
     endpoint on each side (same signatures, banding, verify kernel)."""
     from laposte_data_engineering_jedha_spark.operators import dedup
-    from laposte_data_engineering_jedha_spark.queries import round5
+    from laposte_data_engineering_jedha_spark.queries import dedup as q_dedup
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     selfp = dedup.minhash_lsh_pairs(docs, threshold=0.5).collect()
@@ -174,26 +172,24 @@ def test_minhash_cross_consistent_with_self_join(spark, sf_dir):
     }
     got = {
         (r["new_id"], r["base_id"]): r["jaccard"]
-        for r in round5.dedup_incremental(spark, sf_dir).collect()
+        for r in q_dedup.dedup_incremental(spark, sf_dir).collect()
     }
     assert got == expect
 
 
 def test_clean_pipeline_sem_is_clean_pipeline_minus_semantic_drops(spark, sf_dir):
-    from laposte_data_engineering_jedha_spark.queries import llmops, round5
+    from laposte_data_engineering_jedha_spark.queries import text
 
-    two_stage = {r["doc_id"] for r in llmops.corpus_clean_pipeline(spark, sf_dir).collect()}
+    two_stage = {r["doc_id"] for r in text.corpus_clean_pipeline(spark, sf_dir).collect()}
     three_stage = {
-        r["doc_id"] for r in round5.corpus_clean_pipeline_sem(spark, sf_dir).collect()
+        r["doc_id"] for r in text.corpus_clean_pipeline_sem(spark, sf_dir).collect()
     }
     assert three_stage <= two_stage
     assert three_stage  # survivors remain
     # every doc dropped by stage 3 has a verified cosine>=0.4 pair with a
     # LOWER-id survivor of stage 2 (keep-earliest over the survivor set)
     from laposte_data_engineering_jedha_spark.operators import dedup
-    from laposte_data_engineering_jedha_spark.queries.llmops import (
-        _EMB_BANDS,
-    )
+    from laposte_data_engineering_jedha_spark.queries import _EMB_BANDS
 
     emb = table(spark, sf_dir, "embeddings").where(
         F.col("vec_id").isin([int(x) for x in two_stage])
@@ -207,7 +203,7 @@ def test_embedding_cross_consistent_with_self_join(spark, sf_dir):
     """Cross pairs over the %10==7 split == self-join pairs with exactly one
     endpoint on each side (same hyperplanes, banding, cosine kernel)."""
     from laposte_data_engineering_jedha_spark.operators import dedup
-    from laposte_data_engineering_jedha_spark.queries.llmops import _EMB_BANDS
+    from laposte_data_engineering_jedha_spark.queries import _EMB_BANDS
 
     emb = table(spark, sf_dir, "embeddings")
     selfp = dedup.embedding_dup_pairs_lsh(emb, threshold=0.4, bands=_EMB_BANDS).collect()
@@ -271,7 +267,7 @@ def test_pq_adc_pinned_recall_vs_kernel(spark, sf_dir):
     the two ADC implementations is wrong."""
     from pyspark.sql import functions as F
 
-    from laposte_data_engineering_jedha_spark.queries.round5 import (
+    from laposte_data_engineering_jedha_spark.queries.similarity import (
         _ADC_QMOD,
         pq_adc_topk_pinned,
     )

@@ -1,5 +1,6 @@
-"""Round-5 batch-2 additions (queries/round5b.py): semantic pins that the
-oracle gate can't express — planted-duplicate behavior, interval algebra,
+"""Semantic pins for dedup_passage, corpus_pack_bins, multimodal_phash_dedup,
+olap_scd2_history, events_windowed_topk and text_oov_rate that the oracle
+gate can't express — planted-duplicate behavior, interval algebra,
 conservation laws, plan shape. DuckDB hash parity itself is covered by
 tests/test_oracle_parity.py (every registered oracle runs at sf0.001)."""
 
@@ -9,7 +10,13 @@ import pyspark.sql.functions as F
 import pytest
 
 from laposte_data_engineering_jedha_spark.operators import dedup, merge, multimodal
-from laposte_data_engineering_jedha_spark.queries import round5b, table
+from laposte_data_engineering_jedha_spark.queries import (
+    events,
+    io,
+    olap,
+    table,
+    text as q_text,
+)
 
 
 # ------------------------------ dedup_passage -------------------------------
@@ -59,7 +66,7 @@ def test_passage_partial_tail_counted(spark):
 
 
 def test_pack_bins_conservation(spark, sf_dir):
-    out = round5b.corpus_pack_bins(spark, sf_dir).collect()
+    out = q_text.corpus_pack_bins(spark, sf_dir).collect()
     docs = table(spark, sf_dir, "documents")
     assert sum(r["n_docs"] for r in out) == docs.count()
     for r in out:
@@ -109,7 +116,7 @@ def test_phash_kernel_matches_sql_gram_definition(spark):
     con = duckdb.connect()
     con.execute("CREATE TABLE documents AS SELECT 1 AS doc_id, ? AS text", [text])
     want = con.execute(
-        round5b._PHASH_SQL.replace("SELECT id_a, id_b, hamming", "SELECT 1")
+        io._PHASH_SQL.replace("SELECT id_a, id_b, hamming", "SELECT 1")
         .split("bands AS")[0]
         .rstrip().rstrip(",")
         + "\nSELECT sim FROM sims"
@@ -121,7 +128,7 @@ def test_phash_kernel_matches_sql_gram_definition(spark):
 
 
 def test_scd2_intervals_partition_timeline(spark, sf_dir):
-    rows = round5b.olap_scd2_history(spark, sf_dir).collect()
+    rows = olap.olap_scd2_history(spark, sf_dir).collect()
     assert rows
     by_key: dict = {}
     for r in rows:
@@ -156,7 +163,7 @@ def test_scd2_operator_generic(spark):
 
 
 def test_windowed_topk_rank_contract(spark, sf_dir):
-    rows = round5b.events_windowed_topk(spark, sf_dir).collect()
+    rows = events.events_windowed_topk(spark, sf_dir).collect()
     assert rows
     by_day: dict = {}
     for r in rows:
@@ -173,7 +180,7 @@ def test_windowed_topk_rank_contract(spark, sf_dir):
 
 
 def test_oov_rate_bounds_and_null_free(spark, sf_dir):
-    rows = round5b.text_oov_rate(spark, sf_dir).collect()
+    rows = q_text.text_oov_rate(spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r["n_oov"] is not None and 0 <= r["n_oov"] <= r["n_tokens"]
@@ -181,7 +188,7 @@ def test_oov_rate_bounds_and_null_free(spark, sf_dir):
 
 
 def test_oov_vocab_is_broadcast(spark, sf_dir):
-    plan = round5b.text_oov_rate(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    plan = q_text.text_oov_rate(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
@@ -189,9 +196,9 @@ def test_oov_vocab_is_broadcast(spark, sf_dir):
 
 
 def test_dq_orders_checks_clean_fixture(spark, sf_dir):
-    from laposte_data_engineering_jedha_spark.queries import round5c, table
+    from laposte_data_engineering_jedha_spark.queries import dq, table
 
-    row = round5c.dq_orders_checks(spark, sf_dir).collect()[0]
+    row = dq.dq_orders_checks(spark, sf_dir).collect()[0]
     orders = table(spark, sf_dir, "orders")
     assert row["n_rows"] == orders.count()
     # fixture integrity: PK unique, FK closed
@@ -226,9 +233,9 @@ def test_dq_detects_planted_violations(spark, sf_dir):
 
 
 def test_skew_report_invariants(spark, sf_dir):
-    from laposte_data_engineering_jedha_spark.queries import round5c
+    from laposte_data_engineering_jedha_spark.queries import events
 
-    row = round5c.events_skew_report(spark, sf_dir).collect()[0]
+    row = events.events_skew_report(spark, sf_dir).collect()[0]
     assert row["n_keys"] > 0
     assert row["max_cnt"] >= row["p99_cnt"] >= row["p50_cnt"] > 0
     assert row["skew_ratio"] >= 1.0
@@ -238,9 +245,9 @@ def test_skew_report_invariants(spark, sf_dir):
 def test_scd2_at_ship_price_one_dim_row_per_fact(spark, sf_dir):
     """Interval disjointness must make the fact->history join at most
     1:1 per (orderkey, linenumber) fact row."""
-    from laposte_data_engineering_jedha_spark.queries import round5c, table
+    from laposte_data_engineering_jedha_spark.queries import olap, table
 
-    out = round5c.olap_scd2_at_ship_price(spark, sf_dir)
+    out = olap.olap_scd2_at_ship_price(spark, sf_dir)
     total = out.count()
     assert total > 0
     # every joined fact belongs to an SCD2-tracked order
@@ -332,7 +339,6 @@ def test_hll_union_of_days_equals_direct_weekly_sketch(spark, sf_dir):
 
 def test_frame_dedup_planted_shared_frame(spark):
     from laposte_data_engineering_jedha_spark.operators import multimodal as mm
-    from laposte_data_engineering_jedha_spark.queries import round5c
 
     # 256-byte frames: docs 1 and 2 share frame 0 exactly; doc 3 disjoint
     shared = "x" * mm.FRAME_SIZE

@@ -6,14 +6,21 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from laposte_data_engineering_jedha_spark.functions import texts
-from laposte_data_engineering_jedha_spark.queries import round6, table
+from laposte_data_engineering_jedha_spark.queries import (
+    dq,
+    events,
+    graph,
+    similarity,
+    table,
+    text,
+)
 
 
 def test_passage_scrub_untouched_docs_reconstruct_exactly(spark, sf_dir):
     """A doc with zero removed passages must reconstruct to EXACTLY the
     space-joined token stream (md5-pinned) — proving the rebuild preserves
     order and content, not just counts."""
-    out = round6.corpus_passage_scrub(spark, sf_dir)
+    out = text.corpus_passage_scrub(spark, sf_dir)
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", F.md5(F.array_join(texts.tokens("text"), " ")).alias("tok_md5")
     )
@@ -66,7 +73,7 @@ def test_passage_scrub_planted_shared_passage(spark):
 
 
 def test_rfm_bands_are_quartiles(spark, sf_dir):
-    out = round6.events_rfm_segments(spark, sf_dir).collect()
+    out = events.events_rfm_segments(spark, sf_dir).collect()
     assert len(out) > 0
     for c in ("r_q", "f_q", "m_q"):
         vals = [r[c] for r in out]
@@ -84,7 +91,7 @@ def test_rfm_bands_are_quartiles(spark, sf_dir):
 def test_interval_overlap_matches_bruteforce(spark, sf_dir):
     """The grid-bucketed overlap join must equal the quadratic definition
     computed driver-side over the collected session list."""
-    out = round6.events_interval_overlap(spark, sf_dir)
+    out = events.events_interval_overlap(spark, sf_dir)
     rows = out.collect()
     sessions = [(r["user_id"], r["session_start"], r["session_end"]) for r in rows]
     got = {
@@ -100,13 +107,13 @@ def test_interval_overlap_matches_bruteforce(spark, sf_dir):
 
 
 def test_time_to_convert_percentiles_ordered(spark, sf_dir):
-    r = round6.events_time_to_convert(spark, sf_dir).first()
+    r = events.events_time_to_convert(spark, sf_dir).first()
     assert r["n_converted"] > 0
     assert 0 <= r["p25_us"] <= r["p50_us"] <= r["p75_us"]
 
 
 def test_drift_monitor_bounds_and_counts(spark, sf_dir):
-    out = round6.embedding_drift_monitor(spark, sf_dir).collect()
+    out = similarity.embedding_drift_monitor(spark, sf_dir).collect()
     assert len(out) > 0
     emb = table(spark, sf_dir, "embeddings")
     totals = {r["label"]: r["n"] for r in emb.groupBy("label").count().withColumnRenamed("count", "n").collect()}
@@ -121,7 +128,7 @@ def test_drift_monitor_bounds_and_counts(spark, sf_dir):
 
 
 def test_dq_documents_clean_fixture(spark, sf_dir):
-    r = round6.dq_documents_checks(spark, sf_dir).first()
+    r = dq.dq_documents_checks(spark, sf_dir).first()
     assert r["n_rows"] > 0
     assert r["n_empty_text"] == 0
     assert r["n_bad_lang"] == 0
@@ -134,8 +141,8 @@ def test_label_prop_capped_variant_labels_every_user(spark, sf_dir, monkeypatch)
     user — no bucket member may vanish from the output, whatever its
     md5 rank (the same connectivity property pinned for
     hamming_band_pairs' cap)."""
-    n_users = round6.graph_label_prop_communities(spark, sf_dir).count()
-    monkeypatch.setattr(round6, "_LP_CELL_CAP", 4)
-    capped = round6.graph_label_prop_communities(spark, sf_dir)
+    n_users = graph.graph_label_prop_communities(spark, sf_dir).count()
+    monkeypatch.setattr(graph, "_LP_CELL_CAP", 4)
+    capped = graph.graph_label_prop_communities(spark, sf_dir)
     assert capped.count() == n_users
     assert capped.where(F.col("community").isNull()).count() == 0

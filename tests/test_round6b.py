@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from laposte_data_engineering_jedha_spark.operators import sketches
-from laposte_data_engineering_jedha_spark.queries import round6b, events_table
+from laposte_data_engineering_jedha_spark.queries import dq, events, events_table, text
 
 
 def test_mg_merge_never_exceeds_budget_and_bounds_error():
@@ -77,7 +77,7 @@ def test_kmv_estimate_within_theory_bounds(spark, sf_dir):
     """KMV with k=16 has relative stddev ~ 1/sqrt(k-2) ~ 27%; assert the
     estimate lands within 4 sigma of exact (deterministic given the data,
     so this never flakes) and the <k fallback returns exact counts."""
-    out = round6b.events_kmv_distinct(spark, sf_dir).collect()
+    out = events.events_kmv_distinct(spark, sf_dir).collect()
     assert len(out) > 0
     for r in out:
         if r["n_exact"] < 16:
@@ -90,7 +90,7 @@ def test_ewma_matches_direct_convolution(spark, sf_dir):
     """Recompute ewma_t = sum_{j=0..19} x_{t-j} * 0.5^(j+1) directly from
     the daily counts in Python (exact dyadic floats) and require EXACT
     equality — no tolerance, per the dyadic-exactness design claim."""
-    rows = round6b.events_ewma_daily(spark, sf_dir).collect()
+    rows = events.events_ewma_daily(spark, sf_dir).collect()
     by_type: dict[str, dict] = {}
     for r in rows:
         by_type.setdefault(r["event_type"], {})[r["day"]] = r
@@ -107,7 +107,7 @@ def test_ewma_matches_direct_convolution(spark, sf_dir):
 
 
 def test_negative_pairs_exactly_three_distinct_nonself(spark, sf_dir):
-    out = round6b.corpus_negative_pairs(spark, sf_dir)
+    out = text.corpus_negative_pairs(spark, sf_dir)
     n_docs = out.select("doc_id").distinct().count()
     assert n_docs > 0
     # every anchor draws at most 3; no self pairs; js in {1,2,3}
@@ -118,7 +118,7 @@ def test_negative_pairs_exactly_three_distinct_nonself(spark, sf_dir):
 
 
 def test_negative_pairs_plan_broadcasts_reps(spark, sf_dir):
-    plan = round6b.corpus_negative_pairs(
+    plan = text.corpus_negative_pairs(
         spark, sf_dir
     )._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
@@ -127,7 +127,7 @@ def test_negative_pairs_plan_broadcasts_reps(spark, sf_dir):
 def test_schema_profile_single_scan_plan(spark, sf_dir):
     """The profile must stay one logical scan of documents (the oracle
     UNION ALL scans 5x; the Spark side's whole point is the single pass)."""
-    plan = round6b.dq_schema_profile(
+    plan = dq.dq_schema_profile(
         spark, sf_dir
     )._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("Relation") == 1

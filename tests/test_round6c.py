@@ -8,7 +8,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from laposte_data_engineering_jedha_spark.queries import round6c
+from laposte_data_engineering_jedha_spark.queries import dq, events
 
 _SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 
@@ -38,7 +38,7 @@ def test_debounce_planted_gaps(spark, tmp_path):
         (5, _ts(1), 7, "view", 0.0, "{}"),
     ]
     d = _write_events(spark, tmp_path, rows)
-    out = {r["event_type"]: r for r in round6c.events_debounce(spark, d).collect()}
+    out = {r["event_type"]: r for r in events.events_debounce(spark, d).collect()}
     assert out["click"]["n_raw"] == 4 and out["click"]["n_kept"] == 2
     assert out["view"]["n_raw"] == 1 and out["view"]["n_kept"] == 1
 
@@ -63,7 +63,7 @@ def test_pattern_match_truth_table(spark, tmp_path):
     d = _write_events(spark, tmp_path, rows)
     out = {
         (r["user_id"], r["session_id"]): r["matched"]
-        for r in round6c.events_pattern_match(spark, d).collect()
+        for r in events.events_pattern_match(spark, d).collect()
     }
     assert out == {(1, 1): True, (1, 2): False, (2, 1): False}
 
@@ -109,7 +109,7 @@ def test_attribution_journeys_conserve_credit(spark, sf_dir):
     )
     assert per_user.where(F.col("total") != 1_000_000).count() == 0
     # and the registered rollup equals the sum over journeys
-    total = round6c.events_attribution_position(spark, sf_dir).agg(
+    total = events.events_attribution_position(spark, sf_dir).agg(
         F.sum("credit_millionths")
     ).first()[0]
     assert total == n_users * 1_000_000
@@ -129,7 +129,7 @@ def test_attribution_planted_five_touches(spark, tmp_path):
     d = _write_events(spark, tmp_path, rows)
     out = {
         r["event_type"]: r["credit_millionths"]
-        for r in round6c.events_attribution_position(spark, d).collect()
+        for r in events.events_attribution_position(spark, d).collect()
     }
     # views: pos1 (400000) + pos3 mid-rank2 (66667) + pos5 last... pos5 is
     # a middle? tt=5: pos1 first, pos5 last -> view pos5 = 400000.
@@ -153,11 +153,11 @@ def test_anomaly_mad_flags_planted_spike(spark, tmp_path):
         eid += 1
         rows.append((eid, _ts(21 * 86400 + i * 60), 1, "click", 0.0, "{}"))
     d = _write_events(spark, tmp_path, rows)
-    out = round6c.events_anomaly_mad(spark, d).collect()
+    out = events.events_anomaly_mad(spark, d).collect()
     assert len(out) == 1
     assert out[0]["n_events"] == 50 and out[0]["day"] == dt.date(2024, 1, 22)
 
 
 def test_k_anonymity_reports_only_small_cells(spark, sf_dir):
-    out = round6c.dq_k_anonymity(spark, sf_dir).collect()
+    out = dq.dq_k_anonymity(spark, sf_dir).collect()
     assert all(r["n"] < 5 for r in out)

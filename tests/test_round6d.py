@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from laposte_data_engineering_jedha_spark.queries import round6d
+from laposte_data_engineering_jedha_spark.queries import similarity
 
 
 def _emb(vec_id: int, x: float):
@@ -26,7 +26,7 @@ def test_kmedoid_recenter_moves_off_seed(spark, tmp_path):
     spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     ).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
-    out = {r["cluster"]: r for r in round6d.embedding_kmedoid_step(spark, d).collect()}
+    out = {r["cluster"]: r for r in similarity.embedding_kmedoid_step(spark, d).collect()}
     c1 = out[1]
     assert c1["medoid_id"] == 10, c1  # moved off seed 0
     assert c1["n_before"] == 6  # seed + 5 members
@@ -38,7 +38,7 @@ def test_kmedoid_recenter_moves_off_seed(spark, tmp_path):
 
 
 def test_kmedoid_fixture_partitions_everything(spark, sf_dir):
-    out = round6d.embedding_kmedoid_step(spark, sf_dir).collect()
+    out = similarity.embedding_kmedoid_step(spark, sf_dir).collect()
     from laposte_data_engineering_jedha_spark.queries import table
 
     n = table(spark, sf_dir, "embeddings").count()
@@ -48,7 +48,7 @@ def test_kmedoid_fixture_partitions_everything(spark, sf_dir):
 
 
 def test_kmedoid_plan_broadcasts_both_assignment_passes(spark, sf_dir):
-    plan = round6d.embedding_kmedoid_step(
+    plan = similarity.embedding_kmedoid_step(
         spark, sf_dir
     )._jdf.queryExecution().executedPlan().toString()
     # two k-row sides broadcast (seeds + medoids); no SortMergeJoin on the

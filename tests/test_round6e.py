@@ -11,7 +11,7 @@ import conftest
 from pyspark.sql import functions as F
 
 from laposte_data_engineering_jedha_spark.operators import joins
-from laposte_data_engineering_jedha_spark.queries import events_table, round6e
+from laposte_data_engineering_jedha_spark.queries import events, events_table
 from laposte_data_engineering_jedha_spark.streaming import jobs
 
 
@@ -106,7 +106,7 @@ def test_cep_stream_matches_batch(spark, sf_dir, events_dir):
     )
     batch = sorted(
         (r["user_id"], r["view_us"], r["purchase_us"])
-        for r in round6e.events_cep_completions(spark, conftest.SF_SMOKE).collect()
+        for r in events.events_cep_completions(spark, conftest.SF_SMOKE).collect()
     )
     max_us = spark.read.parquet(events_dir).agg(F.max(F.unix_micros("ts"))).first()[0]
     wm_us = (max_us // 1000 - 600_000) * 1000  # Spark tracks event time in ms
@@ -139,7 +139,7 @@ def test_cep_rearm_and_disarm_semantics(spark, tmp_path):
     ).write.mode("overwrite").parquet(f"{d}/events.parquet")
     got = sorted(
         (r["user_id"], r["view_us"], r["purchase_us"])
-        for r in round6e.events_cep_completions(spark, d).collect()
+        for r in events.events_cep_completions(spark, d).collect()
     )
     base = int(dt.datetime(2024, 1, 1).timestamp()) * 1_000_000
     assert got == [(2, base + 5_000_000, base + 9_000_000)]

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from laposte_data_engineering_jedha_spark.functions import texts
-from laposte_data_engineering_jedha_spark.queries import round6f, table
+from laposte_data_engineering_jedha_spark.queries import dq, events, table
 
 
 def test_checksums_partitioning_invariant_and_corruption_sensitive(spark, sf_dir):
@@ -33,15 +33,15 @@ def test_checksums_partitioning_invariant_and_corruption_sensitive(spark, sf_dir
 
 
 def test_checksums_cover_all_tables(spark, sf_dir):
-    out = {r["tbl"]: r for r in round6f.dq_table_checksums(spark, sf_dir).collect()}
-    assert set(out) == set(round6f._CHECKSUM_KEYS)
+    out = {r["tbl"]: r for r in dq.dq_table_checksums(spark, sf_dir).collect()}
+    assert set(out) == set(dq._CHECKSUM_KEYS)
     for t, r in out.items():
         assert r["n_rows"] > 0, t
         assert r["key_checksum"] > 0, t
 
 
 def test_audience_overlap_bounds(spark, sf_dir):
-    out = round6f.events_audience_overlap(spark, sf_dir).collect()
+    out = events.events_audience_overlap(spark, sf_dir).collect()
     # 5 event types -> 10 unordered pairs
     assert len(out) == 10
     for r in out:

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from laposte_data_engineering_jedha_spark.queries import round6g
+from laposte_data_engineering_jedha_spark.queries import events, text
 
 _EV_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 
@@ -26,7 +26,7 @@ def test_seasonal_naive_planted_series(spark, tmp_path):
     spark.createDataFrame(rows, _EV_SCHEMA).write.mode("overwrite").parquet(
         f"{d}/events.parquet"
     )
-    out = round6g.events_forecast_seasonal_naive(spark, d).collect()
+    out = events.events_forecast_seasonal_naive(spark, d).collect()
     assert len(out) == 1
     r = out[0]
     assert r["n_days"] == 7 and r["abs_err_total"] == 21
@@ -44,7 +44,7 @@ def test_gini_extremes(spark, tmp_path):
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    out = {r["lang"]: r["gini"] for r in round6g.corpus_length_gini(spark, d).collect()}
+    out = {r["lang"]: r["gini"] for r in text.corpus_length_gini(spark, d).collect()}
     assert out["eq"] == 0.0
     assert 0.89 < out["skew"] < 0.9  # (n-1)/n = 0.9 minus the 9 tiny docs' mass
 
@@ -57,6 +57,6 @@ def test_readability_planted_counts(spark, tmp_path):
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    r = round6g.text_readability(spark, d).first()
+    r = text.text_readability(spark, d).first()
     assert (r["n_words"], r["n_sentences"], r["n_syllables"]) == (6, 2, 6)
     assert abs(r["flesch"] - (206.835 - 1.015 * 3 - 84.6 * 1)) < 1e-9

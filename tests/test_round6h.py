@@ -5,13 +5,13 @@ from __future__ import annotations
 
 import datetime as dt
 
-from laposte_data_engineering_jedha_spark.queries import round6h
+from laposte_data_engineering_jedha_spark.queries import dedup, events
 
 _EV_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 
 
 def test_minhash_calibration_bounds(spark, sf_dir):
-    r = round6h.dedup_minhash_calibration(spark, sf_dir).first()
+    r = dedup.dedup_minhash_calibration(spark, sf_dir).first()
     assert r["n_candidates"] > 0
     assert 0 <= r["n_true"] <= r["n_candidates"]
     assert 0.0 <= r["precision_05"] <= 1.0
@@ -46,7 +46,7 @@ def test_ab_health_detects_planted_srm(spark, tmp_path):
     spark.createDataFrame(rows, _EV_SCHEMA).write.mode("overwrite").parquet(
         f"{d}/events.parquet"
     )
-    r = round6h.events_ab_health(spark, d).first()
+    r = events.events_ab_health(spark, d).first()
     assert r["n_a"] + r["n_b"] == 62
     assert min(r["n_a"], r["n_b"]) == 2
     assert r["srm_chi2"] > 3.84  # flagrant sample-ratio mismatch
@@ -65,7 +65,7 @@ def test_ab_health_degenerate_conversion_yields_null_z(spark, tmp_path):
     spark.createDataFrame(rows, _EV_SCHEMA).write.mode("overwrite").parquet(
         f"{d}/events.parquet"
     )
-    r = round6h.events_ab_health(spark, d).first()
+    r = events.events_ab_health(spark, d).first()
     assert r["c_a"] == r["n_a"] and r["c_b"] == r["n_b"]
     assert r["z_score"] is None
     assert r["srm_chi2"] is not None

@@ -4,7 +4,7 @@ the property the isotropic fixture (where e_1 stays dominant) can't show."""
 
 from __future__ import annotations
 
-from laposte_data_engineering_jedha_spark.queries import round6i
+from laposte_data_engineering_jedha_spark.queries import similarity
 
 
 def test_power_iteration_rotates_to_planted_direction(spark, tmp_path):
@@ -23,7 +23,7 @@ def test_power_iteration_rotates_to_planted_direction(spark, tmp_path):
     spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     ).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
-    out = round6i.embedding_power_iteration(spark, d).collect()
+    out = similarity.embedding_power_iteration(spark, d).collect()
     top = out[0]
     second = out[1]
     assert top["dim"] == 5 and second["dim"] == 1
@@ -34,7 +34,7 @@ def test_power_iteration_rotates_to_planted_direction(spark, tmp_path):
 
 
 def test_power_iteration_fixture_shape(spark, sf_dir):
-    out = round6i.embedding_power_iteration(spark, sf_dir).collect()
+    out = similarity.embedding_power_iteration(spark, sf_dir).collect()
     assert len(out) == 8
     mags = [r["magnitude"] for r in out]
     assert mags == sorted(mags, reverse=True)

@@ -7,7 +7,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from laposte_data_engineering_jedha_spark.queries import round6j
+from laposte_data_engineering_jedha_spark.queries import events, olap
 
 _EV_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 
@@ -17,7 +17,7 @@ def _ts(s: float):
 
 
 def test_cumulative_share_monotone_ends_at_one(spark, sf_dir):
-    rows = round6j.olap_cumulative_revenue_share(spark, sf_dir).collect()
+    rows = olap.olap_cumulative_revenue_share(spark, sf_dir).collect()
     by_nation: dict[str, list] = {}
     for r in rows:
         by_nation.setdefault(r["n_name"], []).append(r)
@@ -30,7 +30,7 @@ def test_cumulative_share_monotone_ends_at_one(spark, sf_dir):
 
 
 def test_hhi_bounds_and_planted_monopoly(spark, sf_dir, tmp_path):
-    out = round6j.olap_supplier_hhi(spark, sf_dir).collect()
+    out = olap.olap_supplier_hhi(spark, sf_dir).collect()
     for r in out:
         # HHI in (10000/n, 10000]
         assert 10000.0 / r["n_suppliers"] - 1e-6 <= r["hhi"] <= 10000.0 + 1e-6
@@ -48,7 +48,7 @@ def test_hhi_bounds_and_planted_monopoly(spark, sf_dir, tmp_path):
          (2, 1, 2, 50.0, 0.0, dt.datetime(2024, 2, 2))],
         "l_orderkey long, l_suppkey long, l_linenumber long, l_extendedprice double, l_discount double, l_shipdate timestamp",
     ).write.mode("overwrite").parquet(f"{d}/lineitem.parquet")
-    r = round6j.olap_supplier_hhi(spark, d).first()
+    r = olap.olap_supplier_hhi(spark, d).first()
     assert r["n_suppliers"] == 1 and r["hhi"] == 10000.0
 
 
@@ -62,7 +62,7 @@ def test_lag_features_planted_window(spark, tmp_path):
     spark.createDataFrame(rows, _EV_SCHEMA).write.mode("overwrite").parquet(
         f"{d}/events.parquet"
     )
-    out = {r["event_id"]: r for r in round6j.events_lag_features(spark, d).collect()}
+    out = {r["event_id"]: r for r in events.events_lag_features(spark, d).collect()}
     r6 = out[6]
     assert r6["lag1_cents"] == 500
     assert r6["gap_us"] == 10_000_000
@@ -73,7 +73,7 @@ def test_lag_features_planted_window(spark, tmp_path):
 
 
 def test_markov_absorb_bounds_and_planted_chain(spark, sf_dir, tmp_path):
-    for r in round6j.events_markov_absorb2(spark, sf_dir).collect():
+    for r in events.events_markov_absorb2(spark, sf_dir).collect():
         assert 0.0 <= r["p_convert_1"] <= r["p_convert_2"] <= 1.0 + 1e-9
     # planted: view -> click always; click -> purchase half the time.
     # p1(view)=0, p2(view)=p(view->click)*p1(click)=1*0.5=0.5
@@ -88,7 +88,7 @@ def test_markov_absorb_bounds_and_planted_chain(spark, sf_dir, tmp_path):
     spark.createDataFrame(rows, _EV_SCHEMA).write.mode("overwrite").parquet(
         f"{d}/events.parquet"
     )
-    out = {r["event_type"]: r for r in round6j.events_markov_absorb2(spark, d).collect()}
+    out = {r["event_type"]: r for r in events.events_markov_absorb2(spark, d).collect()}
     assert out["view"]["p_convert_1"] == 0.0
     assert out["view"]["p_convert_2"] == 0.5
     assert out["click"]["p_convert_1"] == 0.5

@@ -5,11 +5,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from laposte_data_engineering_jedha_spark.queries import round6k, table
+from laposte_data_engineering_jedha_spark.queries import events, olap, table, text
 
 
 def test_abc_partitions_all_parts_and_a_dominates(spark, sf_dir):
-    out = {r["band"]: r for r in round6k.olap_abc_classification(spark, sf_dir).collect()}
+    out = {r["band"]: r for r in olap.olap_abc_classification(spark, sf_dir).collect()}
     n_parts = (
         table(spark, sf_dir, "lineitem").select("l_partkey").distinct().count()
     )
@@ -31,7 +31,7 @@ def test_abc_partitions_all_parts_and_a_dominates(spark, sf_dir):
 def test_sankey_edges_conserve_flow(spark, sf_dir):
     """Step-i outflow equals the number of users with at least i+1 events
     — and step-2 inflow per type equals step-1 outflow into that type."""
-    out = round6k.events_sankey_edges(spark, sf_dir).collect()
+    out = events.events_sankey_edges(spark, sf_dir).collect()
     from laposte_data_engineering_jedha_spark.queries import events_table
 
     ev = events_table(spark, sf_dir)
@@ -69,7 +69,7 @@ def test_corr_planted_perfect_and_anti(spark, tmp_path):
     spark.createDataFrame(
         embs, "vec_id long, embedding array<float>, label int"
     ).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
-    r = round6k.corpus_length_vs_norm_corr(spark, d).first()
+    r = text.corpus_length_vs_norm_corr(spark, d).first()
     assert r["n_rows"] == 20
     # y = (10i)^2 is monotone in x=10i but quadratic: r < 1 yet strongly
     # positive on this range
@@ -79,5 +79,5 @@ def test_corr_planted_perfect_and_anti(spark, tmp_path):
     spark.createDataFrame(
         docs2, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    r2 = round6k.corpus_length_vs_norm_corr(spark, d).first()
+    r2 = text.corpus_length_vs_norm_corr(spark, d).first()
     assert -1.0 <= r2["pearson_r"] < -0.95

@@ -7,11 +7,11 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from laposte_data_engineering_jedha_spark.queries import events_table, round6l
+from laposte_data_engineering_jedha_spark.queries import dq, events, events_table, olap
 
 
 def test_ship_cycle_percentiles_ordered(spark, sf_dir):
-    out = round6l.olap_ship_cycle_percentiles(spark, sf_dir).collect()
+    out = olap.olap_ship_cycle_percentiles(spark, sf_dir).collect()
     assert len(out) == 5  # TPC-H priorities
     for r in out:
         assert r["n_lines"] > 0
@@ -19,7 +19,7 @@ def test_ship_cycle_percentiles_ordered(spark, sf_dir):
 
 
 def test_new_vs_returning_conserves_dau_and_totals(spark, sf_dir):
-    out = round6l.events_new_vs_returning(spark, sf_dir).collect()
+    out = events.events_new_vs_returning(spark, sf_dir).collect()
     ev = events_table(spark, sf_dir)
     # per-day: new + returning == distinct actives that day
     dau = {
@@ -38,7 +38,7 @@ def test_new_vs_returning_conserves_dau_and_totals(spark, sf_dir):
 
 
 def test_referential_orphans_zero_on_fixture_and_detects_planted(spark, sf_dir, tmp_path):
-    out = {r["relation"]: r for r in round6l.dq_referential_orphans(spark, sf_dir).collect()}
+    out = {r["relation"]: r for r in dq.dq_referential_orphans(spark, sf_dir).collect()}
     assert set(out) == {
         "lineitem->orders", "orders->customer", "customer->nation", "supplier->nation",
     }
@@ -67,6 +67,6 @@ def test_referential_orphans_zero_on_fixture_and_detects_planted(spark, sf_dir, 
         [(1, "S", 0, "a", 0.0, "c")],
         "s_suppkey long, s_name string, s_nationkey long, s_address string, s_acctbal double, s_comment string",
     ).write.mode("overwrite").parquet(f"{d}/supplier.parquet")
-    got = {r["relation"]: r["n_orphans"] for r in round6l.dq_referential_orphans(spark, d).collect()}
+    got = {r["relation"]: r["n_orphans"] for r in dq.dq_referential_orphans(spark, d).collect()}
     assert got["lineitem->orders"] == 1  # the planted orphan
     assert got["orders->customer"] == 0

@@ -5,11 +5,11 @@ from __future__ import annotations
 
 import datetime as dt
 
-from laposte_data_engineering_jedha_spark.queries import round6m
+from laposte_data_engineering_jedha_spark.queries import olap
 
 
 def test_affinity_metric_bounds(spark, sf_dir):
-    out = round6m.olap_basket_affinity(spark, sf_dir).collect()
+    out = olap.olap_basket_affinity(spark, sf_dir).collect()
     assert len(out) == 20
     ns = [r["n_ab"] for r in out]
     assert ns == sorted(ns, reverse=True)
@@ -34,7 +34,7 @@ def test_affinity_planted_exact(spark, tmp_path):
     spark.createDataFrame(
         [(10, "X"), (20, "Y"), (30, "Z")], "p_partkey long, p_brand string"
     ).write.mode("overwrite").parquet(f"{d}/part.parquet")
-    out = round6m.olap_basket_affinity(spark, d).collect()
+    out = olap.olap_basket_affinity(spark, d).collect()
     assert len(out) == 1
     r = out[0]
     assert (r["brand_a"], r["brand_b"], r["n_ab"]) == ("X", "Y", 2)

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from laposte_data_engineering_jedha_spark.queries import round6n
+from laposte_data_engineering_jedha_spark.queries import olap, text
 
 
 def test_cross_source_dupes_planted(spark, tmp_path):
@@ -22,7 +22,7 @@ def test_cross_source_dupes_planted(spark, tmp_path):
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    out = round6n.corpus_cross_source_dupes(spark, d).collect()
+    out = text.corpus_cross_source_dupes(spark, d).collect()
     assert len(out) == 1
     r = out[0]
     assert (r["source_a"], r["source_b"]) == ("srcA", "srcB")
@@ -30,7 +30,7 @@ def test_cross_source_dupes_planted(spark, tmp_path):
 
 
 def test_cross_source_dupes_fixture_nonempty(spark, sf_dir):
-    out = round6n.corpus_cross_source_dupes(spark, sf_dir).collect()
+    out = text.corpus_cross_source_dupes(spark, sf_dir).collect()
     assert len(out) > 0
     for r in out:
         assert r["n_cross_pairs"] + r["n_within_pairs"] >= 1
@@ -59,7 +59,7 @@ def test_discount_corr_planted_signs(spark, tmp_path):
     spark.createDataFrame(
         [(10, "P"), (20, "N"), (30, "Z")], "p_partkey long, p_brand string"
     ).write.mode("overwrite").parquet(f"{d}/part.parquet")
-    out = {r["brand"]: r["pearson_r"] for r in round6n.olap_discount_quantity_corr(spark, d).collect()}
+    out = {r["brand"]: r["pearson_r"] for r in olap.olap_discount_quantity_corr(spark, d).collect()}
     assert out["P"] == 1.0
     assert out["N"] == -1.0
     assert out["Z"] is None

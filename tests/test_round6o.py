@@ -3,11 +3,11 @@ disjoint distributions."""
 
 from __future__ import annotations
 
-from laposte_data_engineering_jedha_spark.queries import round6o
+from laposte_data_engineering_jedha_spark.queries import text
 
 
 def test_tv_distance_bounds(spark, sf_dir):
-    out = round6o.corpus_source_tv_distance(spark, sf_dir).collect()
+    out = text.corpus_source_tv_distance(spark, sf_dir).collect()
     assert len(out) == 20
     for r in out:
         assert 0.0 <= r["tv_distance"] <= 1.0
@@ -28,7 +28,7 @@ def test_tv_distance_planted_extremes(spark, tmp_path):
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    out = {r["source"]: r["tv_distance"] for r in round6o.corpus_source_tv_distance(spark, d).collect()}
+    out = {r["source"]: r["tv_distance"] for r in text.corpus_source_tv_distance(spark, d).collect()}
     assert out["same"] == out["same2"]
     assert out["diff"] > out["same"]
     # diff's mass is fully outside the shared mix: TV = 1 - 4/12 (the
@@ -40,5 +40,5 @@ def test_tv_distance_planted_extremes(spark, tmp_path):
         [(1, "a b c a", "en", "only", 7)],
         "doc_id long, text string, lang string, source string, n_chars long",
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    r = round6o.corpus_source_tv_distance(spark, d).first()
+    r = text.corpus_source_tv_distance(spark, d).first()
     assert r["tv_distance"] == 0.0

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from laposte_data_engineering_jedha_spark.queries import round6p
+from laposte_data_engineering_jedha_spark.queries import events, similarity
 
 _EV_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 
@@ -28,7 +28,7 @@ def test_bounce_rate_planted(spark, tmp_path):
     spark.createDataFrame(rows, _EV_SCHEMA).write.mode("overwrite").parquet(
         f"{d}/events.parquet"
     )
-    out = {r["day"]: r for r in round6p.events_session_bounce_rate(spark, d).collect()}
+    out = {r["day"]: r for r in events.events_session_bounce_rate(spark, d).collect()}
     d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 1, 2)
     assert out[d1]["n_sessions"] == 2 and out[d1]["n_bounces"] == 1
     assert out[d1]["bounce_rate"] == 0.5
@@ -49,7 +49,7 @@ def test_knn_accuracy_perfect_on_separable_space(spark, tmp_path):
     spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     ).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
-    r = round6p.embedding_knn_label_accuracy(spark, d).first()
+    r = similarity.embedding_knn_label_accuracy(spark, d).first()
     assert r["n_probes"] > 10
     assert r["knn1_accuracy"] == 1.0
 
@@ -57,6 +57,6 @@ def test_knn_accuracy_perfect_on_separable_space(spark, tmp_path):
 def test_knn_accuracy_fixture_near_chance(spark, sf_dir):
     """The random fixture's labels carry no geometry: accuracy lands near
     chance, far below a trained space — and never above 0.5."""
-    r = round6p.embedding_knn_label_accuracy(spark, sf_dir).first()
+    r = similarity.embedding_knn_label_accuracy(spark, sf_dir).first()
     assert 0 < r["n_probes"] <= 64
     assert 0.0 <= r["knn1_accuracy"] < 0.5

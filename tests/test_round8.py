@@ -22,7 +22,7 @@ def test_histogram_quantile_error_bounded_by_bucket(spark):
     (type-7) and may cross one bucket boundary — so the estimate sits at
     most TWO bucket widths below the exact percentile and never above
     it."""
-    from laposte_data_engineering_jedha_spark.queries.round8g import _HBUCKET
+    from laposte_data_engineering_jedha_spark.queries.sketch import _HBUCKET
 
     rows = _rows(spark, "sketch_histogram_quantiles")
     assert {r["p_label"] for r in rows} == {"p50", "p95", "p99"}
@@ -102,16 +102,16 @@ def test_label_prop_cap_preserves_fixture_exactness(spark, monkeypatch):
     the unchanged oracle hash asserts, pinned here against a cap above
     every cell's occupancy, which emits each pair once per shared cell
     exactly as the all-pairs join does."""
-    from laposte_data_engineering_jedha_spark.queries import round6
+    from laposte_data_engineering_jedha_spark.queries import graph
 
     capped = {
         (r["user_id"], r["community"])
-        for r in round6.graph_label_prop_communities(spark, SF).collect()
+        for r in graph.graph_label_prop_communities(spark, SF).collect()
     }
-    monkeypatch.setattr(round6, "_LP_CELL_CAP", 10**9)
+    monkeypatch.setattr(graph, "_LP_CELL_CAP", 10**9)
     exact = {
         (r["user_id"], r["community"])
-        for r in round6.graph_label_prop_communities(spark, SF).collect()
+        for r in graph.graph_label_prop_communities(spark, SF).collect()
     }
     assert capped == exact and len(capped) > 0
 

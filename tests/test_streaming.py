@@ -115,7 +115,7 @@ def test_stateful_sessionizer_matches_batch(spark, sf_dir, events_dir):
     window-function sessions for every session that is CLOSED by the end of
     the stream (sessions still open inside the final watermark horizon are
     legitimately unemitted — that's append-mode semantics)."""
-    from laposte_data_engineering_jedha_spark.queries.llmops import events_sessionize
+    from laposte_data_engineering_jedha_spark.queries.events import events_sessionize
 
     batch = {
         (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
@@ -138,7 +138,7 @@ def test_stateful_sessionizer_matches_batch(spark, sf_dir, events_dir):
     # contract: sessions closed BY A SUBSEQUENT EVENT) must be a subset of
     # what the stream actually emitted — the stream is sandwiched between
     # the closed set and the full batch set
-    from laposte_data_engineering_jedha_spark.queries.llmops import stream_sessionize
+    from laposte_data_engineering_jedha_spark.queries.stream import stream_sessionize
 
     closed_by_data = {
         (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
@@ -464,7 +464,7 @@ def test_rate_alert_stream_matches_batch(spark, sf_dir, events_dir):
     test_tumbling_dau_chain_matches_batch."""
     from pyspark.sql import functions as F
 
-    from laposte_data_engineering_jedha_spark.queries.round6 import stream_rate_alert
+    from laposte_data_engineering_jedha_spark.queries.stream import stream_rate_alert
 
     batch = {
         (r["user_id"], r["alert_us"], r["n_in_hour"])
@@ -659,7 +659,7 @@ def test_holt_forecast_stream_matches_batch(spark, events_dir):
     final watermark — same forecasts, same fixed-point level/trend folds,
     same alarms; days the watermark hasn't passed are withheld. The batch
     twin itself is oracle-hash-gated (events_holt_forecast,
-    queries/round13a.py), so this equivalence chains the STREAM's
+    queries/events.py), so this equivalence chains the STREAM's
     semantics to the DuckDB recursive-CTE oracle."""
     import datetime
 
@@ -758,7 +758,7 @@ def test_holt_winters_stream_matches_batch(spark, events_dir):
     final watermark — same forecasts, same fixed-point folds, same
     learned seasonal slots; unfinalized days are withheld. The batch
     twin is oracle-hash-gated (events_holt_winters_daily,
-    queries/round13i.py), so this chains the stream's semantics to the
+    queries/events.py), so this chains the stream's semantics to the
     list-state recursive-CTE oracle."""
     import datetime
 

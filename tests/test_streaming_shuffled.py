@@ -268,12 +268,12 @@ def test_sessionize_idle_close_not_deferred_past_pending_event(spark, tmp_path):
 
 
 def test_cep_stream_matches_batch_under_shuffled_arrival(spark, shuffled_dirs):
-    from laposte_data_engineering_jedha_spark.queries import round6e
+    from laposte_data_engineering_jedha_spark.queries import events
 
     stream_dir, batch_dir = shuffled_dirs
     batch = sorted(
         (r["user_id"], r["view_us"], r["purchase_us"])
-        for r in round6e.events_cep_completions(spark, batch_dir).collect()
+        for r in events.events_cep_completions(spark, batch_dir).collect()
     )
     streamed = sorted(
         (r["user_id"], r["view_us"], r["purchase_us"])
