@@ -201,54 +201,31 @@ def pd_lsh_buckets_banded(
     return kernel(_c(vec))
 
 
-def pd_nearest_centroids(vec: Column | str, centers: "np.ndarray", n: int) -> Column:
-    """`n` nearest centroid ids (ascending distance, centroid id as the
-    deterministic tiebreak) for each vector — the IVF coarse-quantizer
-    assignment. `centers` is a (k, dim) matrix closure-shipped to every
-    task (an IVF codebook is small even at 100 TB: 64k centroids x 64 dims
-    x 8 B = 32 MB, the size class Spark broadcasts anyway). One fused
-    numpy pass per Arrow batch: ||x-c||^2 = ||x||^2 - 2 x.C^T + ||c||^2,
-    argpartition for the top-n — scales to thousands of centroids where a
-    per-centroid expression tree would trip Catalyst's canonicalization
-    blowup (see the Arrow-kernels note above)."""
-
-    c = np.asarray(centers, dtype="float64")
-    c_sq = (c * c).sum(axis=1)
-
-    @pandas_udf("array<int>")
-    def kernel(sa: pd.Series) -> pd.Series:
-        m = _to_matrix(sa)
-        # (rows, k) squared distances; ||x||^2 omitted (constant per row,
-        # does not change the per-row ordering)
-        d = c_sq[None, :] - 2.0 * (m @ c.T)
-        if n == 1:
-            return pd.Series([[int(i)] for i in np.argmin(d, axis=1)])
-        idx = np.argpartition(d, min(n, d.shape[1] - 1), axis=1)[:, :n]
-        rows = np.arange(len(m))[:, None]
-        order = np.lexsort((idx, d[rows, idx]), axis=1)
-        return pd.Series([r.tolist() for r in np.take_along_axis(idx, order, axis=1)])
-
-    return kernel(_c(vec))
-
-
 def _fold_d2(m: "np.ndarray", centers: "np.ndarray") -> "np.ndarray":
     """(n, k) squared distances of each row of `m` to each centroid with
     the SAME left-to-right per-dimension fold as the Catalyst/DuckDB twin
     expressions (queries/similarity.py:_spark_d2 / _sql_d2): acc = acc +
-    diff*diff per dimension in IEEE float64, vectorized across rows — NOT
-    a gemm or numpy axis-sum (pairwise summation reorders additions), so
-    results are bit-identical to the HOF fold and the oracle."""
-    d2 = np.empty((len(m), len(centers)), dtype="float64")
+    diff*diff per dimension in IEEE float64. Each dimension step is one
+    (rows, k) array operation, so every (row, centroid) pair still adds
+    its squared differences left to right — NOT a gemm or numpy axis-sum
+    (pairwise summation reorders additions), so results are bit-identical
+    to the HOF fold and the oracle.
+
+    Known trade: this is the only distance kernel, and at large codebooks
+    it is far slower than a gemm (||x||^2 - 2x.C^T + ||c||^2). Measured
+    per 10k x 64 batch on a 4-core x86 VM: k=16 0.05 s vs 0.002 s,
+    k=256 1.2 s vs 0.02 s; at k=4096 (2k rows) the (rows, k) temporaries
+    make it slower than a per-centroid loop (4.9 s vs 2.5 s). No workload
+    or registered query uses more than 16 centroids; a second kernel
+    would need a large-codebook workload and a data-driven way to pick
+    it."""
+    acc = np.zeros((len(m), len(centers)), dtype="float64")
     if len(m) == 0:  # Arrow may hand the kernel an empty batch
-        return d2
-    for ci in range(len(centers)):
-        cv = centers[ci]
-        acc = np.zeros(len(m), dtype="float64")
-        for d in range(centers.shape[1]):
-            diff = m[:, d] - cv[d]
-            acc = acc + diff * diff
-        d2[:, ci] = acc
-    return d2
+        return acc
+    for d in range(centers.shape[1]):
+        diff = m[:, d, None] - centers[None, :, d]
+        acc = acc + diff * diff
+    return acc
 
 
 def pd_fold_codes(vec: Column | str, codebooks: "np.ndarray") -> Column:

@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (`array<float>`).
 
-Two paths:
+Exact and hashed search:
 
 - `brute_force_knn` — exact top-k by cosine: the small-query-set pattern.
   The query side is broadcast, so the big side streams through one
@@ -12,15 +12,21 @@ Two paths:
   is tuned by the number of hyperplanes (fewer bits -> bigger buckets ->
   higher recall, more compute).
 
-`ivf_knn` is the IVF variant: a k-means coarse quantizer
-(pyspark.ml.clustering.KMeans, seeded) assigns every corpus vector to a
-centroid list; queries probe their `n_probe` nearest centroids and re-rank
-exactly within those lists. Same join shape as LSH (equi-join on a
-map-side-computed bucket id); recall/cost is tuned by n_probe/n_centroids
-instead of hyperplane count. LSH remains the oracle-checked variant
-(closed-form bucketing); IVF's k-means fit is seeded-deterministic but not
-SQL-expressible, so its guarantees are covered by tests
-(tests/test_llmops.py) rather than the DuckDB gate.
+IVF (inverted-file) search is a stored index: `ivf_index_write` assigns
+every corpus vector to its nearest centroid and writes postings
+partitioned by centroid, `ivf_index_append` adds immutable delta
+postings, and `ivf_index_search` probes a query's `n_probe` nearest
+centroid directories (partition-pruned) and re-ranks exactly. Same join
+shape as LSH (equi-join on a map-side-computed bucket id); recall/cost is
+tuned by n_probe and the centroid count instead of hyperplane count.
+
+There is one vector-quantization path. Assignment, probing and PQ
+encoding run only the fold kernels of `functions/vectors.py`
+(`pd_fold_*`): their float64 distances add squared differences left to
+right, bit-identical to the Catalyst folds the DuckDB oracles mirror.
+Codebooks are either closed-form (`pinned_codebook`) or data-fitted by
+the deterministic quantized Lloyd fit (`pq_fit_lloyd_pinned`; an IVF
+coarse quantizer is its `m=1` case), so every stage is oracle-checked.
 """
 
 from __future__ import annotations
@@ -31,10 +37,8 @@ import shutil
 import uuid
 
 import numpy as np
-import pandas as pd
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.pandas.functions import pandas_udf
 
 from ..functions import vectors
 from ..session import local_table
@@ -283,151 +287,29 @@ def pinned_codebook(m: int, k: int, sub: int) -> np.ndarray:
     return (((c * sub + d + j * 31) % 17) - 8) / 8.0
 
 
-def kmeans_fit_sample(df: DataFrame, fit_max_rows: int, seed: int) -> DataFrame:
-    """Bound the k-means fit input to ~fit_max_rows via a seeded Bernoulli
-    sample — the coarse quantizer only needs a sketch of the density, so
-    fitting on the full corpus is pure waste at scale (and an iterative
-    full-corpus job at 100 TB). Small corpora pass through unchanged, which
-    keeps centroid determinism for the fixture-scale tests."""
-    n = df.count()
-    if n <= fit_max_rows:
-        return df
-    return df.sample(fraction=fit_max_rows / n, seed=seed)
-
-
-def ivf_knn(
-    df: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-    fit_max_rows: int = 4096,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: k-means coarse quantization,
-    probe the query's `n_probe` nearest centroid lists, exact cosine
-    re-rank inside them.
-
-    At 100 TB the fit runs on a seeded sample (kmeans_fit_sample, capped at
-    `fit_max_rows`), the assignment is one map-side `transform`, and the
-    probe join hash-partitions on centroid id — the index "build" is an
-    embarrassingly parallel assignment pass, unlike graph indexes (HNSW)
-    that need sequential construction.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    # The sample is bounded (<= fit_max_rows rows), so caching it is safe at
-    # any corpus size and removes the dominant cost: uncached input gets
-    # re-materialized on every init pass + Lloyd iteration (MLlib itself
-    # warns about this). Random init + 10 iterations is plenty for a COARSE
-    # quantizer — the quantizer only partitions space, n_probe absorbs
-    # boundary error; measured same training cost as k-means||x20 at 4x the
-    # fit time (sf0.01: 6.4s -> 1.6s).
-    train = kmeans_fit_sample(
-        df.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")),
-        fit_max_rows,
-        seed,
-    ).cache()
-    try:
-        model = KMeans(
-            k=n_centroids, seed=seed, featuresCol="features", maxIter=10, initMode="random"
-        ).fit(train)
-    finally:
-        train.unpersist()
-
-    import numpy as np
-
-    centers = np.array([c for c in model.clusterCenters()], dtype="float64")
-
-    def assign(side: DataFrame, id_alias: str, v_alias: str, n: int) -> DataFrame:
-        # nearest-n centroid ids per row via the Arrow-batched numpy kernel
-        # (vectors.pd_nearest_centroids) — map-side only, no shuffle; the
-        # codebook ships in the UDF closure. A per-centroid expression tree
-        # works at 16 centroids but blows up Catalyst canonicalization at
-        # the thousands a real 100 TB IVF index needs.
-        return side.select(
-            F.col(id_col).alias(id_alias),
-            F.col(vec_col).alias(v_alias),
-            F.explode(vectors.pd_nearest_centroids(vec_col, centers, n)).alias("centroid"),
-        )
-
-    # zero-norm guard: cosine undefined for the zero vector (same filter as
-    # _sides / knn_graph)
-    cand = (
-        assign(df, "cand_id", "cv", 1)
-        .withColumn("cn", vectors.pd_norm("cv"))
-        .where(F.col("cn") > 0)
-    )
-    qry = (
-        assign(queries, "query_id", "qv", n_probe)
-        .withColumn("qn", vectors.pd_norm("qv"))
-        .where(F.col("qn") > 0)
-    )
-    cos = vectors.pd_dot("qv", "cv") / (F.col("qn") * F.col("cn"))
-    pairs = (
-        cand.join(F.broadcast(qry), "centroid")
-        .where(F.col("cand_id") != F.col("query_id"))
-        .select("query_id", "cand_id", (F.round(cos * 1000000) / 1000000).alias("cosine"))
-    )
-    # each candidate posts under ONE centroid here, but the dedup stays
-    # (as the windowed form — no extra exchange) so the operator contract
-    # is unchanged if a caller ever feeds multi-posted candidates
-    return _ranked_topk_dedup(pairs, k)
-
-
 def ivf_index_write(
     df: DataFrame,
     path: str,
-    n_centroids: int = 16,
+    centers: np.ndarray,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    seed: int = 42,
-    fit_max_rows: int = 4096,
-    centers: "np.ndarray | None" = None,
-    fold_faithful: bool = False,
 ) -> None:
-    """Build and PERSIST an IVF index: `{path}/centroids.parquet` (the
-    coarse quantizer, centroid id + vals) and `{path}/postings.parquet`
-    partitioned BY CENTROID — the stored-index half of the ANN lifecycle
-    that `ivf_knn` (fit-per-query) skips. At 100 TB the index is built
-    once (one bounded-sample fit + one map-side assignment pass, writing
-    hive-partitioned postings) and every search afterwards reads ONLY the
-    probed centroid directories via partition pruning — gigabytes per
-    query instead of the corpus (ivf_index_search asserts PartitionFilters
-    in tests/test_round8.py). Same shape as minhash's stored (id, band,
-    key) relation for incremental dedup.
+    """Build and PERSIST an IVF index over the (k, dim) coarse quantizer
+    `centers`: `{path}/centroids.parquet` (centroid id + vals) and
+    `{path}/postings.parquet` partitioned BY CENTROID. At 100 TB the
+    index is built once (one map-side assignment pass writing
+    hive-partitioned postings) and every search afterwards reads ONLY
+    the probed centroid directories via partition pruning — gigabytes
+    per query instead of the corpus (ivf_index_search asserts
+    PartitionFilters in tests/test_round8.py). Same shape as minhash's
+    stored (id, band, key) relation for incremental dedup.
 
-    `centers` pins an explicit codebook (skipping the KMeans fit) and
-    `fold_faithful=True` assigns via the bit-exact Arrow fold kernel
-    (`pd_fold_assign_d2`, left-to-right IEEE adds == the Catalyst/DuckDB
-    folds) instead of the gemm kernel — the combination that makes a
-    stored index hash-reproducible in SQL (the registered
-    `ivf_index_search` query's oracle contract)."""
-    if centers is None:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        train = kmeans_fit_sample(
-            df.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")),
-            fit_max_rows,
-            seed,
-        ).cache()
-        try:
-            model = KMeans(
-                k=n_centroids, seed=seed, featuresCol="features", maxIter=10, initMode="random"
-            ).fit(train)
-        finally:
-            train.unpersist()
-        centers = np.array([c for c in model.clusterCenters()], dtype="float64")
-    else:
-        centers = np.asarray(centers, dtype="float64")
-    if fold_faithful:
-        assign = vectors.pd_fold_assign_d2(vec_col, centers)["centroid"]
-    else:
-        assign = F.element_at(vectors.pd_nearest_centroids(vec_col, centers, 1), 1)
+    `centers` is a closed-form `pinned_codebook(1, k, dim)[0]` or a
+    data fit `pq_fit_lloyd_pinned(df, m=1, k=k, dim=dim)[0]`. Assignment
+    runs the fold kernel (`pd_fold_assign_d2`, left-to-right IEEE adds ==
+    the Catalyst/DuckDB folds), so a stored index is hash-reproducible
+    in SQL (the registered `ivf_index_search` query's oracle contract)."""
+    centers = np.asarray(centers, dtype="float64")
     local_table(
         df.sparkSession,
         [(int(i), [float(x) for x in c]) for i, c in enumerate(centers)],
@@ -436,7 +318,7 @@ def ivf_index_write(
     df.select(
         F.col(id_col).alias("cand_id"),
         F.col(vec_col).alias("cv"),
-        assign.alias("centroid"),
+        vectors.pd_fold_assign_d2(vec_col, centers)["centroid"].alias("centroid"),
     ).write.mode("overwrite").partitionBy("centroid").parquet(f"{path}/postings.parquet")
 
 
@@ -504,7 +386,6 @@ def ivf_index_append(
     new_df: DataFrame,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    fold_faithful: bool = False,
     rebuild_fraction: float = 0.5,
     delta_tag: str | None = None,
 ) -> str:
@@ -524,9 +405,10 @@ def ivf_index_append(
     deltas + new vectors are re-assigned against the current centroids
     into a fresh single-base index, published by the same
     scratch-then-rename protocol, and the consumed deltas are dropped.
-    (Re-FITTING the quantizer is the caller's call — pinned codebooks,
-    the oracle-checked configuration, keep their centers by contract;
-    unpinned deployments rebuild via ivf_index_write when recall decays.)
+    (Re-FITTING the quantizer is the caller's call — pinned codebooks
+    keep their centers by contract; a data-fitted index refits with
+    pq_fit_lloyd_pinned and rebuilds via ivf_index_write when recall
+    decays.)
 
     Returns 'delta' or 'rebuild'. `delta_tag` names the delta dir
     deterministically so a concurrent duplicate append (two processes
@@ -559,14 +441,10 @@ def ivf_index_append(
     )
     for r in centers_rows:
         centers[r["centroid"]] = r["vals"]
-    if fold_faithful:
-        assign = vectors.pd_fold_assign_d2(vec_col, centers)["centroid"]
-    else:
-        assign = F.element_at(vectors.pd_nearest_centroids(vec_col, centers, 1), 1)
     new_postings = new_df.select(
         F.col(id_col).alias("cand_id"),
         F.col(vec_col).alias("cv"),
-        assign.alias("centroid"),
+        vectors.pd_fold_assign_d2(vec_col, centers)["centroid"].alias("centroid"),
     )
 
     base = spark.read.parquet(f"{path}/postings.parquet")
@@ -616,11 +494,9 @@ def ivf_index_append(
                 "cv", vec_col
             ),
             scratch,
-            n_centroids=centers.shape[0],
+            centers,
             vec_col=vec_col,
             id_col=id_col,
-            centers=centers,
-            fold_faithful=fold_faithful,
         )
         new_postings.unpersist()
         # record every tag this compaction folds into the base — the
@@ -675,7 +551,6 @@ def ivf_index_search(
     n_probe: int = 4,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    fold_faithful: bool = False,
 ) -> DataFrame:
     """Search a persisted IVF index (see ivf_index_write): route each
     query to its `n_probe` nearest stored centroids, STATICALLY filter
@@ -706,15 +581,13 @@ def ivf_index_search(
             f"IVF index at {path!r} has centroid-id gaps (e.g. {missing}); "
             "the index is corrupt — rebuild with ivf_index_write"
         )
-    if fold_faithful:
-        probe = vectors.pd_fold_topn_centroids(vec_col, centers, n_probe)
-    else:
-        probe = vectors.pd_nearest_centroids(vec_col, centers, n_probe)
     qry = (
         queries.select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("qv"),
-            F.explode(probe).alias("centroid"),
+            F.explode(vectors.pd_fold_topn_centroids(vec_col, centers, n_probe)).alias(
+                "centroid"
+            ),
         )
         .withColumn("qn", vectors.pd_norm("qv"))
         .where(F.col("qn") > 0)
@@ -786,10 +659,11 @@ def pq_fit_lloyd_pinned(
 
     The sums aggregate map-side (k*sub BIGINT partials per subspace) and
     only k rows per subspace ever reach the driver per iteration — the
-    same scale shape as MLlib's own Lloyd loop. Production fits stay on
-    `pq_fit_codebooks` (seeded-sample MLlib k-means); this variant exists
-    so the REGISTERED end-to-end PQ query is value-checkable to the last
-    bit (VERDICT r7 item 2)."""
+    same scale shape as MLlib's own Lloyd loop. It is the one data fit:
+    PQ codebooks use m > 1, and an IVF coarse quantizer is the m=1 case
+    (`pq_fit_lloyd_pinned(df, m=1, k=K, dim=D)[0]` -> `ivf_index_write`).
+    Every fit is value-checkable to the last bit, which is what lets the
+    REGISTERED end-to-end PQ query carry a hash row (VERDICT r7 item 2)."""
     sub = dim // m
     head = df.orderBy(id_col).limit(k).select(vec_col).collect()
     books = np.array(
@@ -826,201 +700,3 @@ def pq_fit_lloyd_pinned(
                 for d in range(sub)
             ]
     return books
-
-
-def pq_fit_codebooks(
-    df: DataFrame,
-    m: int = 4,
-    k: int = 16,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    fit_max_rows: int = 4096,
-):
-    """Product-quantization codebooks: split each vector into `m` subvectors
-    of dim/m and k-means each subspace independently (Jégou et al. 2011).
-    Returns an (m, k, dim/m) float64 numpy codebook.
-
-    PQ is the storage side of billion-scale ANN: m=4, k=16 encodes a
-    64-dim float vector in 4x4 bits = 2 bytes (128x smaller), and
-    asymmetric distance scans run over code tables instead of floats.
-    Like ivf_knn, every fit runs on ONE seeded bounded sample (cached,
-    m small k-means over the same few thousand rows); the full corpus is
-    never iterated by the trainer."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    sub = dim // m
-    sample = kmeans_fit_sample(
-        df.select(F.col(vec_col).cast("array<double>").alias("v")), fit_max_rows, seed
-    ).cache()
-    try:
-        books = []
-        for j in range(m):
-            train = sample.select(
-                array_to_vector(F.slice("v", j * sub + 1, sub)).alias("features")
-            )
-            model = KMeans(
-                k=k, seed=seed + j, featuresCol="features", maxIter=10, initMode="random"
-            ).fit(train)
-            books.append(np.array(model.clusterCenters(), dtype="float64"))
-    finally:
-        sample.unpersist()
-    return np.stack(books)
-
-
-def pq_encode(
-    df: DataFrame,
-    codebooks,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """(id, codes array<int>) PQ encoding — one Arrow map-side pass, the
-    codebook ships in the kernel closure (m*k*sub doubles; bytes, not a
-    join). No shuffle: encoding 100 TB is embarrassingly parallel."""
-    m, k, sub = codebooks.shape
-
-    @pandas_udf("array<int>")
-    def kernel(vs: pd.Series) -> pd.Series:
-        mat = np.array(vs.tolist(), dtype="float64")
-        out = np.empty((mat.shape[0], m), dtype="int32")
-        for j in range(m):
-            block = mat[:, j * sub : (j + 1) * sub]
-            # (n, k) squared distances to this subspace's centroids
-            d = ((block[:, None, :] - codebooks[j][None, :, :]) ** 2).sum(axis=2)
-            out[:, j] = d.argmin(axis=1)
-        return pd.Series(list(out))
-
-    return df.select(F.col(id_col), kernel(F.col(vec_col)).alias("codes"))
-
-
-def pq_reconstruction_mse(
-    df: DataFrame, codebooks, vec_col: str = "embedding"
-) -> float:
-    """Mean squared reconstruction error of the PQ encoding over the corpus
-    — the quantizer-quality scalar (compare against a mismatched codebook
-    or a higher m/k to size the recall/storage trade). One Arrow pass +
-    one tiny aggregate."""
-    m, k, sub = codebooks.shape
-
-    @pandas_udf("double")
-    def kernel(vs: pd.Series) -> pd.Series:
-        mat = np.array(vs.tolist(), dtype="float64")
-        err = np.zeros(mat.shape[0], dtype="float64")
-        for j in range(m):
-            block = mat[:, j * sub : (j + 1) * sub]
-            d = ((block[:, None, :] - codebooks[j][None, :, :]) ** 2).sum(axis=2)
-            err += d.min(axis=1)
-        return pd.Series(err / (m * sub))
-
-    row = df.select(kernel(F.col(vec_col)).alias("e")).agg(
-        F.avg("e").alias("mse")
-    ).first()
-    return float(row["mse"])
-
-
-def pq_knn(
-    df: DataFrame,
-    queries: DataFrame,
-    codebooks,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    rerank: int = 10,
-) -> DataFrame:
-    """PQ asymmetric-distance (ADC) approximate top-k: the corpus is
-    scanned as 2-byte codes, never as float vectors — for each query, a
-    per-subspace lookup table of squared distances to every centroid is
-    precomputed (m x k doubles), and a candidate's distance is just m
-    table lookups + adds (Jégou et al. 2011, Eq. 13).
-
-    Scale shape: the corpus side carries only (id, codes) — at 100 TB
-    this is the layout whose scan cost is ~100x below the float corpus —
-    and the query side (id, distance tables) broadcasts into an Arrow
-    kernel; one map pass scores every (query, candidate) pair inside the
-    kernel loop, then the standard per-query top-k window. Scores are
-    approximate by construction (quantization error), so this returns
-    distances for ranking, not oracle-exact cosines — recall against
-    brute force is the quality gate (tests + scripts/recall_report.py)."""
-    m, kk, sub = codebooks.shape
-    codes = pq_encode(df, codebooks, vec_col=vec_col, id_col=id_col)
-    qrows = queries.select(id_col, vec_col).collect()  # few query rows by contract
-    q_ids = [r[id_col] for r in qrows]
-    qmat = np.array([list(r[vec_col]) for r in qrows], dtype="float64")
-    # (n_q, m, k) lookup tables: squared distance from each query subvector
-    # to every centroid of that subspace.
-    tables = np.stack(
-        [
-            ((qmat[:, j * sub : (j + 1) * sub][:, None, :] - codebooks[j][None, :, :]) ** 2).sum(
-                axis=2
-            )
-            for j in range(m)
-        ],
-        axis=1,
-    )
-
-    @pandas_udf("array<double>")
-    def score(codes_s: pd.Series) -> pd.Series:
-        cm = np.array(codes_s.tolist(), dtype="int64")  # (n, m)
-        n = cm.shape[0]
-        out = np.zeros((n, tables.shape[0]), dtype="float64")
-        for j in range(m):
-            # tables[:, j, :] is (n_q, k); fancy-index by this batch's codes
-            out += tables[:, j, :][:, cm[:, j]].T
-        return pd.Series(list(out))
-
-    scored = codes.select(F.col(id_col).alias("cand_id"), score("codes").alias("d"))
-    ids = F.array(*[F.lit(i) for i in q_ids])
-    pairs = scored.select(
-        "cand_id", F.explode(F.arrays_zip(ids.alias("query_id"), F.col("d").alias("dist"))).alias("z")
-    ).select(F.col("z.query_id"), "cand_id", F.col("z.dist").alias("dist")).where(
-        F.col("query_id") != F.col("cand_id")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("cand_id"))
-    shortlist = (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= (k * rerank if rerank else k))
-        .select("query_id", "cand_id", "dist", "rank")
-    )
-    if not rerank:
-        return shortlist
-    # Exact re-rank of the ADC shortlist (the canonical two-stage PQ
-    # pipeline): only k*rerank candidates per query ever touch float
-    # vectors — the corpus scan stayed 2 bytes/vector; the shortlist join
-    # is id-keyed and tiny.
-    qside = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        vectors.pd_norm(vec_col).alias("qn"),
-    )
-    cside = df.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("cv"),
-        vectors.pd_norm(vec_col).alias("cn"),
-    )
-    cos = vectors.pd_dot("qv", "cv") / (F.col("qn") * F.col("cn"))
-    exact = (
-        shortlist.select("query_id", "cand_id")
-        .join(cside, "cand_id")
-        .join(F.broadcast(qside), "query_id")
-        .select(
-            "query_id", "cand_id", (F.round(cos * 1000000) / 1000000).alias("cosine")
-        )
-    )
-    return _ranked_topk(exact, k)
-
-
-def l2_normalized(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Unit-normalize the vector column (zero vectors dropped — cosine is
-    undefined for them; same guard as every cosine path here). For
-    cosine-semantics ANN over PQ/IVF, quantize NORMALIZED vectors: on the
-    unit sphere L2 and cosine induce the same ranking
-    (||a-b||^2 = 2 - 2cos), so the ADC scan's distances order candidates
-    exactly as cosine would."""
-    nrm = vectors.pd_norm(vec_col)
-    return (
-        df.withColumn("_nrm", nrm)
-        .where(F.col("_nrm") > 0)
-        .withColumn(vec_col, F.transform(F.col(vec_col), lambda x: x.cast("double") / F.col("_nrm")))
-        .drop("_nrm")
-    )

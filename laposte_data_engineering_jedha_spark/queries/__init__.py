@@ -56,6 +56,7 @@ from ..functions import exprs, texts, vectors
 # bottom of this file rebind those two names in the package namespace
 from ..operators import dedup as dedup_ops
 from ..operators import similarity as similarity_ops
+from ..sources.testdata import EMB_DIM
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -322,7 +323,7 @@ SQL_NORM = (
 )
 
 
-def sql_dot(a: str, b: str, dim: int = 64) -> str:
+def sql_dot(a: str, b: str, dim: int = EMB_DIM) -> str:
     return sql_reduce_sum(f"[CAST({a}[i] AS DOUBLE) * {b}[i] for i in range(1, {dim + 1})]")
 
 
@@ -361,7 +362,9 @@ def _sql_band_key(e: str, band_planes: int = _EMB_BAND_PLANES) -> str:
     [band*band_planes, (band+1)*band_planes) packed MSB-first — the SQL twin
     of vectors.pd_lsh_buckets_banded, same md5 hyperplanes."""
     w = _sql_hp_weight()
-    d = sql_reduce_sum(f"[CAST({e}[i + 1] AS DOUBLE) * CAST({w} AS DOUBLE) for i in range(0, 64)]")
+    d = sql_reduce_sum(
+        f"[CAST({e}[i + 1] AS DOUBLE) * CAST({w} AS DOUBLE) for i in range(0, {EMB_DIM})]"
+    )
     return (
         "list_reduce(list_prepend(CAST(0 AS BIGINT), "
         f"[CASE WHEN {d} >= 0 THEN 1 ELSE 0 END "
@@ -441,7 +444,7 @@ def _auto_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     planes = dedup_ops.auto_band_planes(table_rowcount(spark, sf_dir, "embeddings"))
     return similarity_ops.knn_graph(
-        emb, k=3, dim=64, bands=_GRAPH_BANDS, band_planes=planes
+        emb, k=3, dim=EMB_DIM, bands=_GRAPH_BANDS, band_planes=planes
     )
 
 

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..functions import texts
 from ..operators import dedup, similarity
+from ..sources.testdata import EMB_DIM
 from . import (
     SQL_NORM,
     SQL_SHINGLES,
@@ -388,7 +389,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-gated query."""
     emb = table(spark, sf_dir, "embeddings")
     g = similarity.knn_graph(
-        emb, k=3, dim=64, bands=_GRAPH_BANDS, band_planes=_GRAPH_BAND_PLANES
+        emb, k=3, dim=EMB_DIM, bands=_GRAPH_BANDS, band_planes=_GRAPH_BAND_PLANES
     )
     pairs = (
         g.where(F.col("cosine") >= 0.4)

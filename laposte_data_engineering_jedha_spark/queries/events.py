@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import exprs, texts
-from ..operators import graphs, joins, ranking, sketches
+from ..operators import caches, graphs, joins, ranking, sketches
 from ..session import local_table
 from ..streaming import jobs
 from . import (
@@ -823,9 +823,9 @@ def events_type_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         seq.groupBy(F.col("event_type").alias("src"), F.col("next_type").alias("dst"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    edges = edges0.withColumn(
-        "w_out", F.sum("n").over(Window.partitionBy("src"))
-    ).cache()
+    edges = caches.track(
+        edges0.withColumn("w_out", F.sum("n").over(Window.partitionBy("src"))).persist()
+    )
     nodes = ev.select("event_type").distinct()
     n_nodes = nodes.count()  # domain-sized scalar (like the IDF doc count)
     base_u = _PR_SCALE * 15 // (100 * n_nodes)

@@ -568,6 +568,12 @@ _LC_N_FILES = 8
 _PROC_TAG = f"{os.getpid():x}"
 
 
+#: set by the first `_scratch()` call, which sweeps dead writers' dirs and
+#: registers this process's own exit sweep — importing the package touches
+#: no files
+_swept = False
+
+
 # All scratch output lands under the system temp dir keyed by the absolute
 # sf_dir AND the writer pid (ADVICE r11: sf_dir-only keys let two concurrent
 # runs over the same sf_dir — parallel test workers, an overlapping bench and
@@ -576,6 +582,11 @@ _PROC_TAG = f"{os.getpid():x}"
 # reuse the same location, while concurrent processes and different scale
 # factors never collide.
 def _scratch(sf_dir: str, kind: str) -> str:
+    global _swept
+    if not _swept:
+        _swept = True
+        _sweep_scratch()
+        atexit.register(_sweep_scratch, include_own=True)
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     return os.path.join(
         tempfile.gettempdir(), f"laposte_layout_{kind}_{tag}_{_PROC_TAG}"
@@ -596,10 +607,11 @@ def _sweep_scratch(include_own: bool = False) -> None:
     """Scratch lifecycle for the pid-keyed layout dirs (ADVICE r12: the
     r11 concurrency fix made every process write fresh dirs where the
     old fixed path self-overwrote — without a sweep they accumulate
-    forever). Called at import to prune siblings whose owning pid is no
-    longer alive, and again at interpreter exit (atexit) for this
-    process's own dirs. Best-effort by design: a recycled pid keeps a
-    stale dir one process-lifetime longer, nothing breaks."""
+    forever). Called on the first `_scratch()` call to prune siblings
+    whose owning pid is no longer alive, and again at interpreter exit
+    (atexit) for this process's own dirs. Best-effort by design: a
+    recycled pid keeps a stale dir one process-lifetime longer, nothing
+    breaks."""
     for d in glob.glob(os.path.join(tempfile.gettempdir(), "laposte_layout_*")):
         pid_hex = d.rsplit("_", 1)[-1]
         try:
@@ -614,10 +626,6 @@ def _sweep_scratch(include_own: bool = False) -> None:
         if (own and include_own) or (not own and not _pid_alive(pid)):
             shutil.rmtree(d, ignore_errors=True)
 
-
-_sweep_scratch()
-
-atexit.register(_sweep_scratch, include_own=True)
 
 # Injective length-prefixed one-md5 row digest — the SAME construction
 # as operators/reconcile._digest52 (imported, not re-derived): each

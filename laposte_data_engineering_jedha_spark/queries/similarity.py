@@ -133,7 +133,9 @@ def knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_bucket(e: str, planes: int = 8) -> str:
     w = _sql_hp_weight()
-    d = sql_reduce_sum(f"[CAST({e}[i + 1] AS DOUBLE) * CAST({w} AS DOUBLE) for i in range(0, 64)]")
+    d = sql_reduce_sum(
+        f"[CAST({e}[i + 1] AS DOUBLE) * CAST({w} AS DOUBLE) for i in range(0, {EMB_DIM})]"
+    )
     return (
         "list_reduce(list_prepend(CAST(0 AS BIGINT), "
         f"[CASE WHEN {d} >= 0 THEN 1 ELSE 0 END for p in range(0, {planes})]), (a, x) -> a * 2 + x)"
@@ -158,7 +160,7 @@ SELECT query_id, cand_id, cosine, rank FROM ranked WHERE rank <= 5""",
 def knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH bucketed approximate top-5 (recall < 1 by design)."""
     emb = table(spark, sf_dir, "embeddings")
-    return similarity.lsh_knn(emb, emb.where(F.col("vec_id") < 8), k=5, dim=64, planes=8)
+    return similarity.lsh_knn(emb, emb.where(F.col("vec_id") < 8), k=5, dim=EMB_DIM, planes=8)
 
 
 @query(
@@ -173,7 +175,7 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     side (operators/similarity.py knn_graph)."""
     emb = table(spark, sf_dir, "embeddings")
     return similarity.knn_graph(
-        emb, k=3, dim=64, bands=_GRAPH_BANDS, band_planes=_GRAPH_BAND_PLANES
+        emb, k=3, dim=EMB_DIM, bands=_GRAPH_BANDS, band_planes=_GRAPH_BAND_PLANES
     )
 
 
@@ -474,10 +476,9 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactness argument: assignments are the fold-faithful Arrow kernel,
     centroid updates are BIGINT sums of 2^20-quantized coordinates and
     exact-dyadic floor-means, so neither engine ever accumulates floats).
-    The production fit keeps the seeded-sample MLlib path
-    (pq_fit_codebooks, recall/reconstruction-tested in
-    tests/test_llmops.py); this registered query exercises the identical
-    assign/update/encode dataflow with a verifiable fit.
+    It is the package's one data fit (an IVF coarse quantizer is its m=1
+    case); tests/test_llmops.py checks the fitted codebook's codes and
+    reconstruction error.
 
     The registered projection unpacks one IntegerType column per
     subspace — external drivers canonicalize output in pandas, and a
@@ -520,8 +521,8 @@ def _spark_d2(j: int, c: int, sub: int) -> F.Column:
     centroids multiply out) was measured 4x SLOWER (pq_adc_topk_pinned
     4.8 s -> 20 s at sf0.1) — Catalyst analysis and codegen choke on the
     tree long before row throughput matters at gate scale. The compact
-    fold keeps the plan small; the production encode path is the Arrow
-    kernel (similarity.pq_encode) either way."""
+    fold keeps the plan small; the registered encode path is the fold
+    Arrow kernel (vectors.pd_fold_codes) either way."""
     base = c * sub + j * 31
 
     def step(acc: F.Column, d: F.Column) -> F.Column:
@@ -608,10 +609,10 @@ _IVF_SQL = (
 @query("ivf_assign_pinned", _IVF_SQL)
 def ivf_assign_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF coarse-quantizer assignment against 16 pinned 64-dim centroids —
-    the hash-checkable twin of ivf_knn's assignment stage (its k-means fit
-    is iterative, hence rows-only). Map-side only: at 100 TB this is the
-    exact shape of the index build — one narrow pass, codebook shipped in
-    the kernel closure, no shuffle. Runs the fold-faithful Arrow kernel
+    the assignment stage of ivf_knn and ivf_index_write as its own hash
+    row. Map-side only: at 100 TB this is the exact shape of the index
+    build — one narrow pass, codebook shipped in the kernel closure, no
+    shuffle. Runs the fold-faithful Arrow kernel
     (vectors.pd_fold_assign_d2), bit-identical to the `_spark_argmin` /
     `F.least`-over-folds Catalyst formulation but batch-fused."""
     from ..operators import similarity as sim
@@ -662,18 +663,16 @@ SELECT query_id, cand_id, adc, rank FROM r WHERE rank <= 5"""
 @query("pq_adc_topk_pinned", _ADC_SQL)
 def pq_adc_topk_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full PQ asymmetric-distance (ADC) top-k search as a
-    hash-checkable twin of similarity.pq_knn on the pinned codebook:
+    hash-checkable query on the pinned codebook:
     per-query distance TABLES (4 subspaces x 16 centroids, each a
     left-to-right fold — bit-identical across engines), corpus scanned as
     codes only (the pinned encode), a candidate's distance = 4 table
     lookups + 3 adds in pinned association order, per-query top-5 with
-    cand_id tie-break. Scale shape identical to the production kernel
-    path: the corpus side carries (id, 4 codes) — ~100x below float-scan
+    cand_id tie-break. Scale shape: the corpus side carries
+    (id, 4 codes) — ~100x below float-scan
     cost — and the query-table side broadcasts (BroadcastNestedLoopJoin
     with broadcast build, the sanctioned many-row variant); the only
-    exchange is the per-query top-k window. pq_knn's numpy kernel ranks
-    are pinned >= 0.9-recall-equal to this relation in
-    tests/test_round5.py.
+    exchange is the per-query top-k window.
 
     Both sides run the fold-faithful Arrow kernels (vectors.pd_fold_codes
     / pd_fold_d2_tables): bit-identical to the Catalyst `_spark_d2` /
@@ -1306,32 +1305,30 @@ def _probe_array() -> F.Column:
     )
 
 
-# The production operator (operators/similarity.py:ivf_knn) keeps its iterative
-# k-means coarse quantizer; this query runs the complete IVF retrieval path —
-# assign -> probe -> exact cosine re-rank -> top-k — against the closed-form
-# pinned codebook (similarity.pinned_codebook), which makes every stage
-# SQL-expressible:
+# The complete IVF retrieval path — assign -> probe -> exact cosine re-rank ->
+# top-k — against the closed-form pinned codebook (similarity.pinned_codebook),
+# which makes every stage SQL-expressible:
 #
-# - assignment / probe routing reuses the `_spark_d2` / `_spark_argmin`
-#   Catalyst folds (bit-identical across engines — proven by
-#   ivf_assign_pinned's hash rows);
-# - the cosine re-rank reuses the Arrow-gemm-kernel + round-to-1e-6 convention
-#   that knn_brute_force / knn_lsh hash-match against the fold-based DuckDB
-#   twin.
+# - assignment / probe routing run the fold kernels (vectors.pd_fold_*),
+#   bit-identical to the `_spark_d2` / `_spark_argmin` Catalyst folds the
+#   oracle mirrors (proven by ivf_assign_pinned's hash rows);
+# - the cosine re-rank reuses the Arrow left-to-right dot + round-to-1e-6
+#   convention that knn_brute_force / knn_lsh hash-match against the
+#   fold-based DuckDB twin.
 @query("ivf_knn", _IVF_KNN_SQL)
 def ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-5 over the PINNED 16-centroid codebook — the
     full retrieval path (coarse assign, probe the query's 4 nearest lists,
     exact cosine re-rank, windowed top-k) as one hash-checkable query.
 
-    Shape is identical to the production operator
-    (operators/similarity.py:ivf_knn, which fits its quantizer with
-    seeded k-means and routes via the Arrow nearest-centroid kernel): the
+    Fit-per-query shape of the stored index (operators/similarity.py
+    ivf_index_write / ivf_index_search run the same fold kernels): the
     corpus gets one map-side nearest-centroid pass, the tiny probe side is
     broadcast, and the only shuffle is the per-query top-k window. At
     100 TB the corpus never reshuffles and the index "build" is
-    embarrassingly parallel. The fitted-quantizer variant stays
-    recall-tested against brute force in tests/test_llmops.py."""
+    embarrassingly parallel. A data-fitted quantizer
+    (similarity.pq_fit_lloyd_pinned with m=1) stays recall-tested against
+    brute force through the stored index in tests/test_llmops.py."""
     books = similarity.pinned_codebook(1, _IVF_K, EMB_DIM)[0]
     emb = table(spark, sf_dir, "embeddings")
     n = emb.select(
@@ -2012,9 +2009,7 @@ def _ensure_index(spark: SparkSession, sf_dir: str) -> str:
         scratch = f"{path}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
         books = similarity.pinned_codebook(1, _IVF_K, EMB_DIM)[0]
         emb = table(spark, sf_dir, "embeddings")
-        similarity.ivf_index_write(
-            emb, scratch, n_centroids=_IVF_K, centers=books, fold_faithful=True
-        )
+        similarity.ivf_index_write(emb, scratch, centers=books)
         try:
             os.rename(scratch, path)  # atomic publish (same filesystem)
         except OSError:
@@ -2072,7 +2067,6 @@ def ivf_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries_df,
         k=_IVF_TOPK,
         n_probe=_IVF_PROBE,
-        fold_faithful=True,
     )
 
 
@@ -2817,11 +2811,7 @@ def _ensure_appended_index(spark: SparkSession, sf_dir: str) -> str:
         scratch = f"{path}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
         books = similarity.pinned_codebook(1, _IVF_K, EMB_DIM)[0]
         similarity.ivf_index_write(
-            emb.where(F.col("vec_id") % _APD_MOD != 0),
-            scratch,
-            n_centroids=_IVF_K,
-            centers=books,
-            fold_faithful=True,
+            emb.where(F.col("vec_id") % _APD_MOD != 0), scratch, centers=books
         )
         try:
             os.rename(scratch, path)
@@ -2843,7 +2833,6 @@ def _ensure_appended_index(spark: SparkSession, sf_dir: str) -> str:
             spark,
             path,
             emb.where(F.col("vec_id") % _APD_MOD == 0),
-            fold_faithful=True,
             delta_tag="append-v1",
         )
     return path
@@ -2871,7 +2860,7 @@ def ivf_index_append_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
     )
     return similarity.ivf_index_search(
-        spark, idx, queries_df, k=_IVF_TOPK, n_probe=_IVF_PROBE, fold_faithful=True
+        spark, idx, queries_df, k=_IVF_TOPK, n_probe=_IVF_PROBE
     )
 
 

@@ -98,21 +98,15 @@ class SqliteReader(BaseReader):
 
 class XlsxReader(BaseReader):
     """Excel workbook (reference sources/readers.py:52-55) via the
-    pure-stdlib OOXML codec (sources/xlsx_codec.py) — no openpyxl needed;
-    `pandas.read_excel` is used instead when available. Single-workbook
+    pure-stdlib OOXML codec (sources/xlsx_codec.py) — no openpyxl needed,
+    and the same reader in every environment. Single-workbook
     driver-side bridge by nature; the cluster-scale alternative is the
     com.crealytics:spark-excel connector."""
 
     def read(self, spark: SparkSession) -> DataFrame:
-        try:  # pragma: no cover - env-dependent
-            import openpyxl  # noqa: F401
+        from . import xlsx_codec
 
-            pdf = pd.read_excel(self.path)
-        except ImportError:
-            from . import xlsx_codec
-
-            pdf = xlsx_codec.read_xlsx_pandas(self.path)
-        return spark.createDataFrame(_arrow_table(pdf))
+        return spark.createDataFrame(_arrow_table(xlsx_codec.read_xlsx_pandas(self.path)))
 
 
 READER_MAP: dict[str, type[BaseReader]] = {

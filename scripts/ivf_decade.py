@@ -4,19 +4,19 @@
 carry >=2-decade exponent evidence; the index build + append + search
 path had only sf-scale numbers. This script measures build / append /
 search wall-clock and recall@k across 20k -> 200k vectors (the vec_d1 /
-vec_d2 planted corpora shared with scripts/second_decade.py), in the
-PRODUCTION configuration: KMeans-fit quantizer (bounded 4096-row
-sample), gemm assignment kernel, sqrt(n) centroids, constant probe
-FRACTION — the knobs a 100 TB deployment would turn, not the pinned
-oracle fold.
+vec_d2 planted corpora shared with scripts/second_decade.py), with a
+data-fitted quantizer (the m=1 pinned Lloyd fit over the base), the
+fold assignment kernel, sqrt(n) centroids and a constant probe
+FRACTION — the knobs a 100 TB deployment would turn.
 
     python scripts/ivf_decade.py [OUT_JSON]
 
 Per size, one lifecycle pass per timed run (interleaved across sizes,
 N_RUNS medians, warm-up discarded):
 
-- build:  ivf_index_write(base = 90% of the corpus), k = ~sqrt(n)
-  centroids — fit is O(sample * k), assignment O(n * k), so the decade
+- build:  pq_fit_lloyd_pinned(base, m=1) + ivf_index_write(base = 90%
+  of the corpus), k = ~sqrt(n) centroids — each Lloyd step and the
+  assignment are O(n * k), so the decade
   step grows work ~10x * sqrt(10): sub-linear wall needs the assignment
   to stay map-side and the partitioned write to stay one pass.
 - append: ivf_index_append(batch = the remaining 10%) — the delta path
@@ -71,7 +71,8 @@ def run_lifecycle(spark, path: str) -> dict:
     idx = os.path.join(SCALE_DIR, f"ivf_decade_idx_{os.getpid()}_{uuid.uuid4().hex[:8]}")
     try:
         t0 = time.monotonic()
-        similarity.ivf_index_write(base, idx, n_centroids=k_centroids)
+        centers = similarity.pq_fit_lloyd_pinned(base, m=1, k=k_centroids, dim=64)[0]
+        similarity.ivf_index_write(base, idx, centers)
         t_build = time.monotonic() - t0
 
         t0 = time.monotonic()

@@ -22,7 +22,7 @@ Ground truths are the EXACT in-repo twins, not the planted lists alone:
   knn_graph / ivf         -> brute_force_knn exact top-k
 
 recall    = |approx ∩ exact| / |exact|
-false_pos = |approx \ exact|   (for same-metric operators this is a hard
+false_pos = |approx - exact|   (for same-metric operators this is a hard
             wrong-answer count; for cross-metric ops — simhash vs jaccard —
             it measures metric disagreement, flagged in the notes column).
 
@@ -33,7 +33,9 @@ Prints the markdown table on stdout; everything else goes to stderr.
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -165,24 +167,20 @@ def main() -> None:
     exact_k = topk_edges(similarity.brute_force_knn(emb, qry, k=5), 5)
     wall_k = time.perf_counter() - t0
     t0 = time.perf_counter()
-    ivf = topk_edges(similarity.ivf_knn(emb, qry, k=5), 5)
-    add("ivf_knn (k=5, 16 lists, probe 4)", f"{n_vec} vecs, 16 queries", len(exact_k), ivf,
-        exact_k, time.perf_counter() - t0,
+    idx = tempfile.mkdtemp(prefix="recall_ivf_")
+    try:
+        # data-fitted coarse quantizer: the m=1 pinned Lloyd fit
+        centers = similarity.pq_fit_lloyd_pinned(emb, m=1, k=16, dim=64)[0]
+        similarity.ivf_index_write(emb, f"{idx}/index", centers)
+        ivf = topk_edges(
+            similarity.ivf_index_search(spark, f"{idx}/index", qry, k=5, n_probe=4), 5
+        )
+    finally:
+        shutil.rmtree(idx, ignore_errors=True)
+    add("ivf_index_search (k=5, 16 Lloyd lists, probe 4)", f"{n_vec} vecs, 16 queries",
+        len(exact_k), ivf, exact_k, time.perf_counter() - t0,
         f"recall@5 vs brute force ({wall_k:.1f}s exact pass); "
         "'false_pos' = in-list substitutes for unprobed-list neighbors")
-
-    t0 = time.perf_counter()
-    norm = similarity.l2_normalized(emb).cache()
-    nq = norm.where((F.col("vec_id") < 16) & (F.col("vec_id") < PLANT_OFFSET))
-    exact_n = topk_edges(similarity.brute_force_knn(norm, nq, k=5), 5)
-    books = similarity.pq_fit_codebooks(norm, m=16, k=16, dim=64)
-    pq = topk_edges(similarity.pq_knn(norm, nq, books, k=5, rerank=10), 5)
-    add("pq_knn (m=16x16, 8B codes, 10x ADC shortlist + exact re-rank)",
-        f"{n_vec} vecs, 16 queries", len(exact_n), pq, exact_n,
-        time.perf_counter() - t0,
-        "recall@5 vs brute force on the normalized corpus; scan cost is the "
-        "code table, floats touched only for the shortlist")
-    norm.unpersist()
 
     # ---- table --------------------------------------------------------------
     print("| operator | corpus | exact pairs | emitted | recall | false-pos | wall | notes |")

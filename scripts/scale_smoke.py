@@ -183,13 +183,17 @@ def clustered_vecs(spark, n: int, n_clusters: int = 32, spread: float = 0.3, dim
 
 
 def ivf_scale(spark, n_base=400_000, n_queries=16):
-    """ivf_knn at 200x the sf0.1 embeddings corpus: fit stays on the
-    bounded cached sample regardless of corpus size, assignment is one
-    Arrow map pass, and the probe join only touches ~n_probe/n_centroids
-    of the corpus per query. Recall is judged against brute force on the
-    same corpus, on BOTH corpus shapes: structureless randn (IVF's
-    worst case — no clusters to exploit, recall ~= probe fraction) and a
-    32-cluster Gaussian mixture (the realistic embedding distribution)."""
+    """Stored IVF index at 200x the sf0.1 embeddings corpus: a data-fitted
+    64-centroid quantizer (the m=1 pinned Lloyd fit), one fold-kernel
+    assignment pass writing centroid-partitioned postings, and a search
+    that only touches ~n_probe/n_centroids of the postings per query.
+    Recall is judged against brute force on the same corpus, on BOTH
+    corpus shapes: structureless randn (IVF's worst case — no clusters
+    to exploit, recall ~= probe fraction) and a 32-cluster Gaussian
+    mixture (the realistic embedding distribution)."""
+    import shutil
+    import tempfile
+
     for label, vecs in (
         ("randn", planted_dup_vecs(spark, n_base, 0)),
         ("32-cluster", clustered_vecs(spark, n_base)),
@@ -199,16 +203,23 @@ def ivf_scale(spark, n_base=400_000, n_queries=16):
         q = vecs.where(F.col("vec_id") < n_queries).cache()
         exact = similarity.brute_force_knn(vecs, q, k=5).cache()
         timed(f"brute_force_knn @{n_base // 1000}k {label}", exact)
-        approx = similarity.ivf_knn(
-            vecs, q, k=5, n_centroids=64, n_probe=8, fit_max_rows=16384
+        idx = tempfile.mkdtemp(prefix="scale_ivf_")
+        t0 = time.perf_counter()
+        centers = similarity.pq_fit_lloyd_pinned(vecs, m=1, k=64, dim=64)[0]
+        similarity.ivf_index_write(vecs, f"{idx}/index", centers)
+        print(f"ivf build (64 Lloyd lists) @{n_base // 1000}k {label}: "
+              f"{time.perf_counter() - t0:.1f}s", flush=True)
+        approx = similarity.ivf_index_search(
+            spark, f"{idx}/index", q, k=5, n_probe=8
         ).cache()
-        timed(f"ivf_knn (64 lists, probe 8) @{n_base // 1000}k {label}", approx)
+        timed(f"ivf_index_search (probe 8) @{n_base // 1000}k {label}", approx)
         hit = exact.join(approx, ["query_id", "cand_id"], "inner").count()
         total = exact.count()
         print(f"{label} recall@5 vs brute force: {hit}/{total} = {hit / total:.3f}",
               flush=True)
         for d in (exact, approx, q, vecs):
             d.unpersist()
+        shutil.rmtree(idx, ignore_errors=True)
 
 
 def layout_scale(spark, n=10_000_000):

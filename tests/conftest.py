@@ -40,3 +40,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+def pq_mse(emb, books) -> float:
+    """Mean squared reconstruction error per coordinate of `emb`'s
+    vectors encoded against the (m, k, sub) codebook `books` by the fold
+    kernel (vectors.pd_fold_codes): each subvector is replaced by its
+    nearest centroid."""
+    import numpy as np
+
+    from laposte_data_engineering_jedha_spark.functions import vectors
+
+    m, _, sub = books.shape
+    rows = emb.select(
+        "embedding", vectors.pd_fold_codes("embedding", books).alias("codes")
+    ).collect()
+    err = 0.0
+    for r in rows:
+        recon = np.concatenate([books[j][c] for j, c in enumerate(r["codes"])])
+        err += float(((np.asarray(r["embedding"], dtype="float64") - recon) ** 2).sum())
+    return err / (len(rows) * m * sub)

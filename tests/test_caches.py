@@ -62,3 +62,65 @@ def test_persist_if_small_gates_on_threshold(spark, monkeypatch):
     assert not caches.is_small(big)
     caches.persist_if_small(big, big, small)
     assert caches.release_all() == 1
+
+
+def test_every_persist_is_tracked_or_unpersisted():
+    """Every `.persist()` / `.cache()` in the package is either the
+    argument of `caches.track` / `persist_if_small` (so `release_all`
+    frees it) or sits in a function that calls `.unpersist()` on the
+    same name. An untracked, never-unpersisted cache outlives its query
+    and `release_all` cannot reach it."""
+    import ast
+    import os
+
+    import laposte_data_engineering_jedha_spark as pkg
+
+    def callee(call):
+        f = call.func
+        return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+    root = os.path.dirname(pkg.__file__)
+    leaks = []
+    for d, _, files in os.walk(root):
+        for f in sorted(files):
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(d, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+            for node in ast.walk(tree):
+                if not (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("persist", "cache")
+                ):
+                    continue
+                up = parent.get(node)
+                if (
+                    isinstance(up, ast.Call)
+                    and callee(up) in ("track", "persist_if_small")
+                    and node in up.args
+                ):
+                    continue
+                names = set()
+                if isinstance(node.func.value, ast.Name):
+                    names.add(node.func.value.id)
+                if isinstance(up, ast.Assign):
+                    names |= {t.id for t in up.targets if isinstance(t, ast.Name)}
+                fn = up
+                while fn is not None and not isinstance(
+                    fn, (ast.FunctionDef, ast.AsyncFunctionDef)
+                ):
+                    fn = parent.get(fn)
+                released = fn is not None and any(
+                    isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "unpersist"
+                    and isinstance(n.func.value, ast.Name)
+                    and n.func.value.id in names
+                    for n in ast.walk(fn)
+                )
+                if not released:
+                    leaks.append(f"{os.path.relpath(path, root)}:{node.lineno}")
+    assert leaks == []

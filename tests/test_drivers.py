@@ -399,13 +399,23 @@ def test_query_modules_bind_each_name_once():
 
 
 def test_queries_references_in_tests_and_scripts_resolve():
-    """Every `...queries import X`, `...queries.M import Y` and attribute
-    read `alias.X` on an imported queries module, in tests/ and scripts/,
-    names something that exists. Tier-1 never runs most of scripts/, so a
-    stale module path there would otherwise go unnoticed."""
+    """Every `...queries|operators|functions import X`, `...<sub>.M
+    import Y` and attribute read `alias.X` on an imported module of those
+    subpackages, in tests/ and scripts/, names something that exists, and
+    every file compiles with warnings as errors. Tier-1 never runs most of
+    scripts/, so a stale module path, a deleted operator or an invalid
+    escape there would otherwise go unnoticed."""
     import ast
     import importlib
     import os
+    import warnings
+
+    pkg_root = os.path.dirname(_queries_dir())
+    subpkgs = ("queries", "operators", "functions")
+    prefixes = tuple(f"{_PKG.rsplit('.', 1)[0]}.{s}" for s in subpkgs)
+
+    def ours(name):
+        return any(name == p or name.startswith(p + ".") for p in prefixes)
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     paths = [
@@ -417,13 +427,19 @@ def test_queries_references_in_tests_and_scripts_resolve():
     stale = []
     for path in paths:
         with open(path) as fh:
-            tree = ast.parse(fh.read())
-        modules = {}  # local name -> imported queries module
+            src = fh.read()
+        try:
+            with warnings.catch_warnings():
+                warnings.simplefilter("error")
+                compile(src, path, "exec")
+        except (SyntaxError, Warning) as e:
+            stale.append(f"{os.path.relpath(path, root)} does not compile: {e}")
+            continue
+        tree = ast.parse(src)
+        modules = {}  # local name -> every imported subpackage module bound to it
         for node in ast.walk(tree):
             where = f"{os.path.relpath(path, root)}:{getattr(node, 'lineno', 0)}"
-            if isinstance(node, ast.ImportFrom) and node.module and (
-                node.module == _PKG or node.module.startswith(_PKG + ".")
-            ):
+            if isinstance(node, ast.ImportFrom) and node.module and ours(node.module):
                 try:
                     mod = importlib.import_module(node.module)
                 except ImportError:
@@ -431,31 +447,85 @@ def test_queries_references_in_tests_and_scripts_resolve():
                     continue
                 for a in node.names:
                     sub = f"{node.module}.{a.name}"
-                    if node.module == _PKG and os.path.exists(
-                        os.path.join(_queries_dir(), f"{a.name}.py")
-                    ):
-                        modules[a.asname or a.name] = importlib.import_module(sub)
+                    sub_file = os.path.join(
+                        pkg_root, node.module.rsplit(".", 1)[-1], f"{a.name}.py"
+                    )
+                    if node.module in prefixes and os.path.exists(sub_file):
+                        modules.setdefault(a.asname or a.name, []).append(
+                            importlib.import_module(sub)
+                        )
                     elif not hasattr(mod, a.name):
                         stale.append(f"{where} {node.module} import {a.name}")
             elif isinstance(node, ast.Import):
                 for a in node.names:
-                    if a.name == _PKG or a.name.startswith(_PKG + "."):
+                    if ours(a.name):
                         try:
                             mod = importlib.import_module(a.name)
                         except ImportError:
                             stale.append(f"{where} import {a.name}")
                             continue
                         if a.asname:
-                            modules[a.asname] = mod
+                            modules.setdefault(a.asname, []).append(mod)
         for node in ast.walk(tree):
             if (
                 isinstance(node, ast.Attribute)
                 and isinstance(node.value, ast.Name)
                 and node.value.id in modules
-                and not hasattr(modules[node.value.id], node.attr)
+                and not any(hasattr(m, node.attr) for m in modules[node.value.id])
             ):
                 stale.append(
                     f"{os.path.relpath(path, root)}:{node.lineno} "
                     f"{node.value.id}.{node.attr}"
                 )
     assert stale == []
+
+
+def test_one_vector_quantization_path():
+    """IVF/PQ assign, probe and score only through the oracle-checked fold
+    kernels (vectors.pd_fold_*): the package imports no MLlib, carries no
+    per-call kernel switch and no gemm nearest-centroid kernel, the
+    similarity operators define no inline pandas UDF, and nothing in
+    tests/ or scripts/ names a deleted quantization function."""
+    import os
+    import re
+
+    from laposte_data_engineering_jedha_spark.functions import vectors
+    from laposte_data_engineering_jedha_spark.operators import similarity
+
+    pkg_root = os.path.dirname(_queries_dir())
+    found = []
+    for d, _, files in os.walk(pkg_root):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                with open(os.path.join(d, f)) as fh:
+                    src = fh.read()
+                rel = os.path.relpath(os.path.join(d, f), pkg_root)
+                for word in ("pyspark.ml", "fold_faithful", "pd_nearest_centroids"):
+                    if word in src:
+                        found.append(f"{rel}: {word}")
+                if rel == os.path.join("operators", "similarity.py") and "pandas_udf" in src:
+                    found.append(f"{rel}: pandas_udf")
+    assert found == []
+
+    deleted = (
+        "kmeans_fit_sample",
+        "pq_fit_codebooks",
+        "pq_encode",
+        "pq_reconstruction_mse",
+        "pq_knn",
+        "l2_normalized",
+        "pd_nearest_centroids",
+        "fold_faithful",
+    )
+    assert not any(hasattr(similarity, n) or hasattr(vectors, n) for n in deleted)
+    assert not hasattr(similarity, "ivf_knn")  # the registered query keeps the name
+    root = os.path.dirname(pkg_root)
+    pattern = re.compile(r"\b(" + "|".join(deleted) + r")\b")
+    named = []
+    for d in ("tests", "scripts"):
+        for f in sorted(os.listdir(os.path.join(root, d))):
+            path = os.path.join(root, d, f)
+            if f.endswith(".py") and path != os.path.abspath(__file__):
+                with open(path) as fh:
+                    named += [f"{d}/{f}: {m}" for m in pattern.findall(fh.read())]
+    assert named == []

@@ -161,3 +161,34 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark, sf_dir):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_layout_scratch_sweep_runs_on_first_use_not_at_import(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Importing the query registry touches no files: the sweep of dead
+    writers' layout scratch dirs runs on the first `_scratch()` call (the
+    first layout query build), not at import."""
+    import os
+    import subprocess
+    import sys
+    import tempfile
+
+    from laposte_data_engineering_jedha_spark.queries import io
+
+    dead = next(p for p in range(2**22 - 1, 1, -1) if not io._pid_alive(p))
+    stale = tmp_path / f"laposte_layout_bucketed_0123456789ab_{dead:x}"
+    stale.mkdir()
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run(
+        [sys.executable, "-c", "import laposte_data_engineering_jedha_spark.queries"],
+        cwd=root,
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        check=True,
+    )
+    assert stale.exists()
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(io, "_swept", False)
+    io.layout_bucketed_join(spark, sf_dir)
+    assert not stale.exists()

@@ -122,13 +122,18 @@ def test_lsh_knn_subset_of_brute_force(spark, sf_dir):
     assert all(n <= 5 for n in per_q.values())
 
 
-def test_ivf_knn_recall_and_exactness(spark, sf_dir):
-    """IVF results must use the exact cosine kernel (values equal to brute
-    force for the same pair) and reach reasonable recall with 4/16 probes."""
+def test_ivf_knn_recall_and_exactness(spark, sf_dir, tmp_path):
+    """IVF search over a DATA-FITTED quantizer (the m=1 pinned Lloyd fit,
+    stored by ivf_index_write) must use the exact cosine kernel (values
+    equal to brute force for the same pair) and reach reasonable recall
+    with 4/16 probes."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.where(F.col("vec_id") < 5)
     exact = similarity.brute_force_knn(emb, q, k=5).collect()
-    ivf = similarity.ivf_knn(emb, q, k=5, n_centroids=16, n_probe=4).collect()
+    idx = str(tmp_path / "ivf_idx")
+    centers = similarity.pq_fit_lloyd_pinned(emb, m=1, k=16, dim=64)[0]
+    similarity.ivf_index_write(emb, idx, centers)
+    ivf = similarity.ivf_index_search(spark, idx, q, k=5, n_probe=4).collect()
     exact_cos = {(r["query_id"], r["cand_id"]): r["cosine"] for r in exact}
     for r in ivf:
         key = (r["query_id"], r["cand_id"])
@@ -184,18 +189,6 @@ def test_embedding_block_nl_fails_fast_over_cap(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     with pytest.raises(ValueError, match="embedding_dup_pairs_lsh"):
         dedup.embedding_dup_pairs(emb, threshold=0.4, max_rows=5)
-
-
-def test_ivf_kmeans_fits_on_a_sample(spark):
-    """The coarse-quantizer fit input is capped: above fit_max_rows the fit
-    sees a seeded sample, not the full corpus (the 100 TB claim in the
-    ivf_knn docstring, VERDICT r2 item 7)."""
-    big = spark.range(20_000).selectExpr("id", "array(cast(id as double)) as features")
-    sampled = similarity.kmeans_fit_sample(big, fit_max_rows=2_000, seed=7)
-    n = sampled.count()
-    assert n < 4_000  # genuinely sampled (expected ~2000)
-    small = spark.range(500).selectExpr("id")
-    assert similarity.kmeans_fit_sample(small, fit_max_rows=2_000, seed=7) is small
 
 
 def test_sketch_accuracy(spark, sf_dir):
@@ -668,9 +661,9 @@ def test_containment_catches_superset_jaccard_misses(spark):
 
 def test_pq_codes_shape_and_range(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    books = similarity.pq_fit_codebooks(emb, m=4, k=16, dim=64)
+    books = similarity.pq_fit_lloyd_pinned(emb, m=4, k=16, dim=64)
     assert books.shape == (4, 16, 16)
-    codes = similarity.pq_encode(emb, books).collect()
+    codes = emb.select(vectors.pd_fold_codes("embedding", books).alias("codes")).collect()
     assert len(codes) == emb.count()
     for r in codes:
         assert len(r["codes"]) == 4
@@ -682,51 +675,19 @@ def test_pq_reconstruction_beats_mismatched_codebook(spark, sf_dir):
     better than a codebook fitted to a shifted copy — the basic 'the
     quantizer learned THIS density' check; and more subspaces must not
     reconstruct worse."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    books = similarity.pq_fit_codebooks(emb, m=4, k=16, dim=64)
-    mse = similarity.pq_reconstruction_mse(emb, books)
+    books = similarity.pq_fit_lloyd_pinned(emb, m=4, k=16, dim=64)
+    mse = conftest.pq_mse(emb, books)
     assert mse >= 0.0
 
     shifted = emb.select(
         "vec_id", F.transform("embedding", lambda x: x + F.lit(7.5)).alias("embedding")
     )
-    books_wrong = similarity.pq_fit_codebooks(shifted, m=4, k=16, dim=64)
-    mse_wrong = similarity.pq_reconstruction_mse(emb, books_wrong)
-    assert mse < mse_wrong
+    books_wrong = similarity.pq_fit_lloyd_pinned(shifted, m=4, k=16, dim=64)
+    assert mse < conftest.pq_mse(emb, books_wrong)
 
-    books8 = similarity.pq_fit_codebooks(emb, m=8, k=16, dim=64)
-    assert similarity.pq_reconstruction_mse(emb, books8) <= mse * 1.05
-
-
-def test_pq_knn_recall_against_brute_force(spark, sf_dir):
-    """Two-stage PQ search (ADC shortlist over 8-byte codes + exact
-    re-rank) must keep most of brute force's top-5. The fixture is a HARD
-    case — near-orthogonal vectors whose neighbor gaps sit at noise
-    level, where quantization hurts most; m=16 x 16 centroids + 10x
-    shortlist measured 90% here (m=8, no re-rank: 25% — the re-rank stage
-    is what makes PQ usable, scripts/recall_report.py has the sweep)."""
-    emb = similarity.l2_normalized(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    ).cache()
-    qs = emb.where(F.col("vec_id") < 8)
-    books = similarity.pq_fit_codebooks(emb, m=16, k=16, dim=64)
-    approx = similarity.pq_knn(emb, qs, books, k=5, rerank=10)
-    exact = similarity.brute_force_knn(emb, qs, k=5)
-
-    def topsets(df):
-        out = {}
-        for r in df.collect():
-            out.setdefault(r["query_id"], set()).add(r["cand_id"])
-        return out
-
-    a, e = topsets(approx), topsets(exact)
-    assert set(a) == set(e)
-    hits = sum(len(a[q] & e[q]) for q in e)
-    total = sum(len(e[q]) for q in e)
-    assert hits / total >= 0.8, f"recall@5 {hits}/{total}"
+    books8 = similarity.pq_fit_lloyd_pinned(emb, m=8, k=16, dim=64)
+    assert conftest.pq_mse(emb, books8) <= mse * 1.05
 
 
 def test_zipf_kernel_matches_numpy_polyfit(spark):

@@ -19,9 +19,7 @@ def _canon(df):
 
 
 def _search(spark, path, queries_df):
-    return similarity.ivf_index_search(
-        spark, path, queries_df, k=5, n_probe=4, fold_faithful=True
-    )
+    return similarity.ivf_index_search(spark, path, queries_df, k=5, n_probe=4)
 
 
 def test_ivf_append_equals_full_rebuild(spark, sf_dir, tmp_path):
@@ -33,18 +31,12 @@ def test_ivf_append_equals_full_rebuild(spark, sf_dir, tmp_path):
     centers = similarity.pinned_codebook(1, 16, 64)[0]
     grown = str(tmp_path / "grown")
     full = str(tmp_path / "full")
-    similarity.ivf_index_write(
-        emb.where(F.col("vec_id") % 4 != 0), grown, n_centroids=16,
-        centers=centers, fold_faithful=True,
-    )
+    similarity.ivf_index_write(emb.where(F.col("vec_id") % 4 != 0), grown, centers)
     outcome = similarity.ivf_index_append(
-        spark, grown, emb.where(F.col("vec_id") % 4 == 0),
-        fold_faithful=True, delta_tag="t1",
+        spark, grown, emb.where(F.col("vec_id") % 4 == 0), delta_tag="t1"
     )
     assert outcome == "delta"  # 1/4 of the corpus: under rebuild_fraction
-    similarity.ivf_index_write(
-        emb, full, n_centroids=16, centers=centers, fold_faithful=True
-    )
+    similarity.ivf_index_write(emb, full, centers)
     queries_df = emb.where(F.col("vec_id") < 8).select("vec_id", "embedding")
     got = _canon(_search(spark, grown, queries_df))
     want = _canon(_search(spark, full, queries_df))
@@ -58,16 +50,13 @@ def test_ivf_append_delta_is_idempotent(spark, sf_dir, tmp_path):
     emb = table(spark, sf_dir, "embeddings")
     centers = similarity.pinned_codebook(1, 16, 64)[0]
     idx = str(tmp_path / "idx")
-    similarity.ivf_index_write(
-        emb.where(F.col("vec_id") % 4 != 0), idx, n_centroids=16,
-        centers=centers, fold_faithful=True,
-    )
+    similarity.ivf_index_write(emb.where(F.col("vec_id") % 4 != 0), idx, centers)
     batch = emb.where(F.col("vec_id") % 4 == 0)
     assert similarity.ivf_index_append(
-        spark, idx, batch, fold_faithful=True, delta_tag="b1"
+        spark, idx, batch, delta_tag="b1"
     ) == "delta"
     assert similarity.ivf_index_append(
-        spark, idx, batch, fold_faithful=True, delta_tag="b1"
+        spark, idx, batch, delta_tag="b1"
     ) == "delta"
     assert similarity._index_delta_dirs(idx) == [os.path.join(idx, "deltas", "b1")]
     assert similarity._index_postings(spark, idx).count() == emb.count()
@@ -82,12 +71,9 @@ def test_ivf_append_rejects_changed_vector_for_indexed_id(spark, sf_dir, tmp_pat
     emb = table(spark, sf_dir, "embeddings")
     centers = similarity.pinned_codebook(1, 16, 64)[0]
     idx = str(tmp_path / "idx")
-    similarity.ivf_index_write(
-        emb.where(F.col("vec_id") % 4 != 0), idx, n_centroids=16,
-        centers=centers, fold_faithful=True,
-    )
+    similarity.ivf_index_write(emb.where(F.col("vec_id") % 4 != 0), idx, centers)
     assert similarity.ivf_index_append(
-        spark, idx, emb.where(F.col("vec_id") % 4 == 0), fold_faithful=True,
+        spark, idx, emb.where(F.col("vec_id") % 4 == 0),
         rebuild_fraction=5.0, delta_tag="d1",
     ) == "delta"
     n_before = similarity._index_postings(spark, idx).count()
@@ -96,7 +82,7 @@ def test_ivf_append_rejects_changed_vector_for_indexed_id(spark, sf_dir, tmp_pat
         moved = emb.where(F.col("vec_id") == vec_id).select("vec_id", negated)
         with pytest.raises(ValueError, match=rf"\[{vec_id}\]"):
             similarity.ivf_index_append(
-                spark, idx, moved, fold_faithful=True, rebuild_fraction=5.0,
+                spark, idx, moved, rebuild_fraction=5.0,
                 delta_tag=f"moved{vec_id}",
             )
     assert similarity._index_delta_dirs(idx) == [os.path.join(idx, "deltas", "d1")]
@@ -109,10 +95,10 @@ def test_ivf_append_accepts_same_vector_republish(spark, sf_dir, tmp_path):
     emb = table(spark, sf_dir, "embeddings")
     centers = similarity.pinned_codebook(1, 16, 64)[0]
     idx = str(tmp_path / "idx")
-    similarity.ivf_index_write(emb, idx, n_centroids=16, centers=centers, fold_faithful=True)
+    similarity.ivf_index_write(emb, idx, centers)
     again = emb.where(F.col("vec_id") < 8)
     assert similarity.ivf_index_append(
-        spark, idx, again, fold_faithful=True, delta_tag="again"
+        spark, idx, again, delta_tag="again"
     ) == "delta"
     queries_df = emb.where(F.col("vec_id") < 8).select("vec_id", "embedding")
     got = _canon(_search(spark, idx, queries_df))
@@ -129,18 +115,13 @@ def test_ivf_append_drift_triggers_compaction(spark, sf_dir, tmp_path):
     grown = str(tmp_path / "grown")
     full = str(tmp_path / "full")
     # base = 1/4 of the corpus, appended batch = 3/4 -> ratio 3 > 0.5
-    similarity.ivf_index_write(
-        emb.where(F.col("vec_id") % 4 == 0), grown, n_centroids=16,
-        centers=centers, fold_faithful=True,
-    )
+    similarity.ivf_index_write(emb.where(F.col("vec_id") % 4 == 0), grown, centers)
     outcome = similarity.ivf_index_append(
-        spark, grown, emb.where(F.col("vec_id") % 4 != 0), fold_faithful=True
+        spark, grown, emb.where(F.col("vec_id") % 4 != 0)
     )
     assert outcome == "rebuild"
     assert similarity._index_delta_dirs(grown) == []  # consumed by compaction
-    similarity.ivf_index_write(
-        emb, full, n_centroids=16, centers=centers, fold_faithful=True
-    )
+    similarity.ivf_index_write(emb, full, centers)
     queries_df = emb.where(F.col("vec_id") < 8).select("vec_id", "embedding")
     got = _canon(_search(spark, grown, queries_df))
     want = _canon(_search(spark, full, queries_df))

@@ -243,14 +243,11 @@ def test_ivf_append_consumed_tag_manifest(spark, sf_dir, tmp_path):
     emb = table(spark, sf_dir, "embeddings")
     centers = similarity.pinned_codebook(1, 16, 64)[0]
     idx = str(tmp_path / "idx")
-    similarity.ivf_index_write(
-        emb.where(F.col("vec_id") % 4 == 1), idx, n_centroids=16,
-        centers=centers, fold_faithful=True,
-    )
+    similarity.ivf_index_write(emb.where(F.col("vec_id") % 4 == 1), idx, centers)
     b1 = emb.where(F.col("vec_id") % 4 == 2)
     b2 = emb.where(F.col("vec_id") % 4 == 3)
     assert similarity.ivf_index_append(
-        spark, idx, b1, fold_faithful=True, rebuild_fraction=5.0, delta_tag="d1"
+        spark, idx, b1, rebuild_fraction=5.0, delta_tag="d1"
     ) == "delta"
     assert os.path.exists(
         os.path.join(idx, "deltas", "d1", similarity._ROWCOUNT_FILE)
@@ -260,7 +257,7 @@ def test_ivf_append_consumed_tag_manifest(spark, sf_dir, tmp_path):
     ) == b1.count()
     # second append tips the drift ratio -> compaction consumes d1
     assert similarity.ivf_index_append(
-        spark, idx, b2, fold_faithful=True, rebuild_fraction=0.5, delta_tag="d2"
+        spark, idx, b2, rebuild_fraction=0.5, delta_tag="d2"
     ) == "rebuild"
     assert similarity._index_delta_dirs(idx) == []
     assert similarity._consumed_tags(idx) == {"d1", "d2"}
@@ -268,10 +265,10 @@ def test_ivf_append_consumed_tag_manifest(spark, sf_dir, tmp_path):
     # retries of BOTH folded batches are no-ops: no delta reappears, no
     # vector is duplicated
     assert similarity.ivf_index_append(
-        spark, idx, b1, fold_faithful=True, delta_tag="d1"
+        spark, idx, b1, delta_tag="d1"
     ) == "delta"
     assert similarity.ivf_index_append(
-        spark, idx, b2, fold_faithful=True, delta_tag="d2"
+        spark, idx, b2, delta_tag="d2"
     ) == "delta"
     assert similarity._index_delta_dirs(idx) == []
     assert similarity._index_postings(spark, idx).count() == n_after

@@ -2,13 +2,14 @@
 
 The DuckDB hash parity of the pinned-codebook twins (queries/similarity.py) is covered by the oracle gate
 (tests/test_oracle_parity.py runs every registered oracle); these tests pin
-the OTHER equivalence — the pure-Catalyst twin must agree with the
-production Arrow kernels (similarity.pq_encode / vectors.pd_nearest_centroids)
-on the same pinned codebook, so a kernel regression can't hide behind a
-green SQL gate."""
+the OTHER equivalences — the registered queries (fold Arrow kernels) must
+agree with the pure-Catalyst folds and with an independent numpy
+reference on the same pinned codebook, so a kernel regression can't hide
+behind a green SQL gate."""
 
 from __future__ import annotations
 
+import conftest
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -29,31 +30,38 @@ def test_pinned_codebook_shape_and_values():
 
 
 def test_pq_pinned_catalyst_equals_arrow_kernel(spark, sf_dir):
+    """The registered pinned encode (fold Arrow kernel) must emit exactly
+    the per-subspace Catalyst fold argmin codes."""
     emb = table(spark, sf_dir, "embeddings")
-    cb = similarity.pinned_codebook(4, 16, 16)
-    kernel = {
+    catalyst = {
         r["vec_id"]: r["codes"]
-        for r in similarity.pq_encode(emb, cb).collect()
+        for r in emb.select(
+            "vec_id",
+            F.array(
+                *[q_similarity._spark_argmin(j, 16, 16).cast("int") for j in range(4)]
+            ).alias("codes"),
+        ).collect()
     }
-    catalyst = q_similarity.embedding_pq_encode_pinned(spark, sf_dir).collect()
-    assert len(catalyst) == len(kernel) > 0
-    for r in catalyst:
-        assert [r[f"code{j}"] for j in range(4)] == kernel[r["vec_id"]]
+    kernel = q_similarity.embedding_pq_encode_pinned(spark, sf_dir).collect()
+    assert len(kernel) == len(catalyst) > 0
+    for r in kernel:
+        assert [r[f"code{j}"] for j in range(4)] == catalyst[r["vec_id"]]
 
 
 def test_ivf_pinned_catalyst_equals_arrow_kernel(spark, sf_dir):
+    """The registered pinned IVF assignment (fold Arrow kernel) must pick
+    exactly the Catalyst fold argmin centroid."""
     emb = table(spark, sf_dir, "embeddings")
-    centers = similarity.pinned_codebook(1, 16, 64)[0]
-    kernel = {
-        r["vec_id"]: r["cent"][0]
+    catalyst = {
+        r["vec_id"]: r["cent"]
         for r in emb.select(
-            "vec_id", vectors.pd_nearest_centroids("embedding", centers, 1).alias("cent")
+            "vec_id", q_similarity._spark_argmin(0, 16, 64).cast("int").alias("cent")
         ).collect()
     }
     rows = q_similarity.ivf_assign_pinned(spark, sf_dir).collect()
-    assert len(rows) == len(kernel) > 0
+    assert len(rows) == len(catalyst) > 0
     for r in rows:
-        assert r["centroid"] == kernel[r["vec_id"]]
+        assert r["centroid"] == catalyst[r["vec_id"]]
         assert r["d2"] >= 0.0
 
 
@@ -112,6 +120,31 @@ def test_fold_kernels_bit_identical_to_catalyst_folds(spark, sf_dir):
         assert r["k_tabs"] == r["c_tabs"], r["vec_id"]  # bitwise, 64 doubles
 
 
+def test_fold_d2_equals_per_centroid_loop():
+    """`vectors._fold_d2` does one (rows, k) array step per dimension; the
+    reference is the per-centroid, per-dimension loop it replaced. Each
+    (row, centroid) pair adds the same float64 terms in the same order,
+    so the results must be bit-identical; an empty batch yields (0, k)."""
+
+    def reference(m, centers):
+        d2 = np.empty((len(m), len(centers)), dtype="float64")
+        for ci, cv in enumerate(centers):
+            acc = np.zeros(len(m), dtype="float64")
+            for d in range(centers.shape[1]):
+                diff = m[:, d] - cv[d]
+                acc = acc + diff * diff
+            d2[:, ci] = acc
+        return d2
+
+    rng = np.random.default_rng(7)
+    m = rng.standard_normal((300, 64)).astype("float32").astype("float64")
+    for k in (1, 16, 256):
+        centers = rng.standard_normal((k, 64))
+        got = vectors._fold_d2(m, centers)
+        assert got.view("int64").tolist() == reference(m, centers).view("int64").tolist()
+    assert vectors._fold_d2(np.array([]), np.zeros((16, 64))).shape == (0, 16)
+
+
 def test_pq_fit_lloyd_pinned_exact_dyadic_and_improving(spark, sf_dir):
     """The r8 pinned Lloyd fit (embedding_pq_codes' graduated codebook):
     every centroid coordinate must be an exact multiple of 2^-20 (the
@@ -128,9 +161,7 @@ def test_pq_fit_lloyd_pinned_exact_dyadic_and_improving(spark, sf_dir):
     again = similarity.pq_fit_lloyd_pinned(emb, m=4, k=16, dim=64, iters=2)
     assert np.array_equal(books, again)
     init = similarity.pq_fit_lloyd_pinned(emb, m=4, k=16, dim=64, iters=0)
-    assert similarity.pq_reconstruction_mse(emb, books) <= (
-        similarity.pq_reconstruction_mse(emb, init)
-    )
+    assert conftest.pq_mse(emb, books) <= conftest.pq_mse(emb, init)
 
 
 # --------------------- incremental (batch-vs-index) dedup ---------------------
@@ -260,25 +291,29 @@ def test_minhash_index_screen_matches_cross_and_skips_corpus_exchange(
 
 
 def test_pq_adc_pinned_recall_vs_kernel(spark, sf_dir):
-    """The Catalyst ADC twin and the production numpy-kernel pq_knn must
-    agree on (query, candidate) top-5 sets at >= 0.9 recall — fp
-    association differs (numpy pairwise vs left-to-right fold), so exact
-    rank equality is not required, but wholesale divergence means one of
-    the two ADC implementations is wrong."""
-    from pyspark.sql import functions as F
-
+    """The registered ADC search (fold Arrow kernels) and an independent
+    numpy ADC over the same pinned codebook must agree on (query,
+    candidate) top-5 sets at >= 0.9 overlap — fp association differs
+    (numpy pairwise sums vs the left-to-right fold), so exact rank
+    equality is not required, but wholesale divergence means one of the
+    two ADC implementations is wrong."""
     from laposte_data_engineering_jedha_spark.queries.similarity import (
         _ADC_QMOD,
         pq_adc_topk_pinned,
     )
 
-    emb = table(spark, sf_dir, "embeddings")
-    qs = emb.where(F.col("vec_id") % _ADC_QMOD == 0)
     cb = similarity.pinned_codebook(4, 16, 16)
-    kernel = {
-        (r["query_id"], r["cand_id"])
-        for r in similarity.pq_knn(emb, qs, cb, k=5, rerank=0).collect()
-    }
+    rows = table(spark, sf_dir, "embeddings").select("vec_id", "embedding").collect()
+    ids = np.array([r["vec_id"] for r in rows])
+    mat = np.array([r["embedding"] for r in rows], dtype="float64")
+    # (n, m, k) squared distance of every subvector to every centroid
+    d2 = ((mat.reshape(len(rows), 4, 1, 16) - cb[None]) ** 2).sum(axis=3)
+    codes = d2.argmin(axis=2)
+    kernel = set()
+    for qi in np.flatnonzero(ids % _ADC_QMOD == 0):
+        adc = d2[qi][np.arange(4)[None, :], codes].sum(axis=1)
+        order = [i for i in np.lexsort((ids, adc)) if ids[i] != ids[qi]][:5]
+        kernel |= {(int(ids[qi]), int(ids[i])) for i in order}
     twin = {
         (r["query_id"], r["cand_id"])
         for r in pq_adc_topk_pinned(spark, sf_dir).collect()

@@ -168,23 +168,26 @@ def test_auto_band_planes_bounds_bucket_occupancy(spark):
 
 
 def test_ivf_persistent_index_matches_in_memory_and_prunes(spark, tmp_path):
-    """The persisted IVF index (build once, search later) must return
-    EXACTLY what the fit-per-query ivf_knn returns under the same seed
-    (same quantizer -> same probes -> same candidates -> same top-k),
-    and the postings scan must carry a centroid PartitionFilter — the
-    property that makes a stored 100 TB index readable per-query."""
+    """The persisted IVF index (build once, search later) over the pinned
+    16-centroid codebook must return EXACTLY the rows of the registered
+    fit-per-query `ivf_knn` query on the same query slice (same
+    quantizer -> same probes -> same candidates -> same top-k), and the
+    postings scan must carry a centroid PartitionFilter — the property
+    that makes a stored 100 TB index readable per-query."""
     import contextlib
     import io
 
     from laposte_data_engineering_jedha_spark.operators import similarity
+    from laposte_data_engineering_jedha_spark.queries import similarity as q_similarity
     from laposte_data_engineering_jedha_spark.queries import table as qtable
+    from laposte_data_engineering_jedha_spark.sources.testdata import EMB_DIM
 
     emb = qtable(spark, SF, "embeddings")
     queries = emb.where(F.col("vec_id") < 8)
     idx = str(tmp_path / "ivf_idx")
-    similarity.ivf_index_write(emb, idx, n_centroids=16, seed=42)
+    similarity.ivf_index_write(emb, idx, similarity.pinned_codebook(1, 16, EMB_DIM)[0])
     got = similarity.ivf_index_search(spark, idx, queries, k=5, n_probe=4)
-    want = similarity.ivf_knn(emb, queries, k=5, n_centroids=16, n_probe=4, seed=42)
+    want = q_similarity.ivf_knn(spark, SF)
     canon = lambda df: sorted(  # noqa: E731
         (r["query_id"], r["cand_id"], r["cosine"], r["rank"]) for r in df.collect()
     )
@@ -217,7 +220,9 @@ def test_ivf_index_search_missing_and_corrupt_index_raise(spark, tmp_path):
         similarity.ivf_index_search(spark, empty, queries)
 
     gappy = str(tmp_path / "gappy_idx")
-    similarity.ivf_index_write(emb, gappy, n_centroids=8, seed=42)
+    # data-fitted quantizer: the m=1 case of the pinned Lloyd fit
+    centers = similarity.pq_fit_lloyd_pinned(emb, m=1, k=8, dim=64)[0]
+    similarity.ivf_index_write(emb, gappy, centers)
     cents = spark.read.parquet(f"{gappy}/centroids.parquet").where(
         F.col("centroid") != 3
     )
