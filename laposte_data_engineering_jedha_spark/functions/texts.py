@@ -1,10 +1,16 @@
 """Text-analysis expression layer for the 100 TB training-data pipeline ops.
 
-Everything here returns a Catalyst `Column` built from higher-order array
-functions (`transform`/`aggregate`/`filter`) and built-in string/hash
-functions — zero Python UDFs, so token counting, shingling, MinHash,
-SimHash and fingerprinting all run inside whole-stage codegen and scale
-linearly with executors (per-row compute, no shuffle).
+Every function returns a Catalyst `Column`, in two families:
+
+- expression builders over higher-order array functions
+  (`transform`/`aggregate`/`filter`) and built-in string/hash functions,
+  which run in the JVM with no Python worker; they are the executable
+  specification of token counting, shingling, MinHash, SimHash and
+  fingerprinting;
+- the `pd_*` kernels: Arrow-batched Pandas UDFs that compute the same
+  values in numpy (signatures, shingles, entropy, winnowing, Zipf fits),
+  used where the per-element lambda interpreter is the bottleneck. Both
+  families are per-row compute with no shuffle.
 
 Cross-engine determinism: every hash bottoms out in `md5` (identical in
 Spark and DuckDB), lifted to a 32-bit int via the first 8 hex chars, so

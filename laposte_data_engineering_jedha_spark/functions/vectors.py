@@ -1,11 +1,15 @@
 """Vector expression layer — embedding math over `array<float>` columns.
 
-Dot products / norms / cosine are built from `zip_with` + `aggregate`
-(JVM-side, codegen'd) in DOUBLE precision with strict left-to-right
-accumulation, so the DuckDB oracle (same accumulation order via
-`list_reduce`) matches bit-for-bit. For 100 TB this is the per-row kernel
-of both brute-force and LSH-bucketed similarity search; swapping in an
-Arrow-batched Pandas UDF (numpy BLAS) is a drop-in if profiling demands.
+Dot products / norms / cosine come in two forms, both in DOUBLE
+precision with strict left-to-right accumulation, so the DuckDB oracle
+(same accumulation order via `list_reduce`) matches bit-for-bit:
+
+- `zip_with` + `aggregate` expressions (JVM-side), the reference
+  semantics;
+- the `pd_*` kernels: Arrow-batched Pandas UDFs that run the same
+  left-to-right loop in numpy. They are the production path of
+  brute-force, LSH-bucketed and IVF/PQ similarity search (the `pd_fold_*`
+  kernels are the one vector-quantization path).
 """
 
 from __future__ import annotations

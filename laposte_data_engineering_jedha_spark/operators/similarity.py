@@ -6,7 +6,7 @@ Exact and hashed search:
   The query side is broadcast, so the big side streams through one
   narrow map stage + a per-query top-k window; no all-pairs shuffle.
 - `lsh_knn` — sign-random-projection (hyperplane) LSH: both sides get a
-  deterministic bucket id (`vectors.lsh_bucket`), candidates come from a
+  deterministic bucket id (`vectors.pd_lsh_bucket`), candidates come from a
   bucket equi-join, exact cosine re-ranks. The 100 TB path: bucket ids are
   per-row map-side compute, the join hash-partitions on bucket, and recall
   is tuned by the number of hyperplanes (fewer bits -> bigger buckets ->

@@ -44,6 +44,7 @@ here.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from collections.abc import Callable, Mapping
@@ -125,6 +126,18 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         memo = (sig, spark.read.parquet(path).schema)
         _SCHEMA_MEMO[key] = memo
     return spark.read.schema(memo[1]).parquet(path)
+
+
+def scratch(spark: SparkSession, sf_dir: str, kind: str) -> str:
+    """The scratch dir of one `kind` of query output over `sf_dir`, under
+    the session's SparkFiles root (`spark-<uuid>/userFiles-<uuid>` on the
+    driver). Spark creates that root per SparkContext and deletes it when
+    the session stops, so every file a query writes here lives exactly as
+    long as the session: repeat runs in one session reuse it, and nothing
+    survives into the next process."""
+    root = spark.sparkContext._jvm.org.apache.spark.SparkFiles.getRootDirectory()
+    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
+    return os.path.join(root, f"{kind}_{tag}")
 
 
 # matches the session default for spark.sql.files.maxPartitionBytes (128 MiB,

@@ -14,11 +14,8 @@ media payloads without shuffling the bytes.
 
 from __future__ import annotations
 
-import atexit
 import glob
-import hashlib
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -37,6 +34,7 @@ from . import (
     deliveries_from_orders,
     events_table,
     query,
+    scratch,
     sort_report,
     sql_md5i,
     sql_round,
@@ -47,10 +45,18 @@ from . import (
 _DELIVERIES_ORACLE = with_deliveries("SELECT * FROM deliveries")
 
 
+def _fresh_dir(spark: SparkSession, sf_dir: str, kind: str) -> str:
+    """A new dir under the session scratch dir of `kind`: each round-trip
+    call writes its own copy, so a DataFrame returned earlier never reads
+    files a later call rewrote."""
+    base = scratch(spark, sf_dir, kind)
+    os.makedirs(base, exist_ok=True)
+    return tempfile.mkdtemp(dir=base)
+
+
 def _roundtrip(spark: SparkSession, sf_dir: str, fmt: str, ext: str) -> DataFrame:
     df = deliveries_from_orders(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix=f"laposte_rt_{fmt}_")
-    path = os.path.join(tmp, f"deliveries{ext}")
+    path = os.path.join(_fresh_dir(spark, sf_dir, f"rt_{fmt}"), f"deliveries{ext}")
     writers.WRITER_MAP[fmt](path).write(df)
     back = READER_MAP[ext](path).read(spark)
     return cast_timestamp_contract(back).select(*RAW_COLUMNS)
@@ -217,8 +223,7 @@ def src_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_table(spark, sf_dir).select(
         "event_id", "user_id", "event_type", "ts", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="laposte_rt_part_")
-    path = os.path.join(tmp, "events_by_type.parquet")
+    path = os.path.join(_fresh_dir(spark, sf_dir, "rt_part"), "events_by_type.parquet")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
     back = spark.read.parquet(path).where(F.col("event_type") == "purchase")
     return back.select(
@@ -562,71 +567,6 @@ def multimodal_payload_size_percentiles(
 
 _LC_N_FILES = 8
 
-# Single-writer-per-location token: distinct concurrent PROCESSES write
-# to distinct scratch paths / catalog table names. Computed at import so
-# every query in one process (and its warm+timed bench runs) shares it.
-_PROC_TAG = f"{os.getpid():x}"
-
-
-#: set by the first `_scratch()` call, which sweeps dead writers' dirs and
-#: registers this process's own exit sweep — importing the package touches
-#: no files
-_swept = False
-
-
-# All scratch output lands under the system temp dir keyed by the absolute
-# sf_dir AND the writer pid (ADVICE r11: sf_dir-only keys let two concurrent
-# runs over the same sf_dir — parallel test workers, an overlapping bench and
-# replica gate — overwrite each other's output mid-read, flaking digests/file
-# counts), mode=overwrite — repeat runs inside one process (bench warm + timed)
-# reuse the same location, while concurrent processes and different scale
-# factors never collide.
-def _scratch(sf_dir: str, kind: str) -> str:
-    global _swept
-    if not _swept:
-        _swept = True
-        _sweep_scratch()
-        atexit.register(_sweep_scratch, include_own=True)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    return os.path.join(
-        tempfile.gettempdir(), f"laposte_layout_{kind}_{tag}_{_PROC_TAG}"
-    )
-
-
-def _pid_alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True
-    return True
-
-
-def _sweep_scratch(include_own: bool = False) -> None:
-    """Scratch lifecycle for the pid-keyed layout dirs (ADVICE r12: the
-    r11 concurrency fix made every process write fresh dirs where the
-    old fixed path self-overwrote — without a sweep they accumulate
-    forever). Called on the first `_scratch()` call to prune siblings
-    whose owning pid is no longer alive, and again at interpreter exit
-    (atexit) for this process's own dirs. Best-effort by design: a
-    recycled pid keeps a stale dir one process-lifetime longer, nothing
-    breaks."""
-    for d in glob.glob(os.path.join(tempfile.gettempdir(), "laposte_layout_*")):
-        pid_hex = d.rsplit("_", 1)[-1]
-        try:
-            pid = int(pid_hex, 16)
-        except ValueError:
-            continue
-        if not 0 < pid < 2**22:
-            # not a pid suffix (e.g. a pre-r11 fixed-path dir whose last
-            # segment is the 12-hex sf tag) — leave unrecognized dirs be
-            continue
-        own = pid_hex == _PROC_TAG
-        if (own and include_own) or (not own and not _pid_alive(pid)):
-            shutil.rmtree(d, ignore_errors=True)
-
-
 # Injective length-prefixed one-md5 row digest — the SAME construction
 # as operators/reconcile._digest52 (imported, not re-derived): each
 # field encodes as `len ':' value '|'` (NULL -> 'N|'), one md5 per row.
@@ -713,7 +653,7 @@ def layout_compact_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the actual output listing) == the exactly-N file contract. At 100 TB
     this is the nightly compaction job plus the cheap invariant you'd
     alert on; one shuffle in, one scan back."""
-    path = _scratch(sf_dir, "compact")
+    path = scratch(spark, sf_dir, "compact")
     layout.compact_to_files(_events_projected(spark, sf_dir), path, _LC_N_FILES)
     n_files = len(glob.glob(os.path.join(path, "*.parquet")))
     return _content_summary(spark.read.parquet(path), n_files)
@@ -743,7 +683,7 @@ def layout_zorder_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max geometry may change (THAT property is footer-asserted in
     tests/test_layout.py). File count is layout-dependent (empty range
     partitions emit no file), so the identity here is rows+digest only."""
-    path = _scratch(sf_dir, "zorder")
+    path = scratch(spark, sf_dir, "zorder")
     layout.write_zorder_clustered(
         _events_projected(spark, sf_dir), path, ["user_id", "cents"],
         n_files=_LC_N_FILES, bits=4,
@@ -773,10 +713,11 @@ def layout_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined via operators/layout.bucketed_equi_join. The oracle is the
     plain join+aggregate over the original parquet — the bucketed
     layout must be semantically invisible. Table names and paths are
-    keyed by sf_dir AND pid so neither concurrent scale factors nor
-    concurrent processes over the same sf_dir collide (ADVICE r11)."""
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12] + f"_{_PROC_TAG}"
-    base = _scratch(sf_dir, "bucketed")
+    keyed by sf_dir so scale factors never collide; both the session
+    catalog and the scratch root are per session, so concurrent processes
+    never share them."""
+    base = scratch(spark, sf_dir, "bucketed")
+    tag = os.path.basename(base)
     orders_name, cust_name = f"lyt_orders_{tag}", f"lyt_customer_{tag}"
     layout.write_bucketed(
         table(spark, sf_dir, "orders").select(
@@ -812,11 +753,11 @@ def layout_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pruned_scan(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
     """(one-day pruned read of the partitioned rewrite, day key).
 
-    The rewrite is idempotent per (sf_dir, pid) scratch location; the
+    The rewrite is idempotent per (sf_dir, session) scratch location; the
     probed day is the corpus's MINIMUM day, computed with one tiny
     aggregate so the filter lands as a plan-time literal — exactly how a
     daily job addresses yesterday's partition."""
-    path = _scratch(sf_dir, "pruneday")
+    path = scratch(spark, sf_dir, "pruneday")
     src = _events_projected(spark, sf_dir).withColumn(
         "day", F.date_format(F.timestamp_micros("ts_us"), "yyyy-MM-dd")
     )
@@ -875,12 +816,9 @@ _BIN_N = 64  # files per corpus — enough for real listing/partition work
 
 def _ensure_bin_files(spark: SparkSession, sf_dir: str) -> str:
     """Write one .bin payload file per document (doc_id < {_BIN_N}),
-    UTF-8 text bytes, idempotently into a (sf_dir, pid)-keyed scratch
-    dir — the single-writer convention of the layout queries' `_scratch` (and the
-    same sweep cleans it up)."""
-    # the layout-scratch convention (`_scratch`): pid-keyed location,
-    # swept by its dead-sibling/atexit lifecycle
-    path = _scratch(sf_dir, 'binin')
+    UTF-8 text bytes, into the session scratch dir once per session: the
+    `_SUCCESS` marker is written last, so a torn write is redone."""
+    path = scratch(spark, sf_dir, "binin")
     marker = os.path.join(path, "_SUCCESS")
     if os.path.exists(marker):
         return path
@@ -890,18 +828,11 @@ def _ensure_bin_files(spark: SparkSession, sf_dir: str) -> str:
         .select("doc_id", "text")
         .collect()
     )
-    tmp = f"{path}.build-{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
+    os.makedirs(path, exist_ok=True)
     for r in rows:
-        with open(os.path.join(tmp, f"doc{r['doc_id']:04d}.bin"), "wb") as fh:
+        with open(os.path.join(path, f"doc{r['doc_id']:04d}.bin"), "wb") as fh:
             fh.write(r["text"].encode("utf-8"))
-    open(os.path.join(tmp, "_SUCCESS"), "w").close()
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)
+    open(marker, "w").close()
     return path
 
 
@@ -924,7 +855,7 @@ ORDER BY file_name""",
 )
 def src_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-payload ingestion through the `binaryFile` source: write
-    {_BIN_N} one-document .bin files (idempotent, pid-keyed scratch),
+    {_BIN_N} one-document .bin files (once per session, session scratch),
     then read the DIRECTORY back as (path, length, content) and emit
     (file_name, n_bytes, md5(content)). The oracle derives the same
     triple from the source table, so a mismatch anywhere in the

@@ -14,8 +14,6 @@ import hashlib
 import math
 import os
 import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -36,6 +34,7 @@ from . import (
     _sql_hp_weight,
     events_table,
     query,
+    scratch,
     sort_report,
     sql_dot,
     sql_md5i,
@@ -1925,10 +1924,6 @@ def embedding_label_centroid_purity(spark: SparkSession, sf_dir: str) -> DataFra
 # are independent evidence
 _IDX_Q_LO, _IDX_Q_HI = 8, 16
 
-#: bump when the on-disk index layout or assignment kernel changes — a
-#: stale index from older code must never be reused
-_INDEX_CONTRACT = "v1-pinned16-foldfaithful"
-
 
 def _ivf_index_sql(q_lo: int, q_hi: int) -> str:
     """The stored-index oracle, parameterized by the query slice: inline
@@ -1983,66 +1978,38 @@ def _corpus_fingerprint(sf_dir: str) -> str:
     return "|".join(parts) or "missing"
 
 
-def _index_path(sf_dir: str) -> str:
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{_INDEX_CONTRACT}|{_corpus_fingerprint(sf_dir)}".encode()
-    ).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"laposte_ivf_index_{tag}")
+def _write_index(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The pinned-codebook IVF index over the whole corpus."""
+    books = similarity.pinned_codebook(1, _IVF_K, EMB_DIM)[0]
+    similarity.ivf_index_write(table(spark, sf_dir, "embeddings"), path, centers=books)
 
 
-def _ensure_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once: the stored index is keyed by (sf_dir, contract
-    version, corpus fingerprint); a complete build leaves parquet
-    _SUCCESS markers that gate reuse, so a torn build rebuilds, a
-    code-contract bump re-keys, and mutated corpus data re-keys
-    (_corpus_fingerprint). The build lands in a unique scratch dir and
-    is PUBLISHED by an atomic rename — two processes building
-    concurrently can never interleave overwrite-mode writes into the
-    served path; the rename loser discards its build and serves the
-    winner's."""
-    path = _index_path(sf_dir)
-    done = all(
-        os.path.exists(os.path.join(path, part, "_SUCCESS"))
-        for part in ("centroids.parquet", "postings.parquet")
-    )
-    if not done:
-        scratch = f"{path}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        books = similarity.pinned_codebook(1, _IVF_K, EMB_DIM)[0]
-        emb = table(spark, sf_dir, "embeddings")
-        similarity.ivf_index_write(emb, scratch, centers=books)
-        try:
-            os.rename(scratch, path)  # atomic publish (same filesystem)
-        except OSError:
-            # Two distinct causes land here (ADVICE r10): a concurrent
-            # builder published first (the common, benign race), or the
-            # rename failed for an unrelated reason — permissions, a
-            # torn destination created outside the rename protocol.
-            # Don't assume the race: re-verify the destination's
-            # _SUCCESS markers before serving it.
-            published = all(
-                os.path.exists(os.path.join(path, part, "_SUCCESS"))
-                for part in ("centroids.parquet", "postings.parquet")
-            )
-            if published:
-                shutil.rmtree(scratch, ignore_errors=True)
-            else:
-                # torn/absent destination: clear it and retry the
-                # publish once; a second failure raises rather than
-                # silently serving a torn index.
-                shutil.rmtree(path, ignore_errors=True)
-                os.rename(scratch, path)
+def _ensure_index(spark: SparkSession, sf_dir: str, write=_write_index) -> str:
+    """Build once per session: `write(spark, sf_dir, path)` builds the
+    index into the session scratch dir (queries.scratch, named for the
+    writer) under a key of the corpus fingerprint, so a corpus rewritten
+    during the session re-keys the index and is never served from the
+    old build. The `_SUCCESS` marker is written last, so a torn build is
+    redone. The scratch root goes when the session stops: a new process
+    always builds its index with the code it runs."""
+    fp = hashlib.md5(_corpus_fingerprint(sf_dir).encode()).hexdigest()[:16]
+    path = os.path.join(scratch(spark, sf_dir, write.__name__.strip("_")), fp)
+    marker = os.path.join(path, "_SUCCESS")
+    if not os.path.exists(marker):
+        shutil.rmtree(path, ignore_errors=True)
+        write(spark, sf_dir, path)
+        open(marker, "w").close()
     return path
 
 
 # The stored-index operator (hive-partitioned-by-centroid postings, plan-time
 # partition pruning) with the closed-form codebook pinned
-# (similarity.pinned_codebook). The index is built ONCE per (sf_dir,
-# contract-version) under the system temp dir; every later run, in this process
-# or the next, searches the STORED index, which is exactly the
-# build-once/search-many lifecycle a production ANN service runs. Assignment
-# and probe routing use the fold-faithful Arrow kernels (bit-identical to the
-# Catalyst/DuckDB d2 folds), so the stored postings and the oracle's inline
-# recomputation agree bit-for-bit.
+# (similarity.pinned_codebook). The index is built ONCE per session and
+# corpus; every later run in the session searches the STORED index, which is
+# the build-once/search-many lifecycle a production ANN service runs. A new
+# session builds it again. Assignment and probe routing use the fold-faithful
+# Arrow kernels (bit-identical to the Catalyst/DuckDB d2 folds), so the stored
+# postings and the oracle's inline recomputation agree bit-for-bit.
 @query("ivf_index_search", _IVF_INDEX_SQL)
 def ivf_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{_IVF_TOPK} ANN over the PERSISTED pinned-codebook IVF index:
@@ -2783,59 +2750,19 @@ _APD_Q_LO, _APD_Q_HI = 16, 24
 # compaction path is pinned by tests/test_round12.py instead.
 _APD_MOD = 4
 
-#: bump when the append layout or assignment kernel changes
-_APD_CONTRACT = "v1-append-pinned16-foldfaithful"
 
-
-def _append_index_path(sf_dir: str) -> str:
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{_APD_CONTRACT}|{_corpus_fingerprint(sf_dir)}".encode()
-    ).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"laposte_ivf_apidx_{tag}")
-
-
-def _ensure_appended_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build-base-then-append, idempotently: the base index over 3/4 of
-    the corpus publishes by atomic rename (the ivf_index_search protocol); the
-    remaining 1/4 is then appended as the deterministic 'append-v1'
-    delta (ivf_index_append publishes it by rename too, and the
-    deterministic tag makes a concurrent duplicate append converge).
-    Every later run finds both published and goes straight to search."""
-    path = _append_index_path(sf_dir)
+def _write_appended_index(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """Build-base-then-append: the base index over 3/4 of the corpus,
+    then the remaining 1/4 appended as the 'append-v1' delta
+    (similarity.ivf_index_append)."""
     emb = table(spark, sf_dir, "embeddings")
-    base_done = all(
-        os.path.exists(os.path.join(path, part, "_SUCCESS"))
-        for part in ("centroids.parquet", "postings.parquet")
+    books = similarity.pinned_codebook(1, _IVF_K, EMB_DIM)[0]
+    similarity.ivf_index_write(
+        emb.where(F.col("vec_id") % _APD_MOD != 0), path, centers=books
     )
-    if not base_done:
-        scratch = f"{path}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        books = similarity.pinned_codebook(1, _IVF_K, EMB_DIM)[0]
-        similarity.ivf_index_write(
-            emb.where(F.col("vec_id") % _APD_MOD != 0), scratch, centers=books
-        )
-        try:
-            os.rename(scratch, path)
-        except OSError:
-            published = all(
-                os.path.exists(os.path.join(path, part, "_SUCCESS"))
-                for part in ("centroids.parquet", "postings.parquet")
-            )
-            if published:
-                shutil.rmtree(scratch, ignore_errors=True)
-            else:
-                shutil.rmtree(path, ignore_errors=True)
-                os.rename(scratch, path)
-    delta_done = os.path.exists(
-        os.path.join(path, "deltas", "append-v1", "postings.parquet", "_SUCCESS")
+    similarity.ivf_index_append(
+        spark, path, emb.where(F.col("vec_id") % _APD_MOD == 0), delta_tag="append-v1"
     )
-    if not delta_done:
-        similarity.ivf_index_append(
-            spark,
-            path,
-            emb.where(F.col("vec_id") % _APD_MOD == 0),
-            delta_tag="append-v1",
-        )
-    return path
 
 
 @query("ivf_index_append_search", _ivf_index_sql(_APD_Q_LO, _APD_Q_HI))
@@ -2853,7 +2780,7 @@ def ivf_index_append_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is exactly the delta path's contract (the equality against a
     from-scratch rebuild is additionally pinned in
     tests/test_round12.py, along with the drift-triggered compaction)."""
-    idx = _ensure_appended_index(spark, sf_dir)
+    idx = _ensure_index(spark, sf_dir, _write_appended_index)
     queries_df = (
         table(spark, sf_dir, "embeddings")
         .where((F.col("vec_id") >= _APD_Q_LO) & (F.col("vec_id") < _APD_Q_HI))

@@ -391,8 +391,8 @@ def graph_scale(spark, n=400_000):
     volume ~ n * bucket_size. More planes keep buckets bounded."""
     vecs = clustered_vecs(spark, n).cache()
     timed(f"corpus: {n // 1000}k clustered vectors", vecs)
-    g = similarity.knn_graph(vecs, k=3, dim=64, planes=12)
-    timed(f"knn_graph (12 planes) @{n // 1000}k vectors", g)
+    g = similarity.knn_graph(vecs, k=3, dim=64, band_planes=12)
+    timed(f"knn_graph (12 planes per band) @{n // 1000}k vectors", g)
     vecs.unpersist()
 
 

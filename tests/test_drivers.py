@@ -401,12 +401,15 @@ def test_query_modules_bind_each_name_once():
 def test_queries_references_in_tests_and_scripts_resolve():
     """Every `...queries|operators|functions import X`, `...<sub>.M
     import Y` and attribute read `alias.X` on an imported module of those
-    subpackages, in tests/ and scripts/, names something that exists, and
-    every file compiles with warnings as errors. Tier-1 never runs most of
-    scripts/, so a stale module path, a deleted operator or an invalid
-    escape there would otherwise go unnoticed."""
+    subpackages, in tests/ and scripts/, names something that exists;
+    every call of such a function passes only keywords its signature
+    takes (functions with `**kwargs` are skipped); and every file
+    compiles with warnings as errors. Tier-1 never runs most of
+    scripts/, so a stale module path, a deleted operator, a renamed
+    parameter or an invalid escape there would otherwise go unnoticed."""
     import ast
     import importlib
+    import inspect
     import os
     import warnings
 
@@ -424,6 +427,16 @@ def test_queries_references_in_tests_and_scripts_resolve():
         for f in sorted(os.listdir(os.path.join(root, d)))
         if f.endswith(".py")
     ]
+
+    def unknown_keywords(fn, keywords):
+        try:
+            params = inspect.signature(fn).parameters.values()
+        except (TypeError, ValueError):
+            return set()
+        if any(p.kind is p.VAR_KEYWORD for p in params):
+            return set()
+        return keywords - {p.name for p in params if p.kind is not p.POSITIONAL_ONLY}
+
     stale = []
     for path in paths:
         with open(path) as fh:
@@ -437,6 +450,7 @@ def test_queries_references_in_tests_and_scripts_resolve():
             continue
         tree = ast.parse(src)
         modules = {}  # local name -> every imported subpackage module bound to it
+        funcs = {}  # local name -> every imported subpackage function bound to it
         for node in ast.walk(tree):
             where = f"{os.path.relpath(path, root)}:{getattr(node, 'lineno', 0)}"
             if isinstance(node, ast.ImportFrom) and node.module and ours(node.module):
@@ -456,6 +470,10 @@ def test_queries_references_in_tests_and_scripts_resolve():
                         )
                     elif not hasattr(mod, a.name):
                         stale.append(f"{where} {node.module} import {a.name}")
+                    elif callable(getattr(mod, a.name)):
+                        funcs.setdefault(a.asname or a.name, []).append(
+                            getattr(mod, a.name)
+                        )
             elif isinstance(node, ast.Import):
                 for a in node.names:
                     if ours(a.name):
@@ -477,6 +495,26 @@ def test_queries_references_in_tests_and_scripts_resolve():
                     f"{os.path.relpath(path, root)}:{node.lineno} "
                     f"{node.value.id}.{node.attr}"
                 )
+            if isinstance(node, ast.Call) and node.keywords:
+                f = node.func
+                if isinstance(f, ast.Name):
+                    label, fns = f.id, funcs.get(f.id, [])
+                elif isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name):
+                    label = f"{f.value.id}.{f.attr}"
+                    fns = [
+                        getattr(m, f.attr)
+                        for m in modules.get(f.value.id, [])
+                        if callable(getattr(m, f.attr, None))
+                    ]
+                else:
+                    continue
+                keywords = {k.arg for k in node.keywords if k.arg}
+                bad = [unknown_keywords(fn, keywords) for fn in fns]
+                if bad and all(bad):
+                    stale.append(
+                        f"{os.path.relpath(path, root)}:{node.lineno} "
+                        f"{label}() takes no {', '.join(sorted(bad[0]))}"
+                    )
     assert stale == []
 
 

@@ -163,22 +163,13 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark, sf_dir):
                 spark.conf.set(k, v)
 
 
-def test_layout_scratch_sweep_runs_on_first_use_not_at_import(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """Importing the query registry touches no files: the sweep of dead
-    writers' layout scratch dirs runs on the first `_scratch()` call (the
-    first layout query build), not at import."""
+def test_importing_queries_creates_no_files(tmp_path):
+    """Importing the query registry touches no files: a fresh interpreter
+    with a private TMPDIR leaves it empty."""
     import os
     import subprocess
     import sys
-    import tempfile
 
-    from laposte_data_engineering_jedha_spark.queries import io
-
-    dead = next(p for p in range(2**22 - 1, 1, -1) if not io._pid_alive(p))
-    stale = tmp_path / f"laposte_layout_bucketed_0123456789ab_{dead:x}"
-    stale.mkdir()
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     subprocess.run(
         [sys.executable, "-c", "import laposte_data_engineering_jedha_spark.queries"],
@@ -186,9 +177,4 @@ def test_layout_scratch_sweep_runs_on_first_use_not_at_import(
         env={**os.environ, "TMPDIR": str(tmp_path)},
         check=True,
     )
-    assert stale.exists()
-
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    monkeypatch.setattr(io, "_swept", False)
-    io.layout_bucketed_join(spark, sf_dir)
-    assert not stale.exists()
+    assert os.listdir(tmp_path) == []
