@@ -4,13 +4,13 @@ Every function returns a Catalyst `Column`, in two families:
 
 - expression builders over higher-order array functions
   (`transform`/`aggregate`/`filter`) and built-in string/hash functions,
-  which run in the JVM with no Python worker; they are the executable
-  specification of token counting, shingling, MinHash, SimHash and
-  fingerprinting;
-- the `pd_*` kernels: Arrow-batched Pandas UDFs that compute the same
-  values in numpy (signatures, shingles, entropy, winnowing, Zipf fits),
-  used where the per-element lambda interpreter is the bottleneck. Both
-  families are per-row compute with no shuffle.
+  which run in the JVM with no Python worker (tokenizing, token counting,
+  SimHash, fingerprinting, language ID, quality scores);
+- the `pd_*` kernels: Arrow-batched Pandas UDFs that compute in numpy
+  (shingles, MinHash signatures, entropy, winnowing, Zipf fits), used
+  where the per-element lambda interpreter is the bottleneck; each is
+  the twin of a DuckDB fragment its oracle uses. Both families are
+  per-row compute with no shuffle.
 
 Cross-engine determinism: every hash bottoms out in `md5` (identical in
 Spark and DuckDB), lifted to a 32-bit int via the first 8 hex chars, so
@@ -99,50 +99,6 @@ def bpe_token_count(col: Column | str) -> Column:
     return F.size(F.regexp_extract_all(_c(col), F.lit(BPE_TOKEN_RE), 0))
 
 
-def shingles(tokens_col: Column, n: int = SHINGLE_WIDTH) -> Column:
-    """Distinct word n-gram shingles (space-joined) of a token array.
-
-    Docs shorter than n tokens yield an empty array. Built with
-    `transform(sequence)` + `slice`, all codegen'd array ops.
-    """
-    count = F.size(tokens_col) - (n - 1)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(count, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(tokens_col, i, n)),
-    )
-    return F.array_distinct(F.when(count >= 1, grams).otherwise(F.array()))
-
-
-def shingle_hashes(col: Column | str, n: int = SHINGLE_WIDTH) -> Column:
-    """Distinct 32-bit hashes of word n-gram shingles of a text column."""
-    return F.transform(shingles(tokens(col), n), md5int32)
-
-
-def minhash_signature(hashes: Column, perms: int = MINHASH_PERMS) -> Column:
-    """MinHash signature: per permutation j, min over shingle hashes of
-    `(x*(2j+3) + (j*j+7)) % (2^31-1)`. Empty shingle sets sign as all
-    MERSENNE31 (matches nothing). Array of `perms` BIGINTs, computed per-row
-    — the classic MinHash estimator of Jaccard similarity (Broder 1997).
-
-    SINGLE-PASS over the hash array: one `aggregate` with a `perms`-wide
-    running-min accumulator. The naive per-permutation formulation (`perms`
-    independent aggregates) re-evaluates the md5 shingle pipeline once per
-    permutation after Catalyst project-collapse — 16x the hashing work."""
-    init = F.array_repeat(F.lit(MERSENNE31).cast("long"), perms)
-    return F.aggregate(
-        hashes,
-        init,
-        lambda acc, x: F.zip_with(
-            acc,
-            F.transform(
-                F.sequence(F.lit(0), F.lit(perms - 1)),
-                lambda j: (x * (j * 2 + 3) + (j * j + 7)) % MERSENNE31,
-            ),
-            lambda a, c: F.least(a, c),
-        ),
-    )
-
-
 def lsh_bands(sig: Column, bands: int = MINHASH_BANDS) -> Column:
     """Split a MinHash signature into `bands` (band_idx, band_key) structs;
     band_key packs the band's rows into one string. Docs sharing any band
@@ -220,17 +176,18 @@ def rolling_fingerprint(col: Column | str) -> Column:
 # Tokenization, shingling and md5 hashing stay JVM-side (regex/byte-level
 # parity with the SQL oracle is exact there); only the hash->signature
 # arithmetic — pure int64 math, bit-exact in numpy — moves into a
-# vectorized Pandas UDF. The HOF builders above are the executable
-# specification; these kernels compute the identical values ~20x faster
-# because the per-element lambda interpreter drops out.
+# vectorized Pandas UDF, ~20x faster than the equivalent HOF chain because
+# the per-element lambda interpreter drops out. Each kernel computes the
+# values of the DuckDB fragment named in its docstring bit-for-bit.
 
 
 def pd_shingles(tokens_col: Column | str, n: int = SHINGLE_WIDTH) -> Column:
-    """Arrow-batched twin of `shingles`: distinct word n-grams of a
-    JVM-tokenized array (tokenization stays in Spark so the regex semantics
-    match the SQL oracle exactly; ' '-joining is byte-identical in Python).
-    Element ORDER differs from the HOF version — every consumer is
-    set-semantic (explode+join, size, intersect), so order is immaterial."""
+    """Arrow-batched twin of the oracle fragment `queries.SQL_SHINGLES`:
+    distinct word n-grams of a JVM-tokenized array (tokenization stays in
+    Spark so the regex semantics match the SQL oracle exactly; ' '-joining
+    is byte-identical in Python). Element ORDER is a Python set's — every
+    consumer is set-semantic (explode+join, size, intersect), so order is
+    immaterial."""
 
     @pandas_udf("array<string>")
     def kernel(s: pd.Series) -> pd.Series:
@@ -244,9 +201,10 @@ def pd_shingles(tokens_col: Column | str, n: int = SHINGLE_WIDTH) -> Column:
 
 
 def pd_shingle_hashes(tokens_col: Column | str, n: int = SHINGLE_WIDTH) -> Column:
-    """Arrow-batched twin of `shingle_hashes` over a JVM-tokenized array:
-    hashlib.md5 over UTF-8 bytes == Spark/DuckDB md5, first 8 hex chars as
-    int — identical values, ~5x faster than the interpreted HOF chain."""
+    """Arrow-batched twin of `queries.sql_md5i` over each of
+    `queries.SQL_SHINGLES`, on a JVM-tokenized array: hashlib.md5 over
+    UTF-8 bytes == Spark/DuckDB md5, first 8 hex chars as int — identical
+    values, ~5x faster than an interpreted HOF chain."""
     import hashlib
 
     @pandas_udf("array<long>")
@@ -285,7 +243,11 @@ def pd_token_hashes(tokens_col: Column | str, hex_chars: int = 8) -> Column:
 
 
 def pd_minhash_signature(hashes: Column | str, perms: int = MINHASH_PERMS) -> Column:
-    """Arrow-batched twin of `minhash_signature` (identical values)."""
+    """MinHash signature, Arrow-batched twin of the oracle fragment
+    `queries._SQL_SIG`: per permutation j, min over shingle hashes of
+    `(x*(2j+3) + (j*j+7)) % (2^31-1)`. Empty shingle sets sign as all
+    MERSENNE31 (matches nothing). Array of `perms` BIGINTs per row — the
+    classic MinHash estimator of Jaccard similarity (Broder 1997)."""
     a = np.array([j * 2 + 3 for j in range(perms)], dtype="int64")
     b = np.array([j * j + 7 for j in range(perms)], dtype="int64")
 

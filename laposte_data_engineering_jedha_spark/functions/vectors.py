@@ -135,8 +135,9 @@ def pd_norm(a: Column | str) -> Column:
 
 
 def py_hyperplane_weights(plane: int, dim: int) -> list[int]:
-    """The md5 weight vector computed Python-side — same closed form as
-    `hyperplane_weights`."""
+    """Deterministic integer weight vector of hyperplane `plane` (0-based):
+    md5 of "plane_i" per dimension (see module docstring for why md5). The
+    oracle's twin is `queries._sql_hp_weight`."""
     import hashlib
 
     return [
@@ -147,9 +148,14 @@ def py_hyperplane_weights(plane: int, dim: int) -> list[int]:
 
 
 def pd_lsh_bucket(vec: Column | str, dim: int, planes: int = HYPERPLANES) -> Column:
-    """Arrow-batched twin of `lsh_bucket`: per plane, a left-to-right
-    float64 projection against the literal md5 weights, sign bit packed
-    MSB-first."""
+    """Sign-random-projection bucket id: bit p = [dot(vec, w_p) >= 0],
+    packed MSB-first into a BIGINT. Cosine-similar vectors collide with
+    probability 1 - theta/pi per bit, so bucketing the self-join turns
+    O(n^2) candidate generation into an equi-join keyed by bucket — the
+    scale path for ANN. Per plane a left-to-right float64 projection
+    against the `py_hyperplane_weights` literals: the twin of the oracle's
+    `_sql_hp_weight`-weighted `sql_reduce_sum` (queries/similarity.py
+    `_sql_bucket`)."""
 
     weights = [
         np.array(py_hyperplane_weights(p, dim), dtype="float64") for p in range(planes)
@@ -176,7 +182,7 @@ def pd_lsh_buckets_banded(
     band, band `b` packing the sign bits of planes [b*band_planes,
     (b+1)*band_planes) MSB-first — the SimHash-style AND/OR construction
     (Charikar 2002; MMDS ch.3) where two vectors are candidates if they
-    collide in ANY band. Same md5 closed form as `lsh_bucket`, so a SQL
+    collide in ANY band. Same md5 closed form as `pd_lsh_bucket`, so a SQL
     oracle regenerates every bucket exactly. Returns array<long> of length
     `bands`; posexplode it to (band, key) join keys."""
 
@@ -311,44 +317,3 @@ def pd_fold_d2_tables(vec: Column | str, codebooks: "np.ndarray") -> Column:
         return pd.Series([[row.tolist() for row in r] for r in tabs])
 
     return kernel(_c(vec))
-
-
-def hyperplane_weights(plane: Column, dim: int) -> Column:
-    """Deterministic integer weight vector of hyperplane `plane` (0-based):
-    md5 of "plane_i" per dimension (see module docstring for why md5)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda i: F.conv(
-            F.substring(
-                F.md5(F.concat(plane.cast("string"), F.lit("_"), i.cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % HP_MOD
-        - HP_SHIFT,
-    )
-
-
-def lsh_bucket(vec: Column | str, dim: int, planes: int = HYPERPLANES) -> Column:
-    """Sign-random-projection bucket id: bit p = [dot(vec, w_p) >= 0], packed
-    MSB-first into a BIGINT. Cosine-similar vectors collide with probability
-    1 - theta/pi per bit, so bucketing the self-join turns O(n^2) candidate
-    generation into an equi-join keyed by bucket — the scale path for ANN."""
-    bits = F.transform(
-        F.sequence(F.lit(0), F.lit(planes - 1)),
-        lambda p: F.when(
-            F.aggregate(
-                F.zip_with(
-                    _c(vec),
-                    hyperplane_weights(p, dim),
-                    lambda x, w: x.cast("double") * w.cast("double"),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            >= 0,
-            F.lit(1).cast("long"),
-        ).otherwise(F.lit(0).cast("long")),
-    )
-    return F.aggregate(bits, F.lit(0).cast("long"), lambda acc, x: acc * 2 + x)

@@ -199,7 +199,7 @@ def minhash_lsh_pairs(
     sigs = (
         df.select(F.col(id_col), hashes.alias("hashes"))
         .where(F.size("hashes") > 0)
-        # Arrow kernel: identical values to texts.minhash_signature, minus
+        # Arrow kernel: identical values to the oracle's _SQL_SIG, minus
         # the per-element lambda interpreter (md5 hashing stays JVM-side)
         .select(id_col, "hashes", texts.pd_minhash_signature("hashes").alias("sig"))
         # Exchange barrier: pins the distribution and stops

@@ -18,15 +18,15 @@ import tempfile
 import pyspark
 from pyspark.sql import DataFrame
 
-from ..sources.writers import WRITER_MAP, parquet_dataset
+from ..sources.writers import WRITER_MAP, parquet_dataset, part_files
 
 ALL_FORMATS = ["csv", "json", "parquet", "sqlite", "xlsx"]
 EXTENSIONS = {"csv": ".csv", "json": ".json", "parquet": ".parquet", "sqlite": ".db", "xlsx": ".xlsx"}
 
-# Above this row count, "auto" single-file mode switches csv/json/parquet to
-# parallel multi-part directories: a coalesce(1) write serializes the whole
-# output through one task, which is exact-parity-correct but is the one thing
-# that cannot scale. The reference contract (one file per format) is kept for
+# Above this row count, csv/json/parquet are written as parallel multi-part
+# directories: a coalesce(1) write serializes the whole output through one
+# task, which is exact-parity-correct but is the one thing that cannot
+# scale. The reference contract (one file per format) is kept for
 # human-scale outputs; big runs get `deliveries.csv/` part directories.
 SINGLE_FILE_MAX_ROWS = 1_000_000
 
@@ -62,7 +62,7 @@ def generate_manifest(df: DataFrame, output_conf: dict, n_rows: int | None = Non
 
 
 def load_data(df: DataFrame, config: dict) -> dict:
-    """Resolve formats, fan out writers over one cached DataFrame, then
+    """Resolve formats, fan out writers over one staged copy, then
     write the manifest (reference core/load.py:33-77). 'preview' prints
     df.show(5) instead of writing (load.py:50-52). Returns the manifest."""
     output_conf = config.get("output", {})
@@ -75,30 +75,25 @@ def load_data(df: DataFrame, config: dict) -> dict:
 
     formats = formats_to_write(fmt)
     os.makedirs(out_path, exist_ok=True)
-    # Staging policy (round-6 OOM fix + round-6 ADVICE double-pass fix):
-    # the lineage executes EXACTLY ONCE — a multi-part parquet staging
-    # write. Everything downstream (row count for the manifest and the
-    # single-file auto decision, every requested sink) reads the staged
-    # columnar copy. Why not cache+count (pre-round-6) or count-then-write
-    # (round 6)? The in-memory cache unroll OOMs the JVM at 100M rows
-    # (cache unroll competes with 32 concurrent writer tasks' buffers, 10x
-    # e2e run), and a separate uncached count() action executes the whole
-    # lineage a second time. The row count comes from the staged files'
-    # parquet footers, and the driver-side sinks (sqlite, xlsx) stream
-    # Arrow batches out of the same files (writers.parquet_dataset), so
-    # neither starts a Spark job. When a multi-part parquet OUTPUT is
-    # requested, the staged directory is MOVED into place instead of
-    # re-written, and the later sinks read it there.
+    # Staging policy: the lineage executes EXACTLY ONCE, as a multi-part
+    # parquet stage write. Everything downstream reads the staged files:
+    # the row count (manifest, single-file switch) comes from their
+    # parquet footers, the Spark-format sinks read them as one frame, and
+    # the driver sinks (sqlite, xlsx) stream Arrow batches out of the part
+    # files handed to them, so neither count nor driver sinks start a
+    # Spark job. Caching the frame instead OOMs the JVM at 100M rows (the
+    # cache unroll competes with the writer tasks' buffers), and a
+    # count() before the write runs the lineage twice. When a multi-part
+    # parquet OUTPUT is requested, the stage is MOVED into place instead
+    # of re-written, and the later sinks read it there.
     #
-    # ADVICE r7 hardening: the stage dir lives INSIDE out_path (dot-
-    # prefixed), so the parquet->output promotion is always a same-
-    # filesystem rename — tempfile.mkdtemp() defaulted to /tmp, where
-    # shutil.move silently degrades to a full copy when /tmp and the
-    # output are different filesystems. NullType columns (e.g. a
-    # `lit(None)` projection that csv/json-only outputs tolerate) are
-    # cast to string before the stage write — parquet cannot encode VOID,
-    # and a string-typed all-NULL column round-trips to the identical
-    # csv (empty cell) / json (omitted field) bytes.
+    # The stage dir lives INSIDE out_path (dot-prefixed), like the
+    # writers' own temp dirs, so every move into place is a same-
+    # filesystem rename, never a silent cross-filesystem copy. NullType
+    # columns (e.g. a `lit(None)` projection that csv/json-only outputs
+    # tolerate) are cast to string before the stage write — parquet
+    # cannot encode VOID, and a string-typed all-NULL column round-trips
+    # to the identical csv (empty cell) / json (omitted field) bytes.
     spark = df.sparkSession
     void_cols = [f.name for f in df.schema.fields if f.dataType.typeName() == "void"]
     if void_cols:
@@ -110,23 +105,22 @@ def load_data(df: DataFrame, config: dict) -> dict:
                 for c in df.columns
             ]
         )
-    # a hard-killed prior run can leak its stage dir (the finally-rmtree
-    # only covers in-process failures): sweep stale stages before creating
-    # a new one so crashed runs don't accumulate garbage next to outputs
-    for stale in glob.glob(os.path.join(out_path, ".laposte_stage_*")):
+    # a hard-killed prior run can leak its stage dir and the writers' temp
+    # dirs (the finally-rmtrees only cover in-process failures): sweep them
+    # before creating a new stage so crashed runs don't accumulate garbage
+    # next to outputs
+    for stale in glob.glob(os.path.join(out_path, ".laposte_*")):
         shutil.rmtree(stale, ignore_errors=True)
     staged = tempfile.mkdtemp(prefix=".laposte_stage_", dir=out_path)
     try:
         stage_target = os.path.join(staged, "deliveries.parquet")
         WRITER_MAP["parquet"](stage_target, single_file=False).write(df)
+        files = part_files(stage_target)
+        n_rows = parquet_dataset(files).count_rows()
+        single = n_rows <= SINGLE_FILE_MAX_ROWS
         # the stage's schema is df's: reading with it skips the footer-merge
         # job that schema inference would run over the staged files
         staged_df = spark.read.schema(df.schema).parquet(stage_target)
-        with parquet_dataset(staged_df) as dataset:
-            n_rows = dataset.count_rows()
-        single = output_conf.get("single_file", "auto")
-        if single == "auto":
-            single = n_rows <= SINGLE_FILE_MAX_ROWS
         for f in formats:
             target = os.path.join(out_path, f"deliveries{EXTENSIONS[f]}")
             if f == "parquet" and not single:
@@ -137,8 +131,9 @@ def load_data(df: DataFrame, config: dict) -> dict:
                     os.remove(target)
                 shutil.move(stage_target, target)
                 staged_df = spark.read.schema(df.schema).parquet(target)
+                files = part_files(target)
                 continue
-            WRITER_MAP[f](target, single_file=single).write(staged_df)
+            WRITER_MAP[f](target, single_file=single).write(staged_df, files)
         manifest = generate_manifest(staged_df, output_conf, n_rows=n_rows)
         manifest_path = os.path.join(out_path, "results_manifest.json")
         with open(manifest_path, "w") as fh:

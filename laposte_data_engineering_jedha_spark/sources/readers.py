@@ -2,11 +2,13 @@
 (sources/readers.py:26-55) plus the extension dispatch + timestamp-cast
 contract (core/extract.py:16-22,57-80).
 
-csv/json/parquet are native distributed `spark.read` scans (predicate
-pushdown + column pruning for free). SQLite and XLSX have no core-Spark
-source in this environment, so they bridge through the driver — fine for
-the reference's single-file semantics; the docstrings note the cluster
-path (JDBC / spark-excel connector) for real deployments.
+csv, json, parquet and orc share one body, `SparkReader.read`: a native
+distributed `spark.read` scan (predicate pushdown + column pruning for
+free) in the class's format and options; each reads a single file or a
+multi-part output directory. SQLite and XLSX have no core-Spark source in
+this environment, so they bridge through the driver — fine for the
+reference's single-file semantics; the docstrings note the cluster path
+(JDBC / spark-excel connector) for real deployments.
 """
 
 from __future__ import annotations
@@ -27,43 +29,54 @@ class BaseReader:
         raise NotImplementedError
 
 
-class CsvReader(BaseReader):
+class SparkReader(BaseReader):
+    """A distributed `spark.read` scan in `FORMAT` with `options()`."""
+
+    FORMAT = ""
+    OPTIONS: dict = {}
+
+    def read(self, spark: SparkSession) -> DataFrame:
+        return spark.read.format(self.FORMAT).options(**self.options()).load(self.path)
+
+    def options(self) -> dict:
+        return self.OPTIONS
+
+
+class CsvReader(SparkReader):
     """CSV with header + inferred types (reference sources/readers.py:30-33)."""
 
-    def read(self, spark: SparkSession) -> DataFrame:
-        return (
-            spark.read.option("header", True).option("inferSchema", True).csv(self.path)
-        )
+    FORMAT = "csv"
+    OPTIONS = {"header": True, "inferSchema": True}
 
 
-class JsonReader(BaseReader):
+class JsonReader(SparkReader):
     """JSON (reference sources/readers.py:35-38 reads an array-of-records
-    file, Polars-style). Spark's native JSON is NDJSON; an array file is
-    detected by its first non-whitespace byte and read multiLine."""
+    file, Polars-style). Spark's native JSON is NDJSON, and so is a
+    directory (a multi-part JSON output); an array file is detected by its
+    first non-whitespace byte and read multiLine."""
 
-    def read(self, spark: SparkSession) -> DataFrame:
-        multiline = False
+    FORMAT = "json"
+
+    def options(self) -> dict:
+        if os.path.isdir(self.path):
+            return {"multiLine": False}
         with open(self.path, "rb") as fh:
-            head = fh.read(64).lstrip()
-            multiline = head.startswith(b"[")
-        return spark.read.option("multiLine", multiline).json(self.path)
+            return {"multiLine": fh.read(64).lstrip().startswith(b"[")}
 
 
-class ParquetReader(BaseReader):
+class ParquetReader(SparkReader):
     """Parquet (reference sources/readers.py:40-43)."""
 
-    def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path)
+    FORMAT = "parquet"
 
 
-class OrcReader(BaseReader):
+class OrcReader(SparkReader):
     """ORC — Spark's second native columnar format (vectorized reader,
     predicate pushdown, column pruning — same scan machinery as parquet).
     Beyond the reference's format set, but a drop-in for lakes standardized
     on ORC/Hive."""
 
-    def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.orc(self.path)
+    FORMAT = "orc"
 
 
 def _arrow_table(pdf: pd.DataFrame):

@@ -1,19 +1,24 @@
 """File writers — the reference's five sinks (sources/writers.py:24-70).
 
-csv/json/parquet write distributed through `df.write`; the reference's
-one-file-per-format contract (writers.py:27,34,41) is honored by a
-single-file mode that writes a one-partition directory then promotes the
-part file to the exact target path. At cluster scale you drop
-`single_file=True` and get a parallel multi-part write with the same
-semantics.
+csv, json, parquet and orc share one body, `SparkWriter.write`: a
+distributed `df.write` in the class's format and options. The reference's
+one-file-per-format contract (writers.py:27,34,41) is the single-file
+mode: a one-partition write whose part file is then moved to the exact
+target path. With `single_file=False` the target is a parallel multi-part
+directory with the same semantics.
 
 SQLite and XLSX are single-file sinks that the driver writes, as the
 reference does from its in-memory frame (writers.py:45-70). Both stream
-Arrow record batches out of `parquet_dataset(df)`: the parquet files the
-frame already reads when it is a plain parquet scan (load_data's staged
-copy), else a temporary parquet write. Driver memory stays bounded at one
-batch, and no Python worker starts. The cluster path for relational sinks
-is `df.write.format('jdbc').mode('append')` with per-partition batching.
+Arrow record batches of `BATCH` rows out of parquet files that hold the
+frame's rows in partition order: the files the caller passes
+(`plans.load.load_data` passes its staged copy), else one parquet write
+of the frame. Driver memory stays bounded at one batch, and no Python
+worker starts. The cluster path for relational sinks is
+`df.write.format('jdbc').mode('append')` with per-partition batching.
+
+Every temporary dir is dot-prefixed (`.laposte_write_*`) and sits next to
+its target, so the final move is a same-filesystem rename; `load_data`
+sweeps the ones a killed run leaves behind.
 """
 
 from __future__ import annotations
@@ -24,22 +29,39 @@ import os
 import shutil
 import sqlite3
 import tempfile
-import urllib.parse
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 from pyspark.sql import DataFrame
 
+BATCH = 50_000
+"""Rows per Arrow record batch in the driver-side sinks: the bound on
+the rows they hold in memory at once."""
 
-def _promote_single_file(df: DataFrame, path: str, fmt: str, **options) -> None:
-    """Write a 1-partition {fmt} directory, then move the part file to
-    `path` (exact-single-file parity with the reference)."""
-    tmp = tempfile.mkdtemp(prefix="laposte_write_")
-    out_dir = os.path.join(tmp, "out")
+
+def part_files(path: str) -> list[str]:
+    """The part files of a Spark output dir, sorted: the partition order
+    of the write that produced them."""
+    return sorted(glob.glob(os.path.join(path, "part-*")))
+
+
+def parquet_dataset(files: list[str]):
+    """A pyarrow dataset over parquet files Spark wrote."""
+    import pyarrow.dataset as ds
+
+    # Spark writes timestamps as INT96, which Arrow reads as nanoseconds
+    # unless told otherwise; Spark's TimestampType holds microseconds
+    return ds.dataset(files, format=ds.ParquetFileFormat(coerce_int96_timestamp_unit="us"))
+
+
+@contextlib.contextmanager
+def _scratch_beside(path: str) -> Iterator[str]:
+    """Yield an output path inside a new `.laposte_write_*` dir next to
+    `path`; the dir is removed on exit."""
+    parent = os.path.dirname(os.path.abspath(path))
+    os.makedirs(parent, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix=".laposte_write_", dir=parent)
     try:
-        df.coalesce(1).write.mode("overwrite").options(**options).format(fmt).save(out_dir)
-        [part] = glob.glob(os.path.join(out_dir, f"part-*"))
-        os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
-        shutil.move(part, path)
+        yield os.path.join(tmp, "out")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -49,151 +71,104 @@ class BaseWriter:
         self.path = path
         self.single_file = single_file
 
-    def write(self, df: DataFrame) -> None:
+    def write(self, df: DataFrame, files: list[str] | None = None) -> None:
+        """Write `df` to `self.path`. `files`, when given, are parquet
+        files holding `df`'s rows in partition order; the driver sinks
+        stream from them instead of writing `df` out first."""
         raise NotImplementedError
 
 
-class CsvWriter(BaseWriter):
+class SparkWriter(BaseWriter):
+    """A distributed `df.write` in `FORMAT` with `OPTIONS`."""
+
+    FORMAT = ""
+    OPTIONS: dict = {}
+
+    def write(self, df: DataFrame, files: list[str] | None = None) -> None:
+        if not self.single_file:
+            self._save(df, self.path)
+            return
+        with _scratch_beside(self.path) as out_dir:
+            self._save(df.coalesce(1), out_dir)
+            [part] = part_files(out_dir)
+            shutil.move(part, self.path)
+
+    def _save(self, df: DataFrame, path: str) -> None:
+        df.write.mode("overwrite").options(**self.OPTIONS).format(self.FORMAT).save(path)
+
+
+class CsvWriter(SparkWriter):
     """CSV with header (reference sources/writers.py:24-29)."""
 
-    def write(self, df: DataFrame) -> None:
-        if self.single_file:
-            _promote_single_file(df, self.path, "csv", header=True)
-        else:
-            df.write.mode("overwrite").option("header", True).csv(self.path)
+    FORMAT = "csv"
+    OPTIONS = {"header": True}
 
 
-class JsonWriter(BaseWriter):
+class JsonWriter(SparkWriter):
     """Newline-delimited JSON "for memory efficiency" (reference
     sources/writers.py:31-36) — Spark's native JSON output IS NDJSON."""
 
-    def write(self, df: DataFrame) -> None:
-        if self.single_file:
-            _promote_single_file(df, self.path, "json")
-        else:
-            df.write.mode("overwrite").json(self.path)
+    FORMAT = "json"
 
 
-class ParquetWriter(BaseWriter):
+class ParquetWriter(SparkWriter):
     """Parquet (reference sources/writers.py:38-43)."""
 
-    def write(self, df: DataFrame) -> None:
-        if self.single_file:
-            _promote_single_file(df, self.path, "parquet")
-        else:
-            df.write.mode("overwrite").parquet(self.path)
+    FORMAT = "parquet"
 
 
-class OrcWriter(BaseWriter):
+class OrcWriter(SparkWriter):
     """ORC (zlib default; columnar twin of ParquetWriter)."""
 
-    def write(self, df: DataFrame) -> None:
-        if self.single_file:
-            _promote_single_file(df, self.path, "orc")
-        else:
-            df.write.mode("overwrite").orc(self.path)
+    FORMAT = "orc"
 
 
-BATCH = 50_000
-"""Rows per Arrow record batch in the driver-side sinks: the bound on
-the rows they hold in memory at once."""
+class DriverWriter(BaseWriter):
+    """A single-file sink the driver writes from Arrow record batches of
+    `BATCH` rows, read from `files` or, when none are given, from one
+    parquet write of `df` next to the target."""
+
+    def write(self, df: DataFrame, files: list[str] | None = None) -> None:
+        with contextlib.ExitStack() as stack:
+            if files is None:
+                out_dir = stack.enter_context(_scratch_beside(self.path))
+                df.write.parquet(out_dir)
+                files = part_files(out_dir)
+            batches = parquet_dataset(files).to_batches(columns=df.columns, batch_size=BATCH)
+            self._write_batches(df.columns, batches)
+
+    def _write_batches(self, columns: list[str], batches: Iterable) -> None:
+        raise NotImplementedError
 
 
-def _scanned_parquet_files(df: DataFrame) -> list[str] | None:
-    """Local paths of the parquet files `df` reads unchanged, in part-file
-    order, or None when `df` is anything else.
-
-    Unchanged means the optimized plan is a parquet LogicalRelation with
-    no partition columns, optionally under a Project of plain column
-    references to the relation's own column names, and every input file
-    has a `file:` URI. Sorted part-file names are the partition order of
-    the write that produced them."""
-    plan = df._jdf.queryExecution().optimizedPlan()
-    if plan.getClass().getSimpleName() == "Project":
-        exprs = plan.projectList()
-        if not all(
-            exprs.apply(i).getClass().getSimpleName() == "AttributeReference"
-            for i in range(exprs.size())
-        ):
-            return None
-        plan = plan.child()
-    if plan.getClass().getSimpleName() != "LogicalRelation":
-        return None
-    relation = plan.relation()
-    if (
-        relation.getClass().getSimpleName() != "HadoopFsRelation"
-        or relation.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
-        or relation.partitionSchema().length() > 0
-    ):
-        return None
-    output = plan.output()
-    if not set(df.columns) <= {output.apply(i).name() for i in range(output.size())}:
-        return None
-    paths = []
-    for uri in df.inputFiles():
-        # percent-encoded URIs; pyarrow.dataset takes local paths only
-        parsed = urllib.parse.urlparse(uri)
-        if parsed.scheme != "file":
-            return None
-        paths.append(urllib.parse.unquote(parsed.path))
-    return sorted(paths) or None
-
-
-@contextlib.contextmanager
-def parquet_dataset(df: DataFrame) -> Iterator:
-    """Yield a pyarrow dataset over parquet files that hold `df`'s rows in
-    its partition order. A frame that is a plain parquet scan (load_data's
-    staged copy) yields its own files and runs no Spark job; any other
-    frame is first written to a temporary parquet directory, removed on
-    exit."""
-    import pyarrow.dataset as ds
-
-    # Spark writes timestamps as INT96, which Arrow reads as nanoseconds
-    # unless told otherwise; Spark's TimestampType holds microseconds
-    fmt = ds.ParquetFileFormat(coerce_int96_timestamp_unit="us")
-    files = _scanned_parquet_files(df)
-    if files is not None:
-        yield ds.dataset(files, format=fmt)
-        return
-    tmp = tempfile.mkdtemp(prefix="laposte_arrow_")
-    try:
-        df.write.mode("overwrite").parquet(tmp)
-        yield ds.dataset(sorted(glob.glob(os.path.join(tmp, "part-*"))), format=fmt)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-class SqliteWriter(BaseWriter):
+class SqliteWriter(DriverWriter):
     """Chunked append to SQLite table `deliveries` (reference
     sources/writers.py:45-59).
 
-    The driver streams Arrow record batches of `BATCH` rows out of
-    `parquet_dataset(df)` into executemany inserts: the bounded-memory
-    property of the reference's `iter_slices` loop, with column-wise
-    value conversion. For `load_data`'s staged copy this skips the
-    private temporary parquet write the writer made before: at 5,000
-    generated deliveries on 4 cores the write took 0.61 -> 0.13 s cold and
-    0.47 -> 0.14 s warm. SQLite itself is single-file/single-writer; the
-    cluster path for relational sinks is `df.write.format('jdbc')` with
-    per-partition batching."""
+    The driver streams Arrow record batches into executemany inserts: the
+    bounded-memory property of the reference's `iter_slices` loop, with
+    column-wise value conversion. For `load_data`'s staged copy this skips
+    a private parquet write: at 5,000 generated deliveries on 4 cores the
+    write took 0.61 -> 0.13 s cold and 0.47 -> 0.14 s warm. SQLite itself
+    is single-file/single-writer; the cluster path for relational sinks is
+    `df.write.format('jdbc')` with per-partition batching."""
 
     TABLE = "deliveries"
 
-    def write(self, df: DataFrame) -> None:
-        cols = df.columns
-        placeholders = ", ".join("?" for _ in cols)
-        col_defs = ", ".join(f'"{c}"' for c in cols)
-        with parquet_dataset(df) as dataset, sqlite3.connect(self.path) as conn:
+    def _write_batches(self, columns: list[str], batches: Iterable) -> None:
+        placeholders = ", ".join("?" for _ in columns)
+        col_defs = ", ".join(f'"{c}"' for c in columns)
+        with sqlite3.connect(self.path) as conn:
             # bulk-load pragmas: this writer owns the file for the
             # duration; durability is re-established by the final commit
             conn.execute("PRAGMA journal_mode=OFF")
             conn.execute("PRAGMA synchronous=OFF")
             conn.execute(f"CREATE TABLE IF NOT EXISTS {self.TABLE} ({col_defs})")
-            for batch in dataset.to_batches(columns=cols, batch_size=BATCH):
-                columns = [_sqlite_column(batch.column(c)) for c in cols]
+            for batch in batches:
+                values = [_sqlite_column(batch.column(c)) for c in columns]
                 conn.executemany(
                     f"INSERT INTO {self.TABLE} ({col_defs}) VALUES ({placeholders})",
-                    list(zip(*columns)),
+                    list(zip(*values)),
                 )
             conn.commit()
 
@@ -229,14 +204,14 @@ def _sqlite_column(arr):
     return arr.to_pylist()
 
 
-class XlsxWriter(BaseWriter):
+class XlsxWriter(DriverWriter):
     """Streaming XLSX (reference sources/writers.py:61-70,
     `constant_memory` mode) via the pure-stdlib OOXML codec
-    (sources/xlsx_codec.py). The driver turns each Arrow record batch of
-    `parquet_dataset(df)` into one sheetData fragment
-    (`rows_xml_fragment`, vectorized per column) and streams it through
-    the zip entry, so driver memory stays bounded at one batch, like the
-    reference's xlsxwriter constant_memory workbook.
+    (sources/xlsx_codec.py). The driver turns each Arrow record batch into
+    one sheetData fragment (`rows_xml_fragment`, vectorized per column)
+    and streams it through the zip entry, so driver memory stays bounded
+    at one batch, like the reference's xlsxwriter constant_memory
+    workbook.
 
     Measured on 4 cores against the executor-side build it replaced
     (mapInPandas fragments collected with toLocalIterator):
@@ -249,7 +224,7 @@ class XlsxWriter(BaseWriter):
       rows; Excel opens at most 1,048,576 rows per sheet, so xlsx is a
       contract format, not a scale path."""
 
-    def write(self, df: DataFrame) -> None:
+    def _write_batches(self, columns: list[str], batches: Iterable) -> None:
         import pandas as pd
         import pyarrow as pa
 
@@ -268,15 +243,11 @@ class XlsxWriter(BaseWriter):
                 types_mapper=lambda t: pd.Int64Dtype() if t in nullable_ints else None
             )
 
-        with parquet_dataset(df) as dataset:
-            xlsx_codec.write_xlsx_fragments(
-                self.path,
-                df.columns,
-                (
-                    xlsx_codec.rows_xml_fragment(to_pandas(batch))
-                    for batch in dataset.to_batches(columns=df.columns, batch_size=BATCH)
-                ),
-            )
+        xlsx_codec.write_xlsx_fragments(
+            self.path,
+            columns,
+            (xlsx_codec.rows_xml_fragment(to_pandas(batch)) for batch in batches),
+        )
 
 
 def write_partitioned(

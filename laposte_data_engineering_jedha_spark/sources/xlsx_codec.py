@@ -2,24 +2,27 @@
 (reference sources/readers.py:52-55 / writers.py:61-70).
 
 openpyxl/xlsxwriter are absent in this environment, and an XLSX file is
-just a zip of OOXML parts — so the writer emits the five mandatory parts
-(content types, package rels, workbook, workbook rels, one worksheet) and
-streams rows into the worksheet entry through `zipfile.open(mode="w")`,
-preserving the reference's constant-memory property (xlsxwriter
-`constant_memory` mode). The reader iterparses the worksheet XML and
-resolves shared strings, so it also reads workbooks produced by openpyxl /
-xlsxwriter / Excel for the supported cell types.
+just a zip of OOXML parts — so the writer (`write_xlsx_fragments`) emits
+the five mandatory parts (content types, package rels, workbook, workbook
+rels, one worksheet) and streams row fragments into the worksheet entry
+through `zipfile.open(mode="w")`, preserving the reference's
+constant-memory property (xlsxwriter `constant_memory` mode). The reader
+(`read_xlsx_pandas`) takes a vectorized path for sheets this writer
+produced and otherwise tokenizes the worksheet XML and resolves shared
+strings, so it also reads workbooks produced by openpyxl / xlsxwriter /
+Excel for the supported cell types.
 
-Cell mapping:
+Cell mapping (`rows_xml_fragment`, per pandas column dtype; the header
+row goes through it too):
 - int/float      -> numeric cell (`<v>`), repr round-trips doubles exactly
 - bool           -> boolean cell (t="b")
-- str            -> inline string (t="inlineStr"; no sharedStrings table —
-                    one pass, constant memory)
-- datetime/date  -> ISO-8601 inline string; the pipeline's timestamp-cast
+- datetime64     -> ISO-8601 inline string; the pipeline's timestamp-cast
                     contract (readers.cast_timestamp_contract, reference
                     core/extract.py:77-80) re-parses on read, exactly like
                     the CSV round-trip
-- None           -> cell omitted
+- anything else  -> its str() as an inline string (t="inlineStr"; no
+                    sharedStrings table — one pass, constant memory)
+- null           -> empty cell `<c/>`
 
 On read, numeric text without '.'/'e' parses to int, otherwise float;
 t="s" cells resolve through sharedStrings.xml; t="b" to bool.
@@ -27,7 +30,6 @@ t="s" cells resolve through sharedStrings.xml; t="b" to bool.
 
 from __future__ import annotations
 
-import datetime
 import re
 import zipfile
 from collections.abc import Iterable, Iterator
@@ -56,71 +58,13 @@ _WORKBOOK_RELS = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
 </Relationships>"""
 
 
-def _workbook_xml(sheet_name: str) -> str:
-    return (
-        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        f'<workbook xmlns="{_MAIN_NS}" '
-        'xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">'
-        f'<sheets><sheet name="{escape(sheet_name)}" sheetId="1" r:id="rId1"/></sheets>'
-        "</workbook>"
-    )
-
-
-def _col_letter(idx: int) -> str:
-    """0-based column index -> A, B, ..., Z, AA, ..."""
-    letters = ""
-    idx += 1
-    while idx:
-        idx, rem = divmod(idx - 1, 26)
-        letters = chr(ord("A") + rem) + letters
-    return letters
-
-
-def _cell_xml(ref: str, value) -> str:
-    if value is None:
-        return ""
-    if isinstance(value, bool):
-        return f'<c r="{ref}" t="b"><v>{int(value)}</v></c>'
-    if isinstance(value, (int, float)):
-        return f'<c r="{ref}"><v>{value!r}</v></c>'
-    if isinstance(value, datetime.datetime):
-        text = value.isoformat(sep=" ")
-    elif isinstance(value, datetime.date):
-        text = value.isoformat()
-    else:
-        text = str(value)
-    return f'<c r="{ref}" t="inlineStr"><is><t>{escape(text)}</t></is></c>'
-
-
-def write_xlsx(
-    path: str,
-    columns: list[str],
-    rows: Iterable[Iterable],
-    sheet_name: str = "deliveries",
-    compress: bool = False,
-) -> None:
-    """Stream (header + rows) into a new .xlsx at `path`. `rows` may be any
-    iterable — worksheet XML is written through the zip stream row by row,
-    never materialized.
-
-    Entries are STORED by default: OOXML only requires a zip container
-    (stored entries open fine in Excel/openpyxl), and skipping deflate
-    halves the driver-side write (3.3 s -> 1.7 s at 150k rows) at ~10x
-    the file size. Pass compress=True for interchange-sized files."""
-    write_xlsx_fragments(
-        path,
-        columns,
-        (_row_xml(r, row) for r, row in enumerate(rows, start=2)),
-        sheet_name,
-        compress,
-    )
-
-
-def _row_xml(r: int, row: Iterable) -> str:
-    cells = "".join(
-        _cell_xml(f"{_col_letter(i)}{r}", v) for i, v in enumerate(row)
-    )
-    return f'<row r="{r}">{cells}</row>'
+_WORKBOOK = (
+    '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
+    f'<workbook xmlns="{_MAIN_NS}" '
+    'xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">'
+    '<sheets><sheet name="deliveries" sheetId="1" r:id="rId1"/></sheets>'
+    "</workbook>"
+)
 
 
 def rows_xml_fragment(pdf) -> str:
@@ -161,35 +105,26 @@ def rows_xml_fragment(pdf) -> str:
     return "".join((rows + "</row>").tolist())
 
 
-def write_xlsx_fragments(
-    path: str,
-    columns: list[str],
-    fragments: Iterable[str],
-    sheet_name: str = "deliveries",
-    compress: bool = False,
-) -> None:
-    """Assemble a workbook from pre-built sheetData row fragments
-    (see rows_xml_fragment): header row first, then each fragment streamed
-    through the zip entry. Stored-by-default like write_xlsx. Every entry
-    carries zip's fixed default time (1980-01-01), so the file's bytes
-    depend only on its cells."""
-    # compresslevel only applies when deflating — passing it alongside
-    # ZIP_STORED would be a silently-dead argument (round-3 advice item)
-    comp = zipfile.ZIP_DEFLATED if compress else zipfile.ZIP_STORED
-    zip_kw = {"compresslevel": 1} if compress else {}
-    with zipfile.ZipFile(path, "w", comp, **zip_kw) as zf:
+def write_xlsx_fragments(path: str, columns: list[str], fragments: Iterable[str]) -> None:
+    """Assemble a workbook from pre-built sheetData row fragments (see
+    rows_xml_fragment): header row first, then each fragment streamed
+    through the zip entry.
+
+    Entries are STORED: OOXML only requires a zip container (stored
+    entries open fine in Excel/openpyxl), and skipping deflate halves the
+    driver-side write (3.3 s -> 1.7 s at 150k rows) at ~10x the file
+    size. Every entry carries zip's fixed default time (1980-01-01), so
+    the file's bytes depend only on its cells."""
+    import pandas as pd
+
+    with zipfile.ZipFile(path, "w") as zf:
         for name, data in [
             ("[Content_Types].xml", _CONTENT_TYPES),
             ("_rels/.rels", _PACKAGE_RELS),
-            ("xl/workbook.xml", _workbook_xml(sheet_name)),
+            ("xl/workbook.xml", _WORKBOOK),
             ("xl/_rels/workbook.xml.rels", _WORKBOOK_RELS),
         ]:
-            zf.writestr(
-                zipfile.ZipInfo(name),
-                data,
-                compress_type=zf.compression,
-                compresslevel=zf.compresslevel,
-            )
+            zf.writestr(zipfile.ZipInfo(name), data)
         # force_zip64: streamed-entry size is unknown; >4 GiB worksheets
         # (10M-row stored XML) otherwise fail at entry close
         with zf.open("xl/worksheets/sheet1.xml", "w", force_zip64=True) as ws:
@@ -197,7 +132,7 @@ def write_xlsx_fragments(
                 b'<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
                 b'<worksheet xmlns="' + _MAIN_NS.encode() + b'"><sheetData>'
             )
-            ws.write(_row_xml(1, columns).encode("utf-8"))
+            ws.write(rows_xml_fragment(pd.DataFrame([list(columns)])).encode("utf-8"))
             for fragment in fragments:
                 ws.write(fragment.encode("utf-8"))
             ws.write(b"</sheetData></worksheet>")
@@ -349,7 +284,7 @@ def _fast_pandas(body: str, header: list[str]):
     return pd.DataFrame(out)
 
 
-def read_xlsx_pandas(path: str, sheet: str = "xl/worksheets/sheet1.xml"):
+def read_xlsx_pandas(path: str):
     """Read the first worksheet into a pandas DataFrame — the driver-bridge
     entry point (sources/readers.py XlsxReader). Takes the vectorized fast
     path for workbooks this codec wrote, falls back to the general
@@ -358,7 +293,7 @@ def read_xlsx_pandas(path: str, sheet: str = "xl/worksheets/sheet1.xml"):
 
     with zipfile.ZipFile(path) as zf:
         shared = _shared_strings(zf)
-        data = zf.read(sheet).decode("utf-8")
+        data = zf.read("xl/worksheets/sheet1.xml").decode("utf-8")
     if not shared:
         first_row_end = data.find("</row>")
         if first_row_end >= 0:
@@ -378,17 +313,6 @@ def _header_of(data: str) -> list[str]:
             continue
         out.append(_fast_cell_value(m.group(1), m.group(2) or "", []))
     return [str(c) for c in out]
-
-
-def read_xlsx(path: str, sheet: str = "xl/worksheets/sheet1.xml") -> tuple[list[str], Iterator[list]]:
-    """Read (columns, row-iterator) from the first worksheet. The iterator
-    yields lists aligned to the header width (missing cells -> None).
-    Handles inline strings, shared strings, numbers, and booleans — i.e.
-    workbooks from this codec, openpyxl, xlsxwriter, or Excel."""
-    with zipfile.ZipFile(path) as zf:
-        shared = _shared_strings(zf)
-        data = zf.read(sheet).decode("utf-8")
-    return _parse_rows(data, shared)
 
 
 def _parse_rows(data: str, shared: list[str]) -> tuple[list[str], Iterator[list]]:

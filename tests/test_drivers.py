@@ -567,3 +567,45 @@ def test_one_vector_quantization_path():
                 with open(path) as fh:
                     named += [f"{d}/{f}: {m}" for m in pattern.findall(fh.read())]
     assert named == []
+
+
+def test_temp_dirs_sit_next_to_their_targets():
+    """Under sources/, plans/load.py and queries/, every tempfile call
+    passes `dir=` and nothing asks for the system temp dir: a temp dir in
+    the system temp dir turns the final move into a full copy when that
+    dir and the target lie on different filesystems, and a killed run
+    leaks it where no sweep of the output dir finds it."""
+    import ast
+    import os
+
+    pkg_root = os.path.dirname(_queries_dir())
+    paths = [os.path.join(pkg_root, "plans", "load.py")]
+    for sub in ("sources", "queries"):
+        for d, _, files in os.walk(os.path.join(pkg_root, sub)):
+            paths += [os.path.join(d, f) for f in sorted(files) if f.endswith(".py")]
+    found = []
+    for path in paths:
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        imported = {
+            alias.asname or alias.name
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom) and node.module == "tempfile"
+            for alias in node.names
+        }
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            if isinstance(f, ast.Attribute) and getattr(f.value, "id", None) == "tempfile":
+                name = f.attr
+            elif isinstance(f, ast.Name) and f.id in imported:
+                name = f.id
+            else:
+                continue
+            where = f"{os.path.relpath(path, pkg_root)}:{node.lineno}"
+            if name.startswith("gettempdir"):
+                found.append(f"{where} {name}()")
+            elif not any(k.arg == "dir" for k in node.keywords):
+                found.append(f"{where} {name}() without dir=")
+    assert found == []

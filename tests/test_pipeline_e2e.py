@@ -5,9 +5,12 @@ manifest fields; plus multi-format fan-out and the CLI front-end."""
 from __future__ import annotations
 
 import datetime
+import glob
 import json
+import os
 import sqlite3
 from collections import Counter
+from pathlib import Path
 
 import pytest
 
@@ -61,10 +64,11 @@ def test_e2e_multiformat_fanout(spark, tmp_path):
     assert n == 100
     back = spark.read.parquet(str(out / "deliveries.parquet"))
     assert back.count() == 100 and back.columns == ENRICHED_COLUMNS
-    from laposte_data_engineering_jedha_spark.sources.xlsx_codec import read_xlsx
+    from laposte_data_engineering_jedha_spark.sources.xlsx_codec import read_xlsx_pandas
 
-    columns, rows = read_xlsx(str(out / "deliveries.xlsx"))
-    assert columns == ENRICHED_COLUMNS
+    sheet = read_xlsx_pandas(str(out / "deliveries.xlsx"))
+    assert list(sheet.columns) == ENRICHED_COLUMNS
+    rows = sheet.astype(object).where(sheet.notna(), None).itertuples(index=False)
     # sqlite and xlsx hold the parquet output's rows, compared as multisets
     # of canonical cells (both sinks write timestamps as ISO text)
     def canon(row):
@@ -226,9 +230,10 @@ def test_fanout_stages_through_parquet_above_threshold(spark, tmp_path, monkeypa
     the frame (the 100M-row OOM found in the round-6 scale run): it
     writes the parquet sink first and re-reads it for the other sinks.
     Exercised cheaply by lowering the threshold: all four all_but_xlsx
-    outputs exist, parquet is a multi-part directory, and every sink
-    carries the full row count."""
+    outputs exist, parquet is a multi-part directory, and every output
+    reads back through `read_file` with the full row count."""
     from laposte_data_engineering_jedha_spark.plans import load as load_mod
+    from laposte_data_engineering_jedha_spark.sources.readers import read_file
 
     monkeypatch.setattr(load_mod, "SINGLE_FILE_MAX_ROWS", 1000)
     out = tmp_path / "staged"
@@ -240,11 +245,10 @@ def test_fanout_stages_through_parquet_above_threshold(spark, tmp_path, monkeypa
     assert (out / "deliveries.parquet").is_dir()  # multi-part staging target
     assert (out / "deliveries.csv").is_dir()
     assert (out / "deliveries.json").is_dir()
-    back = spark.read.parquet(str(out / "deliveries.parquet"))
-    assert back.count() == 5000
-    assert spark.read.json(str(out / "deliveries.json")).count() == 5000
-    with sqlite3.connect(out / "deliveries.db") as conn:
-        assert conn.execute("SELECT count(*) FROM deliveries").fetchone()[0] == 5000
+    for name in ["deliveries.csv", "deliveries.json", "deliveries.parquet", "deliveries.db"]:
+        back = read_file(spark, str(out / name))
+        assert sorted(back.columns) == sorted(ENRICHED_COLUMNS), name
+        assert back.count() == 5000, name
     manifest = json.loads((out / "results_manifest.json").read_text())
     assert manifest["shape"]["rows"] == 5000
 
@@ -261,25 +265,30 @@ def test_staged_reads_carry_the_loaded_frames_schema(spark, tmp_path, monkeypatc
         real = load_mod.WRITER_MAP[fmt]
 
         class Capture(real):
-            def write(self, df):
-                seen[fmt] = df
-                super().write(df)
+            def write(self, df, files=None):
+                seen[fmt] = df, files
+                super().write(df, files)
 
         return Capture
 
     for fmt in ("csv", "sqlite"):  # before and after the parquet move
         monkeypatch.setitem(load_mod.WRITER_MAP, fmt, capturing(fmt))
+    monkeypatch.setattr(load_mod, "SINGLE_FILE_MAX_ROWS", 10)  # multi-part parquet
     config = {
         "source": {"type": "generate", "rows": 50, "seed": 7},
-        "output": {"path": str(tmp_path / "out"), "format": "all_but_xlsx", "single_file": False},
+        "output": {"path": str(tmp_path / "out"), "format": "all_but_xlsx"},
     }
     pipe = Pipeline(config, spark, weather_client=FakeWeatherClient(), progress=None)
     df = pipe.transform(pipe.extract())
     load_mod.load_data(df, config)
     want = [(f.name, f.dataType) for f in df.schema.fields]
     assert set(seen) == {"csv", "sqlite"}
-    for fmt, staged in seen.items():
+    for fmt, (staged, _) in seen.items():
         assert [(f.name, f.dataType) for f in staged.schema.fields] == want, fmt
-    assert seen["sqlite"].inputFiles()[0].startswith(
-        (tmp_path / "out" / "deliveries.parquet").as_uri()
-    )
+    # the sinks get the part files their frame reads: the stage's before
+    # the move, the parquet output's after it
+    stage_files, moved_files = seen["csv"][1], seen["sqlite"][1]
+    assert all(os.sep + ".laposte_stage_" in f for f in stage_files)
+    parquet_out = str(tmp_path / "out" / "deliveries.parquet")
+    assert moved_files == sorted(glob.glob(os.path.join(parquet_out, "part-*")))
+    assert seen["sqlite"][0].inputFiles()[0].startswith(Path(parquet_out).as_uri())

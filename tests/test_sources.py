@@ -73,7 +73,7 @@ def test_read_file_empty_table_keeps_columns(spark, tmp_path, ext):
     columns are strings), and the timestamp contract still applies."""
     import sqlite3
 
-    from laposte_data_engineering_jedha_spark.sources.xlsx_codec import write_xlsx
+    from laposte_data_engineering_jedha_spark.sources.writers import XlsxWriter
 
     path = str(tmp_path / f"empty.{ext}")
     if ext == "db":
@@ -81,7 +81,7 @@ def test_read_file_empty_table_keeps_columns(spark, tmp_path, ext):
             conn.execute(f"CREATE TABLE deliveries ({', '.join(RAW_COLUMNS)})")
         conn.close()
     else:
-        write_xlsx(path, RAW_COLUMNS, [])
+        XlsxWriter(path).write(generate_deliveries(spark, 0))
     df = cast_timestamp_contract(read_file(spark, path))
     assert df.columns == RAW_COLUMNS
     assert df.count() == 0
@@ -116,28 +116,68 @@ def test_extract_generate(spark):
 # --- XLSX codec (sources/xlsx_codec.py) --------------------------------------
 
 
-def test_xlsx_codec_type_roundtrip(tmp_path):
-    """Pure-codec round-trip of every supported cell type, including XML
-    special characters, empty strings, and None cells."""
+def test_xlsx_codec_type_roundtrip(spark, tmp_path):
+    """XlsxWriter -> XlsxReader round-trip of every supported cell type,
+    including XML special characters, empty strings, and NULL cells:
+    timestamps and dates come back as their ISO text, an all-NULL column
+    as strings."""
     import datetime
 
-    from laposte_data_engineering_jedha_spark.sources import xlsx_codec
+    from laposte_data_engineering_jedha_spark.sources.readers import XlsxReader
+    from laposte_data_engineering_jedha_spark.sources.writers import XlsxWriter
 
     path = str(tmp_path / "t.xlsx")
-    cols = ["s", "i", "f", "b", "dt", "d", "none"]
+    schema = "s string, i long, f double, b boolean, dt timestamp, d date, none string"
     rows_in = [
-        ["a<b>&\"'c", 42, 3.14159, True, datetime.datetime(2025, 9, 5, 10, 30, 15),
-         datetime.date(2025, 9, 5), None],
-        ["", -7, 0.1 + 0.2, False, datetime.datetime(2025, 1, 1), datetime.date(2025, 1, 1), None],
+        ("a<b>&\"'c", 42, 3.14159, True, datetime.datetime(2025, 9, 5, 10, 30, 15),
+         datetime.date(2025, 9, 5), None),
+        ("", -7, 0.1 + 0.2, False, datetime.datetime(2025, 1, 1), datetime.date(2025, 1, 1), None),
     ]
-    xlsx_codec.write_xlsx(path, cols, rows_in)
-    out_cols, rows = xlsx_codec.read_xlsx(path)
-    out = list(rows)
-    assert out_cols == cols
+    XlsxWriter(path).write(spark.createDataFrame(rows_in, schema).coalesce(1))
+    back = XlsxReader(path).read(spark)
+    assert back.columns == ["s", "i", "f", "b", "dt", "d", "none"]
+    assert [f.dataType.typeName() for f in back.schema.fields] == [
+        "string", "long", "double", "boolean", "string", "string", "string"
+    ]
+    out = [list(r) for r in back.collect()]
     assert out[0] == ["a<b>&\"'c", 42, 3.14159, True, "2025-09-05 10:30:15", "2025-09-05", None]
     # repr round-trip keeps doubles bit-exact (0.1+0.2 != 0.3)
     assert out[1][2] == 0.1 + 0.2
     assert out[1] == ["", -7, 0.1 + 0.2, False, "2025-01-01 00:00:00", "2025-01-01", None]
+
+
+def test_xlsx_reader_parses_workbooks_from_other_tools(spark, tmp_path):
+    """A workbook in openpyxl's shape (shared strings, `r` cell refs, a
+    skipped cell, t="b" and t="str" cells) misses the fast path for this
+    codec's own sheets and reads through the general parser."""
+    import zipfile
+
+    from laposte_data_engineering_jedha_spark.sources.readers import XlsxReader
+
+    ns = 'xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"'
+    strings = ["name", "n", "ok", "label", "alpha", "beta"]
+    shared = (
+        f'<?xml version="1.0" encoding="UTF-8"?><sst {ns} count="6" uniqueCount="6">'
+        + "".join(f"<si><t>{t}</t></si>" for t in strings)
+        + "</sst>"
+    )
+    sheet = (
+        f'<?xml version="1.0" encoding="UTF-8"?><worksheet {ns}><sheetData>'
+        '<row r="1"><c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c>'
+        '<c r="C1" t="s"><v>2</v></c><c r="D1" t="s"><v>3</v></c></row>'
+        '<row r="2"><c r="A2" t="s"><v>4</v></c><c r="B2"><v>7</v></c>'
+        '<c r="C2" t="b"><v>1</v></c><c r="D2" t="str"><f>A2</f><v>x&amp;y</v></c></row>'
+        '<row r="3"><c r="A3" t="s"><v>5</v></c>'
+        '<c r="C3" t="b"><v>0</v></c><c r="D3" t="str"><v>z</v></c></row>'
+        "</sheetData></worksheet>"
+    )
+    path = str(tmp_path / "other.xlsx")
+    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
+        zf.writestr("xl/sharedStrings.xml", shared)
+        zf.writestr("xl/worksheets/sheet1.xml", sheet)
+    back = XlsxReader(path).read(spark)
+    assert back.columns == ["name", "n", "ok", "label"]
+    assert [tuple(r) for r in back.collect()] == [("alpha", 7, True, "x&y"), ("beta", None, False, "z")]
 
 
 def test_xlsx_writer_reader_spark_roundtrip(spark, tmp_path):
@@ -160,41 +200,19 @@ def test_xlsx_writer_reader_spark_roundtrip(spark, tmp_path):
         assert r.Distance == o.Distance
 
 
-def test_xlsx_compressed_roundtrip(tmp_path):
-    """compress=True (deflated entries) round-trips identically to the
-    stored default and produces a genuinely smaller file."""
-    import os
-
-    from laposte_data_engineering_jedha_spark.sources import xlsx_codec
-
-    cols = ["s", "n"]
-    rows_in = [[f"text {i} &<>", i * 1.5] for i in range(2000)]
-    stored = str(tmp_path / "stored.xlsx")
-    packed = str(tmp_path / "packed.xlsx")
-    xlsx_codec.write_xlsx(stored, cols, rows_in)
-    xlsx_codec.write_xlsx(packed, cols, rows_in, compress=True)
-    _, r1 = xlsx_codec.read_xlsx(stored)
-    _, r2 = xlsx_codec.read_xlsx(packed)
-    assert list(r1) == list(r2)
-    assert os.path.getsize(packed) < os.path.getsize(stored) / 2
-
-
 @pytest.mark.parametrize("sink", ["xlsx", "sqlite"])
-def test_driver_sinks_read_scan_files_or_temporary_parquet(spark, tmp_path, sink):
+def test_driver_sinks_stream_given_files_or_a_temporary_stage(spark, tmp_path, sink):
     """The driver-side sinks stream Arrow batches either from the parquet
-    files a plain scan reads (here under a directory whose name needs
-    percent-encoding in a file: URI) or, for a computed lineage, from a
-    temporary parquet write. Both branches write the same file."""
+    files the caller gives (here under a directory whose name would need
+    percent-encoding in a file: URI) or, given none, from one parquet
+    write of the frame into a temp dir next to the target, removed
+    afterwards. Both branches write the same bytes."""
     import datetime
     import decimal
     import sqlite3
 
-    from laposte_data_engineering_jedha_spark.sources.writers import (
-        SqliteWriter,
-        XlsxWriter,
-        _scanned_parquet_files,
-    )
-    from laposte_data_engineering_jedha_spark.sources.xlsx_codec import read_xlsx
+    from laposte_data_engineering_jedha_spark.sources.readers import XlsxReader
+    from laposte_data_engineering_jedha_spark.sources.writers import WRITER_MAP, part_files
 
     rows = [
         (1, None, True, datetime.date(2025, 9, 5), decimal.Decimal("1.50"),
@@ -206,29 +224,23 @@ def test_driver_sinks_read_scan_files_or_temporary_parquet(spark, tmp_path, sink
     src = str(tmp_path / "src dir%" / "t.parquet")
     # one part file, so both branches see one partition and one batch
     spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
-    scan = spark.read.parquet(src)
-    computed = scan.filter(F.col("id") > 0)
-    assert _scanned_parquet_files(scan) is not None
-    assert _scanned_parquet_files(computed) is None
+    frame = spark.read.parquet(src)
 
     expected = [
         [1, None, True, "2025-09-05", "1.50", "2025-09-05 10:30:15.123456", 1e-05, "a&<>b"],
         [2, 7, False, "2025-01-01", "-2.25", "2025-01-01 08:00:00.500000", 1e16, "x"],
     ]
-    paths = [str(tmp_path / f"{name}.{sink}") for name in ("scan", "computed")]
+    given, staged = (tmp_path / f"given.{sink}", tmp_path / "out" / f"staged.{sink}")
+    WRITER_MAP[sink](str(given)).write(frame, part_files(src))
+    WRITER_MAP[sink](str(staged)).write(frame.filter(F.col("id") > 0))
+    assert given.read_bytes() == staged.read_bytes()
+    assert os.listdir(staged.parent) == [staged.name]  # the temp stage is gone
     if sink == "xlsx":
-        for frame, path in zip([scan, computed], paths):
-            XlsxWriter(path).write(frame)
-        with open(paths[0], "rb") as a, open(paths[1], "rb") as b:
-            assert a.read() == b.read()
-        columns, back = read_xlsx(paths[0])
-        assert columns == scan.columns and list(back) == expected
+        back = XlsxReader(str(given)).read(spark)
+        assert back.columns == frame.columns
+        assert [list(r) for r in back.collect()] == expected
     else:
-        tables = []
-        for frame, path in zip([scan, computed], paths):
-            SqliteWriter(path).write(frame)
-            with sqlite3.connect(path) as conn:
-                tables.append(conn.execute("SELECT * FROM deliveries ORDER BY id").fetchall())
-        assert tables[0] == tables[1]
+        with sqlite3.connect(given) as conn:
+            table = conn.execute("SELECT * FROM deliveries ORDER BY id").fetchall()
         # sqlite has no bool type: True/False bind as 1/0
-        assert tables[0] == [tuple(int(v) if isinstance(v, bool) else v for v in r) for r in expected]
+        assert table == [tuple(int(v) if isinstance(v, bool) else v for v in r) for r in expected]
