@@ -10,7 +10,14 @@ Five strategies, cheapest to richest, all pure DataFrame ops:
                Jaccard verification on candidates only.
 - simhash:     32-bit SimHash + band join + Hamming filter (Charikar 2002,
                Manku et al. 2007).
-- embedding:   cosine near-dup pairs over an embedding column.
+- embedding:   cosine near-dup pairs over the `embedding` column. The
+               self-join and cross LSH operators build their sides with
+               `similarity.normed` and score pairs with
+               `similarity.rounded_cosine` (4 digits) through the same
+               helpers: `_embedding_src` (the normed, id-exchanged
+               source), `_embedding_bands` (its banded bucket rows),
+               `_candidates` (distinct id pairs sharing a bucket) and
+               `_verified` (the narrow verify join).
 
 Scale notes (1000-executor / 100 TB):
 - Signatures (minhash/simhash/banded LSH buckets) are per-row map-side
@@ -33,7 +40,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from ..functions import texts, vectors
 from ..functions.vectors import _ltr_dot
 from ..session import local_table
-from . import caches, graphs
+from . import caches, graphs, similarity
 
 
 def _ltr_sq(m):
@@ -598,10 +605,61 @@ occupancy ~1,200 (sf1 pinned) -> narrow wins (70 vs 114 s); the cap
 sits at the auto-banding design point between those regimes."""
 
 
+def _embedding_src(df: DataFrame) -> DataFrame:
+    """(id, v, n): the `similarity.normed` rows of `df`, exchanged on id —
+    the source every banded side and every verify side of the embedding
+    LSH operators reads."""
+    return similarity.normed(df).repartition("id")
+
+
+def _embedding_bands(
+    src: DataFrame, dim: int, bands: int, band_planes: int, *carry: str
+) -> DataFrame:
+    """(id, *carry, band, key): one row per band of each source vector,
+    keyed by its banded hyperplane bucket (`vectors.pd_lsh_buckets_banded`,
+    map-side Arrow compute)."""
+    return src.select(
+        "id",
+        *carry,
+        F.posexplode(vectors.pd_lsh_buckets_banded("v", dim, bands, band_planes)).alias(
+            "band", "key"
+        ),
+    )
+
+
+def _candidates(a: DataFrame, b: DataFrame, a_id: str, b_id: str) -> DataFrame:
+    """Distinct (a_id, b_id) id pairs of two banded relations that share a
+    (band, key) bucket."""
+    a, b = a.alias("a"), b.alias("b")
+    return (
+        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key")))
+        .select(F.col("a.id").alias(a_id), F.col("b.id").alias(b_id))
+        .dropDuplicates([a_id, b_id])
+    )
+
+
+def _verified(
+    cand: DataFrame,
+    a_src: DataFrame,
+    b_src: DataFrame,
+    a_id: str,
+    b_id: str,
+    threshold: float,
+) -> DataFrame:
+    """The narrow verify join: re-attach each side's (v, n) to the
+    deduplicated candidate id pairs and keep the pairs whose cosine,
+    rounded to 4, reaches `threshold` — one dot product per distinct
+    pair however many bands it collided in."""
+    return (
+        cand.join(similarity._side(a_src, a_id, "a"), a_id)
+        .join(similarity._side(b_src, b_id, "b"), b_id)
+        .select(a_id, b_id, similarity.rounded_cosine("a", "b", 4).alias("cosine"))
+        .where(F.col("cosine") >= threshold)
+    )
+
+
 def embedding_dup_pairs_lsh(
     df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     threshold: float = 0.4,
     dim: int = 64,
     bands: int = 8,
@@ -642,40 +700,30 @@ def embedding_dup_pairs_lsh(
     regenerates the SAME LCG hyperplanes, so the gate checks the banded
     semantics exactly, not just the verify kernel.
     """
-    src = (
-        df.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).alias("_v"),
-            vectors.pd_norm(vec_col).alias("_n"),
-        )
-        .where(F.col("_n") > 0)
-        # exchange barrier on _id. NOTE: ReusedExchange does NOT fire here —
-        # plans containing Python UDFs never canonicalize equal in Spark
-        # 4.x, so each referencing alias re-runs the narrow (id, vec, norm)
-        # pipeline + shuffle. That is acceptable when `df` is a raw table
-        # scan (the shuffled projection is slim and kernels Arrow-batched);
-        # `persist_src` is the escalation for composed inputs — src is
-        # referenced TWICE under the carried-vector plan (both banded
-        # sides) and FOUR times under the narrow plan (band sides +
-        # verify sides), so when `df` is itself a join/filter chain
-        # (corpus_clean_pipeline_sem feeds the survivor set) the upstream
-        # would re-execute per reference. Handle registered with
-        # operators/caches.py for batch-runner release (SCALE.md
-        # finding 11).
-        .repartition("_id")
-    )
-    # r13 optimization: the whole scan -> norm kernel -> bucket kernel ->
-    # posexplode pipeline is referenced by BOTH pair-join sides, and
-    # PythonUDF subtrees never canonicalize equal (SCALE.md finding 11), so
-    # unpersisted it executes twice per query. When the INPUT estimate is
-    # small (the honest O(corpus) proxy — same gate as ppjoin_pairs), persist
-    # the banded relation pre-partitioned on the join key (band, key): the
-    # kernels run once and the pair self-join reads both sides from the cache
-    # already in the distribution it needs — no Exchange at all in the
-    # candidate join (alias-aware output partitioning carries through the
-    # per-side renames). Estimated-big inputs (the 100 TB read) skip the
-    # persist and keep the recompute-per-side plan: caching an O(corpus*bands)
-    # relation would spill the corpus to local disk.
+    # exchange barrier on id. NOTE: ReusedExchange does NOT fire here —
+    # plans containing Python UDFs never canonicalize equal in Spark 4.x,
+    # so each referencing alias re-runs the narrow (id, v, n) pipeline +
+    # shuffle. That is acceptable when `df` is a raw table scan (the
+    # shuffled projection is slim and kernels Arrow-batched); `persist_src`
+    # is the escalation for composed inputs — src is referenced TWICE under
+    # the carried-vector plan (both banded sides) and FOUR times under the
+    # narrow plan (band sides + verify sides), so when `df` is itself a
+    # join/filter chain (corpus_clean_pipeline_sem feeds the survivor set)
+    # the upstream would re-execute per reference. Handle registered with
+    # operators/caches.py for batch-runner release (SCALE.md finding 11).
+    src = _embedding_src(df)
+    # The whole scan -> norm kernel -> bucket kernel -> posexplode pipeline
+    # is referenced by BOTH pair-join sides, and PythonUDF subtrees never
+    # canonicalize equal (SCALE.md finding 11), so unpersisted it executes
+    # twice per query. When the INPUT estimate is small (the honest
+    # O(corpus) proxy — same gate as ppjoin_pairs), persist the banded
+    # relation pre-partitioned on the join key (band, key): the kernels run
+    # once and the pair self-join reads both sides from the cache already
+    # in the distribution it needs — no Exchange at all in the candidate
+    # join (alias-aware output partitioning carries through the per-side
+    # renames). Estimated-big inputs (the 100 TB read) skip the persist and
+    # keep the recompute-per-side plan: caching an O(corpus*bands) relation
+    # would spill the corpus to local disk.
     # `persist_banded=False` is the opt-out for callers that persist the
     # PAIR OUTPUT themselves (embedding_dbscan_lite): there the operator
     # body runs exactly once, so an internal cache only adds its exchange
@@ -686,35 +734,20 @@ def embedding_dup_pairs_lsh(
     if persist_src:
         src = caches.track(src.persist())
     # stats-only gate (no action): unknown estimates take the narrow
-    # form — it is the conservative pre-round-11 plan
+    # form — it is the conservative plan
     est = caches.estimated_rows(src, row_bytes=4 * dim + 48)
     carry_vectors = (
         est is not None and est / (1 << band_planes) <= CARRY_MAX_OCCUPANCY
     )
-    cos = vectors.pd_dot("va", "vb") / (F.col("na") * F.col("nb"))
     if carry_vectors:
-        banded = src.select(
-            "_id",
-            "_v",
-            "_n",
-            F.posexplode(
-                vectors.pd_lsh_buckets_banded("_v", dim, bands, band_planes)
-            ).alias("band", "key"),
-        )
+        banded = _embedding_bands(src, dim, bands, band_planes, "v", "n")
         if input_small:
             banded = caches.track(banded.repartition("band", "key").persist())
-        a = banded.select(
-            F.col("_id").alias("id_a"), F.col("_v").alias("va"),
-            F.col("_n").alias("na"), "band", "key",
-        )
-        b = banded.select(
-            F.col("_id").alias("id_b"), F.col("_v").alias("vb"),
-            F.col("_n").alias("nb"), "band", "key",
-        )
         return (
-            a.join(b, ["band", "key"])
+            similarity._side(banded, "id_a", "a")
+            .join(similarity._side(banded, "id_b", "b"), ["band", "key"])
             .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", (F.round(cos * 10000) / 10000).alias("cosine"))
+            .select("id_a", "id_b", similarity.rounded_cosine("a", "b", 4).alias("cosine"))
             .where(F.col("cosine") >= threshold)
             .dropDuplicates(["id_a", "id_b"])
         )
@@ -722,33 +755,11 @@ def embedding_dup_pairs_lsh(
         # narrow plan: src is referenced 3x (banded source + both verify
         # sides) — same persist rationale as above, same scale gate
         src = caches.track(src.persist())
-    banded = src.select(
-        "_id",
-        F.posexplode(vectors.pd_lsh_buckets_banded("_v", dim, bands, band_planes)).alias(
-            "band", "key"
-        ),
-    )
+    banded = _embedding_bands(src, dim, bands, band_planes)
     if input_small:
         banded = caches.track(banded.repartition("band", "key").persist())
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    va = src.select(F.col("_id").alias("id_a"), F.col("_v").alias("va"), F.col("_n").alias("na"))
-    vb = src.select(F.col("_id").alias("id_b"), F.col("_v").alias("vb"), F.col("_n").alias("nb"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", (F.round(cos * 10000) / 10000).alias("cosine"))
-        .where(F.col("cosine") >= threshold)
-    )
+    cand = _candidates(banded, banded, "id_a", "id_b").where(F.col("id_a") < F.col("id_b"))
+    return _verified(cand, src, src, "id_a", "id_b", threshold)
 
 
 def _minhash_sigs(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -848,8 +859,6 @@ def screen_against_minhash_index(
 def embedding_dup_pairs_lsh_cross(
     new_df: DataFrame,
     base_df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     threshold: float = 0.4,
     dim: int = 64,
     bands: int = 8,
@@ -864,55 +873,24 @@ def embedding_dup_pairs_lsh_cross(
     stored bucketed on key, so screening a batch costs O(batch).
 
     Output: (new_id, base_id, cosine) for verified pairs, cosine rounded
-    to 4 (the hash-gate rounding rule). Same hyperplanes / verify kernel
-    as the self-join operator, so pair semantics are identical."""
-
-    def prep(df: DataFrame) -> DataFrame:
-        return (
-            df.select(
-                F.col(id_col).alias("_id"),
-                F.col(vec_col).alias("_v"),
-                vectors.pd_norm(vec_col).alias("_n"),
-            )
-            .where(F.col("_n") > 0)
-            .repartition("_id")
-        )
-
-    def banded(src: DataFrame) -> DataFrame:
-        return src.select(
-            "_id",
-            F.posexplode(
-                vectors.pd_lsh_buckets_banded("_v", dim, bands, band_planes)
-            ).alias("band", "key"),
-        )
-
-    # r13 optimization (guide §2.4): each side's (id, vec, norm) projection
-    # is referenced TWICE (band explode + verify side); persist per side,
-    # gated on that side's INPUT estimate (the honest O(corpus) proxy —
-    # join-selectivity inflation makes post-UDF estimates useless, see
-    # ppjoin_pairs). At 100 TB the train side stays recompute; the eval
-    # side is tiny by contract and keeps its persist.
-    new_src = caches.persist_if_small(prep(new_df), new_df)
-    base_src = caches.persist_if_small(prep(base_df), base_df)
-    a, b = banded(new_src).alias("a"), banded(base_src).alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key")))
-        .select(F.col("a._id").alias("new_id"), F.col("b._id").alias("base_id"))
-        .dropDuplicates(["new_id", "base_id"])
+    to 4 (the hash-gate rounding rule). Same sources, bands and verify
+    join as the self-join operator's narrow plan, so pair semantics are
+    identical."""
+    # each side's (id, v, n) source is referenced TWICE (band explode +
+    # verify side); persist per side, gated on that side's INPUT estimate
+    # (the honest O(corpus) proxy — join-selectivity inflation makes
+    # post-UDF estimates useless, see ppjoin_pairs). At 100 TB the train
+    # side stays recompute; the eval side is tiny by contract and keeps
+    # its persist.
+    new_src = caches.persist_if_small(_embedding_src(new_df), new_df)
+    base_src = caches.persist_if_small(_embedding_src(base_df), base_df)
+    cand = _candidates(
+        _embedding_bands(new_src, dim, bands, band_planes),
+        _embedding_bands(base_src, dim, bands, band_planes),
+        "new_id",
+        "base_id",
     )
-    va = new_src.select(
-        F.col("_id").alias("new_id"), F.col("_v").alias("va"), F.col("_n").alias("na")
-    )
-    vb = base_src.select(
-        F.col("_id").alias("base_id"), F.col("_v").alias("vb"), F.col("_n").alias("nb")
-    )
-    cos = vectors.pd_dot("va", "vb") / (F.col("na") * F.col("nb"))
-    return (
-        cand.join(va, "new_id")
-        .join(vb, "base_id")
-        .select("new_id", "base_id", (F.round(cos * 10000) / 10000).alias("cosine"))
-        .where(F.col("cosine") >= threshold)
-    )
+    return _verified(cand, new_src, base_src, "new_id", "base_id", threshold)
 
 
 def _driver_union_find(edges: DataFrame) -> DataFrame:
@@ -1050,8 +1028,6 @@ def connected_components(
 
 def embedding_dup_pairs(
     df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     threshold: float = 0.4,
     dim: int = 64,
     max_rows: int = 200_000,
@@ -1081,7 +1057,7 @@ def embedding_dup_pairs(
     driver memory genuinely allows; the scale path is
     `embedding_dup_pairs_lsh`.
     """
-    src = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+    src = df.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_v"))
     n = src.count()
     if n > max_rows:
         raise ValueError(

@@ -1,6 +1,17 @@
 """Similarity search over embedding columns (`array<float>`).
 
-Exact and hashed search:
+Every search here is candidate-then-verify over one core:
+
+- `normed(df)` is the one way to build a side: the nonzero-norm rows of
+  an embeddings frame as (id, v, n), with the norm kernel run once.
+- `rounded_cosine(left, right, digits)` is the one way to score a pair
+  of sides: the Arrow dot kernel over the two norms, rounded as the
+  DuckDB oracles round.
+- `_ranked_topk` ranks a pair stream per query; `_ranked_topk_dedup` is
+  its form for the banded and multi-probe shapes, where a pair can
+  repeat.
+
+The access paths differ only in how they find candidates:
 
 - `brute_force_knn` — exact top-k by cosine: the small-query-set pattern.
   The query side is broadcast, so the big side streams through one
@@ -11,6 +22,7 @@ Exact and hashed search:
   per-row map-side compute, the join hash-partitions on bucket, and recall
   is tuned by the number of hyperplanes (fewer bits -> bigger buckets ->
   higher recall, more compute).
+- `knn_graph` — the whole corpus against itself through banded LSH.
 
 IVF (inverted-file) search is a stored index: `ivf_index_write` assigns
 every corpus vector to its nearest centroid and writes postings
@@ -19,6 +31,9 @@ postings, and `ivf_index_search` probes a query's `n_probe` nearest
 centroid directories (partition-pruned) and re-ranks exactly. Same join
 shape as LSH (equi-join on a map-side-computed bucket id); recall/cost is
 tuned by n_probe and the centroid count instead of hyperplane count.
+
+Every operator reads the fixture schema's `vec_id` and `embedding`
+columns; the IVF postings store the same two plus `centroid`.
 
 There is one vector-quantization path. Assignment, probing and PQ
 encoding run only the fold kernels of `functions/vectors.py`
@@ -38,11 +53,52 @@ import uuid
 
 import numpy as np
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..functions import vectors
 from ..session import local_table
 from . import caches
+
+#: `knn_graph` keeps at most this many candidates per (band, key) bucket
+#: (a deterministic md5-ordered head) — the LSH twin of the stop-shingle
+#: df cap. On clustered corpora (the realistic embedding shape) a whole
+#: topic cluster collapses into a handful of buckets and the uncapped
+#: self-join goes quadratic in cluster size (measured: 400k clustered
+#: vectors did not finish uncapped; capped at 256 it is bounded by
+#: bands * n * 256 comparisons).
+KNN_GRAPH_MAX_BUCKET = 256
+
+def normed(df: DataFrame, *keep: str | Column) -> DataFrame:
+    """The rows of an embeddings frame (`vec_id`, `embedding`) with a
+    nonzero norm, as (id, v, n, *keep); the norm is the Arrow kernel
+    `vectors.pd_norm`, run once per row.
+
+    Zero-norm vectors are dropped: cosine is undefined for them, and the
+    engines disagree on 0/0 (Spark NULL, DuckDB NaN/inf) — every SQL
+    twin carries the same `WHERE nrm > 0`."""
+    return df.select(
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("v"),
+        vectors.pd_norm("embedding").alias("n"),
+        *keep,
+    ).where(F.col("n") > 0)
+
+
+def rounded_cosine(left: str, right: str, digits: int) -> Column:
+    """Cosine of two `normed` sides whose (v, n) columns carry the
+    prefixes `left` and `right` (`qv`/`qn` against `cv`/`cn`), rounded
+    half-up to `digits` decimals as round(x * 10^d) / 10^d — the rounding
+    the SQL twins spell with `sql_round`. The dot product is the Arrow
+    kernel `vectors.pd_dot`, vectorized across the pair batch."""
+    scale = 10**digits
+    cos = vectors.pd_dot(f"{left}v", f"{right}v") / (F.col(f"{left}n") * F.col(f"{right}n"))
+    return F.round(cos * scale) / scale
+
+
+def _side(src: DataFrame, id_name: str, prefix: str) -> DataFrame:
+    """A `normed` side with (id, v, n) renamed to (id_name, {prefix}v,
+    {prefix}n), the columns `rounded_cosine(prefix, ...)` reads."""
+    return src.withColumnsRenamed({"id": id_name, "v": f"{prefix}v", "n": f"{prefix}n"})
 
 
 def _ranked_topk(pairs: DataFrame, k: int) -> DataFrame:
@@ -61,18 +117,14 @@ def _ranked_topk_dedup(pairs: DataFrame, k: int) -> DataFrame:
     same pair collides in several buckets and each copy carries the SAME
     cosine (a deterministic function of the two vectors).
 
-    r14 optimization (guide §2.4: remove shuffles outright): the previous
-    `dropDuplicates(["query_id", "cand_id"])` + rank-window form paid an
-    exchange on (query_id, cand_id) + two hash aggregates BEFORE the
-    window's own (query_id) exchange — and because multi-band copies of a
-    pair are emitted in DIFFERENT bucket partitions, the dedup's map-side
-    partial removed almost nothing, so the extra exchange carried the full
-    candidate fan-out. Here the dedup rides the ranking window instead:
-    within (query_id ORDER BY cosine DESC, cand_id) every copy of a pair
-    sorts to the same key, so copies are adjacent and `lag(cand_id)`
-    flags all but the first; the row_number over the SAME window spec then
-    ranks the deduped stream with no new exchange and no new sort
-    (Filter preserves both). One exchange total where there were two.
+    The dedup rides the ranking window: within (query_id ORDER BY cosine
+    DESC, cand_id) every copy of a pair sorts to the same key, so copies
+    are adjacent and `lag(cand_id)` flags all but the first; the
+    row_number over the SAME window spec then ranks the deduped stream
+    with no new exchange and no new sort (Filter preserves both). A
+    `dropDuplicates(["query_id", "cand_id"])` first would pay an exchange
+    on (query_id, cand_id) that carries the full candidate fan-out,
+    because the copies of a pair come from different bucket partitions.
 
     Identical output to dropDuplicates + _ranked_topk by construction:
     same survivor per duplicate group (copies are indistinguishable), same
@@ -87,50 +139,27 @@ def _ranked_topk_dedup(pairs: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _sides(
-    df: DataFrame, queries: DataFrame, vec_col: str, id_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """Corpus + query sides with Arrow-kernel norms precomputed per row.
-
-    Zero-norm vectors are dropped on both sides: cosine is undefined for
-    them, and the engines disagree on 0/0 (Spark NULL, DuckDB NaN/inf) —
-    the same guard knn_graph and embedding_dup_pairs_lsh carry."""
-    cand = df.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("cv"),
-        vectors.pd_norm(vec_col).alias("cn"),
-    ).where(F.col("cn") > 0)
-    qry = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        vectors.pd_norm(vec_col).alias("qn"),
-    ).where(F.col("qn") > 0)
-    return cand, qry
+def _query_pairs(cand: DataFrame, qry: DataFrame, on: str | None = None) -> DataFrame:
+    """(query_id, cand_id, cosine) over two `normed` sides, self pairs
+    dropped, cosine rounded to 6. The query side is broadcast (the ANN
+    shape: few queries, huge corpus), so the corpus never shuffles. `on`
+    names the bucket column both sides carry (an LSH bucket or an IVF
+    centroid); without it every candidate meets every query."""
+    c = _side(cand, "cand_id", "c")
+    q = F.broadcast(_side(qry, "query_id", "q"))
+    joined = c.join(q, on) if on else c.crossJoin(q)
+    return joined.where(F.col("cand_id") != F.col("query_id")).select(
+        "query_id", "cand_id", rounded_cosine("q", "c", 6).alias("cosine")
+    )
 
 
-def brute_force_knn(
-    df: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
-) -> DataFrame:
+def brute_force_knn(df: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbors of each query vector (self excluded).
 
     `queries` is broadcast (the typical ANN shape: few queries, huge corpus)
     so the corpus never shuffles; the only exchange is the per-query top-k
-    window, keyed by query_id. Cosine math runs in the Arrow-batched numpy
-    kernel (vectors.pd_dot), vectorized across the candidate batch.
-    """
-    cand, qry = _sides(df, queries, vec_col, id_col)
-    cos = vectors.pd_dot("qv", "cv") / (F.col("qn") * F.col("cn"))
-    pairs = (
-        cand.crossJoin(F.broadcast(qry))
-        .where(F.col("cand_id") != F.col("query_id"))
-        .select("query_id", "cand_id", (F.round(cos * 1000000) / 1000000).alias("cosine"))
-    )
-    return _ranked_topk(pairs, k)
+    window, keyed by query_id."""
+    return _ranked_topk(_query_pairs(normed(df), normed(queries)), k)
 
 
 def lsh_knn(
@@ -139,8 +168,6 @@ def lsh_knn(
     k: int = 5,
     dim: int = 64,
     planes: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Approximate top-k: hyperplane-LSH bucket join, exact cosine re-rank.
 
@@ -149,16 +176,11 @@ def lsh_knn(
     per bucket in expectation. Queries may return < k rows (recall < 1);
     that is the documented ANN trade-off, not a bug.
     """
-    cand, qry = _sides(df, queries, vec_col, id_col)
-    cand = cand.withColumn("bucket", vectors.pd_lsh_bucket("cv", dim, planes))
-    qry = qry.withColumn("bucket", vectors.pd_lsh_bucket("qv", dim, planes))
-    cos = vectors.pd_dot("qv", "cv") / (F.col("qn") * F.col("cn"))
-    pairs = (
-        cand.join(F.broadcast(qry), "bucket")
-        .where(F.col("cand_id") != F.col("query_id"))
-        .select("query_id", "cand_id", (F.round(cos * 1000000) / 1000000).alias("cosine"))
+    cand, qry = (
+        normed(s).withColumn("bucket", vectors.pd_lsh_bucket("v", dim, planes))
+        for s in (df, queries)
     )
-    return _ranked_topk(pairs, k)
+    return _ranked_topk(_query_pairs(cand, qry, "bucket"), k)
 
 
 def knn_graph(
@@ -167,9 +189,6 @@ def knn_graph(
     dim: int = 64,
     bands: int = 4,
     band_planes: int = 6,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    max_bucket: int = 256,
 ) -> DataFrame:
     """Approximate k-NN graph over the WHOLE corpus — every vector's top-k
     band-local neighbors. The building block of SemDeDup-style semantic
@@ -182,92 +201,61 @@ def knn_graph(
     always persisted MEMORY_AND_DISK after its repartition: the Arrow
     kernels (norm + banded bucket ids) and the (band, key) exchange run
     ONCE, both aliases read the cache, and the join inherits the cached
-    hashpartitioning — one exchange total where
-    round 4 measured two, plus a duplicated kernel pass (round-5 fix;
-    measured plans in tests/test_plans.py pin the single-Exchange shape).
+    hashpartitioning — one exchange total (measured plans in
+    tests/test_plans.py pin the single-Exchange shape).
     The cache is the narrow (id, vec, norm, band, key) projection — at
     1B x 64-dim that is ~bands x 300 GB spread across the cluster, far
     cheaper than recomputing + reshuffling it. Lifecycle: the persist is
     registered with caches.track (no DataFrame-attribute handles — those
-    are lost on any transform, ADVICE r6); callers release via
+    are lost on any transform); callers release via
     caches.release_all once their downstream is materialized, and Spark's
     LRU eviction bounds the cost if a caller never does. Exact cosine
     re-ranks within the bucket; per-vector top-k is a window over the
     deduped candidate edges.
 
-    BANDED OR-amplification (round-4 fix): the original single-band shape
-    had recall == the one-band collision probability — measured 0.0871
-    recall@3 at 6 planes on a structureless corpus (SCALE.md round-4
-    table), because a theta-degree true neighbor collides with
-    p = (1 - theta/pi)^planes and there was exactly one chance. With
-    `bands` independent 6-plane bands a pair is a candidate if it collides
-    in ANY band: recall = 1 - (1 - p)^bands (~4x at mid-range cosine,
-    ~1.0 for near-dup edges) for ~bands-x candidate compute — the same
-    AND/OR construction as `embedding_dup_pairs_lsh`. Pairs colliding in
-    several bands are deduplicated on (query_id, cand_id) BEFORE ranking
-    (cosine is identical per collision), on a narrow 3-column shuffle.
+    BANDED OR-amplification: a single band has recall == the one-band
+    collision probability — measured 0.0871 recall@3 at 6 planes on a
+    structureless corpus (SCALE.md round-4 table), because a theta-degree
+    true neighbor collides with p = (1 - theta/pi)^planes and there is
+    exactly one chance. With `bands` independent bands a pair is a
+    candidate if it collides in ANY band: recall = 1 - (1 - p)^bands
+    (~4x at mid-range cosine, ~1.0 for near-dup edges) for ~bands-x
+    candidate compute — the same AND/OR construction as
+    `embedding_dup_pairs_lsh`. Pairs colliding in several bands carry
+    the same cosine and dedup inside the ranking window
+    (`_ranked_topk_dedup`).
 
-    `max_bucket` caps the CANDIDATE side per (band, key) bucket
-    (deterministic md5-ordered head) — the LSH twin of the stop-shingle
-    df cap. On clustered corpora (the realistic embedding shape) a whole
-    topic cluster collapses into a handful of buckets and the uncapped
-    self-join goes quadratic in cluster size (measured: 400k clustered
-    vectors did not finish uncapped; capped at 256 it is bounded by
-    bands * n * max_bucket comparisons). Every vector still gets ranked
-    against a bounded, deterministic sample of its bucket-mates per band.
+    The candidate side of each (band, key) bucket is capped at
+    `KNN_GRAPH_MAX_BUCKET`: every vector still gets ranked against a
+    bounded, deterministic sample of its bucket-mates per band.
     """
     src = (
-        df.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).alias("_v"),
-            vectors.pd_norm(vec_col).alias("_n"),
-        )
-        # zero-norm guard: cosine is undefined for the zero vector — Spark
-        # would emit NULL (0/0) while DuckDB emits NaN/inf, breaking the
-        # cross-engine gate and corrupting top-k ranking. Same filter as
-        # embedding_dup_pairs_lsh; SQL twin carries WHERE nrm > 0.
-        .where(F.col("_n") > 0)
+        normed(df)
         .select(
-            "_id",
-            "_v",
-            "_n",
-            F.posexplode(vectors.pd_lsh_buckets_banded("_v", dim, bands, band_planes)).alias(
+            "id",
+            "v",
+            "n",
+            F.posexplode(vectors.pd_lsh_buckets_banded("v", dim, bands, band_planes)).alias(
                 "band", "key"
             ),
         )
         .repartition("band", "key")
     )
     src = caches.track(src.persist(StorageLevel.MEMORY_AND_DISK))
-    a = src.select(
-        "band",
-        "key",
-        F.col("_id").alias("query_id"),
-        F.col("_v").alias("qv"),
-        F.col("_n").alias("qn"),
-    )
     cap_w = Window.partitionBy("band", "key").orderBy(
-        F.md5(F.col("_id").cast("string")), F.col("_id")
+        F.md5(F.col("id").cast("string")), F.col("id")
     )
-    b = (
+    cand = (
         src.withColumn("_r", F.row_number().over(cap_w))
-        .where(F.col("_r") <= max_bucket)
-        .select(
-            "band",
-            "key",
-            F.col("_id").alias("cand_id"),
-            F.col("_v").alias("cv"),
-            F.col("_n").alias("cn"),
-        )
+        .where(F.col("_r") <= KNN_GRAPH_MAX_BUCKET)
+        .drop("_r")
     )
-    cos = vectors.pd_dot("qv", "cv") / (F.col("qn") * F.col("cn"))
     pairs = (
-        a.join(b, ["band", "key"])
+        _side(src, "query_id", "q")
+        .join(_side(cand, "cand_id", "c"), ["band", "key"])
         .where(F.col("query_id") != F.col("cand_id"))
-        .select("query_id", "cand_id", (F.round(cos * 1000000) / 1000000).alias("cosine"))
+        .select("query_id", "cand_id", rounded_cosine("q", "c", 6).alias("cosine"))
     )
-    # multi-band copies of a pair dedup inside the ranking window (one
-    # exchange; the dropDuplicates form paid a second one — see
-    # _ranked_topk_dedup)
     return _ranked_topk_dedup(pairs, k)
 
 
@@ -287,13 +275,18 @@ def pinned_codebook(m: int, k: int, sub: int) -> np.ndarray:
     return (((c * sub + d + j * 31) % 17) - 8) / 8.0
 
 
-def ivf_index_write(
-    df: DataFrame,
-    path: str,
-    centers: np.ndarray,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
+def _postings(df: DataFrame, centers: np.ndarray) -> DataFrame:
+    """(vec_id, embedding, centroid): each vector's nearest center by the
+    fold kernel (`pd_fold_assign_d2`, left-to-right IEEE adds == the
+    Catalyst/DuckDB folds)."""
+    return df.select(
+        "vec_id",
+        "embedding",
+        vectors.pd_fold_assign_d2("embedding", centers)["centroid"].alias("centroid"),
+    )
+
+
+def ivf_index_write(df: DataFrame, path: str, centers: np.ndarray) -> None:
     """Build and PERSIST an IVF index over the (k, dim) coarse quantizer
     `centers`: `{path}/centroids.parquet` (centroid id + vals) and
     `{path}/postings.parquet` partitioned BY CENTROID. At 100 TB the
@@ -306,20 +299,18 @@ def ivf_index_write(
 
     `centers` is a closed-form `pinned_codebook(1, k, dim)[0]` or a
     data fit `pq_fit_lloyd_pinned(df, m=1, k=k, dim=dim)[0]`. Assignment
-    runs the fold kernel (`pd_fold_assign_d2`, left-to-right IEEE adds ==
-    the Catalyst/DuckDB folds), so a stored index is hash-reproducible
-    in SQL (the registered `ivf_index_search` query's oracle contract)."""
+    runs the fold kernel (`_postings`), so a stored index is
+    hash-reproducible in SQL (the registered `ivf_index_search` query's
+    oracle contract)."""
     centers = np.asarray(centers, dtype="float64")
     local_table(
         df.sparkSession,
         [(int(i), [float(x) for x in c]) for i, c in enumerate(centers)],
         "centroid int, vals array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids.parquet")
-    df.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("cv"),
-        vectors.pd_fold_assign_d2(vec_col, centers)["centroid"].alias("centroid"),
-    ).write.mode("overwrite").partitionBy("centroid").parquet(f"{path}/postings.parquet")
+    _postings(df, centers).write.mode("overwrite").partitionBy("centroid").parquet(
+        f"{path}/postings.parquet"
+    )
 
 
 #: names of delta tags already folded into the base by a compaction —
@@ -368,6 +359,33 @@ def _index_delta_dirs(path: str) -> list[str]:
     return out
 
 
+def _index_centers(spark, path: str) -> np.ndarray:
+    """The stored (k, dim) coarse quantizer of the index at `path`.
+
+    Sized by max id, not len(): a centroid-id gap would otherwise route
+    queries to a silently-zero center, so a gap raises instead."""
+    centers_rows = spark.read.parquet(f"{path}/centroids.parquet").collect()
+    if not centers_rows:
+        raise ValueError(
+            f"IVF index at {path!r} not found or empty: centroids.parquet "
+            "has no rows (was ivf_index_write run?)"
+        )
+    centers = np.zeros(
+        (max(r["centroid"] for r in centers_rows) + 1, len(centers_rows[0]["vals"])),
+        dtype="float64",
+    )
+    for r in centers_rows:
+        centers[r["centroid"]] = r["vals"]
+    if len(centers_rows) != centers.shape[0]:
+        seen = {r["centroid"] for r in centers_rows}
+        missing = sorted(set(range(centers.shape[0])) - seen)[:5]
+        raise ValueError(
+            f"IVF index at {path!r} has centroid-id gaps (e.g. {missing}); "
+            "the index is corrupt — rebuild with ivf_index_write"
+        )
+    return centers
+
+
 def _index_postings(spark, path: str) -> DataFrame:
     """The index's logical postings relation: the base posting set plus
     every published delta (ivf_index_append), unioned by name. Each
@@ -384,8 +402,6 @@ def ivf_index_append(
     spark,
     path: str,
     new_df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     rebuild_fraction: float = 0.5,
     delta_tag: str | None = None,
 ) -> str:
@@ -432,20 +448,8 @@ def ivf_index_append(
         # its delta dir is gone, but a retry must still be a no-op
         # (ADVICE r12: re-publishing would silently duplicate vectors)
         return "delta"
-    centers_rows = spark.read.parquet(f"{path}/centroids.parquet").collect()
-    if not centers_rows:
-        raise ValueError(f"IVF index at {path!r} has no centroids to append to")
-    centers = np.zeros(
-        (max(r["centroid"] for r in centers_rows) + 1, len(centers_rows[0]["vals"])),
-        dtype="float64",
-    )
-    for r in centers_rows:
-        centers[r["centroid"]] = r["vals"]
-    new_postings = new_df.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("cv"),
-        vectors.pd_fold_assign_d2(vec_col, centers)["centroid"].alias("centroid"),
-    )
+    centers = _index_centers(spark, path)
+    new_postings = _postings(new_df, centers)
 
     base = spark.read.parquet(f"{path}/postings.parquet")
     deltas = _index_delta_dirs(path)
@@ -455,25 +459,25 @@ def ivf_index_append(
     # both reuse it); per-delta counts come from their publish-time
     # manifests, not a re-read of every delta (ADVICE r12)
     new_postings = new_postings.persist()
-    # search drops a repeated cand_id only when its copies carry the same
+    # search drops a repeated vec_id only when its copies carry the same
     # vector (equal copies rank next to each other in _ranked_topk_dedup),
     # so an id may be republished only with the vector it is stored with
     changed = (
         _index_postings(spark, path)
-        .select("cand_id", F.col("cv").alias("stored_cv"))
-        .join(new_postings.select("cand_id", "cv"), "cand_id")
-        .where(~F.col("cv").eqNullSafe(F.col("stored_cv")))
-        .select("cand_id")
+        .select("vec_id", F.col("embedding").alias("stored"))
+        .join(new_postings.select("vec_id", "embedding"), "vec_id")
+        .where(~F.col("embedding").eqNullSafe(F.col("stored")))
+        .select("vec_id")
         .distinct()
-        .orderBy("cand_id")
+        .orderBy("vec_id")
         .limit(20)
         .collect()
     )
     if changed:
         new_postings.unpersist()
-        ids = [r["cand_id"] for r in changed]
+        ids = [r["vec_id"] for r in changed]
         raise ValueError(
-            f"ivf_index_append: {id_col} {ids} already indexed at {path!r} "
+            f"ivf_index_append: vec_id {ids} already indexed at {path!r} "
             "with a different vector; rebuild the index with ivf_index_write "
             "to change a stored vector"
         )
@@ -485,19 +489,11 @@ def ivf_index_append(
         # against the CURRENT centers, fresh single-base index
         all_vecs = (
             _index_postings(spark, path)
-            .select("cand_id", "cv")
-            .unionByName(new_postings.select("cand_id", "cv"))
+            .select("vec_id", "embedding")
+            .unionByName(new_postings.select("vec_id", "embedding"))
         )
         scratch = f"{path}.compact-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        ivf_index_write(
-            all_vecs.withColumnRenamed("cand_id", id_col).withColumnRenamed(
-                "cv", vec_col
-            ),
-            scratch,
-            centers,
-            vec_col=vec_col,
-            id_col=id_col,
-        )
+        ivf_index_write(all_vecs, scratch, centers)
         new_postings.unpersist()
         # record every tag this compaction folds into the base — the
         # consumed deltas AND this append's own batch — so retries of
@@ -549,8 +545,6 @@ def ivf_index_search(
     queries: DataFrame,
     k: int = 5,
     n_probe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Search a persisted IVF index (see ivf_index_write): route each
     query to its `n_probe` nearest stored centroids, STATICALLY filter
@@ -559,67 +553,25 @@ def ivf_index_search(
     grain — so the IN-list prunes partitions at plan time, no dynamic
     pruning needed), then exact-cosine re-rank and take top-k. Returns
     (query_id, cand_id, cosine, rank) like every knn operator."""
-    centers_rows = spark.read.parquet(f"{path}/centroids.parquet").collect()
-    if not centers_rows:
-        raise ValueError(
-            f"IVF index at {path!r} not found or empty: centroids.parquet "
-            "has no rows (was ivf_index_write run?)"
-        )
-    # size by max id, not len(): a centroid-id gap would otherwise route
-    # queries to a silently-zero center and return zero rows for it
-    centers = np.zeros(
-        (max(r["centroid"] for r in centers_rows) + 1, len(centers_rows[0]["vals"])),
-        dtype="float64",
+    centers = _index_centers(spark, path)
+    qry = normed(queries).withColumn(
+        "centroid", F.explode(vectors.pd_fold_topn_centroids("v", centers, n_probe))
     )
-    seen = set()
-    for r in centers_rows:
-        centers[r["centroid"]] = r["vals"]
-        seen.add(r["centroid"])
-    if len(seen) != centers.shape[0]:
-        missing = sorted(set(range(centers.shape[0])) - seen)[:5]
-        raise ValueError(
-            f"IVF index at {path!r} has centroid-id gaps (e.g. {missing}); "
-            "the index is corrupt — rebuild with ivf_index_write"
-        )
-    qry = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            F.explode(vectors.pd_fold_topn_centroids(vec_col, centers, n_probe)).alias(
-                "centroid"
-            ),
-        )
-        .withColumn("qn", vectors.pd_norm("qv"))
-        .where(F.col("qn") > 0)
-    )
-    # r13 optimization (guide §2.4/§4): qry is consumed TWICE — the probed-
-    # centroid collect below and the broadcast side of the candidate join —
-    # and its probe/norm Arrow kernels (plus whatever plan produced
-    # `queries`) would re-run per reference. The query panel is the SMALL
-    # side of an ANN search by contract (it broadcasts two lines down).
-    # Stats-gated on the queries input estimate (ADVICE r13: an
-    # out-of-contract large panel would otherwise silently cache without
-    # bound before the broadcast even failed) — consistent with every
-    # other r13 persist gate.
+    # qry is consumed TWICE — the probed-centroid collect below and the
+    # broadcast side of the candidate join — and its probe/norm Arrow
+    # kernels (plus whatever plan produced `queries`) would re-run per
+    # reference. The query panel is the SMALL side of an ANN search by
+    # contract; the persist is still gated on the queries input estimate,
+    # so an out-of-contract large panel does not cache without bound.
     qry = caches.persist_if_small(qry, queries)
     probed = sorted({r["centroid"] for r in qry.select("centroid").distinct().collect()})
-    postings = (
-        _index_postings(spark, path)
-        .where(F.col("centroid").isin(probed))
-        .withColumn("cn", vectors.pd_norm("cv"))
-        .where(F.col("cn") > 0)
+    postings = normed(
+        _index_postings(spark, path).where(F.col("centroid").isin(probed)), "centroid"
     )
-    cos = vectors.pd_dot("qv", "cv") / (F.col("qn") * F.col("cn"))
-    pairs = (
-        postings.join(F.broadcast(qry), "centroid")
-        .where(F.col("cand_id") != F.col("query_id"))
-        .select("query_id", "cand_id", (F.round(cos * 1000000) / 1000000).alias("cosine"))
-    )
-    # base + delta postings carry one centroid per posting row; a cand_id
+    # base + delta postings carry one centroid per posting row; a vec_id
     # re-published across segments (same vector — the append idempotency
-    # contract) still dedups, inside the ranking window now instead of a
-    # dedicated (query, cand) exchange
-    return _ranked_topk_dedup(pairs, k)
+    # contract) still dedups, inside the ranking window
+    return _ranked_topk_dedup(_query_pairs(postings, qry, "centroid"), k)
 
 
 #: quantization scale for the pinned Lloyd fit: embedding components live
@@ -636,8 +588,6 @@ def pq_fit_lloyd_pinned(
     k: int = 16,
     dim: int = 64,
     iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> np.ndarray:
     """DETERMINISTIC product-quantization fit — seeded init + quantized
     Lloyd steps, bit-reproducible in plain SQL (the DuckDB twin in
@@ -645,7 +595,7 @@ def pq_fit_lloyd_pinned(
     the otherwise iterative-fit-only `embedding_pq_codes` into a full
     hash row:
 
-    - init: per subspace, the k lowest-`id_col` rows' subvectors
+    - init: per subspace, the k lowest-`vec_id` rows' subvectors
       (TakeOrderedAndProject — k bounded rows to the driver, the same
       bounded collect every iterative k-means needs for its centroids);
     - assign: the fold-faithful Arrow kernel (vectors.pd_fold_codes),
@@ -665,9 +615,9 @@ def pq_fit_lloyd_pinned(
     Every fit is value-checkable to the last bit, which is what lets the
     REGISTERED end-to-end PQ query carry a hash row (VERDICT r7 item 2)."""
     sub = dim // m
-    head = df.orderBy(id_col).limit(k).select(vec_col).collect()
+    head = df.orderBy("vec_id").limit(k).select("embedding").collect()
     books = np.array(
-        [[list(r[vec_col])[j * sub : (j + 1) * sub] for r in head] for j in range(m)],
+        [[list(r["embedding"])[j * sub : (j + 1) * sub] for r in head] for j in range(m)],
         dtype="float64",
     )
     quant = lambda c: F.floor(c.cast("double") * PQ_PIN_SCALE + F.lit(0.5)).cast("long")  # noqa: E731
@@ -677,8 +627,8 @@ def pq_fit_lloyd_pinned(
         # ride one m*k-group aggregate (map-side partials) and one <= m*k
         # row collect.
         ex = df.select(
-            F.col(vec_col).alias("v"),
-            F.posexplode(vectors.pd_fold_codes(vec_col, books)).alias("j", "c"),
+            F.col("embedding").alias("v"),
+            F.posexplode(vectors.pd_fold_codes("embedding", books)).alias("j", "c"),
         )
         rows = (
             ex.groupBy("j", "c")

@@ -21,7 +21,14 @@ from pyspark.sql import DataFrame
 from ..sources.writers import WRITER_MAP, parquet_dataset, part_files
 
 ALL_FORMATS = ["csv", "json", "parquet", "sqlite", "xlsx"]
-EXTENSIONS = {"csv": ".csv", "json": ".json", "parquet": ".parquet", "sqlite": ".db", "xlsx": ".xlsx"}
+EXTENSIONS = {
+    "csv": ".csv",
+    "json": ".json",
+    "parquet": ".parquet",
+    "orc": ".orc",
+    "sqlite": ".db",
+    "xlsx": ".xlsx",
+}
 
 # Above this row count, csv/json/parquet are written as parallel multi-part
 # directories: a coalesce(1) write serializes the whole output through one

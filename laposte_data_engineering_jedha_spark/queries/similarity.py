@@ -1314,6 +1314,24 @@ def _probe_array() -> F.Column:
 # - the cosine re-rank reuses the Arrow left-to-right dot + round-to-1e-6
 #   convention that knn_brute_force / knn_lsh hash-match against the
 #   fold-based DuckDB twin.
+def _ivf_pairs(n: DataFrame, q: DataFrame) -> DataFrame:
+    """(query_id, cand_id, cosine) of the pinned-codebook IVF path over
+    two `similarity.normed` sides: every candidate is assigned to its
+    nearest of the `_IVF_K` centroids, every query probes its
+    `_IVF_PROBE` nearest, and the exact cosine scores the candidates of
+    the probed lists. The fold-faithful Arrow kernels are bit-identical
+    to `_spark_argmin` / `_probe_array` (tests/test_round5.py pins both);
+    they replaced interpreted Catalyst folds that were ~90% of ivf_knn's
+    3.7 s at sf0.1. A candidate has exactly ONE centroid, so a (query,
+    cand) pair matches in at most one probed list: no dedup."""
+    books = similarity.pinned_codebook(1, _IVF_K, EMB_DIM)[0]
+    cand = n.withColumn("centroid", vectors.pd_fold_assign_d2("v", books)["centroid"])
+    qry = q.withColumn(
+        "centroid", F.explode(vectors.pd_fold_topn_centroids("v", books, _IVF_PROBE))
+    )
+    return similarity._query_pairs(cand, qry, "centroid")
+
+
 @query("ivf_knn", _IVF_KNN_SQL)
 def ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-5 over the PINNED 16-centroid codebook — the
@@ -1328,40 +1346,8 @@ def ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     embarrassingly parallel. A data-fitted quantizer
     (similarity.pq_fit_lloyd_pinned with m=1) stays recall-tested against
     brute force through the stored index in tests/test_llmops.py."""
-    books = similarity.pinned_codebook(1, _IVF_K, EMB_DIM)[0]
-    emb = table(spark, sf_dir, "embeddings")
-    n = emb.select(
-        "vec_id", "embedding", vectors.pd_norm("embedding").alias("nrm")
-    ).where(F.col("nrm") > 0)
-    # fold-faithful Arrow kernels (bit-identical to _spark_argmin /
-    # _probe_array — tests/test_round5.py pins both) replace the
-    # interpreted Catalyst folds: assignment + probe routing were ~90% of
-    # this query's 3.7 s at sf0.1.
-    cand = n.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").alias("cv"),
-        F.col("nrm").alias("cn"),
-        vectors.pd_fold_assign_d2("embedding", books)["centroid"].alias("centroid"),
-    )
-    qry = n.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.col("nrm").alias("qn"),
-        F.explode(
-            vectors.pd_fold_topn_centroids("embedding", books, _IVF_PROBE)
-        ).alias("centroid"),
-    )
-    cos = vectors.pd_dot("qv", "cv") / (F.col("qn") * F.col("cn"))
-    pairs = (
-        cand.join(F.broadcast(qry), "centroid")
-        .where(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            (F.round(cos * 1000000) / 1000000).alias("cosine"),
-        )
-    )
-    return similarity._ranked_topk(pairs, _IVF_TOPK)
+    n = similarity.normed(table(spark, sf_dir, "embeddings"))
+    return similarity._ranked_topk(_ivf_pairs(n, n.where(F.col("id") < 8)), _IVF_TOPK)
 
 
 # ================================ exact AUC ==================================
@@ -1485,18 +1471,8 @@ def embedding_bucket_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew early-warning the AQE skew-join split otherwise absorbs
     silently. Map-side bucket ids, one (band, key) aggregate, 8-row
     rollup; all counts integral."""
-    emb = table(spark, sf_dir, "embeddings")
-    src = emb.select(
-        "vec_id",
-        F.col("embedding").alias("_v"),
-        vectors.pd_norm("embedding").alias("_n"),
-    ).where(F.col("_n") > 0)
-    keyed = src.select(
-        "vec_id",
-        F.posexplode(vectors.pd_lsh_buckets_banded("_v", 64, _EMB_BANDS, 4)).alias(
-            "band", "key"
-        ),
-    )
+    src = similarity.normed(table(spark, sf_dir, "embeddings"))
+    keyed = dedup._embedding_bands(src, EMB_DIM, _EMB_BANDS, 4)
     b = keyed.groupBy("band", "key").agg(F.count(F.lit(1)).cast("long").alias("c"))
     return b.groupBy(F.col("band").cast("long").alias("band")).agg(
         F.count(F.lit(1)).cast("long").alias("n_buckets"),
@@ -2279,6 +2255,45 @@ _SQL_NORM16 = (
 # 100 TB ANN tier serves the first d' dims and a re-rank tier the full vector.
 # Exact top-5 both ways (the corpus never shuffles — queries broadcast), then a
 # per-query overlap count.
+def _full_prefix_pairs(
+    emb: DataFrame, dim: int, q_lo: int, q_hi: int
+) -> tuple[DataFrame, DataFrame]:
+    """The query slice [q_lo, q_hi) as (query_id) and its pairs with the
+    whole corpus as (query_id, cand_id, cos_full, cos_pre): the full and
+    the `dim`-prefix cosine, both rounded to 6, from ONE corpus pass and
+    one broadcast cross join. The two-brute_force_knn form scanned the
+    corpus and ran the norm/dot Arrow kernels twice and joined the two
+    top-k lists; ranking one stream twice keeps the rounding and the tie
+    order (cosine desc, cand_id), so both top-k sets stay bit-identical
+    to the SQL twins. Vectors with a zero full or prefix norm drop out,
+    as in the twins."""
+    prefix_norm = F.sqrt(
+        F.aggregate(
+            F.slice("embedding", 1, dim),
+            F.lit(0.0),
+            lambda a, x: a + x.cast("double") * x.cast("double"),
+        )
+    )
+    n = similarity.normed(emb, prefix_norm.alias("pn")).where(F.col("pn") > 0)
+    cand = similarity._side(n, "cand_id", "c").withColumnRenamed("pn", "cpn")
+    qry = similarity._side(
+        n.where((F.col("id") >= q_lo) & (F.col("id") < q_hi)), "query_id", "q"
+    ).withColumnRenamed("pn", "qpn")
+    pairs = (
+        cand.crossJoin(F.broadcast(qry))
+        .where(F.col("cand_id") != F.col("query_id"))
+        .withColumn("qpv", F.slice("qv", 1, dim))
+        .withColumn("cpv", F.slice("cv", 1, dim))
+        .select(
+            "query_id",
+            "cand_id",
+            similarity.rounded_cosine("q", "c", 6).alias("cos_full"),
+            similarity.rounded_cosine("qp", "cp", 6).alias("cos_pre"),
+        )
+    )
+    return qry.select("query_id"), pairs
+
+
 @query(
     "eval_matryoshka_prefix_recall",
     f"""
@@ -2324,53 +2339,8 @@ def eval_matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame
     window); the overlap join is at (query, cand) grain — {_MAT_K}*|q|
     rows. Rounded-cosine ties break on cand_id in both engines, the
     established knn-oracle construction."""
-    from pyspark.sql import Window
-
-    from ..functions import vectors
-
-    emb = table(spark, sf_dir, "embeddings")
-    # ONE corpus pass computing BOTH cosines (r11 verdict item 4 follow-up:
-    # the two-brute_force_knn form scanned the corpus twice and ran two
-    # per-query top-k exchanges; round-12 profiling put it at the top of
-    # the cross-round outlier list). Same rounding (1e-6) and tie order
-    # (cosine desc, cand_id), so full/prefix top-k sets — and therefore
-    # the recall rows — are bit-identical to the previous plan and to the
-    # SQL twin; a row in both top-ks is exactly one overlap member.
-    sides = []
-    for id_alias, v, n, n16 in (
-        ("cand_id", "cv", "cn", "cn16"),
-        ("query_id", "qv", "qn", "qn16"),
-    ):
-        sides.append(
-            emb.select(
-                F.col("vec_id").alias(id_alias),
-                F.col("embedding").alias(v),
-                vectors.pd_norm("embedding").alias(n),
-                F.sqrt(
-                    F.aggregate(
-                        F.slice("embedding", 1, _MAT_DIM),
-                        F.lit(0.0),
-                        lambda a, x: a + x.cast("double") * x.cast("double"),
-                    )
-                ).alias(n16),
-            ).where((F.col(n) > 0) & (F.col(n16) > 0))
-        )
-    cand, qry = sides
-    q_pred = (F.col("query_id") >= _MAT_Q_LO) & (F.col("query_id") < _MAT_Q_HI)
-    qry = qry.where(q_pred)
-    cos_full = vectors.pd_dot("qv", "cv") / (F.col("qn") * F.col("cn"))
-    cos_pre = vectors.pd_dot("qv16", "cv16") / (F.col("qn16") * F.col("cn16"))
-    pairs = (
-        cand.crossJoin(F.broadcast(qry))
-        .where(F.col("cand_id") != F.col("query_id"))
-        .withColumn("qv16", F.slice("qv", 1, _MAT_DIM))
-        .withColumn("cv16", F.slice("cv", 1, _MAT_DIM))
-        .select(
-            "query_id",
-            "cand_id",
-            (F.round(cos_full * 1e6) / 1e6).alias("cos_full"),
-            (F.round(cos_pre * 1e6) / 1e6).alias("cos_pre"),
-        )
+    qry, pairs = _full_prefix_pairs(
+        table(spark, sf_dir, "embeddings"), _MAT_DIM, _MAT_Q_LO, _MAT_Q_HI
     )
     wf = Window.partitionBy("query_id").orderBy(F.col("cos_full").desc(), "cand_id")
     wp = Window.partitionBy("query_id").orderBy(F.col("cos_pre").desc(), "cand_id")
@@ -2381,9 +2351,8 @@ def eval_matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy("query_id")
         .agg(F.count(F.lit(1)).alias("n_overlap"))
     )
-    queries = qry.select("query_id")
     return (
-        queries.join(ov, "query_id", "left")
+        qry.join(ov, "query_id", "left")
         .select(
             "query_id",
             F.coalesce("n_overlap", F.lit(0)).cast("long").alias("n_overlap"),
@@ -2485,59 +2454,11 @@ def eval_ndcg_truncated(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries (the corpus never shuffles); the DCG sum is an exact
     integer aggregate (order-free by construction), and the only float
     op is one division by the constant IDCG per query."""
-    from pyspark.sql import Window
-
-    from ..functions import vectors
-
-    emb = table(spark, sf_dir, "embeddings")
-    # ONE corpus pass computing BOTH cosines (r14 optimization, guide
-    # §1.2/§2.4 — the VERDICT r13 item-2 fusion, same construction as
-    # eval_matryoshka_prefix_recall's r12 fix): the two-brute_force_knn
-    # form scanned the corpus + ran the norm/dot Arrow kernels TWICE and
-    # joined the two top-k lists on (query_id, cand_id). Fused, the cross
-    # join carries cos_full AND cos_pre, the two rank windows share one
-    # query_id exchange, and the gt/ret join disappears — a row of the
-    # prefix top-k is a ground-truth hit exactly when its full rank is
-    # also <= K. Rounding (1e-6) and tie order (cosine desc, cand_id) are
-    # unchanged, so both top-k sets — and every output row — stay
-    # bit-identical to the SQL twin. NOT persisted (the r13 measured
-    # negative: the prefix-norm fold is cheap per scan); this shape also
-    # halves the COLD pass, which persists cannot.
-    sides = []
-    for id_alias, v, n, np_ in (
-        ("cand_id", "cv", "cn", "cnp"),
-        ("query_id", "qv", "qn", "qnp"),
-    ):
-        sides.append(
-            emb.select(
-                F.col("vec_id").alias(id_alias),
-                F.col("embedding").alias(v),
-                vectors.pd_norm("embedding").alias(n),
-                F.sqrt(
-                    F.aggregate(
-                        F.slice("embedding", 1, _NDCG_DIM),
-                        F.lit(0.0),
-                        lambda a, x: a + x.cast("double") * x.cast("double"),
-                    )
-                ).alias(np_),
-            ).where((F.col(n) > 0) & (F.col(np_) > 0))
-        )
-    cand, qry = sides
-    q_pred = (F.col("query_id") >= _NDCG_Q_LO) & (F.col("query_id") < _NDCG_Q_HI)
-    qry = qry.where(q_pred)
-    cos_full = vectors.pd_dot("qv", "cv") / (F.col("qn") * F.col("cn"))
-    cos_pre = vectors.pd_dot("qv16", "cv16") / (F.col("qnp") * F.col("cnp"))
-    pairs = (
-        cand.crossJoin(F.broadcast(qry))
-        .where(F.col("cand_id") != F.col("query_id"))
-        .withColumn("qv16", F.slice("qv", 1, _NDCG_DIM))
-        .withColumn("cv16", F.slice("cv", 1, _NDCG_DIM))
-        .select(
-            "query_id",
-            "cand_id",
-            (F.round(cos_full * 1e6) / 1e6).alias("cos_full"),
-            (F.round(cos_pre * 1e6) / 1e6).alias("cos_pre"),
-        )
+    # the DCG sum is an exact integer aggregate (order-free by
+    # construction): a row of the prefix top-k is a ground-truth hit
+    # exactly when its full rank is also <= K, so no gt/ret join
+    qry, pairs = _full_prefix_pairs(
+        table(spark, sf_dir, "embeddings"), _NDCG_DIM, _NDCG_Q_LO, _NDCG_Q_HI
     )
     wf = Window.partitionBy("query_id").orderBy(F.col("cos_full").desc(), "cand_id")
     wp = Window.partitionBy("query_id").orderBy(F.col("cos_pre").desc(), "cand_id")
@@ -2559,9 +2480,8 @@ def eval_ndcg_truncated(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("rf") <= _NDCG_K, 1).otherwise(0).alias("hit"),
         )
     )
-    queries = qry.select("query_id")
     return (
-        queries.join(scored, "query_id", "left")
+        qry.join(scored, "query_id", "left")
         .groupBy("query_id")
         .agg(
             F.coalesce(F.sum("hit"), F.lit(0)).cast("long").alias("n_hits"),
@@ -2857,56 +2777,23 @@ def eval_ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows hash bit-for-bit. Plan: one map-side assignment pass + two
     broadcast joins + two per-query top-k windows — the corpus never
     shuffles on either side."""
-    books = similarity.pinned_codebook(1, _IVF_K, EMB_DIM)[0]
     emb = table(spark, sf_dir, "embeddings")
-    n = emb.select(
-        "vec_id", "embedding", vectors.pd_norm("embedding").alias("nrm")
-    ).where(F.col("nrm") > 0)
-    # r13 optimization (guide §2.4): n feeds FOUR references (IVF cand +
-    # qry sides, the brute-force corpus + query sides, and the final query
-    # slice), each re-running the norm kernel + scan unpersisted
-    # (PythonUDF subtrees never canonicalize equal). Stats-gated on the
-    # INPUT scan estimate: a 100 TB corpus keeps the recompute plan.
-    n = caches.persist_if_small(n, emb)
-    q_pred = (F.col("vec_id") >= _RK_Q_LO) & (F.col("vec_id") < _RK_Q_HI)
-    cand = n.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").alias("cv"),
-        F.col("nrm").alias("cn"),
-        vectors.pd_fold_assign_d2("embedding", books)["centroid"].alias("centroid"),
-    )
-    qry = n.where(q_pred).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.col("nrm").alias("qn"),
-        F.explode(
-            vectors.pd_fold_topn_centroids("embedding", books, _IVF_PROBE)
-        ).alias("centroid"),
-    )
-    cos = vectors.pd_dot("qv", "cv") / (F.col("qn") * F.col("cn"))
-    ivf_pairs = (
-        cand.join(F.broadcast(qry), "centroid")
-        .where(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id", "cand_id", (F.round(cos * 1e6) / 1e6).alias("cosine")
-        )
-        # no dedup needed: a candidate has exactly ONE assigned centroid,
-        # so (query, cand) can match in at most one probed list
-    )
-    ivf_k = similarity._ranked_topk(ivf_pairs, _IVF_TOPK).select(
-        "query_id", "cand_id"
-    )
-    bf_k = similarity.brute_force_knn(n, n.where(q_pred), k=_IVF_TOPK).select(
-        "query_id", "cand_id"
-    )
+    # n feeds FOUR references (IVF cand + qry sides, the brute-force
+    # corpus + query sides) and the final query slice, each re-running
+    # the norm kernel + scan unpersisted (PythonUDF subtrees never
+    # canonicalize equal). Stats-gated on the INPUT scan estimate: a
+    # 100 TB corpus keeps the recompute plan.
+    n = caches.persist_if_small(similarity.normed(emb), emb)
+    q = n.where((F.col("id") >= _RK_Q_LO) & (F.col("id") < _RK_Q_HI))
+    ivf_k = similarity._ranked_topk(_ivf_pairs(n, q), _IVF_TOPK)
+    bf_k = similarity._ranked_topk(similarity._query_pairs(n, q), _IVF_TOPK)
     ov = (
         bf_k.join(ivf_k, ["query_id", "cand_id"])
         .groupBy("query_id")
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )
     return (
-        n.where(q_pred)
-        .select(F.col("vec_id").alias("query_id"))
+        q.select(F.col("id").alias("query_id"))
         .join(ov, "query_id", "left")
         .select(
             "query_id",
@@ -3005,28 +2892,12 @@ def embedding_cosine_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long")
         % rate
     )
-    n = (
-        emb.select(
-            "vec_id",
-            "embedding",
-            vectors.pd_norm("embedding").alias("nrm"),
-            bucket.alias("bk"),
-        )
-        .where(F.col("nrm") > 0)
-    )
-    a = n.select(
-        F.col("bk"), F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    b = n.select(
-        F.col("bk").alias("bkb"), F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("eb"), F.col("nrm").alias("nb"),
-    )
-    cos = vectors.pd_dot("ea", "eb") / (F.col("na") * F.col("nb"))
-    pairs = (
-        a.join(b, (F.col("bk") == F.col("bkb")) & (F.col("id_a") < F.col("id_b")))
-        .select((F.round(cos * 1e6) / 1e6).alias("cosine"))
-    )
+    n = similarity.normed(emb, bucket.alias("bk"))
+    a = similarity._side(n, "id_a", "a")
+    b = similarity._side(n, "id_b", "b").withColumnRenamed("bk", "bkb")
+    pairs = a.join(
+        b, (F.col("bk") == F.col("bkb")) & (F.col("id_a") < F.col("id_b"))
+    ).select(similarity.rounded_cosine("a", "b", 6).alias("cosine"))
     return (
         pairs.select(
             F.expr("CAST(round(cosine * 1000000) AS BIGINT) div 100000")

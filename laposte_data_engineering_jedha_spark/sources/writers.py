@@ -91,6 +91,10 @@ class SparkWriter(BaseWriter):
         with _scratch_beside(self.path) as out_dir:
             self._save(df.coalesce(1), out_dir)
             [part] = part_files(out_dir)
+            # an earlier multi-part write left a directory here; moving
+            # onto it would put the part file inside it
+            if os.path.isdir(self.path):
+                shutil.rmtree(self.path)
             shutil.move(part, self.path)
 
     def _save(self, df: DataFrame, path: str) -> None:
@@ -142,8 +146,9 @@ class DriverWriter(BaseWriter):
 
 
 class SqliteWriter(DriverWriter):
-    """Chunked append to SQLite table `deliveries` (reference
-    sources/writers.py:45-59).
+    """Chunked insert into SQLite table `deliveries` of a fresh database
+    file (reference sources/writers.py:45-59): an earlier file at the
+    target is replaced, never appended to.
 
     The driver streams Arrow record batches into executemany inserts: the
     bounded-memory property of the reference's `iter_slices` loop, with
@@ -158,12 +163,14 @@ class SqliteWriter(DriverWriter):
     def _write_batches(self, columns: list[str], batches: Iterable) -> None:
         placeholders = ", ".join("?" for _ in columns)
         col_defs = ", ".join(f'"{c}"' for c in columns)
+        if os.path.exists(self.path):
+            os.remove(self.path)
         with sqlite3.connect(self.path) as conn:
             # bulk-load pragmas: this writer owns the file for the
             # duration; durability is re-established by the final commit
             conn.execute("PRAGMA journal_mode=OFF")
             conn.execute("PRAGMA synchronous=OFF")
-            conn.execute(f"CREATE TABLE IF NOT EXISTS {self.TABLE} ({col_defs})")
+            conn.execute(f"CREATE TABLE {self.TABLE} ({col_defs})")
             for batch in batches:
                 values = [_sqlite_column(batch.column(c)) for c in columns]
                 conn.executemany(
@@ -213,16 +220,10 @@ class XlsxWriter(DriverWriter):
     at one batch, like the reference's xlsxwriter constant_memory
     workbook.
 
-    Measured on 4 cores against the executor-side build it replaced
-    (mapInPandas fragments collected with toLocalIterator):
-    - 5,000 deliveries in `load_data`: 3.60 -> 0.22 s cold, 0.93 -> 0.21 s
-      warm;
-    - warm writes of a staged copy, 150k rows: wall 1.6-2.1 -> 1.7-2.0 s,
-      CPU 4.0-5.1 -> 1.7-2.1 s;
-    - 500k rows: wall 4.6-5.4 -> 5.5-6.5 s, CPU 10.5-12.6 -> 5.6-6.7 s.
-      Fragments now build on one driver thread, so wall time grows with
-      rows; Excel opens at most 1,048,576 rows per sheet, so xlsx is a
-      contract format, not a scale path."""
+    Fragments build on one driver thread, so wall time grows with rows:
+    the trade for starting no Python worker and holding one batch in
+    memory. Excel opens at most 1,048,576 rows per sheet, so xlsx is a
+    contract format, not a scale path."""
 
     def _write_batches(self, columns: list[str], batches: Iterable) -> None:
         import pandas as pd

@@ -609,3 +609,64 @@ def test_temp_dirs_sit_next_to_their_targets():
             elif not any(k.arg == "dir" for k in node.keywords):
                 found.append(f"{where} {name}() without dir=")
     assert found == []
+
+
+def test_cosine_kernels_stay_in_the_similarity_core():
+    """`pd_dot` and `pd_norm` are called only in functions/vectors.py and
+    operators/similarity.py: every other cosine site builds its sides
+    with `similarity.normed` and scores pairs with
+    `similarity.rounded_cosine`. The two non-cosine uses are named
+    exceptions: squared distances in `eval_cluster_silhouette` and norm
+    quantization in `embedding_norm_profile`."""
+    import ast
+    import os
+
+    pkg_root = os.path.dirname(_queries_dir())
+    core = {os.path.join("functions", "vectors.py"), os.path.join("operators", "similarity.py")}
+    exempt = {"eval_cluster_silhouette", "embedding_norm_profile"}
+    found = []
+    for d, _, files in os.walk(pkg_root):
+        for f in sorted(files):
+            rel = os.path.relpath(os.path.join(d, f), pkg_root)
+            if not f.endswith(".py") or rel in core:
+                continue
+            with open(os.path.join(d, f)) as fh:
+                stack = [(ast.parse(fh.read()), frozenset())]
+            while stack:
+                node, funcs = stack.pop()
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    funcs = funcs | {node.name}
+                if isinstance(node, ast.Call):
+                    fn = node.func
+                    name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+                    if name in ("pd_dot", "pd_norm") and not funcs & exempt:
+                        found.append(f"{rel}:{node.lineno} {name}")
+                stack.extend((child, funcs) for child in ast.iter_child_nodes(node))
+    assert sorted(found) == []
+
+
+def test_embedding_operators_take_no_column_knobs():
+    """The embedding operators read the fixture schema's `vec_id` and
+    `embedding` columns: none takes a column-name parameter, `knn_graph`'s
+    bucket cap is a module constant and `brute_force_knn` takes no `dim`."""
+    import inspect
+
+    from laposte_data_engineering_jedha_spark.operators import dedup, similarity
+
+    ops = [
+        similarity.brute_force_knn,
+        similarity.lsh_knn,
+        similarity.knn_graph,
+        similarity.ivf_index_write,
+        similarity.ivf_index_append,
+        similarity.ivf_index_search,
+        similarity.pq_fit_lloyd_pinned,
+        dedup.embedding_dup_pairs,
+        dedup.embedding_dup_pairs_lsh,
+        dedup.embedding_dup_pairs_lsh_cross,
+    ]
+    for op in ops:
+        params = set(inspect.signature(op).parameters)
+        assert not params & {"vec_col", "id_col", "max_bucket"}, op.__name__
+    assert "dim" not in inspect.signature(similarity.brute_force_knn).parameters
+    assert not hasattr(similarity, "_sides")

@@ -171,7 +171,7 @@ def test_knn_zero_norm_vectors_excluded(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     graph = similarity.knn_graph(df, k=3, dim=4, bands=1, band_planes=2).collect()
-    brute = similarity.brute_force_knn(df, df, k=3, dim=4).collect()
+    brute = similarity.brute_force_knn(df, df, k=3).collect()
     for out in (graph, brute):
         assert len(out) > 0
         ids = {r["query_id"] for r in out} | {r["cand_id"] for r in out}

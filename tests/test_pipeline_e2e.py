@@ -292,3 +292,52 @@ def test_staged_reads_carry_the_loaded_frames_schema(spark, tmp_path, monkeypatc
     parquet_out = str(tmp_path / "out" / "deliveries.parquet")
     assert moved_files == sorted(glob.glob(os.path.join(parquet_out, "part-*")))
     assert seen["sqlite"][0].inputFiles()[0].startswith(Path(parquet_out).as_uri())
+
+
+def test_load_data_writes_orc(spark, tmp_path):
+    """`output.format: orc` writes `deliveries.orc`, and read_file reads it
+    back with every row."""
+    from laposte_data_engineering_jedha_spark.plans.load import load_data
+    from laposte_data_engineering_jedha_spark.sources.readers import read_file
+
+    df = spark.createDataFrame([(i, f"d{i}") for i in range(3)], "id long, name string")
+    out = tmp_path / "out"
+    load_data(df, {"output": {"path": str(out), "format": "orc"}})
+    assert (out / "deliveries.orc").exists()
+    assert read_file(spark, str(out / "deliveries.orc")).count() == 3
+
+
+def test_every_writer_format_has_a_readable_extension():
+    """Each WRITER_MAP format has an output extension that READER_MAP
+    reads, so load_data can name and read back every format it accepts."""
+    from laposte_data_engineering_jedha_spark.plans.load import EXTENSIONS
+    from laposte_data_engineering_jedha_spark.sources.readers import READER_MAP
+    from laposte_data_engineering_jedha_spark.sources.writers import WRITER_MAP
+
+    for fmt in WRITER_MAP:
+        assert EXTENSIONS.get(fmt) in READER_MAP, fmt
+
+
+def test_second_run_replaces_the_first_runs_outputs(spark, tmp_path, monkeypatch):
+    """A second Pipeline run into the same dir replaces the first run's
+    outputs: a single-file write over an earlier multi-part directory
+    does not land inside it, and sqlite does not append to the earlier
+    table. Every output reads back with the manifest's row count."""
+    from laposte_data_engineering_jedha_spark.plans import load as load_mod
+    from laposte_data_engineering_jedha_spark.sources.readers import read_file
+
+    out = tmp_path / "out"
+    config = {
+        "source": {"type": "generate", "rows": 50, "seed": 3},
+        "output": {"path": str(out), "format": "all_but_xlsx"},
+    }
+    with monkeypatch.context() as m:
+        m.setattr(load_mod, "SINGLE_FILE_MAX_ROWS", 10)  # multi-part dirs
+        Pipeline(config, spark, weather_client=FakeWeatherClient()).run()
+    assert (out / "deliveries.csv").is_dir()
+    Pipeline(config, spark, weather_client=FakeWeatherClient()).run()
+    assert (out / "deliveries.csv").is_file()
+    manifest = json.loads((out / "results_manifest.json").read_text())
+    assert manifest["shape"]["rows"] == 50
+    for name in ["deliveries.csv", "deliveries.json", "deliveries.parquet", "deliveries.db"]:
+        assert read_file(spark, str(out / name)).count() == 50, name
